@@ -500,8 +500,8 @@ object Search {
     * physically drops tombstoned docs. Returns docs tombstoned.
     */
   def indexDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: DataFrame): Long =
-   graft.sources.Commits.withWriterLock(spark, dir) {
+      ids: DataFrame, heldLocks: Set[String] = Set.empty): Long =
+   graft.sources.Commits.withWriterLockUnless(spark, dir, heldLocks) {
     // Adaptive like indexAppend: scoped resolve (only the requested
     // ids' docs rows reach the currency aggregate) for normal
     // takedowns, store-wide aggregate + post-filter for corpus-sized

@@ -1618,8 +1618,10 @@ object Similarity {
     * never equals the tombstone's). Returns ids tombstoned.
     */
   def annStoreDelete(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, ids: DataFrame): Long =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
+      storeDir: String, ids: DataFrame,
+      heldLocks: Set[String] = Set.empty): Long =
+   graft.sources.Commits.withWriterLockUnless(spark, storeDir,
+       heldLocks) {
     val committed = graft.sources.Commits.committed(spark, storeDir)
     if (committed.isEmpty) return 0L
     // Live-id resolve scoped to the requested ids (same store-linear

@@ -631,4 +631,21 @@ object Commits {
   def withWriterLockUnless[T](spark: SparkSession, dir: String,
       held: Set[String])(f: => T): T =
     if (held.contains(dir)) f else withWriterLock(spark, dir)(f)
+
+  /** Acquire the leases of `dirs` in order, run `f` with the set held
+    * (to pass on as `heldLocks`), then release them in reverse order —
+    * also when an acquisition is refused part-way, so a composition
+    * refused on any of its stores mutates none of them.
+    */
+  def withWriterLocks[T](spark: SparkSession, dirs: Seq[String])(
+      f: Set[String] => T): T = {
+    val held = scala.collection.mutable.ListBuffer[String]()
+    try {
+      dirs.foreach { dir =>
+        acquireWriterLock(spark, dir)
+        held += dir
+      }
+      f(held.toSet)
+    } finally held.reverseIterator.foreach(releaseWriterLock(spark, _))
+  }
 }

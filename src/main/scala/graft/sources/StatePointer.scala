@@ -32,13 +32,17 @@ object StatePointer {
       new org.apache.hadoop.fs.Path(targetDir), state).toString
 
   /** Name of the state dir `_current` points at, if the pointer exists. */
-  def currentStateName(targetDir: String): Option[String] = {
-    val ptr = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(targetDir), "_current")
-    val fs = fsFor(ptr)
-    if (!fs.exists(ptr)) None
+  def currentStateName(targetDir: String): Option[String] =
+    readFile(targetDir, "_current")
+
+  /** Contents of the small text file `<dir>/<name>`, if it exists. */
+  def readFile(dir: String, name: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(dir), name)
+    val fs = fsFor(p)
+    if (!fs.exists(p)) None
     else {
-      val in = fs.open(ptr)
+      val in = fs.open(p)
       try {
         val buf = new java.io.ByteArrayOutputStream()
         org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
@@ -72,16 +76,24 @@ object StatePointer {
   /** Commit `_current` -> `state`: temp write + rename over the old
     * pointer, so a reader never sees a half-written pointer file.
     */
-  def writePointer(targetDir: String, state: String): Unit = {
-    val root0 = new org.apache.hadoop.fs.Path(targetDir)
+  def writePointer(targetDir: String, state: String): Unit =
+    writeFile(targetDir, "_current", state, "_current.tmp")
+
+  /** Replace `<dir>/<name>` with `content` by writing `<dir>/<tmpName>`
+    * and renaming it over the old file: a reader sees the old content
+    * or the new, never a torn write.
+    */
+  def writeFile(dir: String, name: String, content: String,
+      tmpName: String): Unit = {
+    val root0 = new org.apache.hadoop.fs.Path(dir)
     val fs = fsFor(root0)
     fs.mkdirs(root0)
     val root = fs.makeQualified(root0)
-    val tmp = new org.apache.hadoop.fs.Path(root, "_current.tmp")
+    val tmp = new org.apache.hadoop.fs.Path(root, tmpName)
     val out = fs.create(tmp, true)
-    try out.write(state.getBytes("UTF-8")) finally out.close()
+    try out.write(content.getBytes("UTF-8")) finally out.close()
     org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, hadoopConf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, "_current"),
+      .rename(tmp, new org.apache.hadoop.fs.Path(root, name),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 }

@@ -485,8 +485,9 @@ object Streams {
     * Returns docs tombstoned.
     */
   def chunkStoreDelete(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, ids: DataFrame): Long =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
+      storeDir: String, ids: DataFrame,
+      heldLocks: Set[String] = Set.empty): Long =
+   graft.sources.Commits.withWriterLockUnless(spark, storeDir, heldLocks) {
     val committed = graft.sources.Commits.committed(spark, storeDir)
     if (committed.isEmpty) return 0L
     val docs = graft.sources.Commits
@@ -1381,6 +1382,85 @@ object Streams {
     selected.size
    }
 
+  /** `f` over `df` persisted for the call's duration. */
+  private def withPersisted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally { p.unpersist(); () }
+  }
+
+  /** The delivery ledger's marker file, kept in the first store dir of a
+    * composed ingest's chain.
+    */
+  private val DeliveredMarker = "_delivered"
+
+  /** DELIVERY LEDGER of the composed ingest entry points: run `apply`
+    * over the persisted batch unless this exact delivery is the last
+    * one `ledgerDir` recorded as fully applied, in which case return
+    * `noop` — no lease, no gate, no sink, nothing written.
+    *
+    * The fingerprint is one Spark job over the persisted batch (which
+    * the full path reuses): the batch id, the row count, and the exact
+    * sums of two row hashes over every delivered column (64-bit
+    * `xxhash64` and 32-bit murmur3 `hash`, summed as unbounded
+    * integers, so row order and partitioning do not matter), plus the
+    * batch schema and `surfaces`, the arguments choosing which stores
+    * and gates the delivery feeds (a replay onto a different set of
+    * surfaces is a different delivery). A batch whose columns cannot be
+    * hashed (map types) has no fingerprint and always takes the full
+    * path.
+    *
+    * The marker is overwritten (temp write + rename) only after every
+    * surface returned. A crash or a refused lease anywhere before that
+    * leaves the previous marker, so a redelivery takes the full path
+    * and converges as the idempotent sinks always did; a lost marker
+    * likewise only costs one full path.
+    */
+  private def deliverOnce[T](batch: DataFrame, batchId: Long,
+      ledgerDir: String, surfaces: Seq[Any], noop: T)(
+      apply: DataFrame => T): T =
+    withPersisted(batch) { shared =>
+      val fp = graft.Prof("fanout.ledger")(
+        deliveryFingerprint(shared, batchId, surfaces))
+      if (fp.isDefined &&
+          graft.sources.StatePointer.readFile(ledgerDir, DeliveredMarker) == fp)
+        noop
+      else {
+        val r = apply(shared)
+        // A unique temp name: two writers finishing at once each rename
+        // their own file, and the marker ends as one of them.
+        fp.foreach(graft.sources.StatePointer.writeFile(ledgerDir,
+          DeliveredMarker, _,
+          s"$DeliveredMarker.${java.util.UUID.randomUUID()}.tmp"))
+        r
+      }
+    }
+
+  /** The ledger's fingerprint of one delivery (see [[deliverOnce]]). */
+  private def deliveryFingerprint(shared: DataFrame, batchId: Long,
+      surfaces: Seq[Any]): Option[String] = {
+    val hashed =
+      try Some(shared.select(xxhash64(col("*")), hash(col("*")).cast("long")))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    hashed.map { h =>
+      // Per-partition partial sums, combined on the driver: one job, no
+      // shuffle.
+      val parts = h.mapPartitions { rows =>
+        var n = 0L
+        var a, b = BigInt(0)
+        rows.foreach { r => n += 1; a += r.getLong(0); b += r.getLong(1) }
+        Iterator((n, a.toString, b.toString))
+      }(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.scalaLong,
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.STRING)).collect()
+      s"batch=$batchId rows=${parts.map(_._1).sum} " +
+        s"xxhash64=${parts.map(p => BigInt(p._2)).sum} " +
+        s"hash=${parts.map(p => BigInt(p._3)).sum} " +
+        s"schema=${shared.schema.catalogString} " +
+        s"surfaces=${surfaces.mkString(",")}\n"
+    }
+  }
+
   /** COMPOSED store fan-out — one crawled/extracted document batch
     * advances ALL the standing stores in a single pass, the way the
     * reference's ingest worker composes its store write
@@ -1431,9 +1511,27 @@ object Streams {
     * merge, generation-committed index, insert-if-absent ANN,
     * vec-hash-gated PQ, content-hash-gated chunks and chunk vectors),
     * so an at-least-once redelivery after a mid-fanout crash converges
-    * every store, matching the standalone sinks' contract. Returns
-    * (docs indexed, vectors inserted, PQ rows encoded, docs chunked,
-    * chunk vectors encoded).
+    * every store, matching the standalone sinks' contract.
+    *
+    * DELIVERY CONTRACT (shared by the three composed ingest entry
+    * points, each applying the ledger once at its outermost call):
+    * redelivering the last fully-applied delivery — same batch id, same
+    * rows — is a no-op. It costs one fingerprint job, takes no lease,
+    * runs no gate or sink, writes nothing, and returns all-zero counts.
+    * The ledger's `_delivered` marker lives in the chain's first store
+    * dir (`storeDir` here, `gramStoreDir` for
+    * [[fanoutIngestBatchGated]], `neardupDir` for
+    * [[fanoutIngestBatchNeardupGated]]). The semantics are
+    * exactly-once-equivalent: a takedown ([[fanoutDeleteBatch]]) issued
+    * after the first delivery stays in force when the delivery
+    * replays, where the full path would re-merge, re-index and
+    * re-insert the doc on the sinks. Anything else takes the full path:
+    * a re-offer of the same rows under a new batch id (it goes through
+    * the gates as usual), the same batch id with different rows, an
+    * older delivery than the last one recorded, or a marker lost to a
+    * crash after the last surface (only the cost of one full path,
+    * which converges as before). Returns (docs indexed, vectors
+    * inserted, PQ rows encoded, docs chunked, chunk vectors encoded).
     */
   def fanoutIngestBatch(batch: DataFrame, batchId: Long, storeDir: String,
       indexDir: String, annDir: String, idCol: String, textCol: String,
@@ -1444,124 +1542,132 @@ object Streams {
       chunkVecDir: Option[String] = None, chunkVecDims: Int = 16,
       chunkVecM: Int = 4, chunkVecCodes: Int = 8,
       chunkVecCells: Int = 16,
-      chunkVecTrainPerMille: Int = 1000): (Long, Long, Long, Long, Long) = {
+      chunkVecTrainPerMille: Int = 1000): (Long, Long, Long, Long, Long) =
+    deliverOnce(batch, batchId, storeDir,
+      Seq(storeDir, indexDir, annDir, vecCol, pqDir, chunkDir, chunkVecDir),
+      (0L, 0L, 0L, 0L, 0L))(
+      fanoutApply(_, batchId, storeDir, indexDir, annDir, idCol, textCol,
+        vecCol, planes, dims, pqDir, pqM, pqCodes, chunkDir, chunkWindow,
+        chunkOverlap, chunkVecDir, chunkVecDims, chunkVecM, chunkVecCodes,
+        chunkVecCells, chunkVecTrainPerMille))
+
+  /** [[fanoutIngestBatch]]'s composition over an already-persisted
+    * batch, without the delivery ledger: the gated forms feed their
+    * read-back through this directly, so one delivery checks and
+    * records the ledger once, at its outermost entry point.
+    */
+  private def fanoutApply(shared: DataFrame, batchId: Long,
+      storeDir: String, indexDir: String, annDir: String, idCol: String,
+      textCol: String, vecCol: Option[String], planes: Int, dims: Int,
+      pqDir: Option[String], pqM: Int, pqCodes: Int,
+      chunkDir: Option[String], chunkWindow: Int, chunkOverlap: Int,
+      chunkVecDir: Option[String], chunkVecDims: Int, chunkVecM: Int,
+      chunkVecCodes: Int, chunkVecCells: Int,
+      chunkVecTrainPerMille: Int): (Long, Long, Long, Long, Long) = {
     require(chunkVecDir.isEmpty || chunkDir.nonEmpty,
       "chunkVecDir needs chunkDir: the chunk-vector surface featurizes " +
         "the committed chunk store's passages")
-    val spark = batch.sparkSession
-    val shared = batch.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Rows whose vector is missing advance the doc/index surfaces but
-      // not the embedding stores (a null vec would bucket/encode to
-      // garbage) — the embedding can arrive in a later delivery;
-      // insert-if-absent takes it then.
-      def vecsOf(v: String) = shared.filter(col(v).isNotNull)
-        .select(col(idCol).as("id"), col(v).as("vec"))
-      // The surfaces are INDEPENDENT stores — own directory, own
-      // writer lease, idempotent sink — and the composition's
-      // convergence argument never assumed an ordering among them (a
-      // crash mid-fan-out already leaves an arbitrary completed
-      // subset; redelivery catches the rest up). Only the
-      // chunk-VECTOR surface chains: it featurizes the chunk store's
-      // COMMITTED state, so it runs after the chunk mutation inside
-      // the same track. Running the five tracks concurrently
-      // (graft.Par, guide §2.6) lets one surface's tasks back-fill
-      // the cores another's action tail leaves idle — at micro-batch
-      // scale the composed sink's cost is ~40 fixed per-action
-      // overheads end to end, not data volume.
-      //
-      // Every surface lease is acquired UPFRONT, in the sequential
-      // composition's order, before any surface mutates: a competing
-      // writer anywhere in the set refuses the whole wave as a clean
-      // no-op (CrossJvmFanoutSpec pins that a refusal must not leave
-      // later surfaces advanced past the refused one — upfront
-      // acquisition strengthens the old committed-prefix outcome to
-      // nothing-committed, which redelivery converges identically),
-      // and the tracks then mutate concurrently with their leases
-      // pre-held (withWriterLockUnless).
-      val toHold: Seq[String] =
-        Seq(storeDir, indexDir) ++
-          (if (vecCol.isDefined) Seq(annDir) else Nil) ++
-          (if (vecCol.isDefined) pqDir.toSeq else Nil) ++
-          chunkDir.toSeq ++
-          (if (chunkDir.isDefined) chunkVecDir.toSeq else Nil)
-      val held = scala.collection.mutable.ListBuffer[String]()
-      try {
-        toHold.foreach { dir =>
-          graft.sources.Commits.acquireWriterLock(spark, dir)
-          held += dir
-        }
-        val hl = held.toSet
-        val mergeT = () => {
-          graft.Prof("fanout.merge")(mergeBatch(
-            shared.select(col(idCol), col(textCol),
-              graft.functions.HashFunctions.contentHash(col(textCol))
-                .as("content_hash")),
-            storeDir, idCol, batchId, hl))
-          0L
-        }
-        val idxT = () => graft.Prof("fanout.index")(
-          graft.operators.Search.indexAppend(
-            shared.select(col(idCol), col(textCol)), idCol, textCol,
-            indexDir, hl))
-        val annT = () => vecCol.fold(0L)(v =>
-          graft.Prof("fanout.ann")(
-            graft.operators.Similarity.annStoreAppend(vecsOf(v), annDir,
-              planes, dims, hl)))
-        val pqT = () => (pqDir, vecCol) match {
-          case (Some(pd), Some(v)) => graft.Prof("fanout.pq") {
-            require(dims % pqM == 0,
-              s"fan-out PQ surface needs dims divisible by pqM, " +
-                s"got dims=$dims pqM=$pqM")
-            if (graft.sources.Commits.committed(spark, pd).isEmpty) {
-              // Codebook training needs at least pqCodes distinct seed
-              // vectors. A vector-poor first delivery must NOT become a
-              // poison pill — under a streaming sink the failed batch
-              // would redeliver and fail forever — so training DEFERS to
-              // the first delivery carrying >= pqCodes embedding ids;
-              // until then the batch advances the other surfaces and the
-              // PQ surface stays unbuilt (its vectors are safe in the
-              // ANN store and can be backfilled by an offline
-              // pqStoreBuild, or arrive again on a redelivery). The
-              // trainer's own seed collect IS the deferral probe: an
-              // undersized delivery raises UndersizedTrainingSet before
-              // any store side effect, one job cheaper than the
-              // pre-count probe this branch used to run.
-              try graft.operators.Similarity.pqStoreBuild(vecsOf(v), pd,
-                m = pqM, subDims = dims / pqM, codes = pqCodes, iters = 2,
-                heldLocks = hl)
-              catch {
-                case _: graft.operators.Similarity.UndersizedTrainingSet =>
-                  0L
-              }
-            } else graft.operators.Similarity.pqStoreAppend(vecsOf(v), pd,
-              hl)
-          }
-          case _ => 0L
-        }
-        val chunkTrackT = () => chunkDir.fold((0L, 0L)) { d =>
-          val nChunk = graft.Prof("fanout.chunks")(
-            chunkIngestBatch(shared.select(col(idCol), col(textCol)), d,
-              idCol, textCol, chunkWindow, chunkOverlap, hl))
-          val nCkVec = chunkVecDir.fold(0L)(vd =>
-            graft.Prof("fanout.ckvec")(
-              chunkVectorIngestBatch(spark, d, vd,
-                shared.select(col(idCol)), chunkVecDims, chunkVecM,
-                chunkVecCodes, chunkVecCells, chunkVecTrainPerMille, hl)))
-          (nChunk, nCkVec)
-        }
-        val rs = graft.Par.run(Seq[() => Any](mergeT, idxT, annT, pqT,
-          chunkTrackT))
-        val (nIdx, nAnn, nPq) = (rs(1).asInstanceOf[Long],
-          rs(2).asInstanceOf[Long], rs(3).asInstanceOf[Long])
-        val (nChunk, nCkVec) = rs(4).asInstanceOf[(Long, Long)]
-        (nIdx, nAnn, nPq, nChunk, nCkVec)
-      } finally {
-        held.toList.reverse.foreach(dir =>
-          graft.sources.Commits.releaseWriterLock(spark, dir))
+    val spark = shared.sparkSession
+    // Rows whose vector is missing advance the doc/index surfaces but
+    // not the embedding stores (a null vec would bucket/encode to
+    // garbage) — the embedding can arrive in a later delivery;
+    // insert-if-absent takes it then.
+    def vecsOf(v: String) = shared.filter(col(v).isNotNull)
+      .select(col(idCol).as("id"), col(v).as("vec"))
+    // The surfaces are INDEPENDENT stores — own directory, own
+    // writer lease, idempotent sink — and the composition's
+    // convergence argument never assumed an ordering among them (a
+    // crash mid-fan-out already leaves an arbitrary completed
+    // subset; redelivery catches the rest up). Only the
+    // chunk-VECTOR surface chains: it featurizes the chunk store's
+    // COMMITTED state, so it runs after the chunk mutation inside
+    // the same track. Running the five tracks concurrently
+    // (graft.Par, guide §2.6) lets one surface's tasks back-fill
+    // the cores another's action tail leaves idle — at micro-batch
+    // scale the composed sink's cost is ~40 fixed per-action
+    // overheads end to end, not data volume.
+    //
+    // Every surface lease is acquired UPFRONT, in the sequential
+    // composition's order, before any surface mutates: a competing
+    // writer anywhere in the set refuses the whole wave as a clean
+    // no-op (CrossJvmFanoutSpec pins that a refusal must not leave
+    // later surfaces advanced past the refused one — upfront
+    // acquisition strengthens the old committed-prefix outcome to
+    // nothing-committed, which redelivery converges identically),
+    // and the tracks then mutate concurrently with their leases
+    // pre-held (withWriterLockUnless).
+    val toHold: Seq[String] =
+      Seq(storeDir, indexDir) ++
+        (if (vecCol.isDefined) Seq(annDir) else Nil) ++
+        (if (vecCol.isDefined) pqDir.toSeq else Nil) ++
+        chunkDir.toSeq ++
+        (if (chunkDir.isDefined) chunkVecDir.toSeq else Nil)
+    graft.sources.Commits.withWriterLocks(spark, toHold) { hl =>
+      val mergeT = () => {
+        graft.Prof("fanout.merge")(mergeBatch(
+          shared.select(col(idCol), col(textCol),
+            graft.functions.HashFunctions.contentHash(col(textCol))
+              .as("content_hash")),
+          storeDir, idCol, batchId, hl))
+        0L
       }
-    } finally { shared.unpersist(); () }
+      val idxT = () => graft.Prof("fanout.index")(
+        graft.operators.Search.indexAppend(
+          shared.select(col(idCol), col(textCol)), idCol, textCol,
+          indexDir, hl))
+      val annT = () => vecCol.fold(0L)(v =>
+        graft.Prof("fanout.ann")(
+          graft.operators.Similarity.annStoreAppend(vecsOf(v), annDir,
+            planes, dims, hl)))
+      val pqT = () => (pqDir, vecCol) match {
+        case (Some(pd), Some(v)) => graft.Prof("fanout.pq") {
+          require(dims % pqM == 0,
+            s"fan-out PQ surface needs dims divisible by pqM, " +
+              s"got dims=$dims pqM=$pqM")
+          if (graft.sources.Commits.committed(spark, pd).isEmpty) {
+            // Codebook training needs at least pqCodes distinct seed
+            // vectors. A vector-poor first delivery must NOT become a
+            // poison pill — under a streaming sink the failed batch
+            // would redeliver and fail forever — so training DEFERS to
+            // the first delivery carrying >= pqCodes embedding ids;
+            // until then the batch advances the other surfaces and the
+            // PQ surface stays unbuilt (its vectors are safe in the
+            // ANN store and can be backfilled by an offline
+            // pqStoreBuild, or arrive again on a redelivery). The
+            // trainer's own seed collect IS the deferral probe: an
+            // undersized delivery raises UndersizedTrainingSet before
+            // any store side effect, one job cheaper than the
+            // pre-count probe this branch used to run.
+            try graft.operators.Similarity.pqStoreBuild(vecsOf(v), pd,
+              m = pqM, subDims = dims / pqM, codes = pqCodes, iters = 2,
+              heldLocks = hl)
+            catch {
+              case _: graft.operators.Similarity.UndersizedTrainingSet =>
+                0L
+            }
+          } else graft.operators.Similarity.pqStoreAppend(vecsOf(v), pd,
+            hl)
+        }
+        case _ => 0L
+      }
+      val chunkTrackT = () => chunkDir.fold((0L, 0L)) { d =>
+        val nChunk = graft.Prof("fanout.chunks")(
+          chunkIngestBatch(shared.select(col(idCol), col(textCol)), d,
+            idCol, textCol, chunkWindow, chunkOverlap, hl))
+        val nCkVec = chunkVecDir.fold(0L)(vd =>
+          graft.Prof("fanout.ckvec")(
+            chunkVectorIngestBatch(spark, d, vd,
+              shared.select(col(idCol)), chunkVecDims, chunkVecM,
+              chunkVecCodes, chunkVecCells, chunkVecTrainPerMille, hl)))
+        (nChunk, nCkVec)
+      }
+      val rs = graft.Par.run(Seq[() => Any](mergeT, idxT, annT, pqT,
+        chunkTrackT))
+      val (nIdx, nAnn, nPq) = (rs(1).asInstanceOf[Long],
+        rs(2).asInstanceOf[Long], rs(3).asInstanceOf[Long])
+      val (nChunk, nCkVec) = rs(4).asInstanceOf[(Long, Long)]
+      (nIdx, nAnn, nPq, nChunk, nCkVec)
+    }
   }
 
   /** SPAN-GATED composed fan-out — [[fanoutIngestBatch]] with the
@@ -1605,7 +1711,14 @@ object Streams {
     * The id read-back joins the gram store's docs table semi-joined on
     * the batch's ids — O(store scan) per batch like the merge/index
     * sinks' own current-state reads, with the batch side broadcast.
-    * Returns (docs the gate inserted, docs indexed, vectors inserted).
+    *
+    * Delivery contract as in [[fanoutIngestBatch]], with the
+    * `_delivered` marker in `gramStoreDir`: a replay of the last
+    * fully-applied (batch id, rows) is a no-op that skips the gate's
+    * read-back entirely; a re-offer under a new batch id still goes
+    * through the gate. Returns (docs the gate inserted, docs indexed,
+    * vectors inserted, PQ rows encoded, docs chunked, chunk vectors
+    * encoded).
     */
   def fanoutIngestBatchGated(batch: DataFrame, batchId: Long,
       storeDir: String, indexDir: String, annDir: String,
@@ -1617,54 +1730,71 @@ object Streams {
       chunkVecDir: Option[String] = None, chunkVecDims: Int = 16,
       chunkVecM: Int = 4, chunkVecCodes: Int = 8,
       chunkVecCells: Int = 16, chunkVecTrainPerMille: Int = 1000):
+      (Long, Long, Long, Long, Long, Long) =
+    deliverOnce(batch, batchId, gramStoreDir,
+      Seq(gramStoreDir, k, storeDir, indexDir, annDir, vecCol, pqDir,
+        chunkDir, chunkVecDir),
+      (0L, 0L, 0L, 0L, 0L, 0L))(
+      gatedApply(_, batchId, storeDir, indexDir, annDir, gramStoreDir,
+        idCol, textCol, vecCol, planes, dims, k, pqDir, pqM, pqCodes,
+        chunkDir, chunkWindow, chunkOverlap, chunkVecDir, chunkVecDims,
+        chunkVecM, chunkVecCodes, chunkVecCells, chunkVecTrainPerMille))
+
+  /** [[fanoutIngestBatchGated]]'s composition over an already-persisted
+    * batch, without the delivery ledger (see [[fanoutApply]]).
+    */
+  private def gatedApply(shared: DataFrame, batchId: Long,
+      storeDir: String, indexDir: String, annDir: String,
+      gramStoreDir: String, idCol: String, textCol: String,
+      vecCol: Option[String], planes: Int, dims: Int, k: Int,
+      pqDir: Option[String], pqM: Int, pqCodes: Int,
+      chunkDir: Option[String], chunkWindow: Int, chunkOverlap: Int,
+      chunkVecDir: Option[String], chunkVecDims: Int, chunkVecM: Int,
+      chunkVecCodes: Int, chunkVecCells: Int, chunkVecTrainPerMille: Int):
       (Long, Long, Long, Long, Long, Long) = {
-    val spark = batch.sparkSession
-    val shared = batch.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Delivered metadata rides into the gram store's docs like any
-      // substringIngestBatch call — but the vector column stays out
-      // (the ANN store is its home; duplicating embeddings into the
-      // screen state would double the biggest column for no reader).
-      val nGate = graft.Prof("fanout.spanGate")(substringIngestBatch(
-        vecCol.fold(shared: DataFrame)(v => shared.drop(v)),
-        gramStoreDir, idCol, textCol, k))
-      val ids = shared.select(col(idCol)).dropDuplicates(idCol)
-      substringStoreRead(spark, gramStoreDir) match {
-        case None => (nGate, 0L, 0L, 0L, 0L, 0L)
-        case Some(docs) =>
-          val cleaned = docs.join(broadcast(ids), Seq(idCol), "left_semi")
-            .groupBy(col(idCol))
-            .agg(max_by(col("clean_text"), col("batch")).as(textCol))
-          // An ALL-DUPLICATE delivery (the common case a dedup gate
-          // exists for) must not touch the sinks: without this check
-          // the empty feed would still merge into the doc store, which
-          // rewrites the full state per mergeBatch's contract. The
-          // emptiness probe is a limit-1 job against the id-pruned
-          // store read — O(small) either way.
-          if (nGate == 0 &&
-              graft.Prof("fanout.emptyProbe")(cleaned.isEmpty))
-            (0L, 0L, 0L, 0L, 0L, 0L)
-          else {
-            // The vector rides from the SAME delivered row whose text
-            // won the deterministic same-id resolution — not an
-            // arbitrary dropDuplicates pick that could pair doc A's
-            // text with doc A's other delivery's embedding.
-            val feed = vecCol.fold(cleaned)(v => cleaned.join(
-              Upsert.onePerKeyByContent(
-                shared.select(col(idCol), col(textCol), col(v)),
-                idCol, textCol).select(col(idCol), col(v)),
-              Seq(idCol), "left"))
-            val (nIdx, nAnn, nPq, nChunk, nCkVec) = fanoutIngestBatch(
-              feed, batchId, storeDir, indexDir, annDir, idCol, textCol,
-              vecCol, planes, dims, pqDir, pqM, pqCodes, chunkDir,
+    val spark = shared.sparkSession
+    // Delivered metadata rides into the gram store's docs like any
+    // substringIngestBatch call — but the vector column stays out
+    // (the ANN store is its home; duplicating embeddings into the
+    // screen state would double the biggest column for no reader).
+    val nGate = graft.Prof("fanout.spanGate")(substringIngestBatch(
+      vecCol.fold(shared)(v => shared.drop(v)),
+      gramStoreDir, idCol, textCol, k))
+    val ids = shared.select(col(idCol)).dropDuplicates(idCol)
+    substringStoreRead(spark, gramStoreDir) match {
+      case None => (nGate, 0L, 0L, 0L, 0L, 0L)
+      case Some(docs) =>
+        val cleaned = docs.join(broadcast(ids), Seq(idCol), "left_semi")
+          .groupBy(col(idCol))
+          .agg(max_by(col("clean_text"), col("batch")).as(textCol))
+        // An ALL-DUPLICATE delivery (the common case a dedup gate
+        // exists for) must not touch the sinks: without this check
+        // the empty feed would still merge into the doc store, which
+        // rewrites the full state per mergeBatch's contract. The
+        // emptiness probe is a limit-1 job against the id-pruned
+        // store read — O(small) either way.
+        if (nGate == 0 &&
+            graft.Prof("fanout.emptyProbe")(cleaned.isEmpty))
+          (0L, 0L, 0L, 0L, 0L, 0L)
+        else {
+          // The vector rides from the SAME delivered row whose text
+          // won the deterministic same-id resolution — not an
+          // arbitrary dropDuplicates pick that could pair doc A's
+          // text with doc A's other delivery's embedding.
+          val feed = vecCol.fold(cleaned)(v => cleaned.join(
+            Upsert.onePerKeyByContent(
+              shared.select(col(idCol), col(textCol), col(v)),
+              idCol, textCol).select(col(idCol), col(v)),
+            Seq(idCol), "left"))
+          val (nIdx, nAnn, nPq, nChunk, nCkVec) = withPersisted(feed)(
+            fanoutApply(_, batchId, storeDir, indexDir, annDir, idCol,
+              textCol, vecCol, planes, dims, pqDir, pqM, pqCodes, chunkDir,
               chunkWindow, chunkOverlap, chunkVecDir, chunkVecDims,
               chunkVecM, chunkVecCodes, chunkVecCells,
-              chunkVecTrainPerMille)
-            (nGate, nIdx, nAnn, nPq, nChunk, nCkVec)
-          }
-      }
-    } finally { shared.unpersist(); () }
+              chunkVecTrainPerMille))
+          (nGate, nIdx, nAnn, nPq, nChunk, nCkVec)
+        }
+    }
   }
 
   /** Streaming face of [[fanoutIngestBatchGated]]. */
@@ -1742,8 +1872,17 @@ object Streams {
     * or the sinks — by design. The vector column stays out of BOTH
     * gate stores (the ANN store is its home).
     *
+    * Delivery contract as in [[fanoutIngestBatch]], with the
+    * `_delivered` marker in `neardupDir`: a replay of the last
+    * fully-applied (batch id, rows) is a no-op — one fingerprint job
+    * instead of re-deriving "nothing changed" on all eight surfaces —
+    * and a takedown issued since stays in force on every sink (the
+    * gates keep the doc either way); a re-offer under a new batch id
+    * still goes through both gates.
+    *
     * Returns (docs the near-dup gate inserted, docs the span gate
-    * inserted, docs indexed, vectors inserted).
+    * inserted, docs indexed, vectors inserted, PQ rows encoded, docs
+    * chunked, chunk vectors encoded).
     */
   def fanoutIngestBatchNeardupGated(batch: DataFrame, batchId: Long,
       storeDir: String, indexDir: String, annDir: String,
@@ -1755,13 +1894,14 @@ object Streams {
       chunkWindow: Int = 64, chunkOverlap: Int = 16,
       chunkVecDir: Option[String] = None, chunkVecDims: Int = 16,
       chunkVecTrainPerMille: Int = 1000):
-      (Long, Long, Long, Long, Long, Long, Long) = {
-    val spark = batch.sparkSession
-    val shared = batch.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      (Long, Long, Long, Long, Long, Long, Long) =
+    deliverOnce(batch, batchId, neardupDir,
+      Seq(neardupDir, minJaccard, gramStoreDir, k, storeDir, indexDir,
+        annDir, vecCol, pqDir, chunkDir, chunkVecDir),
+      (0L, 0L, 0L, 0L, 0L, 0L, 0L)) { shared =>
+      val spark = shared.sparkSession
       val nNear = graft.Prof("fanout.neardupGate")(neardupIngestBatch(
-        vecCol.fold(shared: DataFrame)(v => shared.drop(v)),
+        vecCol.fold(shared)(v => shared.drop(v)),
         neardupDir, idCol, textCol, minJaccard))
       val ids = shared.select(col(idCol)).dropDuplicates(idCol)
       neardupStoreRead(spark, neardupDir) match {
@@ -1780,17 +1920,20 @@ object Streams {
                 shared.select(col(idCol), col(textCol), col(v)),
                 idCol, textCol).select(col(idCol), col(v)),
               Seq(idCol), "left"))
+            // The chunk-vector codebook shape is not exposed here: it
+            // takes fanoutIngestBatchGated's defaults (m 4, 8 codes,
+            // 16 cells).
             val (nGate, nIdx, nAnn, nPq, nChunk, nCkVec) =
-              fanoutIngestBatchGated(feed, batchId, storeDir, indexDir,
-                annDir, gramStoreDir, idCol, textCol, vecCol, planes,
-                dims, k, pqDir, pqM, pqCodes, chunkDir, chunkWindow,
-                chunkOverlap, chunkVecDir, chunkVecDims,
-                chunkVecTrainPerMille = chunkVecTrainPerMille)
+              withPersisted(feed)(gatedApply(_, batchId, storeDir,
+                indexDir, annDir, gramStoreDir, idCol, textCol, vecCol,
+                planes, dims, k, pqDir, pqM, pqCodes, chunkDir,
+                chunkWindow, chunkOverlap, chunkVecDir, chunkVecDims,
+                chunkVecM = 4, chunkVecCodes = 8, chunkVecCells = 16,
+                chunkVecTrainPerMille = chunkVecTrainPerMille))
             (nNear, nGate, nIdx, nAnn, nPq, nChunk, nCkVec)
           }
       }
-    } finally { shared.unpersist(); () }
-  }
+    }
 
   /** Streaming face of [[fanoutIngestBatchNeardupGated]]. */
   def fanoutIngestNeardupGatedSink(stream: DataFrame, storeDir: String,
@@ -1823,8 +1966,17 @@ object Streams {
     * [[graft.operators.Similarity.annStoreDelete]], and — when the
     * pipeline runs a PQ store — [[graft.operators.Similarity
     * .pqStoreDelete]]: a takedown that left quantized codes
-    * probe-visible would not be a takedown). Each store's delete is
-    * idempotent, so redelivery after a mid-fanout crash converges.
+    * probe-visible would not be a takedown), plus the chunk and
+    * chunk-vector stores when `chunkDir` / `chunkVecDir` are set.
+    *
+    * Like the ingest fan-out, every surface's writer lease is acquired
+    * upfront, in the order above, and the surface deletes then run
+    * concurrently ([[graft.Par]]). A competing writer on any surface
+    * refuses the whole takedown before anything commits (no partial
+    * takedown); a crash mid-fan-out leaves a completed subset, and
+    * since each store's delete is idempotent the redelivery converges.
+    * A takedown is not undone by replaying the last fully-applied
+    * ingest delivery (see [[fanoutIngestBatch]]'s delivery contract).
     * Returns (store, index, ann, chunk, pq, chunk-vector) deletion
     * counts.
     */
@@ -1836,60 +1988,71 @@ object Streams {
       chunkVecDir: Option[String] = None):
       (Long, Long, Long, Long, Long, Long) = {
     val spark = ids.sparkSession
-    val victims = ids.select(col(ids.columns.head).as(idCol))
-      .dropDuplicates(idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nStore = graft.sources.Commits.withWriterLock(spark, storeDir) {
-        readState(spark, storeDir) match {
-          case Some(st) =>
-            val n = st.join(victims, Seq(idCol), "left_semi").count()
-            if (n > 0) {
-              // `state_del_<b>` keeps the takedown's provenance visible
-              // in the layout; [[vacuum]] reclaims these like any other
-              // state (recency is creation order, not a name parse) and
-              // [[rollbackToState]] can target them by name.
-              val state = s"state_del_$batchId"
-              st.join(victims, Seq(idCol), "left_anti")
-                .write.mode("overwrite")
-                .parquet(stateDirPath(storeDir, state))
-              writePointer(storeDir, state)
-            }
-            n
-          case None => 0L
+    withPersisted(ids.select(col(ids.columns.head).as(idCol))
+        .dropDuplicates(idCol)) { victims =>
+      val asIds = victims.select(col(idCol).as("id"))
+      // Same shape as the ingest fan-out: every lease upfront in the
+      // sequential order (a competing writer on any surface refuses the
+      // whole takedown before anything commits), then the independent
+      // surface deletes run concurrently with their leases pre-held.
+      graft.sources.Commits.withWriterLocks(spark,
+          Seq(storeDir, indexDir, annDir) ++ chunkDir ++ pqDir ++
+            chunkVecDir) { hl =>
+        val storeT = () => graft.Prof("fanout.delete.merge") {
+          readState(spark, storeDir) match {
+            case Some(st) =>
+              val n = st.join(victims, Seq(idCol), "left_semi").count()
+              if (n > 0) {
+                // `state_del_<b>` keeps the takedown's provenance
+                // visible in the layout; [[vacuum]] reclaims these like
+                // any other state (recency is creation order, not a name
+                // parse) and [[rollbackToState]] can target them by name.
+                val state = s"state_del_$batchId"
+                st.join(victims, Seq(idCol), "left_anti")
+                  .write.mode("overwrite")
+                  .parquet(stateDirPath(storeDir, state))
+                writePointer(storeDir, state)
+              }
+              n
+            case None => 0L
+          }
         }
+        val idxT = () => graft.Prof("fanout.delete.index")(
+          graft.operators.Search.indexDelete(spark, indexDir, victims, hl))
+        val annT = () => graft.Prof("fanout.delete.ann")(
+          graft.operators.Similarity.annStoreDelete(spark, annDir, asIds,
+            hl))
+        // A takedown that leaves the doc's PASSAGES readable is not a
+        // takedown: the chunk store leaves with the other surfaces when
+        // the pipeline runs one. Its count rides in the result so
+        // callers can verify the passage surface's takedown propagated
+        // (0 when no chunk store is attached).
+        val chunkT = () => chunkDir.fold(0L)(d =>
+          graft.Prof("fanout.delete.chunks")(
+            chunkStoreDelete(spark, d, victims, hl)))
+        val pqT = () => pqDir.fold(0L)(d =>
+          graft.Prof("fanout.delete.pq")(
+            graft.operators.Similarity.pqStoreDelete(spark, d, asIds, hl)))
+        // The chunk-VECTOR surface holds packed (doc, seq) ids — every
+        // live passage id whose packed doc part is a victim tombstones,
+        // so a taken-down doc's passages stop being RETRIEVABLE in the
+        // same composed batch they stop being readable (chunk store).
+        val ckVecT = () => chunkVecDir
+          .filter(d => graft.sources.Commits.committed(spark, d).nonEmpty)
+          .fold(0L) { d =>
+            graft.Prof("fanout.delete.ckvec") {
+              val stale = graft.operators.Similarity.pqStoreLiveIds(spark, d)
+                .withColumn(idCol, expr(s"id div ${ChunkVecSeqLimit}"))
+                .join(victims, Seq(idCol), "left_semi")
+                .select(col("id"))
+              graft.operators.Similarity.pqStoreDelete(spark, d, stale, hl)
+            }
+          }
+        val Seq(nStore, nIdx, nAnn, nChunk, nPq, nCkVec) =
+          graft.Par.run(Seq(storeT, idxT, annT, chunkT, pqT, ckVecT))
+        (nStore, nIdx, nAnn, nChunk, nPq, nCkVec)
       }
-      val nIdx = graft.operators.Search.indexDelete(spark, indexDir, victims)
-      val nAnn = graft.operators.Similarity.annStoreDelete(spark, annDir,
-        victims.select(col(idCol).as("id")))
-      // A takedown that leaves the doc's PASSAGES readable is not a
-      // takedown: the chunk store leaves with the other three surfaces
-      // when the pipeline runs one ([[chunkStoreDelete]] is idempotent
-      // like the rest, so the composed batch converges unchanged). Its
-      // count rides in the result so callers can verify the passage
-      // surface's takedown propagated like the other three (0 when no
-      // chunk store is attached).
-      val nChunk = chunkDir
-        .map(d => chunkStoreDelete(spark, d, victims)).getOrElse(0L)
-      val nPq = pqDir
-        .map(d => graft.operators.Similarity.pqStoreDelete(spark, d,
-          victims.select(col(idCol).as("id"))))
-        .getOrElse(0L)
-      // The chunk-VECTOR surface holds packed (doc, seq) ids — every
-      // live passage id whose packed doc part is a victim tombstones,
-      // so a taken-down doc's passages stop being RETRIEVABLE in the
-      // same composed batch they stop being readable (chunk store).
-      val nCkVec = chunkVecDir
-        .filter(d => graft.sources.Commits.committed(spark, d).nonEmpty)
-        .map { d =>
-          val stale = graft.operators.Similarity.pqStoreLiveIds(spark, d)
-            .withColumn(idCol, expr(s"id div ${ChunkVecSeqLimit}"))
-            .join(victims, Seq(idCol), "left_semi")
-            .select(col("id"))
-          graft.operators.Similarity.pqStoreDelete(spark, d, stale)
-        }.getOrElse(0L)
-      (nStore, nIdx, nAnn, nChunk, nPq, nCkVec)
-    } finally { victims.unpersist(); () }
+    }
   }
 
   /** Composed MAINTENANCE pass — the offline twin of the ingest and

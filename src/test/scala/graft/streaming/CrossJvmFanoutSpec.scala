@@ -105,6 +105,9 @@ class CrossJvmFanoutSpec extends SparkSpec {
 
     // Base state: wave A lands cleanly through all six surfaces.
     assert(gated(root, waveA, 0L) == ((2L, 2L, 2L, 2L, 2L, 0L, 0L)))
+    val delivered = graft.sources.StatePointer
+      .readFile(s"$root/nd", "_delivered")
+    assert(delivered.nonEmpty, "wave A's delivery was not recorded")
 
     // Hold the MERGE store's lease — surface 3 of the child's chain —
     // so the child commits its near-dup and gram-store generations
@@ -147,6 +150,11 @@ class CrossJvmFanoutSpec extends SparkSpec {
             s"stuck lease on $s after the child abort")
         }
         assert(lockExists(s"$root/store"), "parent lease disappeared")
+        // The refused batch was never fully applied, so the ledger still
+        // records wave A and a redelivery takes the full path.
+        assert(graft.sources.StatePointer
+          .readFile(s"$root/nd", "_delivered") == delivered,
+          "the refused batch left a _delivered record")
         true
       } finally Commits.releaseWriterLock(spark, s"$root/store")
     assert(childStateOk)
@@ -214,5 +222,41 @@ class CrossJvmFanoutSpec extends SparkSpec {
     // And with the holder gone the same batch lands whole.
     assert(gated(root, FanoutRaceChild.waveB(spark), 1L)
       == ((3L, 3L, 3L, 3L, 3L, 0L, 0L)))
+  }
+
+  test("a takedown refused on another JVM's ANN lease commits nothing") {
+    val root = java.nio.file.Files
+      .createTempDirectory("xjvm-fanout-del").toString
+    assert(gated(root, waveA, 0L) == ((2L, 2L, 2L, 2L, 2L, 0L, 0L)))
+    def takedown() = Streams.fanoutDeleteBatch(Seq(1L).toDF("doc_id"), 1L,
+      s"$root/store", s"$root/index", s"$root/ann",
+      pqDir = Some(s"$root/pq"))
+    val state = Streams.currentStateName(s"$root/store")
+    val indexed = Commits.committed(spark, s"$root/index")
+
+    // A real second JVM holds the ANN store, the third of the
+    // takedown's surfaces, while our takedown runs.
+    val p = fork("graft.sources.LockRaceChild",
+      Seq(s"$root/ann", Commits.DefaultLockTtlMs.toString, "20000"))
+    val out = new Output(p)
+    assert(out.awaitLine("HELD", timeoutMs = 120000),
+      s"child never acquired; output:\n${out.all.mkString("\n")}")
+    intercept[IllegalStateException](takedown())
+    // The leases are taken before any surface mutates: the merge store
+    // and the index, whose leases came first, are unchanged, and no
+    // lease of ours is left behind.
+    assert(Streams.currentStateName(s"$root/store") == state)
+    assert(Streams.readState(spark, s"$root/store").get
+      .select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
+    assert(Commits.committed(spark, s"$root/index") == indexed)
+    assert(Search.indexLiveDocs(spark, s"$root/index").get
+      .select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
+    Seq("store", "index", "pq").foreach { s =>
+      assert(!lockExists(s"$root/$s"), s"stuck lease on $s")
+    }
+    assert(waitBounded(p, out) == 0,
+      s"holder should release cleanly; output:\n${out.all.mkString("\n")}")
+    // With the holder gone the same takedown lands on every surface.
+    assert(takedown() == ((1L, 1L, 1L, 0L, 1L, 0L)))
   }
 }

@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.{Search, Similarity}
+import graft.sources.Commits
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -594,5 +596,157 @@ class FanoutIngestSpec extends SparkSpec {
     assert(gone == ((1L, 1L, 0L, 1L, 0L, 1L)), s"got $gone")
     assert(Similarity.pqStoreLiveIds(spark, vecDir)
       .as[Long].collect().toSet == Set(100000L))
+  }
+
+  // ---- delivery ledger ---------------------------------------------------
+
+  /** The eight surfaces of the fully gated fan-out under one root. */
+  private final class Family(val root: String) {
+    val Seq(store, index, ann, gram, nd, pq, chunks, ckvec) =
+      Seq("store", "index", "ann", "gram", "nd", "pq", "chunks", "ckvec")
+        .map(n => s"$root/$n")
+    def deliver(batch: org.apache.spark.sql.DataFrame, id: Long) =
+      Streams.fanoutIngestBatchNeardupGated(batch, id, store, index, ann,
+        gram, nd, "doc_id", "text", vecCol = Some("vec"), planes = 4,
+        dims = 3, k = 3, pqDir = Some(pq), pqM = 3, pqCodes = 2,
+        chunkDir = Some(chunks), chunkWindow = 4, chunkOverlap = 1,
+        chunkVecDir = Some(ckvec))
+    def takedown(ids: Seq[Long], id: Long) =
+      Streams.fanoutDeleteBatch(ids.toDF("doc_id"), id, store, index, ann,
+        chunkDir = Some(chunks), pqDir = Some(pq), chunkVecDir = Some(ckvec))
+    /** Live doc ids per surface. */
+    def live: Map[String, Set[Long]] = {
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.distinct().as[Long].collect().toSet
+      Map(
+        "merge" -> ids(Streams.readState(spark, store).get.select("doc_id")),
+        "index" -> ids(Search.indexLiveDocs(spark, index).get
+          .select("doc_id")),
+        "ann" -> ids(Similarity.annStoreLiveIds(spark, ann)),
+        "pq" -> ids(Similarity.pqStoreLiveIds(spark, pq)),
+        "chunks" -> ids(Streams.chunkStoreRead(spark, chunks).get
+          .select("doc_id")),
+        "ckvec" -> ids(Similarity.pqStoreLiveIds(spark, ckvec)
+          .select(expr(s"id div ${Streams.ChunkVecSeqLimit}"))))
+    }
+    /** Committed generations of every generational surface. */
+    def generations: Map[String, Seq[Long]] =
+      Seq(index, ann, gram, nd, pq, chunks, ckvec)
+        .map(d => d -> Commits.committed(spark, d).sorted).toMap
+    /** Every file under the root, with its size and modification time. */
+    def files: Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val base = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(base)
+      try walk.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => base.relativize(p).toString ->
+          ((java.nio.file.Files.size(p),
+            java.nio.file.Files.getLastModifiedTime(p).toMillis)))
+        .toMap
+      finally walk.close()
+    }
+  }
+
+  private def family(name: String) =
+    new Family(java.nio.file.Files.createTempDirectory(name).toString)
+
+  /** Six docs of ten tokens no other doc shares: all pass both gates,
+    * and their 18 passages train the chunk-vector codebook.
+    */
+  private def wave = (1L to 6L).map { i =>
+    (i, (0 until 10).map(j => s"d${i}w$j").mkString(" "),
+      Seq(i.toFloat, (i % 3).toFloat, 1.0f))
+  }.toDF("doc_id", "text", "vec")
+
+  private val NoOp = (0L, 0L, 0L, 0L, 0L, 0L, 0L)
+
+  /** Spark jobs `f` starts, counted by a listener on `f`'s job group. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("ledger-counted")(f)
+      // The bus delivers events in order: once the sentinel's job is
+      // seen, every job `f` started has been counted.
+      inGroup("ledger-sentinel")(spark.range(1).collect(): Unit)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("ledger-sentinel") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(groups.contains("ledger-sentinel"), "listener bus stalled")
+      groups.toArray.count(_ == "ledger-counted")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a fully-applied redelivery runs one Spark job and writes nothing") {
+    val f = family("ledger-noop")
+    assert(f.deliver(wave, 1L) == ((6L, 6L, 6L, 6L, 6L, 6L, 18L)))
+    val before = f.files
+    var again: Any = null
+    assert(jobsOf { again = f.deliver(wave, 1L) } == 1)
+    assert(again == NoOp)
+    // No surface gained a file, a generation or a state pointer.
+    assert(f.files == before)
+  }
+
+  test("the same batch id with different rows takes the full path") {
+    val f = family("ledger-rows")
+    assert(f.deliver(wave, 1L)._1 == 6L)
+    val changed = wave.withColumn("text",
+      when($"doc_id" === 3L, lit("fresh words nobody delivered before"))
+        .otherwise($"text"))
+    // Only doc 3 changed, and only its text: its vector is already on the
+    // ANN and PQ stores.
+    assert(f.deliver(changed, 1L) == ((1L, 1L, 1L, 0L, 0L, 1L, 2L)))
+    assert(Search.bm25FromIndexTopK(spark, f.index, Seq("nobody"), 5)
+      .select("doc_id").as[Long].collect().toSeq == Seq(3L))
+    assert(Streams.chunkStoreRead(spark, f.chunks).get
+      .filter($"doc_id" === 3L).select("chunk_text").as[String]
+      .collect().toSet == Set("fresh words nobody delivered",
+        "delivered before"))
+  }
+
+  test("a takedown issued after a delivery stays in force when the " +
+      "delivery replays") {
+    val f = family("ledger-takedown")
+    f.deliver(wave, 1L)
+    assert(f.takedown(Seq(2L), 2L) == ((1L, 1L, 1L, 1L, 1L, 3L)))
+    // Before the ledger, this replay re-merged, re-indexed and
+    // re-inserted doc 2 on every sink (the gates had kept it).
+    assert(f.deliver(wave, 1L) == NoOp)
+    val all = (1L to 6L).toSet
+    f.live.foreach { case (surface, ids) =>
+      assert(ids == all - 2L, s"doc 2 is back on $surface")
+    }
+  }
+
+  test("a lost delivery marker costs the full path, which converges " +
+      "without adding rows") {
+    val f = family("ledger-lost")
+    f.deliver(wave, 1L)
+    // A crash after the last surface but before the marker write.
+    val marker = new java.io.File(s"${f.nd}/_delivered")
+    assert(marker.delete())
+    val (live, generations) = (f.live, f.generations)
+    val rows = Streams.readState(spark, f.store).get.count()
+    // The full path: both gates drop the exact redelivery, the
+    // read-back feeds every sink, and each sink's idempotence keeps it
+    // at the state it had.
+    assert(f.deliver(wave, 1L) == NoOp)
+    assert(f.live == live)
+    assert(f.generations == generations)
+    assert(Streams.readState(spark, f.store).get.count() == rows)
+    assert(marker.exists(), "the full path records the delivery again")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One session-scoped reliable-checkpoint directory, shared by every
@@ -67,7 +68,7 @@ object Checkpoints {
       val path = s"$root/f$n"
       n += 1
       df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path)
+      ParquetRead(df.sparkSession, path)
     }
 
     /** `checkpoint` plus the frame's row count, observed as a metric on
@@ -134,7 +135,7 @@ object Checkpoints {
       val path = s"$cur/f$n"
       n += 1
       df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path)
+      ParquetRead(df.sparkSession, path)
     }
 
     /** Start a new round: files two rounds back are now unreferenced

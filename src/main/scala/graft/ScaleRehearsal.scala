@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,11 +136,11 @@ object ScaleRehearsal {
             col("label"))
           .repartition(cpus.toInt)
           .write.parquet(embPath)
-        spark.read.parquet(docsPath).count()
+        ParquetRead(spark, docsPath).count()
       }
       }
-      val docs = spark.read.parquet(docsPath)
-      val emb = spark.read.parquet(embPath)
+      val docs = ParquetRead(spark, docsPath)
+      val emb = ParquetRead(spark, embPath)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
 
       val idx = s"$root/bm25/index"

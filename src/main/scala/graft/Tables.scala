@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,7 +29,7 @@ import org.apache.spark.sql.types._
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRead(spark, s"$dir/$name.parquet")
 
   // TPC-H-ish tables: pure pass-through. Key/int columns accept any
   // integral width (queries compare/join, never assume 32 vs 64 bits);

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1018,15 +1019,15 @@ object Search {
     // appends) — that reclaimable tail is what the stats exist to
     // surface — so they read the whole table dir recursively, not just
     // the committed subdirectories.
-    val docRows = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/docs")
+    val docRows = ParquetRead(spark, Seq(s"$dir/docs"),
+      recursiveFileLookup = true)
       .agg(count(lit(1)).as("doc_rows_total"))
     val livePost = readCommittedPostings(spark, dir, committed)
       .join(cur.filter(col("content_hash") =!= Tombstone)
         .select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
       .agg(count(lit(1)).as("postings_rows_live"))
-    val totalPost = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/postings")
+    val totalPost = ParquetRead(spark, Seq(s"$dir/postings"),
+      recursiveFileLookup = true)
       .agg(count(lit(1)).as("postings_rows_total"))
     docsAgg
       .crossJoin(broadcast(docRows))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{HashFunctions, VectorFunctions}
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -583,7 +584,7 @@ object Similarity {
     * (m × codes × subDims doubles). */
   private def pqReadCodebook(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Seq[Seq[(Long, Seq[Double])]] = {
-    val rows = spark.read.parquet(s"$storeDir/codebook")
+    val rows = ParquetRead(spark, s"$storeDir/codebook")
       .select(col("subspace"), col("cid"), col("centroid"))
       .collect()
     require(rows.nonEmpty, s"$storeDir/codebook is empty")
@@ -600,7 +601,7 @@ object Similarity {
     val p = new org.apache.hadoop.fs.Path(s"$storeDir/coarse")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       None
-    else Some(spark.read.parquet(s"$storeDir/coarse")
+    else Some(ParquetRead(spark, s"$storeDir/coarse")
       .select(col("cid"), col("centroid"))
       .collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
@@ -965,12 +966,20 @@ object Similarity {
     */
   def pqStoreTopK(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, queries: DataFrame, k: Int,
-      nprobe: Int = 0): DataFrame = {
+      nprobe: Int = 0): DataFrame =
+    pqProbe(spark, storeDir, queries, k, nprobe,
+      pqReadCodebook(spark, storeDir))
+
+  /** [[pqStoreTopK]]'s body; `codebook` is read after the argument
+    * checks, or passed in by a caller that already holds it. */
+  private def pqProbe(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, queries: DataFrame, k: Int, nprobe: Int,
+      codebook: => Seq[Seq[(Long, Seq[Double])]]): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nprobe >= 0, s"nprobe must be >= 0, got $nprobe")
     require(graft.sources.Commits.committed(spark, storeDir).nonEmpty,
       s"$storeDir has no committed build - run pqStoreBuild first")
-    val books = pqReadCodebook(spark, storeDir)
+    val books = codebook
     val subDims = books.head.head._2.size
     val cur = pqCurrentRows(spark, storeDir)
       .select(col("id").as("cid") +: col("cell") +:
@@ -1032,7 +1041,7 @@ object Similarity {
       s"need kCand >= k > 0, got kCand=$kCand k=$k")
     val books = pqReadCodebook(spark, storeDir)
     val dims = books.size * books.head.head._2.size
-    val cand = pqStoreTopK(spark, storeDir, queries, kCand, nprobe)
+    val cand = pqProbe(spark, storeDir, queries, kCand, nprobe, books)
       .select(col("qid"), col("cid"))
     val q = queries.dropDuplicates("id")
       .select(col("id").as("qid"),
@@ -1352,8 +1361,8 @@ object Similarity {
         .as("tombstoned_ids"),
       count_distinct(when(size(col("codes")) > 0, col("cell")))
         .as("occupied_cells"))
-    val total = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$storeDir/rows")
+    val total = ParquetRead(spark, Seq(s"$storeDir/rows"),
+      recursiveFileLookup = true)
       .agg(count(lit(1)).as("rows_total"))
     // Exact integer comparison (live > threshold × cells), no division
     // — the flip point is bit-precise, which the spec pins.
@@ -1892,8 +1901,8 @@ object Similarity {
         .as("occupied_buckets"))
     // Total COUNTS orphan rows (crashed appends' uncommitted dirs) —
     // the reclaimable tail the stats exist to surface.
-    val total = spark.read.option("recursiveFileLookup", "true")
-      .parquet(storeDir)
+    val total = ParquetRead(spark, Seq(storeDir),
+      recursiveFileLookup = true)
       .agg(count(lit(1)).as("rows_total"))
     curAgg.crossJoin(broadcast(total))
       .select(lit(committed.size).as("committed_batches"),
@@ -1946,7 +1955,7 @@ object Similarity {
   def annStorePartitionedTopK(spark: org.apache.spark.sql.SparkSession,
       partDir: String, queries: DataFrame, planes: Int, dims: Int,
       k: Int, decimals: Int = 6): DataFrame = {
-    val store = spark.read.parquet(partDir)
+    val store = ParquetRead(spark, partDir)
     // Partition-column type inference may narrow `bucket` (e.g. to
     // int); cast the BROADCAST side to match so the store side keeps a
     // bare partition-column reference — a cast there would defeat the

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,7 +51,7 @@ object FrontierStore {
   /** The current frontier snapshot, empty if never written. */
   def read(spark: SparkSession, dir: String): DataFrame =
     graft.sources.StatePointer.currentStateName(dir) match {
-      case Some(name) => spark.read.parquet(
+      case Some(name) => ParquetRead(spark,
         graft.sources.StatePointer.stateDirPath(dir, name))
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schema)

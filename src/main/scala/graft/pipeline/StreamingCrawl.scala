@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{HashFunctions, UrlFunctions}
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -82,10 +83,10 @@ object StreamingCrawl {
       val visitedDir = s"${dirs.state}/visited"
       if (graft.sources.StatePointer.exists(visitedDir)) {
         val tmp = s"${visitedDir}__resume_tmp"
-        spark.read.parquet(visitedDir)
+        ParquetRead(spark, visitedDir)
           .join(slice.select("url"), Seq("url"), "left_anti")
           .write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp)
+        ParquetRead(spark, tmp)
           .write.mode("overwrite").parquet(visitedDir)
         val tp = new org.apache.hadoop.fs.Path(tmp)
         tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -98,7 +99,7 @@ object StreamingCrawl {
   }
 
   private def state(spark: SparkSession, path: String): DataFrame =
-    if (graft.sources.StatePointer.exists(path)) spark.read.parquet(path)
+    if (graft.sources.StatePointer.exists(path)) ParquetRead(spark, path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("url", StringType))))

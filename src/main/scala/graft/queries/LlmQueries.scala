@@ -4,6 +4,7 @@ import graft.QueryDef.PresentOps
 import graft.{BenchPhases, QueryDef, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Search, Similarity, TextAnalysis}
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -322,10 +323,10 @@ object LlmQueries {
     // intermediates release HERE, try/finally like fanoutIngestBatch,
     // instead of leaking until the harness's clearCache.
     try {
-      val storeKeys = s.read.parquet(s"$dir/bands")
+      val storeKeys = ParquetRead(s, s"$dir/bands")
         .select(col("doc_id"), col("band_keys"))
       val cand = Dedup.lshIncrementalCandidatesFromKeys(storeKeys, batchKeys)
-      val storeHs = s.read.parquet(s"$dir/hs")
+      val storeHs = ParquetRead(s, s"$dir/hs")
         .select(col("doc_id"), col("hs"))
       Dedup.jaccard(cand, storeHs.unionByName(batchHs))
         .filter(col("jaccard") >= 0.5)

@@ -86,7 +86,8 @@ object Commits {
     * files (a rewrite whose join produced zero rows leaves a file-less
     * dir that would break schema inference), plus — for legacy
     * flat-file stores or a mid-migration mix — the dir's own top-level
-    * files, batch-filtered. None when nothing readable exists.
+    * files, batch-filtered. None when nothing readable exists. Plans
+    * without a Spark job: the per-batch listings feed [[ParquetRead]].
     */
   def readCommittedBatches(spark: SparkSession, tableDir: String,
       committed: Seq[Long]): Option[
@@ -102,14 +103,16 @@ object Commits {
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
     val present = batchDirs(fs, base)
-    val dirPaths = committed.filter(b => present.contains(b) &&
-        fs.listStatus(present(b)).exists(isData))
-      .map(b => s"$tableDir/b$b")
+    val listed = committed.flatMap(b => present.get(b).map(d =>
+        s"$tableDir/b$b" -> fs.listStatus(d).toSeq))
+      .filter(_._2.exists(isData))
+    val dirPaths = listed.map(_._1)
     val hasFlat = fs.exists(base) && fs.listStatus(base).exists(isData)
     if (hasFlat)
-      Some(spark.read.parquet((dirPaths :+ tableDir): _*)
+      Some(ParquetRead(spark, dirPaths :+ tableDir)
         .filter(col("batch").isin(committed: _*)))
-    else if (dirPaths.nonEmpty) Some(spark.read.parquet(dirPaths: _*))
+    else if (dirPaths.nonEmpty)
+      Some(ParquetRead(spark, dirPaths, listed = Some(listed.flatMap(_._2))))
     else None
   }
 
@@ -271,7 +274,7 @@ object Commits {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = flatDataFiles(fs, base)
     if (files.isEmpty) Seq.empty
-    else spark.read.parquet(files.map(_.toString): _*)
+    else ParquetRead(spark, files.map(_.toString))
       .select(col("batch")).distinct().collect()
       .map(_.getLong(0)).sorted.toSeq
   }
@@ -416,8 +419,8 @@ object Commits {
       // own `b<id>` subdirectory (the inverted index) scan the same as
       // flat stores (the ANN dir), orphans included — which is the
       // point of this fallback.
-      val row = spark.read.option("recursiveFileLookup", "true")
-        .parquet(dataPath).agg(max(col("batch"))).head()
+      val row = ParquetRead(spark, Seq(dataPath), recursiveFileLookup = true)
+        .agg(max(col("batch"))).head()
       (if (row.isNullAt(0)) -1L else row.getLong(0)) + 1L
     }
   }

@@ -115,13 +115,14 @@ object Store {
       .load()
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetRead(spark, path)
 
   /** Read a store whose files were written under EVOLVING schemas
     * (appends that gained columns over time): schema union across
     * files, absent columns null-filled — the integration contract for
     * additive evolution. Costs a footer read per file at planning, so
-    * it is a separate entry point rather than the default `read`.
+    * it is a separate entry point rather than the default `read`, and
+    * the one store read left on Spark's schema-inference job.
     */
   def readEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Upsert
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -284,7 +285,7 @@ object Streams {
     val clean =
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
         graft.operators.Corpus.decontaminateAgainstIndex(batch,
-          spark.read.parquet(benchIndexDir), idCol, textCol, shingleN,
+          ParquetRead(spark, benchIndexDir), idCol, textCol, shingleN,
           minOverlap)
       else batch
     neardupIngestBatch(clean, storeDir, idCol, textCol, minJaccard)
@@ -1831,7 +1832,7 @@ object Streams {
     val there = p
       .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     if (committed.isEmpty || !there) None
-    else Some(spark.read.parquet(s"$storeDir/docs")
+    else Some(ParquetRead(spark, s"$storeDir/docs")
       .filter(col("batch").isin(committed: _*)))
   }
 
@@ -2244,9 +2245,9 @@ object Streams {
           "migrate (this is NOT an already-compact table)")
       0L
     }
-    else if (spark.read.parquet(bandsDir).columns.contains("band_keys")) 0L
+    else if (ParquetRead(spark, bandsDir).columns.contains("band_keys")) 0L
     else {
-      val hs = spark.read.parquet(hsDir)
+      val hs = ParquetRead(spark, hsDir)
         .filter(col("batch").isin(committed: _*))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val compact = Dedup.lshBandKeys(
@@ -2254,7 +2255,7 @@ object Streams {
           128, 16)
         .join(hs.select(col("doc_id"), col("batch")), Seq("doc_id"))
       compact.write.mode("overwrite").parquet(tmp.toString)
-      val n = spark.read.parquet(tmp.toString).count()
+      val n = ParquetRead(spark, tmp.toString).count()
       hs.unpersist()
       if (!fs.rename(bands, old))
         throw new java.io.IOException(s"could not rename $bands aside")
@@ -2304,7 +2305,7 @@ object Streams {
       val there = path
         .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
       if (committed.isEmpty || !there) None
-      else Some(spark.read.parquet(p)
+      else Some(ParquetRead(spark, p)
         .filter(col("batch").isin(committed: _*)))
     }
     val hashed = Upsert.onePerKeyByContentHashed(batch, idCol, textCol)
@@ -2460,7 +2461,7 @@ object Streams {
   def readState(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): Option[DataFrame] =
     currentStateName(targetDir)
-      .map(name => spark.read.parquet(stateDirPath(targetDir, name)))
+      .map(name => ParquetRead(spark, stateDirPath(targetDir, name)))
 
   /** Roll a versioned state store (merge sink / CMS sink) back to
     * `batchId`: repoint `_current` at `state_<batchId>`. Later states
@@ -2554,7 +2555,7 @@ object Streams {
       .flatMap(_.getPath.getName.stripPrefix("state_").toLongOption)
       .filter(_ < batchId)
       .sorted.lastOption
-      .map(k => spark.read.parquet(stateDirPath(targetDir, s"state_$k")))
+      .map(k => ParquetRead(spark, stateDirPath(targetDir, s"state_$k")))
     val merged = prev match {
       case Some(cur) => cur.unionByName(delta)
         .groupBy(col("d"), col("b")).agg(sum(col("s")).as("s"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,6 +29,34 @@ trait SparkSpec extends AnyFunSuite {
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.map(_.getPath.getName)
+  }
+
+  /** Spark jobs `f` starts, counted by a listener on `f`'s job group. */
+  protected def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("jobs-counted")(f)
+      // The bus delivers events in order: once the sentinel's job is
+      // seen, every job `f` started has been counted.
+      inGroup("jobs-sentinel")(spark.range(1).collect(): Unit)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("jobs-sentinel") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(groups.contains("jobs-sentinel"), "listener bus stalled")
+      groups.toArray.count(_ == "jobs-counted")
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -845,6 +845,39 @@ class SimilaritySpec extends SparkSpec {
       .select("qid", "cid").as[(Long, Long)].collect().toSet)
   }
 
+  test("annStoreTopKAuto falls back when the partitioned layout " +
+      "vanishes right after the snapshot check") {
+    val dir = java.nio.file.Files.createTempDirectory("ann-vanish")
+      .toString + "/idx"
+    val part = java.nio.file.Files.createTempDirectory("ann-vanish-p")
+      .toString + "/part"
+    val vecs = (0 until 20).map { i =>
+      (i.toLong, Seq(math.cos(i * 0.7).toFloat, math.sin(i * 1.3).toFloat,
+        ((i % 5) - 2).toFloat / 2f))
+    }.toDF("id", "vec")
+    Similarity.annStoreAppend(vecs, dir, planes = 4, dims = 3)
+    Similarity.annStorePartition(spark, dir, part)
+    // Seen through `vanish://`, the layout is deleted the moment its
+    // `_snapshot` marker is opened: the snapshot check passes, then the
+    // partitioned read finds the dir gone, as under a refresh.
+    spark.sparkContext.hadoopConfiguration.set("fs.vanish.impl",
+      classOf[VanishOnSnapshotFs].getName)
+    spark.sparkContext.hadoopConfiguration
+      .setBoolean("fs.vanish.impl.disable.cache", true)
+    val queries = vecs.filter(col("id") < 3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "cid", "score", "rnk")
+        .as[(Long, Long, Double, Int)].collect().toSeq.sorted
+    val auto = Similarity.annStoreTopKAuto(spark, dir, queries,
+      planes = 4, dims = 3, k = 3, partDir = Some(s"vanish://$part"))
+    assert(!new java.io.File(part).exists)
+    assert(auto.inputFiles.nonEmpty &&
+      auto.inputFiles.forall(_.contains("/idx")),
+      s"expected all reads under $dir, got ${auto.inputFiles.toSeq}")
+    assert(rows(auto) == rows(Similarity.annStoreTopK(spark, dir, queries,
+      planes = 4, dims = 3, k = 3)))
+  }
+
   test("annStoreTopKAuto surfaces genuine layout drift instead of " +
       "silently routing generational") {
     val dir = java.nio.file.Files.createTempDirectory("ann-drift")
@@ -1216,5 +1249,18 @@ class SimilaritySpec extends SparkSpec {
     // The migrated store keeps serving mutations.
     assert(Similarity.annStoreAppend(
       Seq((99L, Seq(0.3f, 0.4f))).toDF("id", "vec"), dir, 4, 2) == 1L)
+  }
+}
+
+/** Local filesystem under the `vanish` scheme that deletes a dir as soon
+  * as its `_snapshot` marker is opened (the open stream still reads).
+  */
+class VanishOnSnapshotFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    if (f.getName == "_snapshot") delete(f.getParent, true)
+    in
   }
 }

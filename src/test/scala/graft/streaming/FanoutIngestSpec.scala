@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.{Search, Similarity}
 import graft.sources.Commits
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -660,34 +659,6 @@ class FanoutIngestSpec extends SparkSpec {
   }.toDF("doc_id", "text", "vec")
 
   private val NoOp = (0L, 0L, 0L, 0L, 0L, 0L, 0L)
-
-  /** Spark jobs `f` starts, counted by a listener on `f`'s job group. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup("ledger-counted")(f)
-      // The bus delivers events in order: once the sentinel's job is
-      // seen, every job `f` started has been counted.
-      inGroup("ledger-sentinel")(spark.range(1).collect(): Unit)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("ledger-sentinel") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(groups.contains("ledger-sentinel"), "listener bus stalled")
-      groups.toArray.count(_ == "ledger-counted")
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a fully-applied redelivery runs one Spark job and writes nothing") {
     val f = family("ledger-noop")

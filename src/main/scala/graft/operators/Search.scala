@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.sources.ParquetRead
+import graft.sources.{Commits, GenTable, ParquetRead}
+import graft.sources.GenTable.Tombstone
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -416,14 +417,14 @@ object Search {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    graft.sources.Commits.withWriterLock(spark, dir) {
+    Commits.withWriterLock(spark, dir) {
       // Destructive rebuild: drop the store's tables but keep the held
       // lease file itself.
-      Seq("postings", "docs", "_commits", "_vacuum").foreach(p =>
+      Seq("postings", "docs", "_commits", GenTable.StageDir).foreach(p =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true))
       writeSlice(Upsert.onePerKeyByContent(docs, idCol, textCol),
         idCol, textCol, dir, 0L)
-      commitBatch(spark, dir, 0L)
+      Commits.commit(spark, dir, 0L)
     }
   }
 
@@ -439,7 +440,7 @@ object Search {
     */
   def indexAppend(batch: DataFrame, idCol: String, textCol: String,
       dir: String, heldLocks: Set[String] = Set.empty): Long =
-   graft.sources.Commits.withWriterLockUnless(batch.sparkSession, dir,
+   Commits.withWriterLockUnless(batch.sparkSession, dir,
        heldLocks) {
     val spark = batch.sparkSession
     val hashed = Upsert.onePerKeyByContentHashed(batch, idCol, textCol)
@@ -447,7 +448,7 @@ object Search {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // Membership resolve plan picked by batch-vs-store size
-      // ([[graft.sources.Commits.scopeMutationResolve]]): SCOPED
+      // ([[Commits.scopeMutationResolve]]): SCOPED
       // (semi-join before the per-doc aggregate) for micro-batches —
       // an unscoped currentDocs aggregates the whole docs table per
       // mutation, store-linear, measured at 7 s for a 500-doc append
@@ -455,11 +456,11 @@ object Search {
       // backfill-sized batches, where the id set stops broadcasting
       // and the semi-join degrades to a corpus-sized shuffle join
       // worse than the aggregate it was avoiding.
-      val committed = committedBatches(spark, dir)
+      val committed = Commits.committed(spark, dir)
       val cur =
         if (committed.isEmpty) None
-        else if (graft.sources.Commits.scopeMutationResolve(hashed.count(),
-            graft.sources.Commits.committedRowCount(spark, s"$dir/docs",
+        else if (Commits.scopeMutationResolve(hashed.count(),
+            Commits.committedRowCount(spark, s"$dir/docs",
               committed)))
           currentDocsFor(spark, dir, hashed.select(col(idCol).as("doc_id")))
         else currentDocs(spark, dir)
@@ -475,20 +476,16 @@ object Search {
       try {
         val n = graft.Prof("indexAppend.resolve")(fresh.count())
         if (n > 0) {
-          val batchId = nextBatchId(spark, dir)
+          val batchId = Commits.allocateBatchId(spark, dir,
+            Seq(s"$dir/docs", s"$dir/postings"))
           graft.Prof("indexAppend.writeSlice")(
             writeSlice(fresh, idCol, textCol, dir, batchId))
-          commitBatch(spark, dir, batchId)
+          Commits.commit(spark, dir, batchId)
         }
         n
       } finally { fresh.unpersist(); () }
     } finally { hashed.unpersist(); () }
    }
-
-  /** Tombstone marker in the docs table's content_hash column — real
-    * hashes are 64-hex sha256, so no collision is possible.
-    */
-  private val Tombstone = "__tombstone__"
 
   /** DELETE docs from the standing index — the tombstone generation
     * completing the write-semantics triangle (insert / changed-content
@@ -502,18 +499,18 @@ object Search {
     */
   def indexDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
       ids: DataFrame, heldLocks: Set[String] = Set.empty): Long =
-   graft.sources.Commits.withWriterLockUnless(spark, dir, heldLocks) {
+   Commits.withWriterLockUnless(spark, dir, heldLocks) {
     // Adaptive like indexAppend: scoped resolve (only the requested
     // ids' docs rows reach the currency aggregate) for normal
     // takedowns, store-wide aggregate + post-filter for corpus-sized
     // ones where the id semi-join would stop broadcasting.
     val idsF = ids.select(col(ids.columns.head).as("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     val cur = (
       if (committed.isEmpty) None
-      else if (graft.sources.Commits.scopeMutationResolve(idsF.count(),
-          graft.sources.Commits.committedRowCount(spark, s"$dir/docs",
+      else if (Commits.scopeMutationResolve(idsF.count(),
+          Commits.committedRowCount(spark, s"$dir/docs",
             committed)))
         currentDocsFor(spark, dir, idsF)
       else currentDocs(spark, dir)
@@ -527,344 +524,61 @@ object Search {
     try {
       val n = victims.count()
       if (n > 0) {
-        val batchId = nextBatchId(spark, dir)
+        val batchId = Commits.allocateBatchId(spark, dir,
+          Seq(s"$dir/docs", s"$dir/postings"))
         victims.withColumn("batch", lit(batchId))
           .write.parquet(s"$dir/docs/b$batchId")
-        commitBatch(spark, dir, batchId)
+        Commits.commit(spark, dir, batchId)
       }
       n
     } finally { victims.unpersist(); idsF.unpersist(); () }
    }
 
-  /** Compact the index to its LIVE state: current committed generation
-    * of every non-tombstoned doc rewritten as batch 0,
+  /** The index's maintenance descriptor ([[GenTable]]): membership
+    * `docs`, dependent `postings` rewritten term-clustered (the layout
+    * [[buildIndex]] documents). Package-private for the specs' crash
+    * hooks.
+    */
+  private[graft] val IndexStore = new GenTable("doc_id",
+    col("content_hash") === Tombstone, GenTable.Table("docs", "docs/b0"),
+    Seq(GenTable.Table("postings", "postings/b0", _
+      .repartition(col("term"))
+      .sortWithinPartitions(col("term"), col("doc_id")))))
+
+  /** Compact the index to its LIVE state: the current committed
+    * generation of every non-tombstoned doc rewritten as batch 0,
     * superseded/orphan/deleted rows dropped. Offline maintenance op
-    * (writer-lease held, no concurrent readers). Crash safety: the
-    * stage is written COMPLETE — tables plus a staged `_commits/b0`
-    * ledger — before any live piece is touched, then the LIVE LEDGER IS
-    * DROPPED FIRST (so "staged ledger present, live ledger missing"
-    * means exactly "swap in progress", and readers fail the loud
-    * no-committed-state way rather than see half-swapped tables), then
-    * the swap replaces piece-by-piece via renames. A crash anywhere
-    * mid-swap is repaired by the next vacuum call, which detects that
-    * signature and completes the outstanding renames instead of
-    * re-compacting tables that may already be gone; a complete stage
-    * whose swap never started (live ledger intact) is DISCARDED, never
-    * installed — appends may have landed after the crash, so the stage
-    * can be stale.
+    * (writer lease held, no concurrent readers) — [[GenTable
+    * .vacuumFull]]: the stage is written complete before the live
+    * ledger drops, and a crash mid-swap is completed by the next
+    * maintenance call.
     */
   def indexVacuum(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
-   graft.sources.Commits.withWriterLock(spark, dir) {
-    val stage = s"$dir/_vacuum"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (repairCrashedSwap(fs, dir)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage))) {
-      // Incomplete stage (crash mid-stage-write) or a stage whose swap
-      // never started (live ledger intact): discard and re-vacuum.
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
-    val committed = committedBatches(spark, dir)
-    val cur = currentDocs(spark, dir).getOrElse(return)
-      .filter(col("content_hash") =!= Tombstone)
-    val curKeys = cur.select(col("doc_id"), col("batch"))
-    val livePost = readCommittedPostings(spark, dir, committed)
-      .join(curKeys, Seq("doc_id", "batch"))
-    livePost.withColumn("batch", lit(0L))
-      .repartition(col("term"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.parquet(s"$stage/postings/b0")
-    cur.withColumn("batch", lit(0L)).write.parquet(s"$stage/docs/b0")
-    graft.sources.Commits.commit(spark, stage, 0L)
-    // Swap: drop the live ledger FIRST. Until the staged ledger is
-    // renamed in (the swap's last step) the store has no committed
-    // state, so a reader — or an append's currentDocs — fails loudly
-    // instead of joining batch-0 postings against old-generation doc
-    // keys; and the repair branch above keys off exactly this
-    // ledger-missing signature, which would otherwise miss crashes
-    // during the postings/docs renames and delete the stage holding
-    // their only copy.
-    graft.sources.Commits.clear(spark, dir)
-    swapFromStage(fs, dir, stage)
-   }
+    IndexStore.vacuumFull(spark, dir)(currentDocs(spark, dir)
+      .map(_.filter(col("content_hash") =!= Tombstone)))
 
-  /** Detect-and-repair the full vacuum's crashed-mid-swap window:
-    * staged ledger present, live ledger missing means the stage (or
-    * the pieces already renamed into place) holds the store's ONLY
-    * copy — finish the swap. EVERY maintenance entry point must call
-    * this BEFORE its orphan sweep: in this window the committed set
-    * reads empty, so an unguarded sweep would delete the just-renamed
-    * `b0` dirs as orphans and destroy the corpus. Returns true when a
-    * repair ran (the caller should re-read the ledger or return).
-    */
-  private def repairCrashedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Boolean = {
-    val stagedLedger =
-      new org.apache.hadoop.fs.Path(s"$dir/_vacuum/_commits/b0")
-    if (fs.exists(stagedLedger) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_commits"))) {
-      swapFromStage(fs, dir, s"$dir/_vacuum")
-      true
-    } else false
-  }
-
-  /** Replace the live tables + ledger with the staged copies, piece by
-    * piece; pieces already renamed by a crashed predecessor are left in
-    * place (their staged source is gone).
-    */
-  private def swapFromStage(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, stage: String): Unit = {
-    Seq("postings", "docs", "_commits").foreach { p =>
-      val src = new org.apache.hadoop.fs.Path(s"$stage/$p")
-      if (fs.exists(src)) {
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true)
-        fs.rename(src, new org.apache.hadoop.fs.Path(s"$dir/$p")): Unit
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-  }
-
-  /** INCREMENTAL vacuum: reclaim only the DIRTY batches — those holding
-    * dead rows (superseded generations, or any row of a tombstoned doc,
-    * the tombstone marker included) at a dead fraction of at least
-    * `minDeadFraction` — and leave clean batches' files untouched.
-    * Maintenance cost scales with the DEAD data, not the corpus: after
-    * a 500-doc upsert against a 100 TB store, only the batches holding
-    * those 500 docs' old generations rewrite, where [[indexVacuum]]
-    * rewrites the full live state (keep it for offline ledger resets).
-    *
-    * Mechanics: the dirty batches' surviving rows — live current
-    * generations, plus tombstones whose doc still has rows in
-    * UNSELECTED batches (dropping such a tombstone would RESURRECT the
-    * older generation; one carried forward keeps suppressing it) — are
-    * rewritten as one fresh committed batch, then the dirty batches'
-    * commit markers are removed and their directories deleted.
-    *
-    * Crash safety, step by step (writer-lease held; attempt markers
-    * burn ids as everywhere): a crash before the new batch's commit
-    * leaves an invisible orphan dir that the NEXT vacuum's orphan sweep
-    * deletes; after the commit but before the marker removals, the old
-    * generations are merely superseded by the rewrite (max-batch
-    * resolution already ignores them — no double counting, tombstones
-    * agree between copies), and the next vacuum reclaims them as
-    * all-dead batches; between marker removals and dir deletes, the
-    * unmarked dirs are invisible orphans, swept next time. Every state
-    * is readable and converges — no staged swap needed.
-    *
-    * Returns the number of batches reclaimed.
+  /** INCREMENTAL vacuum ([[GenTable.vacuumIncremental]]): reclaim only
+    * the batches holding dead rows (superseded generations, or any row
+    * of a tombstoned doc) at a dead fraction of at least
+    * `minDeadFraction`; clean batches' files stay untouched. After a
+    * 500-doc upsert against a 100 TB store only the batches holding
+    * those docs' old generations rewrite, where [[indexVacuum]]
+    * rewrites the full live state. Returns batches reclaimed.
     */
   def indexVacuumIncremental(spark: org.apache.spark.sql.SparkSession,
       dir: String, minDeadFraction: Double = 0.0): Int =
-   graft.sources.Commits.withWriterLock(spark, dir) {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // A full vacuum crashed mid-swap leaves committed reading empty
-    // while the freshly-renamed b0 dirs hold the only copy — repair
-    // BEFORE the orphan sweep or the sweep destroys the store.
-    repairCrashedSwap(fs, dir): Unit
-    val committed = committedBatches(spark, dir)
-    // Flat batch ids read ONCE per table for the whole pass (the flat
-    // files never change within it — rewrites land in b<id> dirs);
-    // reused by both sweeps and the forced-rewrite selection below.
-    val flatIds = Seq("postings", "docs").map(t =>
-      t -> graft.sources.Commits.flatBatchIds(spark, s"$dir/$t")).toMap
-    Seq("postings", "docs").foreach { t =>
-      graft.sources.Commits
-        .sweepOrphanBatchDirs(spark, s"$dir/$t", committed)
-      // File-level analog of the orphan sweep: legacy flat files whose
-      // batches are no longer committed (a crash between a previous
-      // migration's uncommit and its delete) go now.
-      graft.sources.Commits.sweepFlatFiles(spark, s"$dir/$t", committed,
-        flatIds(t))
-    }
-    graft.sources.Commits.pruneAttemptMarkers(spark, dir)
-    if (committed.isEmpty) return 0
-    // Committed batches still living in the legacy flat-file layout
-    // are FORCED into the rewrite regardless of dead fraction — the
-    // only way the incremental cadence can ever reclaim their bytes
-    // (see Commits.committedFlatBatches).
-    val legacyFlat = flatIds.values.flatten.toSeq
-      .filter(committed.contains).distinct.sorted
-    val selected = (dirtyBatches(spark, dir, committed, minDeadFraction)
-      ++ legacyFlat).distinct.sorted
-    if (selected.isEmpty) return 0
-    vacuumRewriteAndCommit(spark, dir, committed, selected)
-    dropReclaimedBatches(spark, fs, dir, selected)
-    Seq("postings", "docs").foreach(t => graft.sources.Commits
-      .sweepFlatFiles(spark, s"$dir/$t", committedBatches(spark, dir),
-        flatIds(t)))
-    selected.size
-   }
+    IndexStore.vacuumIncremental(spark, dir, minDeadFraction)
 
-  /** COMPACT the index's committed-batch count down to `maxBatches`:
-    * the smallest batches' surviving rows (live current generations +
-    * carried tombstones — the same rewrite the incremental vacuum
-    * runs, so superseded/fully-dead rows drop on the way) fold into
-    * one fresh committed batch, and the folded batches' directories
-    * delete. [[indexVacuumIncremental]] bounds the DEAD data without
-    * full rewrites; this bounds the BATCH COUNT the micro-batch ingest
-    * cadence grows (per-batch directory listings and file handles at
-    * 100 TB) — together they close the loop that previously needed the
-    * offline full [[indexVacuum]]. Returns batches folded (0 when
-    * already within bound).
+  /** COMPACT the committed-batch count down to `maxBatches`
+    * ([[GenTable.compactBatches]]): the smallest batches' survivors
+    * fold into one fresh batch. [[indexVacuumIncremental]] bounds the
+    * DEAD data, this bounds the BATCH COUNT the micro-batch cadence
+    * grows. Returns batches folded (0 when already within bound).
     */
   def indexCompactBatches(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int = 16): Int =
-   graft.sources.Commits.withWriterLock(spark, dir) {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCrashedSwap(fs, dir): Unit  // see indexVacuumIncremental
-    val committed = committedBatches(spark, dir)
-    // One flat-batch read per table per pass — see indexVacuumIncremental.
-    val flatIds = Seq("postings", "docs").map(t =>
-      t -> graft.sources.Commits.flatBatchIds(spark, s"$dir/$t")).toMap
-    Seq("postings", "docs").foreach { t =>
-      graft.sources.Commits
-        .sweepOrphanBatchDirs(spark, s"$dir/$t", committed)
-      graft.sources.Commits.sweepFlatFiles(spark, s"$dir/$t", committed,
-        flatIds(t))
-    }
-    graft.sources.Commits.pruneAttemptMarkers(spark, dir)
-    if (committed.isEmpty) return 0
-    val docs = readCommittedTable(spark, dir, "docs", committed)
-      .getOrElse(return 0)
-    // Legacy flat batches fold in even when the batch count is within
-    // bound — compaction is also the migration off the flat layout.
-    val legacyFlat = flatIds.values.flatten.toSeq
-      .filter(committed.contains).distinct.sorted
-    val selected = (graft.sources.Commits
-      .compactionSelection(docs, committed, maxBatches)
-      ++ legacyFlat).distinct.sorted
-    if (selected.isEmpty) return 0
-    vacuumRewriteAndCommit(spark, dir, committed, selected)
-    dropReclaimedBatches(spark, fs, dir, selected)
-    Seq("postings", "docs").foreach(t => graft.sources.Commits
-      .sweepFlatFiles(spark, s"$dir/$t", committedBatches(spark, dir),
-        flatIds(t)))
-    selected.size
-   }
-
-  /** The committed batches whose dead-row fraction reaches the
-    * threshold. Dead = superseded by a later generation, or any row of
-    * a tombstoned doc. Driver-side result: bounded by the batch COUNT
-    * (vacuum cadence), never by rows.
-    */
-  private[operators] def dirtyBatches(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, committed: Seq[Long],
-      minDeadFraction: Double): Seq[Long] = {
-    val docs = readCommittedTable(spark, dir, "docs", committed)
-      .getOrElse(return Seq.empty)
-    val cur = docs.groupBy(col("doc_id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(col("content_hash"), col("batch")).as("__cur_hash"))
-    docs.join(cur, Seq("doc_id"))
-      .withColumn("__dead",
-        col("batch") < col("__cur_batch") || col("__cur_hash") === Tombstone)
-      .groupBy(col("batch"))
-      .agg(count(lit(1)).as("__total"),
-        sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
-      .collect()
-      .filter { r =>
-        val dead = r.getAs[Long]("__dead_rows")
-        dead > 0 &&
-          dead.toDouble / r.getAs[Long]("__total") >= minDeadFraction
-      }
-      .map(_.getAs[Long]("batch")).toSeq.sorted
-  }
-
-  /** Steps 1–2 of the incremental vacuum: rewrite the selected batches'
-    * surviving rows as one fresh batch and COMMIT it. Package-private
-    * so the spec can simulate a crash exactly here — new batch
-    * committed, reclaimed markers still present.
-    */
-  private[operators] def vacuumRewriteAndCommit(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      committed: Seq[Long], selected: Seq[Long]): Unit = {
-    val docs = readCommittedTable(spark, dir, "docs", committed).get
-    val cur = docs.groupBy(col("doc_id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(col("content_hash"), col("batch")).as("__cur_hash"))
-    val inSelected = col("batch").isin(selected: _*)
-    // Live current-generation rows sitting in a selected batch.
-    val live = docs.join(cur, Seq("doc_id"))
-      .filter(inSelected && col("batch") === col("__cur_batch") &&
-        col("__cur_hash") =!= Tombstone)
-    // Tombstones in a selected batch whose doc still has rows in an
-    // UNSELECTED batch: carried forward, or those rows would resurrect.
-    val tomb = docs.join(cur, Seq("doc_id"))
-      .filter(inSelected && col("batch") === col("__cur_batch") &&
-        col("__cur_hash") === Tombstone)
-      .join(docs.filter(!col("batch").isin(selected: _*))
-        .select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val survivors = live.unionByName(tomb)
-      .select(col("doc_id"), col("dl"), col("content_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (survivors.count() > 0) {
-        val batchId = graft.sources.Commits.allocateBatchId(spark, dir,
-          Seq(s"$dir/docs", s"$dir/postings"))
-        val liveKeys = live.select(col("doc_id"), col("batch"))
-        readCommittedTable(spark, dir, "postings", selected)
-          .foreach(_.join(liveKeys, Seq("doc_id", "batch"))
-            .withColumn("batch", lit(batchId))
-            .repartition(col("term"))
-            .sortWithinPartitions(col("term"), col("doc_id"))
-            .write.parquet(s"$dir/postings/b$batchId"))
-        survivors.withColumn("batch", lit(batchId))
-          .write.parquet(s"$dir/docs/b$batchId")
-        graft.sources.Commits.commit(spark, dir, batchId)
-      }
-    } finally { survivors.unpersist(); () }
-  }
-
-  /** Step 3: remove the reclaimed batches' commit markers, then their
-    * directories (marker first — a dir without a marker is an
-    * invisible orphan; a marker without a dir would be a readable
-    * missing batch).
-    */
-  private def dropReclaimedBatches(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      selected: Seq[Long]): Unit = {
-    selected.foreach(b => graft.sources.Commits.uncommit(spark, dir, b))
-    for (table <- Seq("postings", "docs"); b <- selected)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$table/b$b"),
-        true): Unit
-  }
-
-  private def committedBatches(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[Long] = graft.sources.Commits.committed(spark, dir)
-
-  private def commitBatch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: Long): Unit =
-    graft.sources.Commits.commit(spark, dir, batch)
-
-  /** Fresh batch id: above every id ever attempted, from one ledger-dir
-    * listing ([[graft.sources.Commits.allocateBatchId]] — no data
-    * scan). The postings slice is written before the docs slice, so an
-    * append crashing between the two leaves a postings-only orphan; its
-    * attempt marker (recorded before the write) keeps the id burned, so
-    * a retry can never double that batch's tf/df (crash-simulation test
-    * in SearchSpec). Legacy marker-less stores fall back to a
-    * max(batch) scan over BOTH tables once.
-    */
-  private def nextBatchId(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long =
-    graft.sources.Commits.allocateBatchId(spark, dir,
-      Seq(s"$dir/docs", s"$dir/postings"))
-
-  /** Read the COMMITTED generations of `table` (`postings` or `docs`)
-    * — [[graft.sources.Commits.readCommittedBatches]] over the shared
-    * per-batch-directory layout (a delete-only batch writes no
-    * postings slice, so the postings path list can be a strict subset
-    * of the committed set).
-    */
-  private def readCommittedTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String, committed: Seq[Long]): Option[DataFrame] =
-    graft.sources.Commits.readCommittedBatches(spark, s"$dir/$table",
-      committed)
+    IndexStore.compactBatches(spark, dir, maxBatches)
 
   /** Committed postings read; a store whose live state is postings-free
     * (every doc tombstoned, or delete-only generations) yields an
@@ -874,33 +588,35 @@ object Search {
   private def readCommittedPostings(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, committed: Seq[Long]): DataFrame =
-    readCommittedTable(spark, dir, "postings", committed).getOrElse {
-      val idType = readCommittedTable(spark, dir, "docs", committed)
-        .map(_.schema("doc_id").dataType)
-        .getOrElse(org.apache.spark.sql.types.LongType)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", idType),
-          org.apache.spark.sql.types.StructField("dl",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("tf",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("term",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("positions",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.IntegerType)),
-          org.apache.spark.sql.types.StructField("batch",
-            org.apache.spark.sql.types.LongType))))
-    }
+    Commits.readCommittedBatches(spark, s"$dir/postings", committed)
+      .getOrElse {
+        val idType = Commits
+          .readCommittedBatches(spark, s"$dir/docs", committed)
+          .map(_.schema("doc_id").dataType)
+          .getOrElse(org.apache.spark.sql.types.LongType)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id", idType),
+            org.apache.spark.sql.types.StructField("dl",
+              org.apache.spark.sql.types.IntegerType),
+            org.apache.spark.sql.types.StructField("tf",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("term",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("positions",
+              org.apache.spark.sql.types.ArrayType(
+                org.apache.spark.sql.types.IntegerType)),
+            org.apache.spark.sql.types.StructField("batch",
+              org.apache.spark.sql.types.LongType))))
+      }
 
   /** CURRENT committed generation of every indexed doc:
     * (doc_id, dl, content_hash, batch). None when nothing committed.
     */
   private def currentDocs(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[DataFrame] = {
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     if (committed.isEmpty) None
     // Freshly-maintained shortcut: one committed batch holds one row
     // per doc (every write path dedups within its batch), so the
@@ -908,10 +624,10 @@ object Search {
     // vacuum/compaction-to-one the probe's membership read is a pure
     // scan (same shortcut as Similarity.annCurrentRows).
     else if (committed.sizeIs == 1)
-      readCommittedTable(spark, dir, "docs", committed)
+      Commits.readCommittedBatches(spark, s"$dir/docs", committed)
         .map(_.select(col("doc_id"), col("dl"), col("content_hash"),
           col("batch")))
-    else readCommittedTable(spark, dir, "docs", committed)
+    else Commits.readCommittedBatches(spark, s"$dir/docs", committed)
       .map(_.groupBy(col("doc_id"))
         .agg(max_by(col("dl"), col("batch")).as("dl"),
           max_by(col("content_hash"), col("batch")).as("content_hash"),
@@ -941,9 +657,9 @@ object Search {
   private[operators] def currentDocsFor(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, ids: DataFrame): Option[DataFrame] = {
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     if (committed.isEmpty) None
-    else readCommittedTable(spark, dir, "docs", committed)
+    else Commits.readCommittedBatches(spark, s"$dir/docs", committed)
       .map(_.join(ids, Seq("doc_id"), "left_semi")
         .groupBy(col("doc_id"))
         .agg(max_by(col("dl"), col("batch")).as("dl"),
@@ -959,7 +675,9 @@ object Search {
 
   /** Postings half of a slice write — the FIRST of the two appends, so
     * a crash right after it is the partial-append state the allocator
-    * must count ([[nextBatchId]]); package-private so SearchSpec can
+    * must count: [[Commits.allocateBatchId]] records the id's attempt
+    * marker before this write, so a retry never reuses it and cannot
+    * double that batch's tf/df. Package-private so SearchSpec can
     * simulate exactly that crash. Positions ride in each posting
     * (sorted, 0-based): tf queries never read the column (parquet
     * pruning), and phrase queries become per-doc position-list
@@ -1007,7 +725,7 @@ object Search {
     */
   def indexStats(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
     val cur = currentDocs(spark, dir).get
     val docsAgg = cur.agg(
@@ -1054,7 +772,7 @@ object Search {
       dir: String, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
     val cur = currentDocs(spark, dir).get
       .filter(col("content_hash") =!= Tombstone)
@@ -1115,8 +833,8 @@ object Search {
     */
   def bucketPostings(spark: org.apache.spark.sql.SparkSession,
       dir: String, table: String, numBuckets: Int = 32): Unit =
-   graft.sources.Commits.withWriterLock(spark, dir) {
-    val committed = committedBatches(spark, dir)
+   Commits.withWriterLock(spark, dir) {
+    val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
     val cur = currentDocs(spark, dir).get
       .filter(col("content_hash") =!= Tombstone)
@@ -1135,7 +853,7 @@ object Search {
     // Staleness marker: records the committed set THIS snapshot
     // resolved; `Commits.snapshotFresh(spark, s"$dir/postings_bucketed",
     // dir)` tells the maintenance cron whether a rebuild is due.
-    graft.sources.Commits.writeSnapshotMarker(spark,
+    Commits.writeSnapshotMarker(spark,
       s"$dir/postings_bucketed", committed)
    }
 
@@ -1174,7 +892,7 @@ object Search {
   def moreLikeThisTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryDoc: DataFrame, k: Int, maxTerms: Int = 64,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
     val idCol = queryDoc.columns(0)
     val textCol = queryDoc.columns(1)
@@ -1267,7 +985,7 @@ object Search {
       fbDocs: Int = 5, fbTerms: Int = 8, fbWeight: Double = 0.5,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
     val cur = currentDocs(spark, dir).get
       .filter(col("content_hash") =!= Tombstone)
@@ -1433,7 +1151,7 @@ object Search {
   def phraseFromIndexTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.size >= 2, s"phrase needs >= 2 terms, got ${phrase.size}")
-    val committed = committedBatches(spark, dir)
+    val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
     val cur = currentDocs(spark, dir).get
       .filter(col("content_hash") =!= Tombstone)

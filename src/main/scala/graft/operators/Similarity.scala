@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{HashFunctions, VectorFunctions}
-import graft.sources.ParquetRead
+import graft.sources.{GenTable, ParquetRead}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1062,183 +1062,40 @@ object Similarity {
       .select(col("qid"), col("cid"), col("d2"), col("rnk"))
   }
 
+  /** The PQ store's maintenance descriptor ([[GenTable]]): code rows
+    * under `rows/` (staged at the stage root), empty codes as the
+    * tombstone, and the `coarse` routing metadata a [[pqStoreReroute]]
+    * stages beside them. The train-once codebook is never touched.
+    * Package-private for the specs' crash hooks.
+    */
+  private[graft] val PqStore = new GenTable("id", size(col("codes")) === 0,
+    GenTable.Table("rows", "b0"), stagedExtras = Seq("coarse"))
+
   /** Compact the PQ store's code rows to their live state (batch 0,
-    * one row/id, tombstones gone) — [[annStoreVacuum]]'s twin, scoped
-    * to the store's `rows/` table so the train-once codebook/coarse
-    * metadata is never touched. Same crash story: the stage is written
-    * COMPLETE (live rows + staged ledger) before any live piece is
-    * replaced; a crash mid-swap is repaired by the next maintenance
-    * call, which detects the finished stage + missing live ledger and
-    * completes the outstanding moves.
+    * one row per id, tombstones gone) through [[GenTable.vacuumFull]]'s
+    * crash-repairing staged swap.
     */
   def pqStoreVacuum(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Unit =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val stage = s"$storeDir/_vacuum"
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (pqRepairCrashedSwap(fs, storeDir)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage))) {
-      // Incomplete stage, or a stage whose swap never started (live
-      // ledger intact): discard and re-vacuum.
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
-    val live = pqCurrentRows(spark, storeDir)
-      .select(col("id"), col("codes"), col("cell"), col("vec_hash"))
-      .withColumn("batch", lit(0L))
-    live.write.parquet(s"$stage/b0")
-    graft.sources.Commits.commit(spark, stage, 0L)
-    // Swap: drop the live ledger FIRST (readers fail loudly rather
-    // than see a half-replaced store; the repair path keys off its
-    // absence), then replace the rows batch dirs, then install the
-    // staged ledger.
-    graft.sources.Commits.clear(spark, storeDir)
-    pqSwapFromStage(fs, storeDir, stage)
-   }
+    PqStore.vacuumFull(spark, storeDir)(Some(pqCurrentRows(spark, storeDir)
+      .select(col("id"), col("codes"), col("cell"), col("vec_hash"))))
 
-  /** Detect-and-repair [[pqStoreVacuum]]'s crashed-mid-swap window
-    * (staged ledger present, live ledger missing) — see
-    * [[annRepairCrashedSwap]]; every PQ maintenance entry point calls
-    * this BEFORE its orphan sweep. */
-  private def pqRepairCrashedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String): Boolean = {
-    val stagedLedger =
-      new org.apache.hadoop.fs.Path(s"$storeDir/_vacuum/_commits/b0")
-    if (fs.exists(stagedLedger) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/_commits"))) {
-      pqSwapFromStage(fs, storeDir, s"$storeDir/_vacuum")
-      true
-    } else false
-  }
-
-  /** Replace the PQ store's `rows/` batch directories with the staged
-    * `b0` and install the staged ledger — [[annSwapFromStage]] scoped
-    * to the rows table (codebook/coarse metadata stay put). Repair
-    * needs no manifest: if `stage/b0` is still present the live
-    * `rows/b0` (if any) is stale and replaced; if it is gone, a
-    * crashed predecessor already moved it — keep the live `b0`. */
-  private def pqSwapFromStage(fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String, stage: String): Unit = {
-    val rowsDir = new org.apache.hadoop.fs.Path(s"$storeDir/rows")
-    val stagedB0 = new org.apache.hadoop.fs.Path(s"$stage/b0")
-    val stagedPresent = fs.exists(stagedB0)
-    if (fs.exists(rowsDir))
-      fs.listStatus(rowsDir)
-        .filter { s =>
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".") &&
-            (stagedPresent || n != "b0")
-        }
-        .foreach(s => fs.delete(s.getPath, true))
-    if (stagedPresent) {
-      fs.mkdirs(rowsDir)
-      fs.rename(stagedB0,
-        new org.apache.hadoop.fs.Path(s"$storeDir/rows/b0")): Unit
-    }
-    // A REROUTE stages new coarse centroids alongside the re-stamped
-    // rows — they must move in the same swap (new routing against old
-    // cell stamps would silently drop candidates). Same
-    // present-or-already-moved logic as b0; plain vacuums stage no
-    // coarse and skip this.
-    val stagedCoarse = new org.apache.hadoop.fs.Path(s"$stage/coarse")
-    if (fs.exists(stagedCoarse)) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/coarse"), true)
-      fs.rename(stagedCoarse,
-        new org.apache.hadoop.fs.Path(s"$storeDir/coarse")): Unit
-    }
-    val ledger = new org.apache.hadoop.fs.Path(s"$stage/_commits")
-    if (fs.exists(ledger)) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/_commits"), true)
-      fs.rename(ledger,
-        new org.apache.hadoop.fs.Path(s"$storeDir/_commits")): Unit
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-  }
-
-  /** INCREMENTAL PQ vacuum — [[annStoreVacuumIncremental]]'s twin on
-    * the code rows, same contract: reclaim only the batches holding
-    * dead rows (superseded generations, or any row of a tombstoned id)
-    * at a dead fraction of at least `minDeadFraction`, leaving clean
-    * batches' files untouched. Dirty batches' surviving rows — live
-    * current generations plus tombstones whose id still has rows in
-    * UNSELECTED batches (dropping those would resurrect the older
-    * codes) — rewrite as one fresh committed batch; then the dirty
-    * markers drop and their directories delete. Every intermediate
-    * state is readable and the next pass converges. Returns batches
-    * reclaimed.
+  /** INCREMENTAL PQ vacuum ([[GenTable.vacuumIncremental]]): reclaim
+    * only the batches whose dead fraction (superseded generations, or
+    * any row of a tombstoned id) reaches `minDeadFraction`. Returns
+    * batches reclaimed.
     */
   def pqStoreVacuumIncremental(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, minDeadFraction: Double = 0.0): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    pqRepairCrashedSwap(fs, storeDir): Unit  // BEFORE the sweep
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    val dataDir = s"$storeDir/rows"
-    graft.sources.Commits.sweepOrphanBatchDirs(spark, dataDir, committed)
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.isEmpty) return 0
-    val rows = readCommittedPq(spark, storeDir, committed)
-    val cur = rows.groupBy(col("id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(size(col("codes")), col("batch")).as("__cur_clen"))
-    val marked = rows.join(cur, Seq("id"))
-      .withColumn("__dead",
-        col("batch") < col("__cur_batch") || col("__cur_clen") === 0)
-    val selected = marked.groupBy(col("batch"))
-      .agg(count(lit(1)).as("__total"),
-        sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
-      .collect()
-      .filter { r =>
-        val dead = r.getAs[Long]("__dead_rows")
-        dead > 0 &&
-          dead.toDouble / r.getAs[Long]("__total") >= minDeadFraction
-      }
-      .map(_.getAs[Long]("batch")).toSeq.sorted
-    if (selected.isEmpty) return 0
-    pqVacuumRewriteAndCommit(spark, storeDir, committed, selected)
-    selected.foreach(b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b))
-    selected.foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dataDir/b$b"),
-        true): Unit)
-    selected.size
-   }
+    PqStore.vacuumIncremental(spark, storeDir, minDeadFraction)
 
   /** COMPACT the PQ store's committed-batch count down to `maxBatches`
-    * — [[annStoreCompactBatches]]' twin, same fold-the-smallest policy
-    * and the same survivor rewrite as the incremental vacuum. Returns
-    * batches folded.
+    * ([[GenTable.compactBatches]]). Returns batches folded.
     */
   def pqStoreCompactBatches(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, maxBatches: Int = 16): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    pqRepairCrashedSwap(fs, storeDir): Unit  // BEFORE the sweep
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    val dataDir = s"$storeDir/rows"
-    graft.sources.Commits.sweepOrphanBatchDirs(spark, dataDir, committed)
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.isEmpty) return 0
-    val selected = graft.sources.Commits.compactionSelection(
-      readCommittedPq(spark, storeDir, committed), committed, maxBatches)
-      .sorted
-    if (selected.isEmpty) return 0
-    pqVacuumRewriteAndCommit(spark, storeDir, committed, selected)
-    selected.foreach(b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b))
-    selected.foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dataDir/b$b"),
-        true): Unit)
-    selected.size
-   }
+    PqStore.compactBatches(spark, storeDir, maxBatches)
 
-  /** Rewrite-and-commit step of [[pqStoreVacuumIncremental]] /
-    * [[pqStoreCompactBatches]] — package-private so the spec can
-    * simulate a crash exactly after the commit, before the reclaimed
-    * markers drop.
-    */
   /** GROW/RESHAPE the PQ store's coarse routing — re-train the IVF
     * quantizer at a new cell count and re-stamp every live code row's
     * cell, WITHOUT the original vectors: training runs on the code
@@ -1270,9 +1127,7 @@ object Similarity {
     // Like every PQ maintenance entry point: complete a crashed
     // vacuum/reroute swap BEFORE reading, else pqCurrentRows fails
     // with a misleading "no committed build" on a repairable store.
-    val fs0 = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    pqRepairCrashedSwap(fs0, storeDir): Unit
+    PqStore.repairCrashedSwap(spark, storeDir): Unit
     val books = pqReadCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
     // Reconstruction: per subspace, the code id looks up its centroid
@@ -1298,24 +1153,11 @@ object Similarity {
       import spark.implicits._
       // New coarse centroids and new cell stamps must become visible
       // TOGETHER (new routing against old stamps would silently drop
-      // candidates), so both land in the vacuum stage and move in the
-      // same swap: the stage is written COMPLETE (rows + coarse +
-      // staged ledger) before the live ledger drops, and
-      // [[pqRepairCrashedSwap]] completes any crashed swap.
-      val stage = s"$storeDir/_vacuum"
-      val fs = new org.apache.hadoop.fs.Path(storeDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(stage)))
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      live.select(col("id"), col("codes"),
-          pqCellExpr(coarse).as("cell"), col("vec_hash"))
-        .withColumn("batch", lit(0L))
-        .write.parquet(s"$stage/b0")
-      coarse.toDF("cid", "centroid")
-        .coalesce(1).write.parquet(s"$stage/coarse")
-      graft.sources.Commits.commit(spark, stage, 0L)
-      graft.sources.Commits.clear(spark, storeDir)
-      pqSwapFromStage(fs, storeDir, stage)
+      // candidates), so both move in the same staged swap.
+      PqStore.swapIn(spark, storeDir,
+        live.select(col("id"), col("codes"),
+          pqCellExpr(coarse).as("cell"), col("vec_hash")),
+        Seq("coarse" -> coarse.toDF("cid", "centroid").coalesce(1)))
     } finally { live.unpersist(); () }
    }
 
@@ -1377,35 +1219,6 @@ object Similarity {
         when(advised, ceil(col("live_ids") /
             lit(maxRowsPerCell * hysteresis)).cast("long"))
           .otherwise(lit(0L)).as("advised_cells"))
-  }
-
-  private[operators] def pqVacuumRewriteAndCommit(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      committed: Seq[Long], selected: Seq[Long]): Unit = {
-    val dataDir = s"$storeDir/rows"
-    val rows = readCommittedPq(spark, storeDir, committed)
-    val cur = rows.groupBy(col("id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(size(col("codes")), col("batch")).as("__cur_clen"))
-    val inSelected = col("batch").isin(selected: _*)
-    val currentInSelected = rows.join(cur, Seq("id"))
-      .filter(inSelected && col("batch") === col("__cur_batch"))
-    val live = currentInSelected.filter(col("__cur_clen") > 0)
-    val tomb = currentInSelected.filter(col("__cur_clen") === 0)
-      .join(rows.filter(!col("batch").isin(selected: _*))
-        .select(col("id")), Seq("id"), "left_semi")
-    val survivors = live.unionByName(tomb)
-      .select(col("id"), col("codes"), col("cell"), col("vec_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (survivors.count() > 0) {
-        val batchId = graft.sources.Commits
-          .allocateBatchId(spark, storeDir, Seq(dataDir))
-        survivors.withColumn("batch", lit(batchId))
-          .write.parquet(s"$dataDir/b$batchId")
-        graft.sources.Commits.commit(spark, storeDir, batchId)
-      }
-    } finally { survivors.unpersist(); () }
   }
 
   /** Per-group SEMANTIC OUTLIERS: exact per-dimension centroid of each
@@ -1669,214 +1482,36 @@ object Similarity {
     } finally { victims.unpersist(); idsF.unpersist(); () }
    }
 
-  /** Compact the ANN store to its live state (batch 0, one row/id).
-    * Offline maintenance op like `Search.indexVacuum` (writer-lease
-    * held, no concurrent readers). Crash safety mirrors the index
-    * vacuum: the stage is written COMPLETE — live rows plus a staged
-    * `_commits/b0` ledger — before any live piece is replaced; a crash
-    * mid-swap is repaired by the next vacuum call, which detects the
-    * finished stage + missing live ledger and completes the
-    * outstanding moves instead of compacting a store whose data files
-    * are already gone.
+  /** The ANN store's maintenance descriptor ([[GenTable]]): one table,
+    * the store dir itself, with the empty qvec as the tombstone.
+    * Package-private for the specs' crash hooks.
+    */
+  private[graft] val AnnStore = new GenTable("id", size(col("qvec")) === 0,
+    GenTable.Table("", "b0"))
+
+  /** Compact the ANN store to its live state (batch 0, one row per id)
+    * — offline maintenance like `Search.indexVacuum`, through
+    * [[GenTable.vacuumFull]]'s crash-repairing staged swap.
     */
   def annStoreVacuum(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Unit =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val stage = s"$storeDir/_vacuum"
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (annRepairCrashedSwap(fs, storeDir)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage))) {
-      // Incomplete stage, or a stage whose swap never started (live
-      // ledger intact): discard and re-vacuum.
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
-    val live = annCurrentRows(spark, storeDir)
-      .withColumn("batch", lit(0L))
-    live.write.parquet(s"$stage/b0")
-    graft.sources.Commits.commit(spark, stage, 0L)
-    // Swap: drop the live ledger FIRST (readers fail loudly rather
-    // than see a half-replaced store; the repair path keys off its
-    // absence), then replace the batch dirs, then install the staged
-    // ledger.
-    graft.sources.Commits.clear(spark, storeDir)
-    annSwapFromStage(fs, storeDir, stage)
-   }
+    AnnStore.vacuumFull(spark, storeDir)(Some(annCurrentRows(spark, storeDir)))
 
-  /** Detect-and-repair the full vacuum's crashed-mid-swap window
-    * (staged ledger present, live ledger missing): the stage — or the
-    * already-renamed `b0` — holds the only copy. Every maintenance
-    * entry point calls this BEFORE its orphan sweep; in this window
-    * committed reads empty, so an unguarded sweep would delete the
-    * just-renamed dirs as orphans (see `Search.repairCrashedSwap`).
-    */
-  private def annRepairCrashedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String): Boolean = {
-    val stagedLedger =
-      new org.apache.hadoop.fs.Path(s"$storeDir/_vacuum/_commits/b0")
-    if (fs.exists(stagedLedger) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/_commits"))) {
-      annSwapFromStage(fs, storeDir, s"$storeDir/_vacuum")
-      true
-    } else false
-  }
-
-  /** Replace the store's batch directories (and any legacy flat data
-    * files) with the staged `b0` and install the staged ledger. The
-    * staged data dir has ONE fixed name, so the repair needs no
-    * manifest: if `stage/b0` is still present the live `b0` (if any)
-    * is stale and replaced; if it is gone, a crashed predecessor
-    * already moved it — keep the live `b0`, it holds the only copy.
-    */
-  private def annSwapFromStage(fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String, stage: String): Unit = {
-    val stagedB0 = new org.apache.hadoop.fs.Path(s"$stage/b0")
-    val stagedPresent = fs.exists(stagedB0)
-    fs.listStatus(new org.apache.hadoop.fs.Path(storeDir))
-      .filter { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") &&
-          (stagedPresent || n != "b0")
-      }
-      .foreach(s => fs.delete(s.getPath, true))
-    if (stagedPresent)
-      fs.rename(stagedB0,
-        new org.apache.hadoop.fs.Path(s"$storeDir/b0")): Unit
-    val ledger = new org.apache.hadoop.fs.Path(s"$stage/_commits")
-    if (fs.exists(ledger)) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/_commits"), true)
-      fs.rename(ledger,
-        new org.apache.hadoop.fs.Path(s"$storeDir/_commits")): Unit
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-  }
-
-  /** INCREMENTAL ANN vacuum — the vector twin of
-    * `Search.indexVacuumIncremental`, same contract: reclaim only the
-    * batches holding dead rows (superseded generations, or any row of
-    * a tombstoned id) at a dead fraction of at least
-    * `minDeadFraction`, leaving clean batches' files untouched. Dirty
-    * batches' surviving rows — live current generations plus
-    * tombstones whose id still has rows in UNSELECTED batches
-    * (dropping those would resurrect the older vector) — rewrite as
-    * one fresh committed batch; then the dirty markers drop and their
-    * directories delete. Crash windows identical to the index twin:
-    * every intermediate state is readable and the next pass converges.
-    * Returns the number of batches reclaimed.
+  /** INCREMENTAL ANN vacuum ([[GenTable.vacuumIncremental]]): reclaim
+    * only the batches whose dead fraction (superseded generations, or
+    * any row of a tombstoned id) reaches `minDeadFraction`, leaving
+    * clean batches' files untouched. Returns batches reclaimed.
     */
   def annStoreVacuumIncremental(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, minDeadFraction: Double = 0.0): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    annRepairCrashedSwap(fs, storeDir): Unit  // BEFORE the sweep
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // One flat-batch read for the whole pass (see Commits.flatBatchIds).
-    val flatIds = graft.sources.Commits.flatBatchIds(spark, storeDir)
-    graft.sources.Commits.sweepOrphanBatchDirs(spark, storeDir, committed)
-    graft.sources.Commits.sweepFlatFiles(spark, storeDir, committed, flatIds)
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.isEmpty) return 0
-    val rows = readCommittedAnn(spark, storeDir, committed)
-    val cur = rows.groupBy(col("id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(size(col("qvec")), col("batch")).as("__cur_qlen"))
-    val marked = rows.join(cur, Seq("id"))
-      .withColumn("__dead",
-        col("batch") < col("__cur_batch") || col("__cur_qlen") === 0)
-    val selected = marked.groupBy(col("batch"))
-      .agg(count(lit(1)).as("__total"),
-        sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
-      .collect()
-      .filter { r =>
-        val dead = r.getAs[Long]("__dead_rows")
-        dead > 0 &&
-          dead.toDouble / r.getAs[Long]("__total") >= minDeadFraction
-      }
-      .map(_.getAs[Long]("batch")).toSeq.sorted
-    // Committed batches still in the legacy flat layout are forced
-    // into the rewrite — the only path that can reclaim their bytes
-    // (Commits.committedFlatBatches).
-    val withFlat = (selected ++ flatIds.filter(committed.contains))
-      .distinct.sorted
-    if (withFlat.isEmpty) return 0
-    annVacuumRewriteAndCommit(spark, storeDir, committed, withFlat)
-    withFlat.foreach(b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b))
-    withFlat.foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/b$b"),
-        true): Unit)
-    graft.sources.Commits.sweepFlatFiles(spark, storeDir,
-      graft.sources.Commits.committed(spark, storeDir), flatIds)
-    withFlat.size
-   }
+    AnnStore.vacuumIncremental(spark, storeDir, minDeadFraction)
 
-  /** COMPACT the ANN store's committed-batch count down to
-    * `maxBatches` — `Search.indexCompactBatches`' vector twin, same
-    * fold-the-smallest policy and the same survivor rewrite as the
-    * incremental vacuum. Returns batches folded.
+  /** COMPACT the ANN store's committed-batch count down to `maxBatches`
+    * ([[GenTable.compactBatches]]). Returns batches folded.
     */
   def annStoreCompactBatches(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, maxBatches: Int = 16): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    annRepairCrashedSwap(fs, storeDir): Unit  // BEFORE the sweep
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // One flat-batch read for the whole pass (see Commits.flatBatchIds).
-    val flatIds = graft.sources.Commits.flatBatchIds(spark, storeDir)
-    graft.sources.Commits.sweepOrphanBatchDirs(spark, storeDir, committed)
-    graft.sources.Commits.sweepFlatFiles(spark, storeDir, committed, flatIds)
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.isEmpty) return 0
-    val selected = (graft.sources.Commits.compactionSelection(
-      readCommittedAnn(spark, storeDir, committed), committed, maxBatches)
-      ++ flatIds.filter(committed.contains))
-      .distinct.sorted
-    if (selected.isEmpty) return 0
-    annVacuumRewriteAndCommit(spark, storeDir, committed, selected)
-    selected.foreach(b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b))
-    selected.foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/b$b"),
-        true): Unit)
-    graft.sources.Commits.sweepFlatFiles(spark, storeDir,
-      graft.sources.Commits.committed(spark, storeDir), flatIds)
-    selected.size
-   }
-
-  /** Rewrite-and-commit step of [[annStoreVacuumIncremental]] —
-    * package-private so the spec can simulate a crash exactly after
-    * the commit, before the reclaimed markers drop.
-    */
-  private[operators] def annVacuumRewriteAndCommit(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      committed: Seq[Long], selected: Seq[Long]): Unit = {
-    val rows = readCommittedAnn(spark, storeDir, committed)
-    val cur = rows.groupBy(col("id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(size(col("qvec")), col("batch")).as("__cur_qlen"))
-    val inSelected = col("batch").isin(selected: _*)
-    val currentInSelected = rows.join(cur, Seq("id"))
-      .filter(inSelected && col("batch") === col("__cur_batch"))
-    val live = currentInSelected.filter(col("__cur_qlen") > 0)
-    val tomb = currentInSelected.filter(col("__cur_qlen") === 0)
-      .join(rows.filter(!col("batch").isin(selected: _*))
-        .select(col("id")), Seq("id"), "left_semi")
-    val survivors = live.unionByName(tomb)
-      .select(col("id"), col("qvec"), col("scale"), col("bucket"),
-        col("vec_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (survivors.count() > 0) {
-        val batchId = graft.sources.Commits
-          .allocateBatchId(spark, storeDir, Seq(storeDir))
-        survivors.withColumn("batch", lit(batchId))
-          .write.parquet(s"$storeDir/b$batchId")
-        graft.sources.Commits.commit(spark, storeDir, batchId)
-      }
-    } finally { survivors.unpersist(); () }
-  }
+    AnnStore.compactBatches(spark, storeDir, maxBatches)
 
   /** Operational stats of the standing ANN store — the vacuum-
     * scheduling / ingest-health twin of `Search.indexStats`: one row

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max}
 
 /** Commit-marker ledger shared by the GENERATIONAL parquet stores (the
-  * inverted index, the ANN store): an append writes its parquet slices
+  * inverted index, the chunk store, the ANN store and the PQ stores;
+  * their maintenance is [[GenTable]]): an append writes its parquet slices
   * tagged with a fresh batch id and then creates the empty marker file
   * `<dir>/_commits/b<batch>` as its LAST step — the linearization
   * point. Readers only ever see committed batches, so a crash between
@@ -65,8 +66,8 @@ object Commits {
 
   /** The `b<id>` batch subdirectories present under a generational
     * store table — one filesystem listing, no data touched. Each batch
-    * in its own subdirectory is the layout contract all three standing
-    * stores share (inverted index, ANN store, chunk store): committed
+    * in its own subdirectory is the layout contract the standing stores
+    * share (inverted index, chunk store, ANN and PQ stores): committed
     * reads become an explicit path list (file-level selection,
     * stronger than any pushed batch filter) and the incremental
     * vacuums reclaim a dirty batch by deleting its directory without

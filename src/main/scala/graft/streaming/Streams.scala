@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.Upsert
-import graft.sources.ParquetRead
+import graft.sources.{GenTable, ParquetRead}
+import graft.sources.GenTable.Tombstone
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -469,12 +470,6 @@ object Streams {
     } finally { fresh.unpersist(); hashed.unpersist(); () }
    }
 
-  /** Tombstone marker in the chunk store's membership table — same
-    * convention as the inverted index's docs table (real content
-    * hashes are 64-hex sha256, no collision possible).
-    */
-  private val ChunkTombstone = "__tombstone__"
-
   /** DELETE docs from the standing chunk store — the takedown side the
     * passage surface needs just like the index and the ANN store: each
     * currently-live requested id gets a chunk-free docs row carrying
@@ -507,8 +502,8 @@ object Streams {
       .agg(max_by(col("content_hash"), col("batch")).as("__cur"))
       .transform(df =>
         if (scoped) df else df.join(idsF, Seq("doc_id"), "left_semi"))
-      .filter(col("__cur") =!= ChunkTombstone)
-      .select(col("doc_id"), lit(ChunkTombstone).as("content_hash"))
+      .filter(col("__cur") =!= Tombstone)
+      .select(col("doc_id"), lit(Tombstone).as("content_hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = victims.count()
@@ -523,155 +518,31 @@ object Streams {
     } finally { victims.unpersist(); idsF.unpersist(); () }
    }
 
-  /** INCREMENTAL chunk-store vacuum — the passage-store member of the
-    * same family as `Search.indexVacuumIncremental` /
-    * `Similarity.annStoreVacuumIncremental`: batches whose dead-row
-    * fraction (superseded generations + rows of tombstoned docs)
-    * reaches `minDeadFraction` rewrite their survivors — live current
-    * docs WITH their chunks, plus tombstones whose doc still has rows
-    * in an unselected batch — into one fresh committed batch; markers
-    * drop, directories delete, orphans sweep. Same crash-window
-    * convergence argument as the twins. Returns batches reclaimed.
+  /** The chunk store's maintenance descriptor ([[GenTable]]):
+    * membership `docs`, dependent `chunks`, tombstone = the marker
+    * hash. Package-private for the specs' crash hooks.
+    */
+  private[graft] val ChunkStore = new GenTable("doc_id",
+    col("content_hash") === Tombstone, GenTable.Table("docs", "docs/b0"),
+    Seq(GenTable.Table("chunks", "chunks/b0")))
+
+  /** INCREMENTAL chunk-store vacuum ([[GenTable.vacuumIncremental]]):
+    * batches whose dead-row fraction (superseded generations + rows of
+    * tombstoned docs) reaches `minDeadFraction` rewrite their survivors
+    * — live current docs WITH their chunks, plus tombstones whose doc
+    * still has rows in an unselected batch — into one fresh committed
+    * batch. Returns batches reclaimed.
     */
   def chunkStoreVacuum(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, minDeadFraction: Double = 0.0): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // One flat-batch read per table per pass (see Commits.flatBatchIds).
-    val flatIds = Seq("chunks", "docs").map(t =>
-      t -> graft.sources.Commits.flatBatchIds(spark, s"$storeDir/$t")).toMap
-    Seq("chunks", "docs").foreach { t =>
-      graft.sources.Commits
-        .sweepOrphanBatchDirs(spark, s"$storeDir/$t", committed)
-      graft.sources.Commits
-        .sweepFlatFiles(spark, s"$storeDir/$t", committed, flatIds(t))
-    }
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.isEmpty) return 0
-    val docs = graft.sources.Commits
-      .readCommittedBatches(spark, s"$storeDir/docs", committed)
-      .getOrElse(return 0)
-    val cur = docs.groupBy(col("doc_id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(col("content_hash"), col("batch")).as("__cur_hash"))
-    val marked = docs.join(cur, Seq("doc_id"))
-      .withColumn("__dead", col("batch") < col("__cur_batch") ||
-        col("__cur_hash") === ChunkTombstone)
-    val selected = marked.groupBy(col("batch"))
-      .agg(count(lit(1)).as("__total"),
-        sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
-      .collect()
-      .filter { r =>
-        val dead = r.getAs[Long]("__dead_rows")
-        dead > 0 &&
-          dead.toDouble / r.getAs[Long]("__total") >= minDeadFraction
-      }
-      .map(_.getAs[Long]("batch")).toSeq.sorted
-    // Legacy flat-layout batches are forced into the rewrite — the
-    // only path that reclaims their bytes (Commits.committedFlatBatches).
-    val withFlat = (selected ++ flatIds.values.flatten.toSeq
-      .filter(committed.contains))
-      .distinct.sorted
-    if (withFlat.isEmpty) return 0
-    chunkRewriteAndCommit(spark, storeDir, committed, withFlat)
-    dropChunkBatches(spark, fs, storeDir, withFlat)
-    Seq("chunks", "docs").foreach(t => graft.sources.Commits
-      .sweepFlatFiles(spark, s"$storeDir/$t",
-        graft.sources.Commits.committed(spark, storeDir), flatIds(t)))
-    withFlat.size
-   }
+    ChunkStore.vacuumIncremental(spark, storeDir, minDeadFraction)
 
   /** COMPACT the chunk store's committed-batch count down to
-    * `maxBatches` — same fold-the-smallest policy and survivor rewrite
-    * as `Search.indexCompactBatches`. Returns batches folded.
+    * `maxBatches` ([[GenTable.compactBatches]]). Returns batches folded.
     */
   def chunkStoreCompactBatches(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, maxBatches: Int = 16): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // One flat-batch read per table per pass (see Commits.flatBatchIds).
-    val flatIds = Seq("chunks", "docs").map(t =>
-      t -> graft.sources.Commits.flatBatchIds(spark, s"$storeDir/$t")).toMap
-    Seq("chunks", "docs").foreach { t =>
-      graft.sources.Commits
-        .sweepOrphanBatchDirs(spark, s"$storeDir/$t", committed)
-      graft.sources.Commits
-        .sweepFlatFiles(spark, s"$storeDir/$t", committed, flatIds(t))
-    }
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.isEmpty) return 0
-    val docs = graft.sources.Commits
-      .readCommittedBatches(spark, s"$storeDir/docs", committed)
-      .getOrElse(return 0)
-    val selected = (graft.sources.Commits
-      .compactionSelection(docs, committed, maxBatches)
-      ++ flatIds.values.flatten.toSeq.filter(committed.contains))
-      .distinct.sorted
-    if (selected.isEmpty) return 0
-    chunkRewriteAndCommit(spark, storeDir, committed, selected)
-    dropChunkBatches(spark, fs, storeDir, selected)
-    Seq("chunks", "docs").foreach(t => graft.sources.Commits
-      .sweepFlatFiles(spark, s"$storeDir/$t",
-        graft.sources.Commits.committed(spark, storeDir), flatIds(t)))
-    selected.size
-   }
-
-  /** Survivor rewrite shared by [[chunkStoreVacuum]] and
-    * [[chunkStoreCompactBatches]]: the selected batches' live current
-    * docs move WITH their chunks into one fresh committed batch,
-    * tombstones carry while an older generation survives outside the
-    * selection, dead rows drop.
-    */
-  private def chunkRewriteAndCommit(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      committed: Seq[Long], selected: Seq[Long]): Unit = {
-    val docs = graft.sources.Commits
-      .readCommittedBatches(spark, s"$storeDir/docs", committed).get
-    val cur = docs.groupBy(col("doc_id"))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(col("content_hash"), col("batch")).as("__cur_hash"))
-    val inSelected = col("batch").isin(selected: _*)
-    val currentInSelected = docs.join(cur, Seq("doc_id"))
-      .filter(inSelected && col("batch") === col("__cur_batch"))
-    val live = currentInSelected
-      .filter(col("__cur_hash") =!= ChunkTombstone)
-    val tomb = currentInSelected
-      .filter(col("__cur_hash") === ChunkTombstone)
-      .join(docs.filter(!col("batch").isin(selected: _*))
-        .select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val survivors = live.unionByName(tomb)
-      .select(col("doc_id"), col("content_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (survivors.count() > 0) {
-        val batchId = graft.sources.Commits.allocateBatchId(spark,
-          storeDir, Seq(s"$storeDir/docs", s"$storeDir/chunks"))
-        graft.sources.Commits
-          .readCommittedBatches(spark, s"$storeDir/chunks", selected)
-          .foreach(_.join(live.select(col("doc_id"), col("batch")),
-              Seq("doc_id", "batch"))
-            .withColumn("batch", lit(batchId))
-            .write.parquet(s"$storeDir/chunks/b$batchId"))
-        survivors.withColumn("batch", lit(batchId))
-          .write.parquet(s"$storeDir/docs/b$batchId")
-        graft.sources.Commits.commit(spark, storeDir, batchId)
-      }
-    } finally { survivors.unpersist(); () }
-  }
-
-  private def dropChunkBatches(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, storeDir: String,
-      selected: Seq[Long]): Unit = {
-    selected.foreach(b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b))
-    for (t <- Seq("chunks", "docs"); b <- selected)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/$t/b$b"),
-        true): Unit
-  }
+    ChunkStore.compactBatches(spark, storeDir, maxBatches)
 
   /** Streaming face of [[chunkIngestBatch]]. */
   def chunkIngestSink(stream: DataFrame, storeDir: String, idCol: String,
@@ -707,7 +578,7 @@ object Streams {
       val cur = docs.groupBy(col("doc_id"))
         .agg(max(col("batch")).as("batch"),
           max_by(col("content_hash"), col("batch")).as("__cur_hash"))
-        .filter(col("__cur_hash") =!= ChunkTombstone)
+        .filter(col("__cur_hash") =!= Tombstone)
         .select(col("doc_id"), col("batch"))
       chunks.join(cur, Seq("doc_id", "batch"), "left_semi")
         .select(col("doc_id"), col("chunk_seq"), col("n_tokens"),
@@ -2057,10 +1928,13 @@ object Streams {
   }
 
   /** Composed MAINTENANCE pass — the offline twin of the ingest and
-    * takedown fan-outs, one call a platform cron can own: compact the
-    * inverted index and the ANN store to their live state
-    * (crash-repairing vacuums, writer-lease held) and bound the merge
-    * store's snapshot history to `keepStates`. When the read side
+    * takedown fan-outs, one call a platform cron can own: vacuum (and,
+    * on the incremental cadence, compact) every generational store the
+    * fan-out writes — the inverted index, the ANN store, and when
+    * given the chunk store, the PQ store and the chunk-vector store —
+    * through their shared [[graft.sources.GenTable]] maintenance
+    * (crash-repairing, writer-lease held), and bound the merge store's
+    * snapshot history to `keepStates`. When the read side
     * serves from the compacted snapshot layouts, pass `postingsTable`
     * / `annPartDir` and the pass REFRESHES them right after the
     * vacuums — snapshot staleness becomes "at most one maintenance

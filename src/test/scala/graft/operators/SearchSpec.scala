@@ -663,8 +663,8 @@ class SearchSpec extends SparkSpec {
     // Crash point: the rewrite batch is COMMITTED but the reclaimed
     // batches' markers are still present — both generations visible.
     val committed = graft.sources.Commits.committed(spark, dir)
-    val selected = Search.dirtyBatches(spark, dir, committed, 0.0)
-    Search.vacuumRewriteAndCommit(spark, dir, committed, selected)
+    val selected = Search.IndexStore.dirtyBatches(spark, dir, committed, 0.0)
+    Search.IndexStore.rewriteAndCommit(spark, dir, committed, selected)
     assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
       .collect().toSeq == want,
       "duplicate generations across the crash window changed answers")

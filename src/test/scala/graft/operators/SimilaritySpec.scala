@@ -307,7 +307,7 @@ class SimilaritySpec extends SparkSpec {
       minDeadFraction = 0.5) == 1)
     assert(rows() == want, "carried PQ tombstone stopped suppressing")
     // Crash window: rewrite committed, reclaimed markers still there.
-    Similarity.pqVacuumRewriteAndCommit(spark, dir,
+    Similarity.PqStore.rewriteAndCommit(spark, dir,
       Commits.committed(spark, dir), Seq(0L))
     assert(rows() == want,
       "duplicate generations across the crash window changed answers")
@@ -1013,7 +1013,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rows() == want, "carried ANN tombstone stopped suppressing")
     // Crash window: rewrite committed, reclaimed markers still there.
     val committed = Commits.committed(spark, dir)
-    Similarity.annVacuumRewriteAndCommit(spark, dir, committed,
+    Similarity.AnnStore.rewriteAndCommit(spark, dir, committed,
       Seq(0L))
     assert(rows() == want,
       "duplicate generations across the crash window changed answers")

@@ -1,0 +1,220 @@
+package graft.sources
+
+import graft.SparkSpec
+import graft.operators.{Search, Similarity}
+import graft.streaming.Streams
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Conformance of the shared maintenance core: the same lifecycle cases
+  * run against all four generational stores — the inverted index, the
+  * chunk store, the ANN store and the PQ store. Each store is built to
+  * the same shape (a bulk batch, a re-delivered change, a takedown and
+  * two micro-appends: five committed batches, dead rows in two of
+  * them), and every case asserts that the store's own read surface
+  * answers exactly as before maintenance.
+  */
+class GenTableSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** One store under test: its descriptor, a builder to the common
+    * shape, and a canonical (sorted) live read.
+    */
+  private case class StoreCase(name: String, table: GenTable,
+      build: String => Unit, read: String => Seq[String])
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private val text = Seq(
+    (1L, "spark engine spark spark"),
+    (2L, "spark engine vector"),
+    (3L, "engine row scan filter merge sort"),
+    (4L, "vector vector index"),
+    (5L, "a long document about spark and many other words"))
+    .toDF("doc_id", "text")
+  private def micro(i: Int): DataFrame =
+    Seq((100L + i, s"micro doc $i spark vector")).toDF("doc_id", "text")
+  private val changed =
+    Seq((4L, "vector vector index updated")).toDF("doc_id", "text")
+
+  private def vecs(ids: Seq[Long], dims: Int): DataFrame =
+    ids.map(i => (i, Seq.tabulate(dims)(d =>
+      math.cos(i * 0.7 + d * 1.3).toFloat))).toDF("id", "vec")
+
+  private val stores = Seq(
+    StoreCase("index", Search.IndexStore,
+      dir => {
+        Search.buildIndex(text, "doc_id", "text", dir)
+        Search.indexAppend(changed, "doc_id", "text", dir)
+        Search.indexDelete(spark, dir, Seq(3L).toDF("doc_id"))
+        (1 to 2).foreach(i =>
+          Search.indexAppend(micro(i), "doc_id", "text", dir))
+      },
+      dir => sorted(Search.bm25FromIndexTopK(spark, dir,
+        Seq("spark", "vector", "engine"), 20))),
+    StoreCase("chunk", Streams.ChunkStore,
+      dir => {
+        def ingest(df: DataFrame): Unit =
+          Streams.chunkIngestBatch(df, dir, "doc_id", "text", 3, 1): Unit
+        ingest(text)
+        ingest(changed)
+        Streams.chunkStoreDelete(spark, dir, Seq(3L).toDF("doc_id"))
+        (1 to 2).foreach(i => ingest(micro(i)))
+      },
+      dir => sorted(Streams.chunkStoreRead(spark, dir).get)),
+    StoreCase("ann", Similarity.AnnStore,
+      dir => {
+        Similarity.annStoreAppend(vecs(0L until 12L, 2), dir, 4, 2)
+        Similarity.annStoreAppend(vecs(Seq(4L), 2)
+          .withColumn("vec", array(lit(0.3f), lit(-0.9f))), dir, 4, 2)
+        Similarity.annStoreDelete(spark, dir, Seq(3L).toDF("id"))
+        (1 to 2).foreach(i =>
+          Similarity.annStoreAppend(vecs(Seq(100L + i), 2), dir, 4, 2))
+      },
+      dir => sorted(Similarity.annStoreTopK(spark, dir,
+        vecs(0L until 4L, 2), planes = 4, dims = 2, k = 4)
+        .select("qid", "cid", "score", "rnk"))),
+    StoreCase("pq", Similarity.PqStore,
+      dir => {
+        Similarity.pqStoreBuild(vecs(0L until 12L, 4), dir, m = 2,
+          subDims = 2, codes = 2, iters = 2)
+        Similarity.pqStoreAppend(vecs(Seq(4L), 4)
+          .withColumn("vec", array(Seq.fill(4)(lit(0.5f)): _*)), dir)
+        Similarity.pqStoreDelete(spark, dir, Seq(3L).toDF("id"))
+        (1 to 2).foreach(i =>
+          Similarity.pqStoreAppend(vecs(Seq(100L + i), 4), dir))
+      },
+      dir => sorted(Similarity.pqStoreTopK(spark, dir,
+        vecs(0L until 4L, 4), k = 4).select("qid", "cid", "rnk"))))
+
+  private def freshDir(s: StoreCase, tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"gen-$tag-${s.name}")
+      .toString + "/store"
+
+  private def fs(dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def tableDir(dir: String, t: GenTable.Table): String =
+    if (t.live.isEmpty) dir else s"$dir/${t.live}"
+
+  private def batchDirs(dir: String, t: GenTable.Table): Set[Long] =
+    Commits.batchDirs(fs(dir), new Path(tableDir(dir, t))).keySet
+
+  /** Every committed key appears exactly once: the store converged. */
+  private def assertConverged(s: StoreCase, dir: String): Unit = {
+    val rows = Commits.readCommittedBatches(spark,
+      tableDir(dir, s.table.tables.last), Commits.committed(spark, dir)).get
+    assert(rows.count() == rows.select(s.table.key).distinct().count(),
+      s"${s.name}: superseded generations survived the pass")
+  }
+
+  stores.foreach { s =>
+    test(s"${s.name}: a crash after the rewrite commits keeps reads " +
+        "unchanged, and the next pass converges") {
+      val dir = freshDir(s, "crash")
+      s.build(dir)
+      val want = s.read(dir)
+      val committed = Commits.committed(spark, dir)
+      val dirty = s.table.dirtyBatches(spark, dir, committed, 0.0)
+      assert(dirty.nonEmpty, s"${s.name}: the build left no dead rows")
+      // Crash point: rewrite committed, reclaimed markers still there.
+      s.table.rewriteAndCommit(spark, dir, committed, dirty)
+      assert(Commits.committed(spark, dir).size == committed.size + 1)
+      assert(s.read(dir) == want,
+        s"${s.name}: duplicate generations changed answers")
+      assert(s.table.vacuumIncremental(spark, dir, 0.0) >= dirty.size)
+      assert(s.read(dir) == want)
+      assertConverged(s, dir)
+    }
+
+    test(s"${s.name}: the incremental pass sweeps an orphan batch dir " +
+        "from a crashed append") {
+      val dir = freshDir(s, "orphan")
+      s.build(dir)
+      val want = s.read(dir)
+      // Crashed append: id allocated, slices written, never committed.
+      val orphan = Commits.allocateBatchId(spark, dir, Seq.empty)
+      for (t <- s.table.tables) {
+        val src = new Path(s"${tableDir(dir, t)}/b0")
+        if (fs(dir).exists(src))
+          FileUtil.copy(fs(dir), src, fs(dir),
+            new Path(s"${tableDir(dir, t)}/b$orphan"), false,
+            spark.sparkContext.hadoopConfiguration)
+      }
+      assert(s.table.tables.exists(batchDirs(dir, _).contains(orphan)))
+      assert(s.read(dir) == want, "an uncommitted dir became visible")
+      s.table.vacuumIncremental(spark, dir, 0.5): Unit
+      assert(s.table.tables.forall(!batchDirs(dir, _).contains(orphan)),
+        s"${s.name}: orphan batch dir survived the sweep")
+      assert(s.read(dir) == want)
+    }
+
+    test(s"${s.name}: incremental and compaction passes complete a " +
+        "crashed full-vacuum swap before sweeping") {
+      val dir = freshDir(s, "swap")
+      s.build(dir)
+      val want = s.read(dir)
+      // A complete stage, built by a real full vacuum of a copy: each
+      // table's b0 and the ledger move under the stage of `dir`.
+      val copy = freshDir(s, "swapcopy")
+      FileUtil.copy(fs(dir), new Path(dir), fs(dir), new Path(copy), false,
+        spark.sparkContext.hadoopConfiguration)
+      val rows = Commits.readCommittedBatches(spark,
+        tableDir(copy, s.table.tables.last), Commits.committed(spark, copy))
+        .get
+      s.table.vacuumFull(spark, copy)(Some(rows
+        .join(rows.groupBy(s.table.key).agg(max("batch").as("batch")),
+          Seq(s.table.key, "batch")).filter(!s.table.isTombstone)))
+      val stage = s"$dir/${GenTable.StageDir}"
+      def crash(): Unit = {
+        for (t <- s.table.tables)
+          FileUtil.copy(fs(dir), new Path(s"${tableDir(copy, t)}/b0"),
+            fs(dir), new Path(s"$stage/${t.staged}"), false,
+            spark.sparkContext.hadoopConfiguration)
+        FileUtil.copy(fs(dir), new Path(s"$copy/_commits"), fs(dir),
+          new Path(s"$stage/_commits"), false,
+          spark.sparkContext.hadoopConfiguration)
+        // Worst window: live ledger dropped, the first table's staged
+        // b0 already moved in. The committed set reads empty, so an
+        // unguarded orphan sweep would delete that b0, the only copy.
+        Commits.clear(spark, dir)
+        val first = s.table.tables.head
+        val live = new Path(tableDir(dir, first))
+        fs(dir).listStatus(live).filter { st =>
+          val n = st.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        }.foreach(st => fs(dir).delete(st.getPath, true))
+        fs(dir).rename(new Path(s"$stage/${first.staged}"),
+          new Path(live, "b0"))
+      }
+      crash()
+      intercept[Exception](s.read(dir))  // visibly dead mid-swap
+      assert(s.table.vacuumIncremental(spark, dir, 0.0) == 0)
+      assert(s.read(dir) == want, s"${s.name}: repair lost data")
+      assert(Commits.committed(spark, dir) == Seq(0L))
+      assert(!fs(dir).exists(new Path(stage)))
+      // The compaction entry point repairs the same window.
+      crash()
+      assert(s.table.compactBatches(spark, dir, 1) == 0)
+      assert(s.read(dir) == want)
+      assert(Commits.committed(spark, dir) == Seq(0L))
+    }
+
+    test(s"${s.name}: compactBatches(n) leaves exactly n committed " +
+        "batches and unchanged reads") {
+      val dir = freshDir(s, "compact")
+      s.build(dir)
+      val want = s.read(dir)
+      assert(Commits.committed(spark, dir).size == 5)
+      assert(s.table.compactBatches(spark, dir, 3) == 3)
+      assert(Commits.committed(spark, dir).size == 3)
+      assert(s.read(dir) == want)
+      assert(s.table.compactBatches(spark, dir, 3) == 0, "not idempotent")
+      assert(s.table.compactBatches(spark, dir, 1) == 3)
+      assert(Commits.committed(spark, dir).size == 1)
+      assert(s.read(dir) == want)
+    }
+  }
+}

@@ -447,40 +447,20 @@ object Search {
       .withColumnRenamed("content_hash", "__ch")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Membership resolve plan picked by batch-vs-store size
-      // ([[Commits.scopeMutationResolve]]): SCOPED
-      // (semi-join before the per-doc aggregate) for micro-batches —
-      // an unscoped currentDocs aggregates the whole docs table per
-      // mutation, store-linear, measured at 7 s for a 500-doc append
-      // against a 5M-doc store (SCALE.md) — but UNSCOPED for
-      // backfill-sized batches, where the id set stops broadcasting
-      // and the semi-join degrades to a corpus-sized shuffle join
-      // worse than the aggregate it was avoiding.
-      val committed = Commits.committed(spark, dir)
-      val cur =
-        if (committed.isEmpty) None
-        else if (Commits.scopeMutationResolve(hashed.count(),
-            Commits.committedRowCount(spark, s"$dir/docs",
-              committed)))
-          currentDocsFor(spark, dir, hashed.select(col(idCol).as("doc_id")))
-        else currentDocs(spark, dir)
-      val fresh = (cur match {
-        case None => hashed
-        case Some(c) =>
-          val prev = c.select(col("doc_id").as(idCol),
-            col("content_hash").as("__prev"))
-          hashed.join(prev, Seq(idCol), "left")
-            .filter(col("__prev").isNull || col("__prev") =!= col("__ch"))
-            .drop("__prev")
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Hash gate through the shared currency resolve ([[GenTable
+      // .currency]]: scoped to the batch's ids for micro-batches — an
+      // unscoped resolve aggregates the whole docs table per mutation,
+      // measured at 7 s for a 500-doc append against a 5M-doc store,
+      // SCALE.md — store-wide for backfill-sized batches).
+      val fresh = IndexStore.changed(spark, dir,
+          Commits.committed(spark, dir), hashed, idCol, "__ch")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val n = graft.Prof("indexAppend.resolve")(fresh.count())
-        if (n > 0) {
-          val batchId = Commits.allocateBatchId(spark, dir,
-            Seq(s"$dir/docs", s"$dir/postings"))
+        if (n > 0) IndexStore.commitGeneration(spark, dir) { b =>
           graft.Prof("indexAppend.writeSlice")(
-            writeSlice(fresh, idCol, textCol, dir, batchId))
-          Commits.commit(spark, dir, batchId)
+            writeSlice(fresh, idCol, textCol, dir, b))
+          n
         }
         n
       } finally { fresh.unpersist(); () }
@@ -499,48 +479,18 @@ object Search {
     */
   def indexDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
       ids: DataFrame, heldLocks: Set[String] = Set.empty): Long =
-   Commits.withWriterLockUnless(spark, dir, heldLocks) {
-    // Adaptive like indexAppend: scoped resolve (only the requested
-    // ids' docs rows reach the currency aggregate) for normal
-    // takedowns, store-wide aggregate + post-filter for corpus-sized
-    // ones where the id semi-join would stop broadcasting.
-    val idsF = ids.select(col(ids.columns.head).as("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val committed = Commits.committed(spark, dir)
-    val cur = (
-      if (committed.isEmpty) None
-      else if (Commits.scopeMutationResolve(idsF.count(),
-          Commits.committedRowCount(spark, s"$dir/docs",
-            committed)))
-        currentDocsFor(spark, dir, idsF)
-      else currentDocs(spark, dir)
-        .map(_.join(idsF, Seq("doc_id"), "left_semi"))
-    ).getOrElse { idsF.unpersist(); return 0L }
-    val victims = cur
-      .filter(col("content_hash") =!= Tombstone)
-      .select(col("doc_id"), lit(0).as("dl"),
-        lit(Tombstone).as("content_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = victims.count()
-      if (n > 0) {
-        val batchId = Commits.allocateBatchId(spark, dir,
-          Seq(s"$dir/docs", s"$dir/postings"))
-        victims.withColumn("batch", lit(batchId))
-          .write.parquet(s"$dir/docs/b$batchId")
-        Commits.commit(spark, dir, batchId)
-      }
-      n
-    } finally { victims.unpersist(); idsF.unpersist(); () }
-   }
+    IndexStore.delete(spark, dir, ids, heldLocks)
 
-  /** The index's maintenance descriptor ([[GenTable]]): membership
-    * `docs`, dependent `postings` rewritten term-clustered (the layout
+  /** The index's lifecycle descriptor ([[GenTable]]): membership `docs`
+    * gated on `content_hash`, tombstoned as (dl 0, the marker hash);
+    * dependent `postings` rewritten term-clustered (the layout
     * [[buildIndex]] documents). Package-private for the specs' crash
     * hooks.
     */
   private[graft] val IndexStore = new GenTable("doc_id",
-    col("content_hash") === Tombstone, GenTable.Table("docs", "docs/b0"),
+    col("content_hash") === Tombstone,
+    Seq(lit(0).as("dl"), lit(Tombstone).as("content_hash")), "content_hash",
+    GenTable.Table("docs", "docs/b0"),
     Seq(GenTable.Table("postings", "postings/b0", _
       .repartition(col("term"))
       .sortWithinPartitions(col("term"), col("doc_id")))))
@@ -645,27 +595,6 @@ object Search {
     currentDocs(spark, dir).map(_
       .filter(col("content_hash") =!= Tombstone)
       .select(col("doc_id"), col("content_hash")))
-
-  /** [[currentDocs]] restricted to `ids` (a one-column doc_id frame):
-    * the docs scan is semi-joined against the id set BEFORE the
-    * per-doc aggregate, so mutation-path currency resolves cost the
-    * batch's overlap, not the store's full membership (the read paths
-    * keep the corpus-wide [[currentDocs]] — they genuinely need every
-    * doc's generation). Package-private so the spec can pin the
-    * semi-below-aggregate plan shape.
-    */
-  private[operators] def currentDocsFor(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Option[DataFrame] = {
-    val committed = Commits.committed(spark, dir)
-    if (committed.isEmpty) None
-    else Commits.readCommittedBatches(spark, s"$dir/docs", committed)
-      .map(_.join(ids, Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id"))
-        .agg(max_by(col("dl"), col("batch")).as("dl"),
-          max_by(col("content_hash"), col("batch")).as("content_hash"),
-          max(col("batch")).as("batch")))
-  }
 
   private def writeSlice(docs: DataFrame, idCol: String, textCol: String,
       dir: String, batch: Long): Unit = {

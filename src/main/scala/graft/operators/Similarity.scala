@@ -616,14 +616,11 @@ object Similarity {
       storeDir: String, fresh: DataFrame,
       books: Seq[Seq[(Long, Seq[Double])]], subDims: Int,
       coarse: Option[Seq[(Long, Seq[Double])]]): Long = {
-    val dataDir = s"$storeDir/rows"
-    val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir,
-      Seq(dataDir))
     val rows = fresh.select(col("id"),
         array(books.indices.map(j => pqCodeExpr(books(j), j, subDims)): _*)
           .as("codes"),
         coarse.fold(lit(-1L))(cb => pqCellExpr(cb)).as("cell"),
-        col("__vh").as("vec_hash"), lit(batchId).as("batch"))
+        col("__vh").as("vec_hash"))
     // ONE action, not two: the encode pass (the big pqCodeExpr
     // min-distance trees) used to run count() + write() over a
     // persisted frame; an Observation folds the gating row count into
@@ -633,14 +630,14 @@ object Similarity {
     // — invisible to every reader (committed-marker filtered), swept
     // like any crash orphan — while the commit marker still only
     // appears for n > 0, exactly as before.
-    val obs = org.apache.spark.sql.Observation()
-    rows.observe(obs, count(lit(1)).as("n"))
-      .write.parquet(s"$dataDir/b$batchId")
-    val n = obs.get("n").asInstanceOf[Long]
-    if (n > 0) graft.sources.Commits.commit(spark, storeDir, batchId)
     // (obs.get blocks until the write's listener fires, so n is the
     // exact committed row count, same value the old count() returned.)
-    n
+    PqStore.commitGeneration(spark, storeDir) { b =>
+      val obs = org.apache.spark.sql.Observation()
+      PqStore.writeMembership(rows.observe(obs, count(lit(1)).as("n")),
+        storeDir, b)
+      obs.get("n").asInstanceOf[Long]
+    }
   }
 
   /** STANDING PQ store, train-once: Lloyd the per-subspace codebooks
@@ -728,8 +725,8 @@ object Similarity {
     * and commit only rows whose vector hash differs from the store's
     * current generation for that id, so an unchanged redelivery is a
     * no-op and a re-embedded vector supersedes via max-batch currency
-    * — the ingest family's at-least-once convergence contract, on the
-    * ANN twin's scoped/unscoped currency-resolve plan. An id whose
+    * — the ingest family's at-least-once convergence contract, through
+    * the stores' shared hash gate ([[GenTable.changed]]). An id whose
     * current generation is a [[pqStoreDelete]] tombstone RESURRECTS
     * here (a real vector's hash never equals the tombstone's 0). On a
     * cell-routed store the batch's rows are stamped with their coarse
@@ -746,27 +743,14 @@ object Similarity {
     val books = pqReadCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
     val coarse = pqReadCoarse(spark, storeDir)
-    val dataDir = s"$storeDir/rows"
     val hashed = pqRequireDims(batch.dropDuplicates("id")
       .withColumn("__vh", xxhash64(col("vec")))
       .withColumn("v", VectorFunctions.toDoubleArray(col("vec"))),
       books.size * subDims, "pqStoreAppend")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def cur = graft.sources.Commits
-        .readCommittedBatches(spark, dataDir, committed)
-        .getOrElse(sys.error(s"committed PQ store at $storeDir has no " +
-          "readable rows"))
-      val scoped = graft.sources.Commits.scopeMutationResolve(
-        hashed.count(),
-        graft.sources.Commits.committedRowCount(spark, dataDir, committed))
-      val keys = (if (scoped)
-          cur.join(hashed.select(col("id")), Seq("id"), "left_semi")
-        else cur)
-        .groupBy(col("id"))
-        .agg(max_by(col("vec_hash"), col("batch")).as("__prev"))
-      val fresh = hashed.join(keys, Seq("id"), "left")
-        .filter(col("__prev").isNull || col("__prev") =!= col("__vh"))
+      val fresh = PqStore.changed(spark, storeDir, committed, hashed, "id",
+        "__vh")
       pqCommitEncoded(spark, storeDir, fresh.select(col("id"), col("v"),
         col("__vh")), books, subDims, coarse)
     } finally { hashed.unpersist(); () }
@@ -853,7 +837,6 @@ object Similarity {
     val books = pqReadCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
     val coarse = pqReadCoarse(spark, storeDir)
-    val dataDir = s"$storeDir/rows"
     val scope = broadcast(
       scopeKeys.select(col(scopeKeys.columns.head).as("__k"))
         .dropDuplicates("__k"))
@@ -869,8 +852,6 @@ object Similarity {
         max_by(size(col("codes")), col("batch")).as("__clen"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir,
-        Seq(dataDir))
       val fresh = hashed
         .join(cur.select(col("id"), col("__prev")), Seq("id"), "left")
         .filter(col("__prev").isNull || col("__prev") =!= col("__vh"))
@@ -881,20 +862,19 @@ object Similarity {
           col("__vh").as("vec_hash"))
       val stale = cur.filter(col("__clen") > 0)
         .join(hashed.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), array().cast("array<bigint>").as("codes"),
-          lit(-1L).as("cell"), lit(0L).as("vec_hash"))
+        .select(col("id") +: PqStore.tombstone: _*)
       // ONE action: encode + tombstones ride one write; the gating
       // counts ride it as an Observation (same shape as
       // [[pqCommitEncoded]] — an all-quiet sync leaves an uncommitted
       // empty dir, invisible and swept like any crash orphan).
       val obs = org.apache.spark.sql.Observation()
-      fresh.unionByName(stale)
-        .withColumn("batch", lit(batchId))
-        .observe(obs, count(lit(1)).as("n"),
-          sum(when(size(col("codes")) > 0, 1L).otherwise(0L)).as("enc"))
-        .write.parquet(s"$dataDir/b$batchId")
-      val n = obs.get("n").asInstanceOf[Long]
-      if (n > 0) graft.sources.Commits.commit(spark, storeDir, batchId)
+      PqStore.commitGeneration(spark, storeDir) { b =>
+        PqStore.writeMembership(fresh.unionByName(stale)
+          .observe(obs, count(lit(1)).as("n"),
+            sum(when(size(col("codes")) > 0, 1L).otherwise(0L)).as("enc")),
+          storeDir, b)
+        obs.get("n").asInstanceOf[Long]
+      }: Unit
       Option(obs.get("enc")).map(_.asInstanceOf[Long]).getOrElse(0L)
     } finally { cur.unpersist(); hashed.unpersist(); () }
    }
@@ -909,43 +889,7 @@ object Similarity {
   def pqStoreDelete(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, ids: DataFrame,
       heldLocks: Set[String] = Set.empty): Long =
-   graft.sources.Commits.withWriterLockUnless(spark, storeDir,
-       heldLocks) {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    if (committed.isEmpty) return 0L
-    val dataDir = s"$storeDir/rows"
-    // Live-id resolve scoped to the requested ids (see annStoreDelete:
-    // only the victims' rows reach the per-id currency aggregate, and
-    // the tombstone check rides it as max_by(size(codes))). Corpus-
-    // sized takedowns flip to the store-wide aggregate + post-filter.
-    val idsF = ids.select(col(ids.columns.head).as("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scoped = graft.sources.Commits.scopeMutationResolve(idsF.count(),
-      graft.sources.Commits.committedRowCount(spark, dataDir, committed))
-    val base = readCommittedPq(spark, storeDir, committed)
-    val victims =
-      (if (scoped) base.join(idsF, Seq("id"), "left_semi")
-       else base)
-      .groupBy(col("id"))
-      .agg(max_by(size(col("codes")), col("batch")).as("__clen"))
-      .transform(df =>
-        if (scoped) df else df.join(idsF, Seq("id"), "left_semi"))
-      .filter(col("__clen") > 0)
-      .select(col("id"), array().cast("array<bigint>").as("codes"),
-        lit(-1L).as("cell"), lit(0L).as("vec_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = victims.count()
-      if (n > 0) {
-        val batchId = graft.sources.Commits
-          .allocateBatchId(spark, storeDir, Seq(dataDir))
-        victims.withColumn("batch", lit(batchId))
-          .write.parquet(s"$dataDir/b$batchId")
-        graft.sources.Commits.commit(spark, storeDir, batchId)
-      }
-      n
-    } finally { victims.unpersist(); idsF.unpersist(); () }
-   }
+    PqStore.delete(spark, storeDir, ids, heldLocks)
 
   /** ADC probe of the standing PQ store: one codebook read, per-query
     * distance tables as in-row maps on the broadcast query side, and
@@ -1062,13 +1006,16 @@ object Similarity {
       .select(col("qid"), col("cid"), col("d2"), col("rnk"))
   }
 
-  /** The PQ store's maintenance descriptor ([[GenTable]]): code rows
-    * under `rows/` (staged at the stage root), empty codes as the
-    * tombstone, and the `coarse` routing metadata a [[pqStoreReroute]]
-    * stages beside them. The train-once codebook is never touched.
-    * Package-private for the specs' crash hooks.
+  /** The PQ store's lifecycle descriptor ([[GenTable]]): code rows
+    * under `rows/` (staged at the stage root) gated on `vec_hash`,
+    * tombstoned as (empty codes, cell -1, vec_hash 0), and the `coarse`
+    * routing metadata a [[pqStoreReroute]] stages beside them. The
+    * train-once codebook is never touched. Package-private for the
+    * specs' crash hooks.
     */
   private[graft] val PqStore = new GenTable("id", size(col("codes")) === 0,
+    Seq(array().cast("array<bigint>").as("codes"), lit(-1L).as("cell"),
+      lit(0L).as("vec_hash")), "vec_hash",
     GenTable.Table("rows", "b0"), stagedExtras = Seq("coarse"))
 
   /** Compact the PQ store's code rows to their live state (batch 0,
@@ -1313,51 +1260,29 @@ object Similarity {
     val hashed = batch.dropDuplicates("id")
       .withColumn("__vh", xxhash64(col("vec")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // Currency resolve plan picked by batch-vs-store size
-    // ([[graft.sources.Commits.scopeMutationResolve]]). SCOPED (store
-    // scan semi-joined against the batch BEFORE the per-id aggregate)
-    // for fixed-size mutations: only the batch's overlap shuffles —
-    // measured at 1000x sf0.1 (2M store rows) the unscoped aggregate
+    // Hash gate through the shared currency resolve ([[GenTable
+    // .currency]]): scoped to the batch's ids for fixed-size mutations
+    // — measured at 1000x sf0.1 (2M store rows) an unscoped aggregate
     // made a 500-vector append cost 9.6 s, store-linear; scoped it is
-    // flat (SCALE.md). UNSCOPED (store-wide aggregate) for
-    // backfill-sized batches (re-embed-everything): there the id set
-    // stops broadcasting and the semi-join degrades to a corpus-sized
-    // shuffle join costlier than the aggregate it was scoped to avoid.
-    val fresh =
-      if (committed.isEmpty) hashed
-      else {
-        val keys =
-          if (graft.sources.Commits.scopeMutationResolve(hashed.count(),
-              graft.sources.Commits.committedRowCount(spark, storeDir,
-                committed)))
-            annCurrentKeysFor(spark, storeDir, committed,
-              hashed.select(col("id")))
-          else annCurrentKeys(spark, storeDir, committed)
-        hashed.join(keys.select(col("id"), col("vec_hash").as("__prev")),
-          Seq("id"), "left")
-          .filter(col("__prev").isNull || col("__prev") =!= col("__vh"))
-          .drop("__prev")
-      }
-    val batchId =
-      graft.sources.Commits.allocateBatchId(spark, storeDir, Seq(storeDir))
+    // flat (SCALE.md) — store-wide for backfill-sized batches.
+    val fresh = AnnStore.changed(spark, storeDir,
+      graft.sources.Commits.committed(spark, storeDir), hashed, "id", "__vh")
     val v = VectorFunctions.toDoubleArray(col("vec"))
     val rows = fresh
       .withColumn("bucket", hyperplaneBucketCol(planes, dims))
       .withColumn("scale", VectorFunctions.int8Scale(v))
       .select(col("id"),
         VectorFunctions.quantizeInt8(v, col("scale")).as("qvec"),
-        col("scale"), col("bucket"), col("__vh").as("vec_hash"),
-        lit(batchId).as("batch"))
+        col("scale"), col("bucket"), col("__vh").as("vec_hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rows.count()
-    if (n > 0) {
-      rows.write.parquet(s"$storeDir/b$batchId")
-      graft.sources.Commits.commit(spark, storeDir, batchId)
-    }
-    rows.unpersist()
-    hashed.unpersist()
-    n
+    try {
+      val n = rows.count()
+      if (n > 0) AnnStore.commitGeneration(spark, storeDir) { b =>
+        AnnStore.writeMembership(rows, storeDir, b)
+        n
+      }
+      n
+    } finally { rows.unpersist(); hashed.unpersist(); () }
    }
 
   /** Read the COMMITTED generations of the store —
@@ -1370,35 +1295,6 @@ object Similarity {
     graft.sources.Commits.readCommittedBatches(spark, storeDir, committed)
       .getOrElse(throw new IllegalArgumentException(
         s"no committed ANN data under $storeDir for batches $committed"))
-
-  /** (id, batch, vec_hash) of every id's CURRENT committed generation.
-    * Reads only three skinny columns of the store (parquet pruning) —
-    * one hash-shuffle on id, independent of vector width; regular
-    * [[annStoreVacuum]] keeps the superseded tail short.
-    */
-  private def annCurrentKeys(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, committed: Seq[Long]): DataFrame =
-    readCommittedAnn(spark, storeDir, committed)
-      .groupBy(col("id"))
-      .agg(max(col("batch")).as("batch"),
-        max_by(col("vec_hash"), col("batch")).as("vec_hash"))
-
-  /** [[annCurrentKeys]] restricted to `ids` (a one-column id frame):
-    * the store scan is semi-joined against the id set BEFORE the
-    * per-id aggregate, so mutation-path currency resolves cost the
-    * batch's overlap instead of the store's whole membership (the
-    * probe paths keep the store-wide [[annCurrentKeys]] — they need
-    * every candidate's generation). Package-private so the spec can
-    * pin the semi-below-aggregate plan shape.
-    */
-  private[operators] def annCurrentKeysFor(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      committed: Seq[Long], ids: DataFrame): DataFrame =
-    readCommittedAnn(spark, storeDir, committed)
-      .join(ids, Seq("id"), "left_semi")
-      .groupBy(col("id"))
-      .agg(max(col("batch")).as("batch"),
-        max_by(col("vec_hash"), col("batch")).as("vec_hash"))
 
   /** The store's LIVE rows: committed batches only, one row per id
     * (its max committed generation), tombstones dropped — a deleted
@@ -1419,9 +1315,11 @@ object Similarity {
     // aggregate was its fastest-growing term across store decades
     // (SCALE.md), and regular maintenance now removes it entirely.
     if (committed.sizeIs == 1) all.filter(size(col("qvec")) > 0)
+    // Otherwise one skinny (id, batch) aggregate: a hash-shuffle on id,
+    // independent of vector width.
     else all
-      .join(annCurrentKeys(spark, storeDir, committed)
-        .select(col("id"), col("batch")), Seq("id", "batch"))
+      .join(all.groupBy(col("id")).agg(max(col("batch")).as("batch")),
+        Seq("id", "batch"))
       .filter(size(col("qvec")) > 0)
   }
 
@@ -1442,51 +1340,16 @@ object Similarity {
   def annStoreDelete(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, ids: DataFrame,
       heldLocks: Set[String] = Set.empty): Long =
-   graft.sources.Commits.withWriterLockUnless(spark, storeDir,
-       heldLocks) {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    if (committed.isEmpty) return 0L
-    // Live-id resolve scoped to the requested ids (same store-linear
-    // aggregate the append path had — see annStoreAppend): only the
-    // victims' rows reach the per-id currency aggregate, and the
-    // tombstone check rides it as max_by(size(qvec)) so the vectors
-    // themselves never shuffle. Corpus-sized takedowns flip to the
-    // store-wide aggregate + post-filter (scopeMutationResolve).
-    val idsF = ids.select(col(ids.columns.head).as("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scoped = graft.sources.Commits.scopeMutationResolve(idsF.count(),
-      graft.sources.Commits.committedRowCount(spark, storeDir, committed))
-    val base = readCommittedAnn(spark, storeDir, committed)
-    val victims =
-      (if (scoped) base.join(idsF, Seq("id"), "left_semi")
-       else base)
-      .groupBy(col("id"))
-      .agg(max_by(size(col("qvec")), col("batch")).as("__qlen"))
-      .transform(df =>
-        if (scoped) df else df.join(idsF, Seq("id"), "left_semi"))
-      .filter(col("__qlen") > 0)
-      .select(col("id"),
-        array().cast("array<tinyint>").as("qvec"), lit(0.0).as("scale"),
-        lit(-1L).as("bucket"), lit(0L).as("vec_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = victims.count()
-      if (n > 0) {
-        val batchId = graft.sources.Commits
-          .allocateBatchId(spark, storeDir, Seq(storeDir))
-        victims.withColumn("batch", lit(batchId))
-          .write.parquet(s"$storeDir/b$batchId")
-        graft.sources.Commits.commit(spark, storeDir, batchId)
-      }
-      n
-    } finally { victims.unpersist(); idsF.unpersist(); () }
-   }
+    AnnStore.delete(spark, storeDir, ids, heldLocks)
 
-  /** The ANN store's maintenance descriptor ([[GenTable]]): one table,
-    * the store dir itself, with the empty qvec as the tombstone.
-    * Package-private for the specs' crash hooks.
+  /** The ANN store's lifecycle descriptor ([[GenTable]]): one table,
+    * the store dir itself, gated on `vec_hash`, tombstoned as (empty
+    * qvec, scale 0, bucket -1, vec_hash 0). Package-private for the
+    * specs' crash hooks.
     */
   private[graft] val AnnStore = new GenTable("id", size(col("qvec")) === 0,
+    Seq(array().cast("array<tinyint>").as("qvec"), lit(0.0).as("scale"),
+      lit(-1L).as("bucket"), lit(0L).as("vec_hash")), "vec_hash",
     GenTable.Table("", "b0"))
 
   /** Compact the ANN store to its live state (batch 0, one row per id)
@@ -1619,7 +1482,7 @@ object Similarity {
     * dequantized vectors, return per-query top-k. Never all-pairs; the
     * candidate read is bucket-pruned, and generation currency costs one
     * skinny (id, batch) aggregate over the store (see
-    * [[annCurrentKeys]]).
+    * [[annCurrentRows]]).
     */
   def annStoreTopK(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, queries: DataFrame, planes: Int, dims: Int,

@@ -246,29 +246,18 @@ object Commits {
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.map(_.getPath)
 
-  /** The batches among `committed` whose rows live in `tableDir`'s
-    * legacy flat files. The incremental vacuums and compactions FORCE
-    * these into their rewrite selection: a flat batch's files mix
-    * batches, so reclaiming it can only drop its commit marker — the
-    * bytes would stay on disk forever, invisible but unreclaimable —
-    * unless its survivors are first rewritten into a fresh `b<id>`
-    * batch and the flat files then swept by [[sweepFlatFiles]]. One
-    * listing when the layout is already per-batch; a skinny
-    * batch-column scan of just the flat files otherwise.
-    */
-  def committedFlatBatches(spark: SparkSession, tableDir: String,
-      committed: Seq[Long]): Seq[Long] =
-    flatBatchIds(spark, tableDir).filter(committed.contains)
-
   /** ALL batch ids with rows in `tableDir`'s legacy flat files —
     * committed or not. One skinny batch-column scan of just the flat
     * files; no Spark job at all (one listing) when nothing flat exists,
     * which is every mutation of a store born in the per-batch layout.
     * A maintenance pass reads this ONCE per table and reuses it for the
     * repair sweep, the forced-rewrite selection, and the final sweep
-    * (the [[sweepFlatFiles]] overload): the flat FILES never change
-    * within a pass — rewrites land in fresh `b<id>` dirs — only the
-    * committed set does.
+    * ([[sweepFlatFiles]]): the flat FILES never change within a pass —
+    * rewrites land in fresh `b<id>` dirs — only the committed set does.
+    * The committed ones are FORCED into the rewrite selection: a flat
+    * batch's files mix batches, so reclaiming it could only drop its
+    * commit marker and leave the bytes on disk, unreclaimable, unless
+    * its survivors are first rewritten into a fresh `b<id>` batch.
     */
   def flatBatchIds(spark: SparkSession, tableDir: String): Seq[Long] = {
     val base = new org.apache.hadoop.fs.Path(tableDir)
@@ -283,19 +272,11 @@ object Commits {
   /** Delete `tableDir`'s legacy flat files once NO committed batch
     * still has rows in them — the migration's final step (after the
     * forced rewrite uncommitted the flat batches), and the repair for
-    * a crash between that uncommit and this delete. One listing, then
-    * a no-op, when nothing flat exists; refuses (no-op) while any
-    * flat row is still committed-readable.
-    */
-  def sweepFlatFiles(spark: SparkSession, tableDir: String,
-      committed: Seq[Long]): Unit =
-    sweepFlatFiles(spark, tableDir, committed,
-      flatBatchIds(spark, tableDir))
-
-  /** [[sweepFlatFiles]] with the flat batch ids pre-read by
-    * [[flatBatchIds]] — a maintenance pass scans the flat batch column
-    * once per table instead of once per sweep (up to three scans per
-    * table per migration pass otherwise).
+    * a crash between that uncommit and this delete. `flatIds` is
+    * [[flatBatchIds]]'s answer, read once per table per maintenance
+    * pass instead of once per sweep. One listing, then a no-op, when
+    * nothing flat exists; refuses (no-op) while any flat row is still
+    * committed-readable.
     */
   def sweepFlatFiles(spark: SparkSession, tableDir: String,
       committed: Seq[Long], flatIds: Seq[Long]): Unit = {

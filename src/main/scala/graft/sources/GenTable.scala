@@ -6,23 +6,43 @@ import org.apache.spark.sql.functions.{col, count, lit, max, max_by, sum,
   when}
 import org.apache.spark.storage.StorageLevel
 
-/** The MAINTENANCE half of the generational-store lifecycle, written
-  * once for every store that keeps its rows in per-batch `b<id>`
-  * directories under a [[Commits]] ledger: the inverted index
-  * (`Search`), the chunk store (`Streams`), and the ANN and PQ stores
-  * (`Similarity`; the chunk-vector store is a PQ store).
+/** The generational-store lifecycle, written once for every store
+  * that keeps its rows in per-batch `b<id>` directories under a
+  * [[Commits]] ledger: the inverted index (`Search`), the chunk store
+  * (`Streams`), and the ANN and PQ stores (`Similarity`; the
+  * chunk-vector store is a PQ store).
   *
   * A store is described by its KEY column, a TOMBSTONE predicate over a
-  * membership row, its MEMBERSHIP table (one row per key per
-  * generation; a key's current generation is its max committed batch)
-  * and its DEPENDENT tables (postings, chunks): rows keyed by
-  * (key, batch), live exactly when their membership row is. Each
-  * [[GenTable.Table]] names its live directory relative to the store
-  * (empty when the table is the store dir itself) and its staged
-  * directory under `_vacuum`, which the swap installs as the table's
-  * `b0`.
+  * membership row, the non-key columns of the TOMBSTONE ROW a delete
+  * writes, the GATE-HASH column whose equality makes a redelivered row
+  * a no-op, its MEMBERSHIP table (one row per key per generation; a
+  * key's current generation is its max committed batch) and its
+  * DEPENDENT tables (postings, chunks): rows keyed by (key, batch),
+  * live exactly when their membership row is. Each [[GenTable.Table]]
+  * names its live directory relative to the store (empty when the
+  * table is the store dir itself) and its staged directory under
+  * `_vacuum`, which the swap installs as the table's `b0`.
   *
-  * Operations, each under the store's writer lease:
+  * The WRITE half, each under the store's writer lease:
+  *   - [[currency]]: the per-key currency resolve (key, current batch,
+  *     current hash, current-is-tombstone) of a mutation's ids, with
+  *     the scoped/unscoped plan choice ([[Commits
+  *     .scopeMutationResolve]]); [[changed]] is the hash gate the
+  *     stores' appends run through it;
+  *   - [[delete]]: one tombstone generation for the currently-live
+  *     requested keys;
+  *   - [[commitGeneration]]: allocate a batch id above every id ever
+  *     attempted, write the generation, commit it when it holds rows.
+  *
+  * Commit order: the allocation records the id's attempt marker
+  * BEFORE any data write, the store writes its generation (dependent
+  * tables before membership), and the commit marker lands LAST. A
+  * crash before the marker leaves rows under an uncommitted id —
+  * invisible to readers, never reused (the attempt marker burns it),
+  * swept by the next maintenance pass. A delete writes only membership
+  * rows, so a crash anywhere in it leaves the store reading as it did.
+  *
+  * The MAINTENANCE half, also under the lease:
   *   - [[vacuumIncremental]]: rewrite only the batches whose dead-row
   *     fraction reaches a threshold (dead = superseded by a later
   *     generation, or any row of a key whose current row is a
@@ -38,14 +58,12 @@ import org.apache.spark.storage.StorageLevel
   * Both incremental operations rewrite the selected batches' survivors
   * — live current generations, plus tombstones whose key still has rows
   * in an UNSELECTED batch (dropping one would resurrect the older
-  * generation) — as one fresh committed batch, then reclaim the
-  * selected batches. Dependent tables are written before membership
-  * and the commit marker last, so a crash before the commit leaves an
-  * invisible orphan that the next pass sweeps. After the commit the
-  * reclaimed batches are merely superseded (max-batch resolution
-  * ignores them; carried tombstones agree). Markers go before
-  * directories, so a crash inside the reclaim leaves invisible
-  * orphans. Every state is readable and the next pass converges.
+  * generation) — as one fresh generation through [[commitGeneration]],
+  * then reclaim the selected batches. After the commit the reclaimed
+  * batches are merely superseded (max-batch resolution ignores them;
+  * carried tombstones agree). Markers go before directories, so a crash
+  * inside the reclaim leaves invisible orphans. Every state is readable
+  * and the next pass converges.
   *
   * The staged vacuum writes the stage COMPLETE (tables plus a staged
   * `_commits/b0`) before touching the live store, then drops the live
@@ -60,9 +78,10 @@ import org.apache.spark.storage.StorageLevel
   */
 final class GenTable(private[graft] val key: String,
     private[graft] val isTombstone: Column,
+    private[graft] val tombstone: Seq[Column], hash: String,
     membership: GenTable.Table, dependents: Seq[GenTable.Table] = Nil,
     stagedExtras: Seq[String] = Nil) {
-  import GenTable.Table
+  import GenTable.{CurBatch, CurHash, CurTomb, Table}
 
   /** Write, sweep, reclaim and swap order: dependents before
     * membership (the crash contract above). */
@@ -79,6 +98,113 @@ final class GenTable(private[graft] val key: String,
   private def readMembership(spark: SparkSession, dir: String,
       committed: Seq[Long]): Option[DataFrame] =
     Commits.readCommittedBatches(spark, liveDir(dir, membership), committed)
+
+  /** Per-key currency of membership `rows`: (key, [[GenTable.CurBatch]],
+    * [[GenTable.CurHash]], [[GenTable.CurTomb]]). Skinny columns only —
+    * vectors and text never shuffle — and a caller's projection prunes
+    * the aggregates it does not read.
+    */
+  private def currencyOf(rows: DataFrame): DataFrame =
+    rows.groupBy(col(key)).agg(max(col("batch")).as(CurBatch),
+      max_by(col(hash), col("batch")).as(CurHash),
+      max_by(isTombstone, col("batch")).as(CurTomb))
+
+  /** The current committed generation of each key in `ids` (one
+    * column, the key under any name), as [[currencyOf]]'s row; keys
+    * with no committed row are absent. None when nothing is committed.
+    * The plan is [[Commits.scopeMutationResolve]]'s choice: SCOPED (the
+    * membership scan semi-joined against the ids BELOW the aggregate,
+    * so only the batch's overlap shuffles — an unscoped resolve is
+    * store-linear per mutation, SCALE.md) for micro-batches, the
+    * store-wide aggregate post-filtered for batches near the store's
+    * size, where the id set stops broadcasting.
+    */
+  private[graft] def currency(spark: SparkSession, dir: String,
+      committed: Seq[Long], ids: DataFrame): Option[DataFrame] =
+    if (committed.isEmpty) None
+    else currency(spark, dir, committed, ids,
+      Commits.scopeMutationResolve(ids.count(), Commits.committedRowCount(
+        spark, liveDir(dir, membership), committed)))
+
+  /** [[currency]] with the plan choice given: the specs pin the scoped
+    * plan's shape and run both plans on one store. */
+  private[graft] def currency(spark: SparkSession, dir: String,
+      committed: Seq[Long], ids: DataFrame,
+      scoped: Boolean): Option[DataFrame] = {
+    val keys = ids.select(col(ids.columns.head).as(key))
+    readMembership(spark, dir, committed).map(rows =>
+      if (scoped) currencyOf(rows.join(keys, Seq(key), "left_semi"))
+      else currencyOf(rows).join(keys, Seq(key), "left_semi"))
+  }
+
+  /** The hash gate of an upsert: the rows of `batch` (keyed by `idCol`)
+    * whose `hashCol` differs from their key's current hash, or whose
+    * key has no committed row. An unchanged redelivery passes nothing;
+    * a key whose current row is a tombstone passes (a tombstone's hash
+    * never equals a real one) and resurrects.
+    */
+  private[graft] def changed(spark: SparkSession, dir: String,
+      committed: Seq[Long], batch: DataFrame, idCol: String,
+      hashCol: String): DataFrame =
+    currency(spark, dir, committed, batch.select(col(idCol))) match {
+      case None => batch
+      case Some(cur) => batch
+        .join(cur.select(col(key).as(idCol), col(CurHash)), Seq(idCol),
+          "left")
+        .filter(col(CurHash).isNull || col(CurHash) =!= col(hashCol))
+        .drop(CurHash)
+    }
+
+  /** One generation: allocate its batch id from the ledger (and, on a
+    * ledger with no attempt recorded yet, from every table's live dir),
+    * run `write` — which writes the generation's rows under that id and
+    * returns their count — and commit the id when the count is
+    * positive. Returns the count.
+    */
+  private[graft] def commitGeneration(spark: SparkSession, dir: String)(
+      write: Long => Long): Long = {
+    val batchId = Commits.allocateBatchId(spark, dir,
+      tables.map(liveDir(dir, _)))
+    val n = write(batchId)
+    if (n > 0) Commits.commit(spark, dir, batchId)
+    n
+  }
+
+  /** `rows` (no `batch` column) written as batch `batchId` of the
+    * membership table. */
+  private[graft] def writeMembership(rows: DataFrame, dir: String,
+      batchId: Long): Unit =
+    rows.withColumn("batch", lit(batchId))
+      .write.parquet(s"${liveDir(dir, membership)}/b$batchId")
+
+  /** DELETE keys: one tombstone generation — a membership row of
+    * [[tombstone]] values, no dependent rows — for each requested key
+    * (the first column of `ids`) whose current generation is live.
+    * Absent and already-deleted keys are skipped, so a repeat is a
+    * no-op that allocates nothing; a later append of the key
+    * resurrects it. Returns keys tombstoned.
+    */
+  def delete(spark: SparkSession, dir: String, ids: DataFrame,
+      heldLocks: Set[String]): Long =
+   Commits.withWriterLockUnless(spark, dir, heldLocks) {
+    val keys = ids.select(col(ids.columns.head).as(key))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val victims = currency(spark, dir, Commits.committed(spark, dir),
+          keys).getOrElse(return 0L)
+        .filter(!col(CurTomb))
+        .select(col(key) +: tombstone: _*)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = victims.count()
+        if (n > 0) commitGeneration(spark, dir) { b =>
+          writeMembership(victims, dir, b)
+          n
+        }
+        n
+      } finally { victims.unpersist(); () }
+    } finally { keys.unpersist(); () }
+   }
 
   /** INCREMENTAL vacuum: reclaim the committed batches whose dead-row
     * fraction is at least `minDeadFraction`. Returns batches reclaimed.
@@ -122,7 +248,7 @@ final class GenTable(private[graft] val key: String,
     if (committed.isEmpty) return 0
     // Committed batches still in the legacy flat layout are FORCED into
     // the rewrite: the only way to reclaim their bytes
-    // ([[Commits.committedFlatBatches]]).
+    // ([[Commits.flatBatchIds]]).
     val selected = (select(committed) ++
       flatIds.flatten.filter(committed.contains)).distinct.sorted
     if (selected.isEmpty) return 0
@@ -132,12 +258,11 @@ final class GenTable(private[graft] val key: String,
     selected.size
    }
 
-  /** `rows` joined with its key's current generation: `__cur_batch`,
-    * and `__cur_tomb` — whether that generation is a tombstone. */
+  /** `rows` joined with its key's currency: [[GenTable.CurBatch]] and
+    * [[GenTable.CurTomb]]. */
   private def withCurrency(rows: DataFrame): DataFrame =
-    rows.join(rows.groupBy(col(key))
-      .agg(max(col("batch")).as("__cur_batch"),
-        max_by(isTombstone, col("batch")).as("__cur_tomb")), Seq(key))
+    rows.join(currencyOf(rows).select(col(key), col(CurBatch),
+      col(CurTomb)), Seq(key))
 
   /** The committed batches whose dead-row fraction reaches the
     * threshold. Driver-side result bounded by the batch COUNT, never by
@@ -149,7 +274,7 @@ final class GenTable(private[graft] val key: String,
       .getOrElse(return Seq.empty)
     withCurrency(rows)
       .withColumn("__dead",
-        col("batch") < col("__cur_batch") || col("__cur_tomb"))
+        col("batch") < col(CurBatch) || col(CurTomb))
       .groupBy(col("batch"))
       .agg(count(lit(1)).as("__total"),
         sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
@@ -171,24 +296,22 @@ final class GenTable(private[graft] val key: String,
     val rows = readMembership(spark, dir, committed).get
     val inSelected = col("batch").isin(selected: _*)
     val current = withCurrency(rows)
-      .filter(inSelected && col("batch") === col("__cur_batch"))
-    val live = current.filter(!col("__cur_tomb"))
-    val tomb = current.filter(col("__cur_tomb"))
+      .filter(inSelected && col("batch") === col(CurBatch))
+    val live = current.filter(!col(CurTomb))
+    val tomb = current.filter(col(CurTomb))
       .join(rows.filter(!inSelected).select(col(key)), Seq(key),
         "left_semi")
     val survivors = live.unionByName(tomb)
       .select(rows.columns.filter(_ != "batch").map(col).toSeq: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (survivors.count() > 0) {
-        val batchId = Commits.allocateBatchId(spark, dir,
-          (membership +: dependents).map(liveDir(dir, _)))
+      val n = survivors.count()
+      if (n > 0) commitGeneration(spark, dir) { b =>
         rewriteDependents(spark, dir, selected,
-          live.select(col(key), col("batch")), batchId,
-          t => s"${liveDir(dir, t)}/b$batchId")
-        survivors.withColumn("batch", lit(batchId))
-          .write.parquet(s"${liveDir(dir, membership)}/b$batchId")
-        Commits.commit(spark, dir, batchId)
+          live.select(col(key), col("batch")), b,
+          t => s"${liveDir(dir, t)}/b$b")
+        writeMembership(survivors, dir, b)
+        n
       }
     } finally { survivors.unpersist(); () }
   }
@@ -316,6 +439,13 @@ object GenTable {
 
   /** The full vacuum's stage directory under a store. */
   val StageDir = "_vacuum"
+
+  /** Column names of [[GenTable.currency]]'s per-key row: the key's
+    * current batch, its gate hash there, and whether it is a tombstone.
+    */
+  val CurBatch = "__cur_batch"
+  val CurHash = "__cur_hash"
+  val CurTomb = "__cur_tomb"
 
   /** Tombstone marker in a membership table's `content_hash` column
     * (the inverted index, the chunk store) — real hashes are 64-hex

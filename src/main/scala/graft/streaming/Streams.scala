@@ -410,34 +410,12 @@ object Streams {
     val hashed = Upsert.onePerKeyByContentHashed(batch, idCol, textCol)
       .withColumnRenamed("content_hash", "__ch")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // Membership resolve plan picked by batch-vs-store size, like
-    // Search.indexAppend: scoped to the batch's ids (semi-join before
-    // the per-doc aggregate) for micro-batches — an unscoped aggregate
-    // costs the store's full membership per micro-batch — and the
-    // store-wide aggregate for backfill-sized batches, where the id
-    // semi-join stops broadcasting (Commits.scopeMutationResolve).
-    val fresh = (if (committed.isEmpty) hashed
-    else {
-      val docs = graft.sources.Commits
-        .readCommittedBatches(spark, docsDir, committed)
-        .getOrElse(throw new IllegalStateException(
-          s"committed chunk store at $storeDir has no readable docs"))
-      val scoped = graft.sources.Commits.scopeMutationResolve(
-        hashed.count(),
-        graft.sources.Commits.committedRowCount(spark, docsDir, committed))
-      val prev =
-        (if (scoped)
-          docs.join(hashed.select(col(idCol).as("doc_id")), Seq("doc_id"),
-            "left_semi")
-         else docs)
-        .groupBy(col("doc_id"))
-        .agg(max_by(col("content_hash"), col("batch")).as("__prev"))
-        .select(col("doc_id").as(idCol), col("__prev"))
-      hashed.join(prev, Seq(idCol), "left")
-        .filter(col("__prev").isNull || col("__prev") =!= col("__ch"))
-        .drop("__prev")
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Hash gate through the shared currency resolve, like
+    // Search.indexAppend ([[GenTable.currency]]).
+    val fresh = ChunkStore.changed(spark, storeDir,
+        graft.sources.Commits.committed(spark, storeDir), hashed, idCol,
+        "__ch")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // THREE actions folded into two CONCURRENT ones (guide §1.2 +
       // §2.6): the gating fresh-doc count used to run as its own job
@@ -448,25 +426,23 @@ object Streams {
       // batch id — invisible to readers (committed-marker filtered),
       // swept like any crash orphan — while the commit marker still
       // only appears for n > 0, exactly as before.
-      val batchId = graft.sources.Commits.allocateBatchId(spark,
-        storeDir, Seq(docsDir, chunksDir))
-      val obs = org.apache.spark.sql.Observation()
-      graft.Par.run(Seq[() => Unit](
-        () => graft.Prof("chunkIngest.chunksWrite")(
-          graft.operators.Corpus.chunkSlidingWindows(fresh, idCol, textCol,
-            window, overlap)
-            .withColumnRenamed(idCol, "doc_id")
-            .withColumn("batch", lit(batchId))
-            .write.parquet(s"$chunksDir/b$batchId")),
-        () => graft.Prof("chunkIngest.docsWrite")(
-          fresh.select(col(idCol).as("doc_id"),
-              col("__ch").as("content_hash"))
-            .withColumn("batch", lit(batchId))
-            .observe(obs, count(lit(1)).as("n"))
-            .write.parquet(s"$docsDir/b$batchId")))): Unit
-      val n = obs.get("n").asInstanceOf[Long]
-      if (n > 0) graft.sources.Commits.commit(spark, storeDir, batchId)
-      n
+      ChunkStore.commitGeneration(spark, storeDir) { batchId =>
+        val obs = org.apache.spark.sql.Observation()
+        graft.Par.run(Seq[() => Unit](
+          () => graft.Prof("chunkIngest.chunksWrite")(
+            graft.operators.Corpus.chunkSlidingWindows(fresh, idCol,
+              textCol, window, overlap)
+              .withColumnRenamed(idCol, "doc_id")
+              .withColumn("batch", lit(batchId))
+              .write.parquet(s"$chunksDir/b$batchId")),
+          () => graft.Prof("chunkIngest.docsWrite")(
+            fresh.select(col(idCol).as("doc_id"),
+                col("__ch").as("content_hash"))
+              .withColumn("batch", lit(batchId))
+              .observe(obs, count(lit(1)).as("n"))
+              .write.parquet(s"$docsDir/b$batchId")))): Unit
+        obs.get("n").asInstanceOf[Long]
+      }
     } finally { fresh.unpersist(); hashed.unpersist(); () }
    }
 
@@ -483,47 +459,17 @@ object Streams {
   def chunkStoreDelete(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, ids: DataFrame,
       heldLocks: Set[String] = Set.empty): Long =
-   graft.sources.Commits.withWriterLockUnless(spark, storeDir, heldLocks) {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    if (committed.isEmpty) return 0L
-    val docs = graft.sources.Commits
-      .readCommittedBatches(spark, s"$storeDir/docs", committed)
-      .getOrElse(return 0L)
-    // Scoped resolve for normal takedowns, store-wide aggregate +
-    // post-filter for corpus-sized ones (Commits.scopeMutationResolve).
-    val idsF = ids.select(col(ids.columns.head).as("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scoped = graft.sources.Commits.scopeMutationResolve(idsF.count(),
-      graft.sources.Commits.committedRowCount(spark, s"$storeDir/docs",
-        committed))
-    val victims =
-      (if (scoped) docs.join(idsF, Seq("doc_id"), "left_semi") else docs)
-      .groupBy(col("doc_id"))
-      .agg(max_by(col("content_hash"), col("batch")).as("__cur"))
-      .transform(df =>
-        if (scoped) df else df.join(idsF, Seq("doc_id"), "left_semi"))
-      .filter(col("__cur") =!= Tombstone)
-      .select(col("doc_id"), lit(Tombstone).as("content_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = victims.count()
-      if (n > 0) {
-        val batchId = graft.sources.Commits.allocateBatchId(spark,
-          storeDir, Seq(s"$storeDir/docs", s"$storeDir/chunks"))
-        victims.withColumn("batch", lit(batchId))
-          .write.parquet(s"$storeDir/docs/b$batchId")
-        graft.sources.Commits.commit(spark, storeDir, batchId)
-      }
-      n
-    } finally { victims.unpersist(); idsF.unpersist(); () }
-   }
+    ChunkStore.delete(spark, storeDir, ids, heldLocks)
 
-  /** The chunk store's maintenance descriptor ([[GenTable]]):
-    * membership `docs`, dependent `chunks`, tombstone = the marker
-    * hash. Package-private for the specs' crash hooks.
+  /** The chunk store's lifecycle descriptor ([[GenTable]]):
+    * membership `docs` gated on `content_hash`, tombstone = the marker
+    * hash; dependent `chunks`. Package-private for the specs' crash
+    * hooks.
     */
   private[graft] val ChunkStore = new GenTable("doc_id",
-    col("content_hash") === Tombstone, GenTable.Table("docs", "docs/b0"),
+    col("content_hash") === Tombstone,
+    Seq(lit(Tombstone).as("content_hash")), "content_hash",
+    GenTable.Table("docs", "docs/b0"),
     Seq(GenTable.Table("chunks", "chunks/b0")))
 
   /** INCREMENTAL chunk-store vacuum ([[GenTable.vacuumIncremental]]):

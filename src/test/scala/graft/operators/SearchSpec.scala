@@ -562,7 +562,9 @@ class SearchSpec extends SparkSpec {
       .toString + "/index"
     Search.buildIndex(Seq((1L, "a b"), (2L, "c d"), (3L, "e f"))
       .toDF("doc_id", "text"), "doc_id", "text", dir)
-    val plan = Search.currentDocsFor(spark, dir, Seq(2L).toDF("doc_id"))
+    val plan = Search.IndexStore.currency(spark, dir,
+        graft.sources.Commits.committed(spark, dir), Seq(2L).toDF("doc_id"),
+        scoped = true)
       .get.queryExecution.executedPlan.toString()
     // String max_by plans sort-based aggregation; long-only plans hash.
     val aggAt = "(Hash|Sort|ObjectHash)Aggregate".r.findFirstMatchIn(plan)

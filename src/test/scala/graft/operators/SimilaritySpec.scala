@@ -1210,8 +1210,9 @@ class SimilaritySpec extends SparkSpec {
       Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
         .toDF("id", "vec"), dir, planes = 4, dims = 2)
     val committed = graft.sources.Commits.committed(spark, dir)
-    val plan = Similarity.annCurrentKeysFor(spark, dir, committed,
-      Seq(2L).toDF("id")).queryExecution.executedPlan.toString()
+    val plan = Similarity.AnnStore.currency(spark, dir, committed,
+      Seq(2L).toDF("id"), scoped = true)
+      .get.queryExecution.executedPlan.toString()
     val aggAt = "(Hash|Sort|ObjectHash)Aggregate".r.findFirstMatchIn(plan)
       .map(_.start).getOrElse(-1)
     val semiAt = plan.indexOf("LeftSemi")

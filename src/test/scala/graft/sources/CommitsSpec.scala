@@ -128,19 +128,21 @@ class CommitsSpec extends SparkSpec {
       .select("id").as[Long].collect().sorted.toSeq
     assert(read == Seq(1L, 2L, 3L, 4L))
     // Only the flat-resident batches report as legacy.
-    assert(Commits.committedFlatBatches(spark, dir, committed)
+    assert(Commits.flatBatchIds(spark, dir).filter(committed.contains)
       == Seq(0L, 1L))
     // The sweep refuses while any flat batch is still committed.
-    Commits.sweepFlatFiles(spark, dir, committed)
-    assert(Commits.committedFlatBatches(spark, dir, committed)
+    Commits.sweepFlatFiles(spark, dir, committed,
+      Commits.flatBatchIds(spark, dir))
+    assert(Commits.flatBatchIds(spark, dir).filter(committed.contains)
       == Seq(0L, 1L))
     // Once the flat batches are uncommitted (the migration's rewrite
     // did that after moving their survivors), the files go — and the
     // store reads only the per-batch layout.
     Seq(0L, 1L).foreach(Commits.uncommit(spark, dir, _))
-    Commits.sweepFlatFiles(spark, dir, Commits.committed(spark, dir))
-    assert(Commits.committedFlatBatches(spark, dir, Seq(0L, 1L, 2L))
-      .isEmpty)
+    Commits.sweepFlatFiles(spark, dir, Commits.committed(spark, dir),
+      Commits.flatBatchIds(spark, dir))
+    assert(Commits.flatBatchIds(spark, dir)
+      .filter(Seq(0L, 1L, 2L).contains).isEmpty)
     assert(Commits.readCommittedBatches(spark, dir, Seq(2L)).get
       .select("id").as[Long].collect().toSeq == Seq(4L))
   }

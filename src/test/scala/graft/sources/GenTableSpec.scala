@@ -7,22 +7,30 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Conformance of the shared maintenance core: the same lifecycle cases
-  * run against all four generational stores — the inverted index, the
+/** Conformance of the shared lifecycle core: the same cases run
+  * against all four generational stores — the inverted index, the
   * chunk store, the ANN store and the PQ store. Each store is built to
   * the same shape (a bulk batch, a re-delivered change, a takedown and
   * two micro-appends: five committed batches, dead rows in two of
-  * them), and every case asserts that the store's own read surface
-  * answers exactly as before maintenance.
+  * them). The maintenance cases assert that the store's own read
+  * surface answers exactly as before maintenance; the write-half cases
+  * drive each store's public append and delete.
   */
 class GenTableSpec extends SparkSpec {
   import spark.implicits._
 
   /** One store under test: its descriptor, a builder to the common
-    * shape, and a canonical (sorted) live read.
+    * shape, a canonical (sorted) live read, its live ids, and its
+    * public delete and append of one id of the bulk batch (the row the
+    * build appended for it).
     */
   private case class StoreCase(name: String, table: GenTable,
-      build: String => Unit, read: String => Seq[String])
+      build: String => Unit, read: String => Seq[String],
+      liveIds: String => Set[Long], delete: (String, Long) => Long,
+      append: (String, Long) => Long)
+
+  private def ids(df: DataFrame): Set[Long] =
+    df.collect().map(_.getLong(0)).toSet
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -53,7 +61,11 @@ class GenTableSpec extends SparkSpec {
           Search.indexAppend(micro(i), "doc_id", "text", dir))
       },
       dir => sorted(Search.bm25FromIndexTopK(spark, dir,
-        Seq("spark", "vector", "engine"), 20))),
+        Seq("spark", "vector", "engine"), 20)),
+      dir => ids(Search.indexLiveDocs(spark, dir).get.select("doc_id")),
+      (dir, id) => Search.indexDelete(spark, dir, Seq(id).toDF("doc_id")),
+      (dir, id) => Search.indexAppend(text.filter(col("doc_id") === id),
+        "doc_id", "text", dir)),
     StoreCase("chunk", Streams.ChunkStore,
       dir => {
         def ingest(df: DataFrame): Unit =
@@ -63,7 +75,12 @@ class GenTableSpec extends SparkSpec {
         Streams.chunkStoreDelete(spark, dir, Seq(3L).toDF("doc_id"))
         (1 to 2).foreach(i => ingest(micro(i)))
       },
-      dir => sorted(Streams.chunkStoreRead(spark, dir).get)),
+      dir => sorted(Streams.chunkStoreRead(spark, dir).get),
+      dir => ids(Streams.chunkStoreRead(spark, dir).get.select("doc_id")),
+      (dir, id) =>
+        Streams.chunkStoreDelete(spark, dir, Seq(id).toDF("doc_id")),
+      (dir, id) => Streams.chunkIngestBatch(
+        text.filter(col("doc_id") === id), dir, "doc_id", "text", 3, 1)),
     StoreCase("ann", Similarity.AnnStore,
       dir => {
         Similarity.annStoreAppend(vecs(0L until 12L, 2), dir, 4, 2)
@@ -75,7 +92,10 @@ class GenTableSpec extends SparkSpec {
       },
       dir => sorted(Similarity.annStoreTopK(spark, dir,
         vecs(0L until 4L, 2), planes = 4, dims = 2, k = 4)
-        .select("qid", "cid", "score", "rnk"))),
+        .select("qid", "cid", "score", "rnk")),
+      dir => ids(Similarity.annStoreLiveIds(spark, dir)),
+      (dir, id) => Similarity.annStoreDelete(spark, dir, Seq(id).toDF("id")),
+      (dir, id) => Similarity.annStoreAppend(vecs(Seq(id), 2), dir, 4, 2)),
     StoreCase("pq", Similarity.PqStore,
       dir => {
         Similarity.pqStoreBuild(vecs(0L until 12L, 4), dir, m = 2,
@@ -87,7 +107,10 @@ class GenTableSpec extends SparkSpec {
           Similarity.pqStoreAppend(vecs(Seq(100L + i), 4), dir))
       },
       dir => sorted(Similarity.pqStoreTopK(spark, dir,
-        vecs(0L until 4L, 4), k = 4).select("qid", "cid", "rnk"))))
+        vecs(0L until 4L, 4), k = 4).select("qid", "cid", "rnk")),
+      dir => ids(Similarity.pqStoreLiveIds(spark, dir)),
+      (dir, id) => Similarity.pqStoreDelete(spark, dir, Seq(id).toDF("id")),
+      (dir, id) => Similarity.pqStoreAppend(vecs(Seq(id), 4), dir)))
 
   private def freshDir(s: StoreCase, tag: String): String =
     java.nio.file.Files.createTempDirectory(s"gen-$tag-${s.name}")
@@ -215,6 +238,52 @@ class GenTableSpec extends SparkSpec {
       assert(s.table.compactBatches(spark, dir, 1) == 3)
       assert(Commits.committed(spark, dir).size == 1)
       assert(s.read(dir) == want)
+    }
+
+    test(s"${s.name}: a delete tombstones a live id once, a repeat or an " +
+        "absent id is a no-op, and a re-append resurrects it") {
+      val dir = freshDir(s, "delete")
+      s.build(dir)
+      assert(s.liveIds(dir).contains(1L))
+      val before = Commits.committed(spark, dir)
+      assert(s.delete(dir, 1L) == 1L)
+      assert(!s.liveIds(dir).contains(1L), s"${s.name}: id 1 still live")
+      val afterDelete = Commits.committed(spark, dir)
+      assert(afterDelete.size == before.size + 1)
+      assert(s.delete(dir, 1L) == 0L, s"${s.name}: repeat delete wrote")
+      assert(Commits.committed(spark, dir) == afterDelete)
+      assert(s.delete(dir, 999L) == 0L, s"${s.name}: absent id deleted")
+      assert(Commits.committed(spark, dir) == afterDelete)
+      assert(s.append(dir, 1L) == 1L)
+      assert(s.liveIds(dir).contains(1L), s"${s.name}: no resurrection")
+    }
+
+    test(s"${s.name}: an unchanged redelivery commits nothing") {
+      val dir = freshDir(s, "redeliver")
+      s.build(dir)
+      val before = Commits.committed(spark, dir)
+      val want = s.read(dir)
+      assert(s.append(dir, 2L) == 0L, s"${s.name}: redelivery wrote")
+      assert(Commits.committed(spark, dir) == before)
+      assert(s.read(dir) == want)
+    }
+
+    test(s"${s.name}: the scoped and unscoped currency resolves give " +
+        "identical rows") {
+      val dir = freshDir(s, "resolve")
+      s.build(dir)
+      val committed = Commits.committed(spark, dir)
+      // Live, re-delivered-changed, tombstoned, micro-appended, absent.
+      val probe = Seq(1L, 3L, 4L, 101L, 999L).toDF("k")
+      def resolve(scoped: Boolean): Seq[String] =
+        sorted(s.table.currency(spark, dir, committed, probe, scoped).get)
+      val scoped = resolve(scoped = true)
+      assert(scoped.size == 4, s"${s.name}: $scoped")
+      assert(scoped == resolve(scoped = false))
+      // The tombstoned key resolves as one, the live ones do not.
+      val tomb = s.table.currency(spark, dir, committed, probe, true).get
+        .filter(col(GenTable.CurTomb)).select(s.table.key)
+      assert(ids(tomb) == Set(3L), s"${s.name}: tombstone flag")
     }
   }
 }

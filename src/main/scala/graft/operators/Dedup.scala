@@ -158,26 +158,6 @@ object Dedup {
   def lshBands(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame =
     lshBandsFromKeys(lshBandKeys(sigs, numHashes, bands))
 
-  /** LEGACY banded form (md5-STRING band keys, no carried key array) —
-    * the on-disk format of band tables written before the long-key
-    * migration. The candidate paths REJECT this format (the
-    * exchange-based fallbacks that probed it are retired); it is kept
-    * solely as the legacy-format fixture WRITER for
-    * [[graft.streaming.Streams.neardupBandMigrate]]'s tests and bench
-    * build — the migration rewrites a store in this form to
-    * [[lshBandKeys]] rows once, from the stored shingle arrays.
-    */
-  def lshBandsMd5(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    val bandStructs = (0 until bands).map { b =>
-      val cols = (0 until rows).map(r => col(s"mh${b * rows + r}"))
-      struct(lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("band_key"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.band_key").as("band_key"))
-  }
-
   /** The pair's minimum matching band, computed IN-ROW from the two
     * carried key arrays: 0-based index of the first position where the
     * arrays agree. The joined band always matches, so a minimum exists
@@ -255,10 +235,9 @@ object Dedup {
     * once per (doc, band) through the bucket join — when starting
     * from compact keys, [[lshCandidatePairsFromKeys]] is the same
     * witness with ~8× less shuffle and is what the registered queries
-    * and the ingest path use. Legacy md5-string banded input (no
-    * `band_keys` column) is REJECTED — the exchange-based fallback it
-    * used to select is retired; migrate the band table once with
-    * [[graft.streaming.Streams.neardupBandMigrate]].
+    * and the ingest path use. Banded input without the `band_keys`
+    * column (the md5-string band rows of an old band table) is
+    * REJECTED ([[LegacyBandMsg]]).
     */
   def lshCandidatePairs(bands: DataFrame): DataFrame = {
     require(bands.columns.contains("band_keys"), LegacyBandMsg)
@@ -272,16 +251,13 @@ object Dedup {
       .select(col("a"), col("b"))
   }
 
-  /** The one message every retired-legacy-path rejection carries. */
+  /** The one message every band-format rejection carries. */
   private[graft] val LegacyBandMsg: String =
-    "legacy md5-string LSH band rows (no band_keys column) are no " +
-      "longer probe-able: the exchange-based candidate fallback was " +
-      "retired (it re-shuffled the corpus-wide candidate stream just " +
-      "to dedup emissions). Run " +
-      "graft.streaming.Streams.neardupBandMigrate(spark, storeDir) " +
-      "once to rewrite the standing band table to the compact " +
-      "long-key form, or band fresh signatures with lshBandKeys/" +
-      "lshBands instead of lshBandsMd5."
+    "LSH band rows without a band_keys column (legacy md5-string band " +
+      "rows) cannot be probed: the witness-deduped candidate joins " +
+      "need each doc's carried key array. Band signatures with " +
+      "lshBandKeys or lshBands; a store whose band table is in the " +
+      "md5-string form must be re-ingested into a fresh store."
 
   /** Incremental LSH candidates: a NEW ingest batch against a STANDING
     * store's band table — the daily shape of dedup at 100 TB. A full
@@ -292,8 +268,7 @@ object Dedup {
     * them against the standing index — store×store and batch×batch
     * pairs are never generated. Output: (a = store doc, b = batch doc).
     * Witness-deduped like [[lshCandidatePairs]]; both inputs must
-    * carry `band_keys` (legacy md5-string rows are rejected — migrate
-    * with [[graft.streaming.Streams.neardupBandMigrate]]; the key
+    * carry `band_keys` (legacy md5-string rows are rejected: the key
     * spaces are disjoint, so a mixed join would be silently empty).
     */
   /** [[lshIncrementalCandidates]] from COMPACT key frames (doc_id,

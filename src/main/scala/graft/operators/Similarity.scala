@@ -1287,8 +1287,7 @@ object Similarity {
 
   /** Read the COMMITTED generations of the store —
     * [[graft.sources.Commits.readCommittedBatches]] over the shared
-    * per-batch-directory layout (legacy flat files included,
-    * batch-filtered).
+    * per-batch-directory layout.
     */
   private def readCommittedAnn(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, committed: Seq[Long]): DataFrame =

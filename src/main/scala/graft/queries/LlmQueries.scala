@@ -4,7 +4,6 @@ import graft.QueryDef.PresentOps
 import graft.{BenchPhases, QueryDef, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Search, Similarity, TextAnalysis}
-import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -250,90 +249,6 @@ object LlmQueries {
     // compaction still hashes against the same oracle, so the whole
     // incremental maintenance cadence is oracle-covered.
     Search.indexCompactBatches(s, dir, maxBatches = 2): Unit
-  }
-
-  /** Build phase of search_bm25_index_migrate: a LEGACY flat-layout
-    * store (built normally, then rewound to the pre-`b<id>` era: every
-    * batch dir's files moved up to the table root) receives a
-    * new-layout upsert — the mid-migration mix — and one incremental
-    * vacuum, which must force the flat batch through the rewrite and
-    * physically reclaim its files (markers alone would strand the
-    * bytes forever).
-    */
-  private def bm25MigrateBuild(s: SparkSession, d: String): Unit = {
-    val dir = storeDir("bm25-mig") + "/index"
-    val base = Tables.documents(s, d)
-    val stale = base.withColumn("text",
-      when(col("doc_id") % 7 === 0,
-        concat(lit("stale draft spark spark vector "), col("text")))
-        .otherwise(col("text")))
-    Search.buildIndex(stale, "doc_id", "text", dir)
-    Seq("docs", "postings").foreach(t =>
-      graft.sources.Commits.rewindToFlatLayout(s, s"$dir/$t"))
-    // True content lands as a NEW-layout generation on the flat store.
-    Search.indexAppend(base, "doc_id", "text", dir): Unit
-    val reclaimed = Search.indexVacuumIncremental(s, dir)
-    require(reclaimed > 0, "migration vacuum reclaimed nothing")
-    Seq("docs", "postings").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val flat = fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      require(!flat, s"legacy flat files survived the migration in $t")
-    }
-  }
-
-  /** Build phase of dd_lsh_band_migrate: a near-dup store written in
-    * the pre-long-key era — docs + shingle arrays as today, bands in
-    * the legacy exploded md5-STRING form — is rewritten once by
-    * [[graft.streaming.Streams.neardupBandMigrate]], which recomputes
-    * the compact `band_keys` rows from the stored shingle arrays and
-    * swaps them in crash-safely. The probe then runs the incremental
-    * candidate path (which REJECTS legacy rows outright) against the
-    * migrated table: answers must be identical to banding the store
-    * fresh, which is what the shared incremental oracle checks.
-    */
-  private def lshMigrateBuild(s: SparkSession, d: String): Unit = {
-    val dir = storeDir("lsh-mig") + "/st"
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val hashed = graft.operators.Upsert.withContentHash(docs, "text")
-    hashed.withColumn("batch", lit(0L)).write.parquet(s"$dir/docs")
-    val hs = Dedup.hashedShingleArrays(hashed, "doc_id", "text", 3)
-    hs.withColumn("batch", lit(0L)).write.parquet(s"$dir/hs")
-    Dedup.lshBandsMd5(Dedup.minhashSignatures(hs, 128), 128, 16)
-      .withColumn("batch", lit(0L)).write.parquet(s"$dir/bands")
-    graft.sources.Commits.commit(s, dir, 0L)
-    val n = graft.streaming.Streams.neardupBandMigrate(s, dir)
-    require(n > 0, "band migration rewrote nothing")
-  }
-
-  private def lshMigrateProbe(s: SparkSession, d: String): DataFrame = {
-    val dir = storePath("lsh-mig") + "/st"
-    val batch = Tables.documents(s, d)
-      .select((col("doc_id") + 1000000).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+", "zzz").as("text"))
-    val batchHs = Dedup.hashedShingleArrays(batch, "doc_id", "text", 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batchKeys = Dedup.lshBandKeys(
-      Dedup.minhashSignatures(batchHs, 128), 128, 16)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The result is materialized (localCheckpoint is eager) so both
-    // intermediates release HERE, try/finally like fanoutIngestBatch,
-    // instead of leaking until the harness's clearCache.
-    try {
-      val storeKeys = ParquetRead(s, s"$dir/bands")
-        .select(col("doc_id"), col("band_keys"))
-      val cand = Dedup.lshIncrementalCandidatesFromKeys(storeKeys, batchKeys)
-      val storeHs = ParquetRead(s, s"$dir/hs")
-        .select(col("doc_id"), col("hs"))
-      Dedup.jaccard(cand, storeHs.unionByName(batchHs))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
-        .presentSorted(col("a"), col("b"))
-        .localCheckpoint()
-    } finally { batchKeys.unpersist(); batchHs.unpersist(); () }
   }
 
   /** Standing gram-frequency store (incremental substring dedup): the
@@ -884,8 +799,6 @@ object LlmQueries {
       bm25IdxProbe("bm25-del")),
     "search_bm25_index_vacuum" -> BenchPhases(bm25VacuumBuild,
       bm25IdxProbe("bm25-vac")),
-    "search_bm25_index_migrate" -> BenchPhases(bm25MigrateBuild,
-      bm25IdxProbe("bm25-mig")),
     "search_more_like_this" -> BenchPhases(idxBuild("mlt"), mltProbe),
     "search_phrase_index_topk" -> BenchPhases(idxBuild("phr"),
       phraseIdxProbe),
@@ -903,7 +816,6 @@ object LlmQueries {
       fanoutGatedProbe),
     "pl_fanout_neardup_gated_roundtrip" -> BenchPhases(fanoutNdGatedBuild,
       fanoutNdGatedProbe),
-    "dd_lsh_band_migrate" -> BenchPhases(lshMigrateBuild, lshMigrateProbe),
     "sim_pq_store_upsert_topk" -> BenchPhases(pqStoreUpBuild,
       pqStoreUpProbe),
     "sim_pq_store_takedown" -> BenchPhases(pqTakedownBuild,
@@ -2645,22 +2557,6 @@ object LlmQueries {
         .filter(col("jaccard") >= 0.5)
         .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
         .presentSorted(col("a"), col("b"))
-    },
-
-    // LEGACY BAND-FORMAT MIGRATION: a standing near-dup store whose
-    // band table predates the compact long-key form (exploded
-    // md5-string rows) is rewritten once from its stored shingle
-    // arrays, then probed by the incremental candidate path — which
-    // rejects legacy rows outright, so the probe running at all proves
-    // the swap landed, and the shared incremental oracle proves the
-    // recomputed keys equal fresh banding (cross pairs only: store ids
-    // < 1000000 <= batch ids).
-    QueryDef(
-      "dd_lsh_band_migrate",
-      MinhashCandPrefix + JaccardTail.replace("WHERE n_inter",
-        "WHERE i.a < 1000000 AND i.b >= 1000000\n  AND n_inter")) { (s, d) =>
-      lshMigrateBuild(s, d)
-      lshMigrateProbe(s, d)
     },
 
     // Near-dup CLUSTERING: MinHash pairs -> connected components ->
@@ -5685,20 +5581,6 @@ object LlmQueries {
       Bm25IndexSql) { (s, d) =>
       bm25UpsertBuild(s, d)
       bm25UpsertProbe(s, d)
-    },
-
-    // LEGACY FLAT-LAYOUT MIGRATION: a pre-`b<id>` store (every batch's
-    // files pooled at the table root) takes a new-layout upsert — the
-    // mid-migration mix readCommittedBatches supports — then one
-    // incremental vacuum forces the flat batch through the survivor
-    // rewrite and physically reclaims its files. The probe hashes
-    // against the scan-path BM25 over the final corpus: migration must
-    // be invisible to answers while the bytes actually go.
-    QueryDef(
-      "search_bm25_index_migrate",
-      Bm25IndexSql) { (s, d) =>
-      bm25MigrateBuild(s, d)
-      bm25IdxProbe("bm25-mig")(s, d)
     },
 
     // Training-data filter v2 — the composed gate using this round's

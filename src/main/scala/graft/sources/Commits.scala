@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions.{col, max}
   * every id ever ATTEMPTED (recorded as an `a<batch>` marker before
   * the batch's first data write — see [[allocateBatchId]]), so
   * at-least-once redelivery can never double a row under an id a
-  * reader will trust. The legacy allocator [[nextBatchId]] scanned
-  * max(batch) over the raw parquet instead; it remains only as the
-  * one-time fallback for stores that predate attempt markers.
+  * reader will trust. [[nextBatchId]]'s max(batch) scan over the raw
+  * parquet is the one-time fallback for a ledger with no attempt
+  * marker: `Search.buildIndex` drops `_commits` and writes its `b0`
+  * slices before the commit records `a0`, so a crash in that window
+  * leaves a `b0` orphan that only the data shows.
   *
   * SINGLE WRITER ENFORCED by [[withWriterLock]]: the ledger's id
   * allocation is read-then-write, so two concurrent appends could
@@ -85,20 +87,19 @@ object Commits {
   /** Read the COMMITTED generations of the per-batch-directory table
     * at `tableDir`: the committed ids' subdirectories that hold data
     * files (a rewrite whose join produced zero rows leaves a file-less
-    * dir that would break schema inference), plus — for legacy
-    * flat-file stores or a mid-migration mix — the dir's own top-level
-    * files, batch-filtered. None when nothing readable exists. Plans
-    * without a Spark job: the per-batch listings feed [[ParquetRead]].
+    * dir that would break schema inference). Files at the table root
+    * are not store data and are never read. None when nothing
+    * readable exists. Plans without a Spark job: the per-batch
+    * listings feed [[ParquetRead]].
     */
   def readCommittedBatches(spark: SparkSession, tableDir: String,
       committed: Seq[Long]): Option[
       org.apache.spark.sql.DataFrame] = {
     val base = new org.apache.hadoop.fs.Path(tableDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Same visibility predicate for both checks: a batch dir holding
-    // only hidden files ("."-prefixed checksums, "_"-prefixed markers)
-    // must be skipped like an empty one, not passed to the parquet
-    // reader to fail schema inference.
+    // A batch dir holding only hidden files ("."-prefixed checksums,
+    // "_"-prefixed markers) must be skipped like an empty one, not
+    // passed to the parquet reader to fail schema inference.
     def isData(s: org.apache.hadoop.fs.FileStatus): Boolean = {
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
@@ -107,18 +108,13 @@ object Commits {
     val listed = committed.flatMap(b => present.get(b).map(d =>
         s"$tableDir/b$b" -> fs.listStatus(d).toSeq))
       .filter(_._2.exists(isData))
-    val dirPaths = listed.map(_._1)
-    val hasFlat = fs.exists(base) && fs.listStatus(base).exists(isData)
-    if (hasFlat)
-      Some(ParquetRead(spark, dirPaths :+ tableDir)
-        .filter(col("batch").isin(committed: _*)))
-    else if (dirPaths.nonEmpty)
-      Some(ParquetRead(spark, dirPaths, listed = Some(listed.flatMap(_._2))))
-    else None
+    if (listed.isEmpty) None
+    else Some(ParquetRead(spark, listed.map(_._1),
+      listed = Some(listed.flatMap(_._2))))
   }
 
-  /** Total bytes of the table's visible data files (flat layout plus
-    * committed `b<id>` dirs) — a LISTING-ONLY size signal for probe
+  /** Total bytes of the visible data files in the table's committed
+    * `b<id>` dirs — a LISTING-ONLY size signal for probe
     * routing and maintenance cadence decisions. Deliberately no scan:
     * stats that open files (row counts, live-vs-dead splits) belong to
     * the per-store `*Stats` ops; this one must stay cheap enough to
@@ -142,17 +138,14 @@ object Commits {
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-    // Unlocked listing racing a concurrent vacuum/compact: a dir (or
-    // the flat base) present a moment ago may be gone by listStatus
-    // time. Treat a vanished path as 0 bytes.
+    // Unlocked listing racing a concurrent vacuum/compact: a dir
+    // present a moment ago may be gone by listStatus time. Treat a
+    // vanished dir as 0 bytes.
     def safeBytes(d: org.apache.hadoop.fs.Path): Long =
       try fs.listStatus(d).filter(isData).map(_.getLen).sum
       catch { case _: java.io.FileNotFoundException => 0L }
     val present = batchDirs(fs, base)
-    val inBatches = committed(spark, tableDir)
-      .flatMap(present.get)
-      .map(safeBytes)
-    inBatches.sum + safeBytes(base)
+    committed(spark, tableDir).flatMap(present.get).map(safeBytes).sum
   }
 
   /** Row count of the committed generations of the per-batch table at
@@ -234,92 +227,6 @@ object Commits {
       fs.delete(path, true): Unit
   }
 
-  /** `tableDir`'s legacy top-level data files — the pre-`b<id>` flat
-    * append layout, where every batch's rows share one pool of files
-    * distinguished only by the `batch` column.
-    */
-  private def flatDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath)
-
-  /** ALL batch ids with rows in `tableDir`'s legacy flat files —
-    * committed or not. One skinny batch-column scan of just the flat
-    * files; no Spark job at all (one listing) when nothing flat exists,
-    * which is every mutation of a store born in the per-batch layout.
-    * A maintenance pass reads this ONCE per table and reuses it for the
-    * repair sweep, the forced-rewrite selection, and the final sweep
-    * ([[sweepFlatFiles]]): the flat FILES never change within a pass —
-    * rewrites land in fresh `b<id>` dirs — only the committed set does.
-    * The committed ones are FORCED into the rewrite selection: a flat
-    * batch's files mix batches, so reclaiming it could only drop its
-    * commit marker and leave the bytes on disk, unreclaimable, unless
-    * its survivors are first rewritten into a fresh `b<id>` batch.
-    */
-  def flatBatchIds(spark: SparkSession, tableDir: String): Seq[Long] = {
-    val base = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = flatDataFiles(fs, base)
-    if (files.isEmpty) Seq.empty
-    else ParquetRead(spark, files.map(_.toString))
-      .select(col("batch")).distinct().collect()
-      .map(_.getLong(0)).sorted.toSeq
-  }
-
-  /** Delete `tableDir`'s legacy flat files once NO committed batch
-    * still has rows in them — the migration's final step (after the
-    * forced rewrite uncommitted the flat batches), and the repair for
-    * a crash between that uncommit and this delete. `flatIds` is
-    * [[flatBatchIds]]'s answer, read once per table per maintenance
-    * pass instead of once per sweep. One listing, then a no-op, when
-    * nothing flat exists; refuses (no-op) while any flat row is still
-    * committed-readable.
-    */
-  def sweepFlatFiles(spark: SparkSession, tableDir: String,
-      committed: Seq[Long], flatIds: Seq[Long]): Unit = {
-    val base = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = flatDataFiles(fs, base)
-    if (files.nonEmpty && !flatIds.exists(committed.contains))
-      files.foreach(f => fs.delete(f, false): Unit)
-  }
-
-  /** INVERSE of the flat-layout migration — rewrite a per-batch table
-    * dir back into the legacy pre-`b<id>` flat append layout: every
-    * batch dir's data files move up to the table root (batch-prefixed
-    * so names cannot collide) and the dirs are dropped. A FIXTURE for
-    * migration specs and the bench's migration build (no production
-    * path ever un-migrates); lives here so the test suite and the
-    * bench queries share one copy of the layout rules.
-    *
-    * DESTRUCTIVE (renames data files, deletes `b<id>` dirs), so it
-    * takes the writer lease on `table` itself — running it against a
-    * dir a concurrent writer is appending to would corrupt the layout.
-    * Stores whose lease lives on a PARENT dir (multi-table stores like
-    * the substring store) must hold that parent lease around the call;
-    * the table-level lease here is re-entrant-safe because it is a
-    * distinct lock file.
-    */
-  def rewindToFlatLayout(spark: SparkSession, table: String): Unit =
-   withWriterLock(spark, table) {
-    val base = new org.apache.hadoop.fs.Path(table)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (d <- fs.listStatus(base)
-        if d.isDirectory && d.getPath.getName.startsWith("b") &&
-          d.getPath.getName.drop(1).forall(_.isDigit)) {
-      for (f <- fs.listStatus(d.getPath) if f.isFile) {
-        val n = f.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith("."))
-          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(base,
-            s"${d.getPath.getName}-$n")): Unit
-      }
-      fs.delete(d.getPath, true): Unit
-    }
-   }
-
   /** Record inside fold-batch `batch`'s directory the generation ids
     * it SUPERSEDES (`<tableDir>/b<batch>/_folds`) — the additive-store
     * compaction contract: stores whose generations SUM on read (gram
@@ -397,10 +304,10 @@ object Commits {
     }
     if (!hasData) 0L
     else {
-      // recursiveFileLookup: table layouts that keep each batch in its
-      // own `b<id>` subdirectory (the inverted index) scan the same as
-      // flat stores (the ANN dir), orphans included — which is the
-      // point of this fallback.
+      // recursiveFileLookup: tables that keep each batch in its own
+      // `b<id>` subdirectory (the generational stores) scan the same as
+      // the near-dup store's append-mode tables, orphans included —
+      // which is the point of this fallback.
       val row = ParquetRead(spark, Seq(dataPath), recursiveFileLookup = true)
         .agg(max(col("batch"))).head()
       (if (row.isNullAt(0)) -1L else row.getLong(0)) + 1L
@@ -443,7 +350,7 @@ object Commits {
     * to readers, vacuum drops them, and the staged-ledger swap clears
     * the spent markers) — the postings-only-orphan window stays closed
     * without reading the postings. A store with NO attempt markers yet
-    * (pre-marker data, or a ledger freshly reset by build/vacuum) may
+    * (a ledger reset by a rebuild that crashed before its commit) may
     * hold marker-less orphans the ledger cannot see, so that first
     * allocation also consults the data scan and takes the max of both;
     * it then records a marker, making every later call listing-only.
@@ -458,12 +365,12 @@ object Commits {
     val id =
       if (attempts.nonEmpty) (attempts ++ committedIds).max + 1L
       else {
-        // No allocation was ever RECORDED here (pre-marker store, or a
-        // ledger reset by an old-code vacuum): the data may hold
-        // marker-less orphans from an old-code crash that the ledger
-        // cannot see, so take the max over the ledger AND a one-time
-        // data scan. This allocation records a marker, so every later
-        // call is listing-only.
+        // No allocation is RECORDED here: a rebuild (`Search
+        // .buildIndex`) drops `_commits` and writes its `b0` slices
+        // before the commit records `a0`, so a crash in that window
+        // leaves a `b0` orphan with no marker at all. Take the max over
+        // the ledger AND a one-time data scan. This allocation records
+        // a marker, so every later call is listing-only.
         val fromLedger = committedIds.maxOption.map(_ + 1L).getOrElse(0L)
         val fromData = dataPaths.map(nextBatchId(spark, _))
           .maxOption.getOrElse(0L)

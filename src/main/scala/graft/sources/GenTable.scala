@@ -229,32 +229,14 @@ final class GenTable(private[graft] val key: String,
    Commits.withWriterLock(spark, dir) {
     repairCrashedSwap(spark, dir): Unit
     val committed = Commits.committed(spark, dir)
-    // Legacy flat batch ids read ONCE per table for the whole pass (the
-    // flat files never change within it — rewrites land in b<id> dirs);
-    // one listing per table when nothing flat exists.
-    val flatIds = tables.map(t =>
-      Commits.flatBatchIds(spark, liveDir(dir, t)))
-    def sweepFlat(committedNow: Seq[Long]): Unit =
-      tables.zip(flatIds).foreach { case (t, ids) =>
-        Commits.sweepFlatFiles(spark, liveDir(dir, t), committedNow, ids)
-      }
     tables.foreach(t =>
       Commits.sweepOrphanBatchDirs(spark, liveDir(dir, t), committed))
-    // File-level analog of the orphan sweep: flat files whose batches
-    // are no longer committed (a crash between a previous migration's
-    // uncommit and its delete).
-    sweepFlat(committed)
     Commits.pruneAttemptMarkers(spark, dir)
     if (committed.isEmpty) return 0
-    // Committed batches still in the legacy flat layout are FORCED into
-    // the rewrite: the only way to reclaim their bytes
-    // ([[Commits.flatBatchIds]]).
-    val selected = (select(committed) ++
-      flatIds.flatten.filter(committed.contains)).distinct.sorted
+    val selected = select(committed).sorted
     if (selected.isEmpty) return 0
     rewriteAndCommit(spark, dir, committed, selected)
     reclaim(spark, dir, selected)
-    sweepFlat(Commits.committed(spark, dir))
     selected.size
    }
 
@@ -390,8 +372,8 @@ final class GenTable(private[graft] val key: String,
     } else false
   }
 
-  /** Install the stage: each table's staged dir replaces the live
-    * table's batch dirs and legacy flat files as its `b0`, then the
+  /** Install the stage: each table's staged dir replaces every
+    * non-hidden entry of the live table as its `b0`, then the
     * staged extras and the staged ledger move in. Safe to re-run after
     * a crash at any step, with no manifest: a staged piece still
     * present means the live copy is stale and is replaced; a staged

@@ -1990,102 +1990,6 @@ object Streams {
       }
       .start()
 
-  /** ONE-SHOT band-table migration for a near-dup store written before
-    * the long-key band format: rewrites `storeDir/bands` from the
-    * legacy exploded md5-string rows (doc_id, band, band_key STRING)
-    * to the compact [[graft.operators.Dedup.lshBandKeys]] form
-    * (doc_id, band_keys ARRAY<LONG>, batch) that every candidate path
-    * now requires — the exchange-based fallbacks that could probe the
-    * legacy format are retired ([[graft.operators.Dedup.LegacyBandMsg]]).
-    *
-    * The compact rows are RECOMPUTED from the store's own committed
-    * shingle arrays (`hs`), not converted from the legacy strings: the
-    * two key spaces are different truncations of the same md5 chain,
-    * so recomputation from the source of truth is both simpler and
-    * provably the same keys a fresh ingest would produce. Uncommitted
-    * orphan rows (crashed batches) are NOT migrated — they were
-    * invisible before and stay invisible; the batch column rides over
-    * from `hs` so committed-set filtering keeps working unchanged.
-    *
-    * Crash safety, under the store's writer lease: the compact table
-    * is fully written to a sibling scratch dir first, then swapped in
-    * by two renames (`bands`→`bands_old`, scratch→`bands`) with
-    * `bands_old` deleted last. Every crash point is repaired at the
-    * next call's entry: a leftover scratch dir is discarded, and a
-    * missing `bands` with `bands_old` present rolls back — the store
-    * is never left without a readable band table for longer than the
-    * two-rename window, which (like an [[graft.operators.Similarity
-    * .annStorePartition]] refresh) unlocked readers should not
-    * straddle. Returns the number of docs whose bands were rewritten;
-    * 0 when the table is already compact (or empty) — safe to call
-    * idempotently from a maintenance pass.
-    */
-  def neardupBandMigrate(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Long =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    import graft.operators.Dedup
-    val bandsDir = s"$storeDir/bands"
-    val hsDir = s"$storeDir/hs"
-    val bands = new org.apache.hadoop.fs.Path(bandsDir)
-    val old = new org.apache.hadoop.fs.Path(s"$storeDir/bands_old")
-    val tmp = new org.apache.hadoop.fs.Path(s"$storeDir/bands_migrate")
-    val fs = bands.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Repair a crashed prior migration, in rollback order: restore a
-    // renamed-away bands dir first, drop a superseded bands_old, then
-    // discard any scratch — converges from every crash point.
-    if (!fs.exists(bands) && fs.exists(old)) {
-      // A failed rollback would leave the store with NO readable band
-      // table while the legacy check below reads "nothing to migrate" —
-      // a silent success-as-noop. Mirror the forward renames: loud.
-      if (!fs.rename(old, bands))
-        throw new java.io.IOException(
-          s"could not roll back $old to $bands after a crashed migration")
-    }
-    if (fs.exists(bands) && fs.exists(old)) fs.delete(old, true): Unit
-    if (fs.exists(tmp)) fs.delete(tmp, true): Unit
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    // The 0-return states are NOT all "already compact", and an
-    // existing-but-file-less bands dir would throw from schema
-    // inference: distinguish them before touching parquet. A store with
-    // committed batches whose band table is absent or empty is
-    // suspicious (wrong dir, or a store that never banded) — warn so
-    // the noop is visible; committed-empty stores return 0 quietly
-    // (any band rows are uncommitted orphans, invisible by contract).
-    val bandsHasData = fs.exists(bands) && fs.listStatus(bands).exists { st =>
-      val nm = st.getPath.getName
-      st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
-    if (committed.isEmpty) 0L
-    else if (!bandsHasData) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"neardupBandMigrate: band table at $bandsDir is " +
-          (if (fs.exists(bands)) "present but holds no data files"
-           else "absent") +
-          " while the store has committed batches - nothing to " +
-          "migrate (this is NOT an already-compact table)")
-      0L
-    }
-    else if (ParquetRead(spark, bandsDir).columns.contains("band_keys")) 0L
-    else {
-      val hs = ParquetRead(spark, hsDir)
-        .filter(col("batch").isin(committed: _*))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val compact = Dedup.lshBandKeys(
-          Dedup.minhashSignatures(hs.select(col("doc_id"), col("hs")), 128),
-          128, 16)
-        .join(hs.select(col("doc_id"), col("batch")), Seq("doc_id"))
-      compact.write.mode("overwrite").parquet(tmp.toString)
-      val n = ParquetRead(spark, tmp.toString).count()
-      hs.unpersist()
-      if (!fs.rename(bands, old))
-        throw new java.io.IOException(s"could not rename $bands aside")
-      if (!fs.rename(tmp, bands))
-        throw new java.io.IOException(s"could not swap $tmp into place")
-      fs.delete(old, true): Unit
-      n
-    }
-   }
-
   /** One micro-batch of the near-dup ingest (also the batch restart
     * path). Returns the number of docs actually inserted.
     *
@@ -2107,9 +2011,9 @@ object Streams {
     * without their signatures were a permanent LSH blind spot, and
     * orphan signatures could drop a redelivered batch against its own
     * crashed remains. The id allocator burns every attempted id via
-    * the ledger's attempt markers (legacy fallback: max(batch) across
-    * all three tables); the writer lease serializes concurrent
-    * writers.
+    * the ledger's attempt markers (on a ledger with none yet, also
+    * max(batch) across all three tables); the writer lease serializes
+    * concurrent writers.
     */
   def neardupIngestBatch(batch: DataFrame, storeDir: String, idCol: String,
       textCol: String, minJaccard: Double = 0.9): Long =
@@ -2134,10 +2038,9 @@ object Streams {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The standing band table must be in the compact long-key form
     // (Dedup.lshBandKeys — 16 longs/doc, and the witness-deduped
-    // candidate joins need the carried array): the legacy md5-string
-    // probe fallbacks are retired, and a mixed-key-space join would
-    // silently drop every store candidate, so a pre-migration store
-    // fails LOUDLY here instead.
+    // candidate joins need the carried array): a mixed-key-space join
+    // would silently drop every store candidate, so a band table in
+    // the legacy md5-string form fails LOUDLY here instead.
     val storeBandRows = readCommitted(bandsDir)
     storeBandRows.foreach(df => require(
       df.columns.contains("band_keys"), s"$bandsDir: " + Dedup.LegacyBandMsg))

@@ -38,7 +38,7 @@ class PlanRegressionSpec extends SparkSpec {
       "c14_stale_cutoff_sweep", "search_bm25_topk",
       "search_bm25_index_topk", "search_bm25_index_upsert",
       "search_bm25_index_delete", "search_bm25_index_vacuum",
-      "search_bm25_index_migrate", "search_more_like_this",
+      "search_more_like_this",
       // rm3's quadratic shape is the one-row stats cross-join of its
       // two BM25 stages; the feedback/expansion joins are broadcast
       // hash joins on doc_id/term.

@@ -10,18 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Rewrite a generational table dir into the LEGACY pre-`b<id>` flat
-    * append layout — the fixture for the flat-store migration specs
-    * (one shared implementation: [[graft.sources.Commits
-    * .rewindToFlatLayout]], also used by the bench's migration build).
+  /** The table dir's non-hidden files at its root — never store data
+    * in a generational table, whose batches live in `b<id>` dirs.
     */
-  protected def flattenBatchDirs(table: String): Unit =
-    graft.sources.Commits.rewindToFlatLayout(spark, table)
-
-  /** The table dir's top-level data files (the legacy flat residue the
-    * migration must reclaim).
-    */
-  protected def flatFiles(table: String): Seq[String] = {
+  protected def rootFiles(table: String): Seq[String] = {
     val base = new org.apache.hadoop.fs.Path(table)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Seq.empty

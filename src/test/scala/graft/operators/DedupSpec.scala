@@ -6,6 +6,13 @@ import org.apache.spark.sql.functions._
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Band rows in the legacy md5-string form: (doc_id, band, band_key
+    * STRING), no carried `band_keys` array. The two docs share a key. */
+  private def legacyBands(a: Long, b: Long): org.apache.spark.sql.DataFrame =
+    Seq((a, 0, "5d41402abc4b2a76b9719d911017c592"),
+      (b, 0, "5d41402abc4b2a76b9719d911017c592"))
+      .toDF("doc_id", "band", "band_key")
+
   private val docs = Seq(
     (1L, "a b c d"),
     (2L, "a b c e"),
@@ -64,8 +71,7 @@ class DedupSpec extends SparkSpec {
     // A corpus with heavy mutual overlap so pairs agree in MANY bands
     // (exact copies agree in all): the witness filter must still emit
     // each pair exactly once. Legacy md5-string banded input (no
-    // band_keys) is REJECTED — the exchange-based fallback is retired;
-    // stores in that format migrate once via neardupBandMigrate.
+    // band_keys) is REJECTED with LegacyBandMsg.
     val corpus = ((1L to 12L).map(i => (i, "w0 w1 w2 w3 w4 w5 w6 w7 w8")) ++
       (13L to 18L).map(i => (i, s"zz$i w1 w2 w3 w4 w5 w6 w7 w8")) ++
       Seq((19L, "totally unrelated text about something else entirely here")))
@@ -79,7 +85,7 @@ class DedupSpec extends SparkSpec {
     // The exact-copy clique must be fully present: 12*11/2 pairs.
     assert(witnessed.count { case (a, b) => a <= 12 && b <= 12 } == 66)
     intercept[IllegalArgumentException] {
-      Dedup.lshCandidatePairs(Dedup.lshBandsMd5(sigs, 16, 4))
+      Dedup.lshCandidatePairs(legacyBands(1L, 2L))
     }
     sigs.unpersist(); ()
   }
@@ -103,12 +109,11 @@ class DedupSpec extends SparkSpec {
     // The md5-string probe paths are retired: legacy on either or both
     // sides (a mixed join would be silently empty) rejects loud.
     intercept[IllegalArgumentException] {
-      Dedup.lshIncrementalCandidates(
-        Dedup.lshBandsMd5(store, 16, 4), Dedup.lshBandsMd5(batch, 16, 4))
+      Dedup.lshIncrementalCandidates(legacyBands(1L, 2L), legacyBands(5L, 6L))
     }
     intercept[IllegalArgumentException] {
       Dedup.lshIncrementalCandidates(
-        Dedup.lshBandsMd5(store, 16, 4), Dedup.lshBands(batch, 16, 4))
+        legacyBands(1L, 2L), Dedup.lshBands(batch, 16, 4))
     }
     store.unpersist(); batch.unpersist(); ()
   }

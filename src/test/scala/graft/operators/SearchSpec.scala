@@ -296,6 +296,28 @@ class SearchSpec extends SparkSpec {
         .collect().toSeq)
   }
 
+  test("a rebuild crashed before its commit leaves a marker-less b0 " +
+      "orphan; the next append allocates above it") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25-rebuild-crash")
+      .toString + "/index"
+    // Simulated crash inside buildIndex: `_commits` is gone and
+    // postings/b0 is written, but docs/b0 and the commit marker (with
+    // its a0 attempt marker) are not. Only the data scan sees b0.
+    Search.writePostingsSlice(docs.filter(col("doc_id") <= 3),
+      "doc_id", "text", dir, 0L)
+    assert(graft.sources.Commits.attempted(spark, dir).isEmpty)
+    val appended = docs.filter(col("doc_id") > 3)
+    assert(Search.indexAppend(appended, "doc_id", "text", dir) == 2L)
+    assert(graft.sources.Commits.committed(spark, dir) == Seq(1L),
+      "the append must allocate id 1, not collide with the b0 orphan")
+    assert(Search.indexLiveDocs(spark, dir).get.select("doc_id")
+      .as[Long].collect().toSet == Set(4L, 5L))
+    val terms = Seq("spark", "vector")
+    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10).collect().toSeq
+      == Search.bm25TopK(appended, "doc_id", "text", terms, 10)
+        .collect().toSeq)
+  }
+
   test("writer lease: a second writer fails loudly; stale locks break") {
     import graft.sources.Commits
     val dir = java.nio.file.Files.createTempDirectory("bm25-lock")
@@ -784,39 +806,6 @@ class SearchSpec extends SparkSpec {
     assert(Search.indexVacuumIncremental(spark, dir) == 0)
     assert(!batchDirs(dir, "postings").contains(1L),
       "orphan batch dir survived the vacuum sweep")
-  }
-
-  test("incremental vacuum migrates a legacy flat-file store and " +
-      "reclaims its bytes") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25-legacy")
-      .toString + "/index"
-    Search.buildIndex(docs, "doc_id", "text", dir)                  // b0
-    Search.indexAppend(Seq((6L, "spark legacy store doc"))
-      .toDF("doc_id", "text"), "doc_id", "text", dir)               // b1
-    // Rewind the layout to the pre-b<id> flat append era.
-    flattenBatchDirs(s"$dir/docs")
-    flattenBatchDirs(s"$dir/postings")
-    assert(flatFiles(s"$dir/docs").nonEmpty)
-    val terms = Seq("spark", "vector")
-    val want = Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq
-    assert(want.nonEmpty, "flat layout must stay readable pre-migration")
-    // Both flat batches are clean (no dead rows) yet FORCED into the
-    // rewrite — dropping only their markers would strand the bytes.
-    assert(Search.indexVacuumIncremental(spark, dir) == 2)
-    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq == want, "migration changed answers")
-    assert(flatFiles(s"$dir/docs").isEmpty &&
-      flatFiles(s"$dir/postings").isEmpty,
-      "legacy flat files survived the migration")
-    assert(batchDirs(dir, "docs").nonEmpty)
-    // Migration is one-shot: the next pass has nothing to do.
-    assert(Search.indexVacuumIncremental(spark, dir) == 0)
-    // The migrated store keeps serving mutations and probes.
-    assert(Search.indexAppend(Seq((9L, "vector spark extra"))
-      .toDF("doc_id", "text"), "doc_id", "text", dir) == 1L)
-    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().exists(_.getLong(0) == 9L))
   }
 
   test("snippetTopK picks the densest window and breaks ties earliest") {

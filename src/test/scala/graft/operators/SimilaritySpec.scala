@@ -1221,36 +1221,6 @@ class SimilaritySpec extends SparkSpec {
     assert(semiAt > aggAt,
       s"batch-id semi-join no longer under the aggregate:\n$plan")
   }
-
-  test("incremental ANN vacuum migrates a legacy flat store and " +
-      "reclaims its bytes") {
-    val dir = java.nio.file.Files.createTempDirectory("ann-legacy")
-      .toString + "/idx"
-    val vecs = (0 until 12).map { i =>
-      (i.toLong, Seq(math.cos(i * 0.7).toFloat, math.sin(i * 1.3).toFloat))
-    }.toDF("id", "vec")
-    Similarity.annStoreAppend(vecs, dir, planes = 4, dims = 2)     // b0
-    Similarity.annStoreAppend(Seq((20L, Seq(0.6f, 0.8f)))
-      .toDF("id", "vec"), dir, planes = 4, dims = 2)               // b1
-    // Rewind to the pre-b<id> flat layout (files beside _commits).
-    flattenBatchDirs(dir)
-    assert(flatFiles(dir).nonEmpty)
-    val queries = vecs.filter(col("id") < 3)
-    def rows() = Similarity.annStoreTopK(spark, dir, queries,
-      planes = 4, dims = 2, k = 3)
-      .select("qid", "cid", "score", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
-    val want = rows()
-    assert(want.nonEmpty)
-    // Clean but flat: both batches are forced through the rewrite.
-    assert(Similarity.annStoreVacuumIncremental(spark, dir) == 2)
-    assert(rows() == want, "ANN migration changed answers")
-    assert(flatFiles(dir).isEmpty, "legacy ANN flat files survived")
-    assert(Similarity.annStoreVacuumIncremental(spark, dir) == 0)
-    // The migrated store keeps serving mutations.
-    assert(Similarity.annStoreAppend(
-      Seq((99L, Seq(0.3f, 0.4f))).toDF("id", "vec"), dir, 4, 2) == 1L)
-  }
 }
 
 /** Local filesystem under the `vanish` scheme that deletes a dir as soon

@@ -92,10 +92,9 @@ class CommitsSpec extends SparkSpec {
     val dir = tmp()
     // b0 holds real data; b1 is a committed batch whose dir holds ONLY
     // hidden files (a stray .crc checksum — e.g. data files deleted by
-    // a half-finished external cleanup). The same visibility predicate
-    // must gate both the per-batch presence check and the flat check:
-    // passing the .crc-only dir to the parquet reader would fail schema
-    // inference and take the whole store read down with it.
+    // a half-finished external cleanup). Passing the .crc-only dir to
+    // the parquet reader would fail schema inference and take the
+    // whole store read down with it.
     Seq((1L, 0L)).toDF("id", "batch").write.parquet(s"$dir/b0")
     val crcOnly = new org.apache.hadoop.fs.Path(s"$dir/b1/.f1.parquet.crc")
     val fs = crcOnly.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -110,45 +109,8 @@ class CommitsSpec extends SparkSpec {
     assert(Commits.readCommittedBatches(spark, dir, Seq(1L)).isEmpty)
   }
 
-  test("mid-migration mix: flat and b<id> rows each read exactly once; " +
-      "flat sweep refuses while committed") {
-    import spark.implicits._
-    val dir = tmp()
-    // Old append layout: batches 0 and 1 as top-level flat files...
-    Seq((1L, 0L), (2L, 0L), (3L, 1L)).toDF("id", "batch")
-      .write.parquet(dir)
-    // ...then the new layout appends batch 2 in its own directory.
-    Seq((4L, 2L)).toDF("id", "batch").write.parquet(s"$dir/b2")
-    Seq(0L, 1L, 2L).foreach(Commits.commit(spark, dir, _))
-    val committed = Commits.committed(spark, dir).sorted
-    assert(committed == Seq(0L, 1L, 2L))
-    // The mixed read sees every committed row EXACTLY once — the root
-    // path contributes only the flat files, never the b2 dir's rows.
-    val read = Commits.readCommittedBatches(spark, dir, committed).get
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(read == Seq(1L, 2L, 3L, 4L))
-    // Only the flat-resident batches report as legacy.
-    assert(Commits.flatBatchIds(spark, dir).filter(committed.contains)
-      == Seq(0L, 1L))
-    // The sweep refuses while any flat batch is still committed.
-    Commits.sweepFlatFiles(spark, dir, committed,
-      Commits.flatBatchIds(spark, dir))
-    assert(Commits.flatBatchIds(spark, dir).filter(committed.contains)
-      == Seq(0L, 1L))
-    // Once the flat batches are uncommitted (the migration's rewrite
-    // did that after moving their survivors), the files go — and the
-    // store reads only the per-batch layout.
-    Seq(0L, 1L).foreach(Commits.uncommit(spark, dir, _))
-    Commits.sweepFlatFiles(spark, dir, Commits.committed(spark, dir),
-      Commits.flatBatchIds(spark, dir))
-    assert(Commits.flatBatchIds(spark, dir)
-      .filter(Seq(0L, 1L, 2L).contains).isEmpty)
-    assert(Commits.readCommittedBatches(spark, dir, Seq(2L)).get
-      .select("id").as[Long].collect().toSeq == Seq(4L))
-  }
-
-  test("committedDataBytes: listing-only, counts flat + committed dirs, " +
-      "skips uncommitted dirs and hidden files") {
+  test("committedDataBytes: listing-only, counts committed dirs, " +
+      "skips uncommitted dirs, root files and hidden files") {
     import spark.implicits._
     val dir = tmp()
     assert(Commits.committedDataBytes(spark, dir) == 0L)
@@ -166,10 +128,12 @@ class CommitsSpec extends SparkSpec {
     Commits.commit(spark, dir, 1L)
     assert(Commits.committedDataBytes(spark, dir)
       == bytesUnder(s"$dir/b0") + bytesUnder(s"$dir/b1"))
-    // Flat (mid-migration) data files at the root count too.
+    // Data files at the table root are not store data: they do not
+    // count.
     Seq((3L, 2L)).toDF("id", "batch")
       .write.mode("append").parquet(dir)
+    assert(bytesUnder(dir) > 0L)
     assert(Commits.committedDataBytes(spark, dir)
-      == bytesUnder(s"$dir/b0") + bytesUnder(s"$dir/b1") + bytesUnder(dir))
+      == bytesUnder(s"$dir/b0") + bytesUnder(s"$dir/b1"))
   }
 }

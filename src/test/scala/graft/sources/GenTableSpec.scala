@@ -225,6 +225,47 @@ class GenTableSpec extends SparkSpec {
       assert(Commits.committed(spark, dir) == Seq(0L))
     }
 
+    test(s"${s.name}: a data file at the table root is not store data; " +
+        "maintenance neither reads, rewrites nor deletes it") {
+      val dir = freshDir(s, "root")
+      s.build(dir)
+      val want = s.read(dir)
+      val live = s.liveIds(dir)
+      val committed = Commits.committed(spark, dir)
+      val root = tableDir(dir, s.table.tables.last)
+      // A non-hidden parquet file at the membership root: id 1's row
+      // under a fresh key, tagged with a committed batch id.
+      val scratch = s"$dir-stray"
+      Commits.readCommittedBatches(spark, root, committed).get
+        .filter(col(s.table.key) === 1L).limit(1)
+        .withColumn(s.table.key, lit(777L))
+        .withColumn("batch", lit(committed.max))
+        .coalesce(1).write.parquet(scratch)
+      val part = fs(dir).listStatus(new Path(scratch))
+        .find(_.getPath.getName.endsWith(".parquet")).get.getPath
+      val stray = new Path(root, "stray.parquet")
+      assert(fs(dir).rename(part, stray))
+      val before = fs(dir).getFileStatus(stray)
+      def unchanged(): Unit = {
+        assert(rootFiles(root) == Seq("stray.parquet"),
+          s"${s.name}: the root file was deleted or joined")
+        val now = fs(dir).getFileStatus(stray)
+        assert(now.getLen == before.getLen &&
+          now.getModificationTime == before.getModificationTime,
+          s"${s.name}: the root file was rewritten")
+        assert(s.liveIds(dir) == live, s"${s.name}: the root file was read")
+        assert(s.read(dir) == want)
+      }
+      unchanged()
+      val dirty = s.table.dirtyBatches(spark, dir, committed, 0.0)
+      assert(s.table.vacuumIncremental(spark, dir, 0.0) == dirty.size,
+        s"${s.name}: the root file's batch was forced into the rewrite")
+      unchanged()
+      assert(s.table.compactBatches(spark, dir, 1) > 0)
+      assert(Commits.committed(spark, dir).size == 1)
+      unchanged()
+    }
+
     test(s"${s.name}: compactBatches(n) leaves exactly n committed " +
         "batches and unchanged reads") {
       val dir = freshDir(s, "compact")

@@ -207,39 +207,4 @@ class ChunkIngestSpec extends SparkSpec {
       .parquet(s"$dir/docs")
     assert(!docRows.select("doc_id").as[Long].collect().contains(1L))
   }
-
-  test("chunk-store vacuum migrates a legacy flat store and reclaims " +
-      "its bytes") {
-    val dir = tmp("chunk-legacy") + "/store"
-    val docs = Seq(
-      (1L, (1 to 10).map(i => s"t$i").mkString(" ")),
-      (2L, "a b c"))
-      .toDF("doc_id", "text")
-    assert(Streams.chunkIngestBatch(docs, dir, "doc_id", "text",
-      window = 4, overlap = 1) == 2)                               // b0
-    assert(Streams.chunkIngestBatch(Seq((3L, "x y z w"))
-      .toDF("doc_id", "text"), dir, "doc_id", "text",
-      window = 4, overlap = 1) == 1)                               // b1
-    flattenBatchDirs(s"$dir/docs")
-    flattenBatchDirs(s"$dir/chunks")
-    assert(flatFiles(s"$dir/docs").nonEmpty)
-    def face() = Streams.chunkStoreRead(spark, dir).get
-      .orderBy("doc_id", "chunk_seq")
-      .as[(Long, Long, Long, String)].collect().toSeq
-    val want = face()
-    assert(want.nonEmpty)
-    // Both flat batches are clean yet forced through the rewrite.
-    assert(Streams.chunkStoreVacuum(spark, dir) == 2)
-    assert(face() == want, "chunk-store migration changed the read face")
-    assert(flatFiles(s"$dir/docs").isEmpty &&
-      flatFiles(s"$dir/chunks").isEmpty,
-      "legacy chunk-store flat files survived")
-    assert(Streams.chunkStoreVacuum(spark, dir) == 0)
-    // The migrated store keeps ingesting; redelivery stays a no-op.
-    assert(Streams.chunkIngestBatch(docs, dir, "doc_id", "text",
-      window = 4, overlap = 1) == 0)
-    assert(Streams.chunkIngestBatch(Seq((4L, "p q"))
-      .toDF("doc_id", "text"), dir, "doc_id", "text",
-      window = 4, overlap = 1) == 1)
-  }
 }

@@ -45,15 +45,13 @@ class NeardupIngestSpec extends SparkSpec {
     assert(storeIds(dir) == Set(1L, 2L, 3L, 5L))
   }
 
-  test("legacy md5 band store: ingest refuses; neardupBandMigrate rewrites " +
-      "once and the gate works compact") {
+  test("legacy md5 band store: ingest refuses loudly") {
     import graft.operators.{Dedup, Upsert}
     import org.apache.spark.sql.functions.lit
     val dir = java.nio.file.Files.createTempDirectory("nd-legacy").toString
-    // A store written BEFORE the long-key band migration: docs + hs as
-    // today, bands in the legacy exploded md5-string form, PLUS an
-    // uncommitted orphan batch (crashed ingest) that the migration
-    // must leave invisible.
+    // A store whose band table is in the legacy exploded md5-string
+    // form: docs + hs as today, bands as (doc_id, band, band_key
+    // STRING) rows with no carried band_keys array.
     val b1 = Seq(
       (1L, base),
       (2L, "completely different text about distributed query engines " +
@@ -61,21 +59,16 @@ class NeardupIngestSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hashed = Upsert.withContentHash(b1, "text")
     hashed.withColumn("batch", lit(0L)).write.parquet(s"$dir/docs")
-    val hs = Dedup.hashedShingleArrays(hashed, "doc_id", "text", 3)
-    hs.withColumn("batch", lit(0L)).write.parquet(s"$dir/hs")
-    Dedup.lshBandsMd5(Dedup.minhashSignatures(hs, 128), 128, 16)
-      .withColumn("batch", lit(0L)).write.parquet(s"$dir/bands")
+    Dedup.hashedShingleArrays(hashed, "doc_id", "text", 3)
+      .withColumn("batch", lit(0L)).write.parquet(s"$dir/hs")
+    Seq((1L, 0, "9e107d9d372bb6826bd81d3542a419d6", 0L),
+      (2L, 0, "e4d909c290d0fb1ca068ffaddf22cbd0", 0L))
+      .toDF("doc_id", "band", "band_key", "batch")
+      .write.parquet(s"$dir/bands")
     graft.sources.Commits.commit(spark, dir, 0L)
-    val orphan = Upsert.withContentHash(
-      Seq((9L, "orphan rows from a crashed append never committed"))
-        .toDF("doc_id", "text"), "text")
-    graft.sources.Commits.recordAttempt(spark, dir, 1L)
-    graft.operators.Dedup.hashedShingleArrays(orphan, "doc_id", "text", 3)
-      .withColumn("batch", lit(1L)).write.mode("append").parquet(s"$dir/hs")
 
-    // The legacy probe fallbacks are retired: ingest against the
-    // un-migrated store must fail loudly, not silently miss every
-    // store candidate through a mixed-key-space join.
+    // Ingest against it must fail loudly, not silently miss every store
+    // candidate through a mixed-key-space join.
     val b2 = Seq(
       (4L, base.replaceFirst("\\S+", "zzz")),
       (5L, "an entirely novel document mentioning streaming watermarks " +
@@ -84,59 +77,7 @@ class NeardupIngestSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Streams.neardupIngestBatch(b2, dir, "doc_id", "text", 0.8)
     }
-    assert(e.getMessage.contains("neardupBandMigrate"))
-
-    // One-shot migration: every committed doc's bands rewritten to the
-    // compact long-key form (batch column intact), orphans excluded,
-    // and a second call is a no-op.
-    assert(Streams.neardupBandMigrate(spark, dir) == 2)
-    val bands = spark.read.parquet(s"$dir/bands")
-    assert(bands.columns.toSet == Set("doc_id", "band_keys", "batch"),
-      s"migrated band schema: ${bands.columns.toSet}")
-    assert(bands.select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
-    assert(Streams.neardupBandMigrate(spark, dir) == 0)
-
-    // The migrated keys are the SAME keys a fresh ingest would band
-    // with: the near-dup of stored doc 1 is dropped, the novel doc
-    // lands, and appended rows share the compact schema.
-    assert(Streams.neardupIngestBatch(b2, dir, "doc_id", "text", 0.8) == 1)
-    assert(storeIds(dir) == Set(1L, 2L, 5L))
-    assert(spark.read.parquet(s"$dir/bands").columns.toSet ==
-      Set("doc_id", "band_keys", "batch"))
-  }
-
-  test("a crashed band migration repairs at the next call, both directions") {
-    import graft.operators.{Dedup, Upsert}
-    import org.apache.spark.sql.functions.lit
-    val dir = java.nio.file.Files.createTempDirectory("nd-mig-crash").toString
-    val b1 = Seq((1L, base)).toDF("doc_id", "text")
-    val hashed = Upsert.withContentHash(b1, "text")
-    hashed.withColumn("batch", lit(0L)).write.parquet(s"$dir/docs")
-    val hs = Dedup.hashedShingleArrays(hashed, "doc_id", "text", 3)
-    hs.withColumn("batch", lit(0L)).write.parquet(s"$dir/hs")
-    Dedup.lshBandsMd5(Dedup.minhashSignatures(hs, 128), 128, 16)
-      .withColumn("batch", lit(0L)).write.parquet(s"$dir/bands")
-    graft.sources.Commits.commit(spark, dir, 0L)
-
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash BEFORE the swap: a complete scratch dir next to intact
-    // legacy bands. The re-run discards the scratch and migrates.
-    Dedup.lshBandKeys(Dedup.minhashSignatures(hs, 128), 128, 16)
-      .join(hs.select($"doc_id", lit(0L).as("batch")), Seq("doc_id"))
-      .write.parquet(s"$dir/bands_migrate")
-    assert(Streams.neardupBandMigrate(spark, dir) == 1)
-    assert(spark.read.parquet(s"$dir/bands").columns.contains("band_keys"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/bands_migrate")))
-
-    // Crash MID-SWAP: bands renamed aside, scratch not yet moved in —
-    // the worst window. The re-run rolls the store back to a readable
-    // band table and (here, already compact) leaves it alone.
-    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/bands"),
-      new org.apache.hadoop.fs.Path(s"$dir/bands_old"))
-    assert(Streams.neardupBandMigrate(spark, dir) == 0)
-    assert(spark.read.parquet(s"$dir/bands").columns.contains("band_keys"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/bands_old")))
+    assert(e.getMessage.contains(Dedup.LegacyBandMsg))
   }
 
   test("within one batch the lower id wins for near- and exact dups") {

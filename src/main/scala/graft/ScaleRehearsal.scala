@@ -308,8 +308,8 @@ object ScaleRehearsal {
       // Coarse REROUTE at a doubled cell count — the grows-with-the-
       // corpus lever: Lloyd on a fixed-size sample of the code
       // RECONSTRUCTIONS plus one full live-rows rewrite (corpus-linear
-      // by design — offline maintenance, like the full vacuum it
-      // composes). The probe after proves routing still serves.
+      // by design, like a full vacuum). The probe after proves routing
+      // still serves.
       timed(r, "pq_store_reroute_32") {
         Similarity.pqStoreReroute(spark, pqStore, cells = 32,
           trainPerMille = math.max(1, 1000 / r))

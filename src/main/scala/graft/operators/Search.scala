@@ -418,13 +418,19 @@ object Search {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
     Commits.withWriterLock(spark, dir) {
-      // Destructive rebuild: drop the store's tables but keep the held
-      // lease file itself.
-      Seq("postings", "docs", "_commits", GenTable.StageDir).foreach(p =>
+      // Destructive rebuild: uncommit every generation, then drop the
+      // tables. The attempt markers stay, so the rebuild commits an id
+      // above every id ever attempted — never one a snapshot of the old
+      // store recorded — and commits it even when empty, so an empty
+      // corpus is still a readable store.
+      Commits.committed(spark, dir).foreach(Commits.uncommit(spark, dir, _))
+      Seq("postings", "docs").foreach(p =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true))
-      writeSlice(Upsert.onePerKeyByContent(docs, idCol, textCol),
-        idCol, textCol, dir, 0L)
-      Commits.commit(spark, dir, 0L)
+      IndexStore.commitGeneration(spark, dir, always = true) { b =>
+        writeSlice(Upsert.onePerKeyByContent(docs, idCol, textCol),
+          idCol, textCol, dir, b)
+        0L
+      }: Unit
     }
   }
 
@@ -490,23 +496,19 @@ object Search {
   private[graft] val IndexStore = new GenTable("doc_id",
     col("content_hash") === Tombstone,
     Seq(lit(0).as("dl"), lit(Tombstone).as("content_hash")), "content_hash",
-    GenTable.Table("docs", "docs/b0"),
-    Seq(GenTable.Table("postings", "postings/b0", _
+    GenTable.Table("docs"),
+    Seq(GenTable.Table("postings", _
       .repartition(col("term"))
       .sortWithinPartitions(col("term"), col("doc_id")))))
 
   /** Compact the index to its LIVE state: the current committed
-    * generation of every non-tombstoned doc rewritten as batch 0,
-    * superseded/orphan/deleted rows dropped. Offline maintenance op
-    * (writer lease held, no concurrent readers) — [[GenTable
-    * .vacuumFull]]: the stage is written complete before the live
-    * ledger drops, and a crash mid-swap is completed by the next
-    * maintenance call.
+    * generation of every non-tombstoned doc rewritten as one fresh
+    * batch, superseded/orphan/deleted rows dropped ([[GenTable
+    * .vacuumFull]]: the incremental pass with every batch selected).
     */
   def indexVacuum(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
-    IndexStore.vacuumFull(spark, dir)(currentDocs(spark, dir)
-      .map(_.filter(col("content_hash") =!= Tombstone)))
+    IndexStore.vacuumFull(spark, dir)
 
   /** INCREMENTAL vacuum ([[GenTable.vacuumIncremental]]): reclaim only
     * the batches holding dead rows (superseded generations, or any row

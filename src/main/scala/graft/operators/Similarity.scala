@@ -594,28 +594,38 @@ object Similarity {
     }
   }
 
-  /** Read the store's COARSE (IVF) centroids — present only when the
-    * store was built with `cells > 0`. None for unrouted stores. */
+  /** Read the store's COARSE (IVF) centroids: the `coarse/b<id>` dir
+    * of the largest `committed` id that has one ([[GenTable
+    * .carriedDir]]). None for unrouted stores. */
   private def pqReadCoarse(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Option[Seq[(Long, Seq[Double])]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$storeDir/coarse")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      None
-    else Some(ParquetRead(spark, s"$storeDir/coarse")
-      .select(col("cid"), col("centroid"))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      .sortBy(_._1))
+      storeDir: String,
+      committed: Seq[Long]): Option[Seq[(Long, Seq[Double])]] =
+    PqStore.carriedDir(spark, storeDir, committed, "coarse").map(d =>
+      ParquetRead(spark, d._2)
+        .select(col("cid"), col("centroid"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
+        .sortBy(_._1))
+
+  /** Write `coarse` as generation `batch`'s coarse centroids. */
+  private def pqWriteCoarse(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, batch: Long,
+      coarse: Seq[(Long, Seq[Double])]): Unit = {
+    import spark.implicits._
+    coarse.toDF("cid", "centroid").coalesce(1)
+      .write.parquet(s"$storeDir/coarse/b$batch")
   }
 
   /** Encode `fresh` (id, v double-array, __vh) with `books` and commit
-    * it as one generation of the PQ store. Store rows are
+    * it as one generation of the PQ store, after `before` writes the
+    * generation's other tables. Store rows are
     * (id, codes array<long>, cell, vec_hash, batch) — m longs of code
     * plus the coarse IVF cell id per vector (-1 on unrouted stores). */
   private def pqCommitEncoded(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, fresh: DataFrame,
       books: Seq[Seq[(Long, Seq[Double])]], subDims: Int,
-      coarse: Option[Seq[(Long, Seq[Double])]]): Long = {
+      coarse: Option[Seq[(Long, Seq[Double])]],
+      before: Long => Unit = _ => ()): Long = {
     val rows = fresh.select(col("id"),
         array(books.indices.map(j => pqCodeExpr(books(j), j, subDims)): _*)
           .as("codes"),
@@ -633,6 +643,7 @@ object Similarity {
     // (obs.get blocks until the write's listener fires, so n is the
     // exact committed row count, same value the old count() returned.)
     PqStore.commitGeneration(spark, storeDir) { b =>
+      before(b)
       val obs = org.apache.spark.sql.Observation()
       PqStore.writeMembership(rows.observe(obs, count(lit(1)).as("n")),
         storeDir, b)
@@ -648,7 +659,8 @@ object Similarity {
     * generations. Returns rows encoded.
     *
     * `cells > 0` additionally Lloyd-trains an IVF coarse quantizer
-    * over the FULL vectors, persists it as `coarse` metadata, and
+    * over the FULL vectors, writes it under the build's generation
+    * (`coarse/b<id>`), and
     * stamps every committed code row with its nearest cell — the probe
     * can then route ([[pqStoreTopK]] with `nprobe`) instead of
     * ADC-scanning every committed code row per query, which is the
@@ -695,28 +707,25 @@ object Similarity {
       val (books, coarse) = graft.Prof("pqBuild.lloyd")(lloydBooksAndCoarse(
         train.select(col("id"), col("v")), m, subDims, codes, cells, iters))
       import spark.implicits._
-      graft.Prof("pqBuild.codebookWrite") {
-        // Two independent single-task writes of driver-local seqs to
-        // two different dirs — overlapped (guide §2.6) so a routed
-        // build pays one write's fixed overhead, not two. Crash
-        // ordering between them is unobservable: both land before the
-        // rows generation commits, and an uncommitted store has no
-        // readers.
-        graft.Par.run(Seq[() => Unit](
+      // Two independent single-task writes of driver-local seqs to two
+      // different dirs — overlapped (guide §2.6) so a routed build pays
+      // one write's fixed overhead, not two. Crash ordering between
+      // them is unobservable: both land inside the rows generation,
+      // before its commit, and an uncommitted store has no readers.
+      def writeBooksAndCoarse(batch: Long): Unit =
+        graft.Prof("pqBuild.codebookWrite")(graft.Par.run(Seq[() => Unit](
           () => books.zipWithIndex
-            .flatMap { case (b, j) =>
-              b.map { case (cid, v) => (j, cid, v) }
+            .flatMap { case (book, j) =>
+              book.map { case (cid, v) => (j, cid, v) }
             }
             .toDF("subspace", "cid", "centroid")
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$storeDir/codebook"),
-          () => coarse.foreach(_.toDF("cid", "centroid")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$storeDir/coarse")))): Unit
-      }
+          () => coarse.foreach(pqWriteCoarse(spark, storeDir, batch, _))))):
+          Unit
       graft.Prof("pqBuild.encodeCommit")(
         pqCommitEncoded(spark, storeDir, base.select(col("id"), col("v"),
-          col("__vh")), books, subDims, coarse))
+          col("__vh")), books, subDims, coarse, writeBooksAndCoarse))
     } finally { base.unpersist(); () }
    }
 
@@ -730,7 +739,7 @@ object Similarity {
     * current generation is a [[pqStoreDelete]] tombstone RESURRECTS
     * here (a real vector's hash never equals the tombstone's 0). On a
     * cell-routed store the batch's rows are stamped with their coarse
-    * cell from the same train-once `coarse` metadata.
+    * cell from the store's current coarse centroids.
     */
   def pqStoreAppend(batch: DataFrame, storeDir: String,
       heldLocks: Set[String] = Set.empty): Long =
@@ -742,7 +751,7 @@ object Similarity {
       s"$storeDir has no committed build - run pqStoreBuild first")
     val books = pqReadCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
-    val coarse = pqReadCoarse(spark, storeDir)
+    val coarse = pqReadCoarse(spark, storeDir, committed)
     val hashed = pqRequireDims(batch.dropDuplicates("id")
       .withColumn("__vh", xxhash64(col("vec")))
       .withColumn("v", VectorFunctions.toDoubleArray(col("vec"))),
@@ -836,7 +845,7 @@ object Similarity {
       s"$storeDir has no committed build - run pqStoreBuild first")
     val books = pqReadCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
-    val coarse = pqReadCoarse(spark, storeDir)
+    val coarse = pqReadCoarse(spark, storeDir, committed)
     val scope = broadcast(
       scopeKeys.select(col(scopeKeys.columns.head).as("__k"))
         .dropDuplicates("__k"))
@@ -921,7 +930,8 @@ object Similarity {
       codebook: => Seq[Seq[(Long, Seq[Double])]]): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nprobe >= 0, s"nprobe must be >= 0, got $nprobe")
-    require(graft.sources.Commits.committed(spark, storeDir).nonEmpty,
+    val committed = graft.sources.Commits.committed(spark, storeDir)
+    require(committed.nonEmpty,
       s"$storeDir has no committed build - run pqStoreBuild first")
     val books = codebook
     val subDims = books.head.head._2.size
@@ -943,9 +953,10 @@ object Similarity {
           books.indices.map(j => pqTabCol(books(j), j, subDims)): _*)
         cur.crossJoin(broadcast(qtab))
       } else {
-        val coarse = pqReadCoarse(spark, storeDir).getOrElse(sys.error(
-          s"$storeDir has no coarse centroids - routed probes need a " +
-            "store built with cells > 0 (pqStoreBuild's cells parameter)"))
+        val coarse = pqReadCoarse(spark, storeDir, committed).getOrElse(
+          sys.error(s"$storeDir has no coarse centroids - routed probes " +
+            "need a store built with cells > 0 (pqStoreBuild's cells " +
+            "parameter)"))
         val rc = array_sort(transform(typedLit(coarse), c =>
           struct(pqD2(col("v"), c("_2")).as("d2"), c("_1").as("cell"))))
         val qtab = qbase
@@ -1007,25 +1018,22 @@ object Similarity {
   }
 
   /** The PQ store's lifecycle descriptor ([[GenTable]]): code rows
-    * under `rows/` (staged at the stage root) gated on `vec_hash`,
-    * tombstoned as (empty codes, cell -1, vec_hash 0), and the `coarse`
-    * routing metadata a [[pqStoreReroute]] stages beside them. The
-    * train-once codebook is never touched. Package-private for the
-    * specs' crash hooks.
+    * under `rows/` gated on `vec_hash`, tombstoned as (empty codes,
+    * cell -1, vec_hash 0), and the per-generation `coarse` routing
+    * centroids carried beside them. The train-once codebook is never
+    * touched. Package-private for the specs' crash hooks.
     */
   private[graft] val PqStore = new GenTable("id", size(col("codes")) === 0,
     Seq(array().cast("array<bigint>").as("codes"), lit(-1L).as("cell"),
       lit(0L).as("vec_hash")), "vec_hash",
-    GenTable.Table("rows", "b0"), stagedExtras = Seq("coarse"))
+    GenTable.Table("rows"), carried = Seq("coarse"))
 
-  /** Compact the PQ store's code rows to their live state (batch 0,
-    * one row per id, tombstones gone) through [[GenTable.vacuumFull]]'s
-    * crash-repairing staged swap.
+  /** Compact the PQ store's code rows to their live state (one batch,
+    * one row per id, tombstones gone) through [[GenTable.vacuumFull]].
     */
   def pqStoreVacuum(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Unit =
-    PqStore.vacuumFull(spark, storeDir)(Some(pqCurrentRows(spark, storeDir)
-      .select(col("id"), col("codes"), col("cell"), col("vec_hash"))))
+    PqStore.vacuumFull(spark, storeDir)
 
   /** INCREMENTAL PQ vacuum ([[GenTable.vacuumIncremental]]): reclaim
     * only the batches whose dead fraction (superseded generations, or
@@ -1057,9 +1065,11 @@ object Similarity {
     * IDENTICAL before and after — routing prunes candidates, never
     * perturbs distances.
     *
-    * Offline maintenance op (writer lease; full live-rows rewrite like
-    * [[pqStoreVacuum]], which it composes: the rewrite lands as the
-    * single committed batch 0 with tombstones gone). `trainPerMille`
+    * Maintenance op (writer lease): the re-stamped live rows and the
+    * new coarse centroids are written and committed as ONE generation
+    * ([[GenTable.replaceAll]]), then every batch committed before it is
+    * reclaimed — like [[pqStoreVacuum]], the store ends as one batch
+    * with tombstones gone. `trainPerMille`
     * samples the reconstructions for the Lloyd passes like
     * [[pqStoreBuild]]. Works on unrouted stores too — the upgrade
     * path from a `cells = 0` build to a routed one.
@@ -1071,10 +1081,6 @@ object Similarity {
     require(cells > 0, s"cells must be positive, got $cells")
     require(trainPerMille > 0 && trainPerMille <= 1000,
       s"trainPerMille must be in (0, 1000], got $trainPerMille")
-    // Like every PQ maintenance entry point: complete a crashed
-    // vacuum/reroute swap BEFORE reading, else pqCurrentRows fails
-    // with a misleading "no committed build" on a repairable store.
-    PqStore.repairCrashedSwap(spark, storeDir): Unit
     val books = pqReadCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
     // Reconstruction: per subspace, the code id looks up its centroid
@@ -1097,14 +1103,17 @@ object Similarity {
           Map("all" -> trainPerMille)).drop("__stratum")
       val coarse = lloydCentroids(
         train.select(col("id"), col("v")), cells, iters)
-      import spark.implicits._
       // New coarse centroids and new cell stamps must become visible
       // TOGETHER (new routing against old stamps would silently drop
-      // candidates), so both move in the same staged swap.
-      PqStore.swapIn(spark, storeDir,
-        live.select(col("id"), col("codes"),
-          pqCellExpr(coarse).as("cell"), col("vec_hash")),
-        Seq("coarse" -> coarse.toDF("cid", "centroid").coalesce(1)))
+      // candidates), so both commit under one marker; the two writes
+      // go to different dirs and overlap like the build's.
+      PqStore.replaceAll(spark, storeDir) { b =>
+        graft.Par.run(Seq[() => Unit](
+          () => pqWriteCoarse(spark, storeDir, b, coarse),
+          () => PqStore.writeMembership(live.select(col("id"), col("codes"),
+            pqCellExpr(coarse).as("cell"), col("vec_hash")), storeDir, b))):
+          Unit
+      }
     } finally { live.unpersist(); () }
    }
 
@@ -1349,15 +1358,14 @@ object Similarity {
   private[graft] val AnnStore = new GenTable("id", size(col("qvec")) === 0,
     Seq(array().cast("array<tinyint>").as("qvec"), lit(0.0).as("scale"),
       lit(-1L).as("bucket"), lit(0L).as("vec_hash")), "vec_hash",
-    GenTable.Table("", "b0"))
+    GenTable.Table(""))
 
-  /** Compact the ANN store to its live state (batch 0, one row per id)
-    * — offline maintenance like `Search.indexVacuum`, through
-    * [[GenTable.vacuumFull]]'s crash-repairing staged swap.
+  /** Compact the ANN store to its live state (one batch, one row per
+    * id), like `Search.indexVacuum`, through [[GenTable.vacuumFull]].
     */
   def annStoreVacuum(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Unit =
-    AnnStore.vacuumFull(spark, storeDir)(Some(annCurrentRows(spark, storeDir)))
+    AnnStore.vacuumFull(spark, storeDir)
 
   /** INCREMENTAL ANN vacuum ([[GenTable.vacuumIncremental]]): reclaim
     * only the batches whose dead fraction (superseded generations, or

@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions.{col, max}
   * at-least-once redelivery can never double a row under an id a
   * reader will trust. [[nextBatchId]]'s max(batch) scan over the raw
   * parquet is the one-time fallback for a ledger with no attempt
-  * marker: `Search.buildIndex` drops `_commits` and writes its `b0`
-  * slices before the commit records `a0`, so a crash in that window
-  * leaves a `b0` orphan that only the data shows.
+  * marker yet (a store's first allocation).
   *
   * SINGLE WRITER ENFORCED by [[withWriterLock]]: the ledger's id
   * allocation is read-then-write, so two concurrent appends could
@@ -52,10 +50,9 @@ object Commits {
   }
 
   /** Create the marker — the append's atomic commit point. Also
-    * records the batch's attempt marker (idempotent): build/vacuum
-    * paths commit fixed ids without going through [[allocateBatchId]],
-    * and a committed id must count as attempted so the allocator's
-    * listing-only fast path stays armed after them.
+    * records the batch's attempt marker (idempotent), so a committed id
+    * always counts as attempted and the allocator's listing-only fast
+    * path stays armed.
     */
   def commit(spark: SparkSession, dir: String, batch: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_commits/b$batch")
@@ -280,13 +277,6 @@ object Commits {
     ()
   }
 
-  /** Drop the whole ledger (vacuum/rebuild resets to batch 0). */
-  def clear(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
-  }
-
   /** Next unused batch id: max `batch` present in the parquet data at
     * `dataPath` — orphans from crashed appends included, that is the
     * point — plus one; 0 for a store that does not exist yet or holds
@@ -347,16 +337,12 @@ object Commits {
     * regardless of scale. Crash safety is unchanged from the data-scan
     * allocator: the attempt marker lands BEFORE any data write, so a
     * crash at any later point burns the id (orphan rows stay invisible
-    * to readers, vacuum drops them, and the staged-ledger swap clears
-    * the spent markers) — the postings-only-orphan window stays closed
-    * without reading the postings. A store with NO attempt markers yet
-    * (a ledger reset by a rebuild that crashed before its commit) may
-    * hold marker-less orphans the ledger cannot see, so that first
-    * allocation also consults the data scan and takes the max of both;
-    * it then records a marker, making every later call listing-only.
-    * [[commit]] records the attempt marker alongside the commit marker,
-    * so build/vacuum paths that commit batch 0 directly re-arm the
-    * fast path immediately.
+    * to readers, the maintenance sweep drops them, and
+    * [[pruneAttemptMarkers]] keeps the ledger listing small) — the
+    * postings-only-orphan window stays closed without reading the
+    * postings. A store with NO attempt markers yet also consults the
+    * data scan for that first allocation and takes the max of both; it
+    * then records a marker, making every later call listing-only.
     */
   def allocateBatchId(spark: SparkSession, storeDir: String,
       dataPaths: Seq[String]): Long = {
@@ -365,12 +351,9 @@ object Commits {
     val id =
       if (attempts.nonEmpty) (attempts ++ committedIds).max + 1L
       else {
-        // No allocation is RECORDED here: a rebuild (`Search
-        // .buildIndex`) drops `_commits` and writes its `b0` slices
-        // before the commit records `a0`, so a crash in that window
-        // leaves a `b0` orphan with no marker at all. Take the max over
-        // the ledger AND a one-time data scan. This allocation records
-        // a marker, so every later call is listing-only.
+        // No allocation is RECORDED here yet: take the max over the
+        // ledger AND a one-time data scan. This allocation records a
+        // marker, so every later call is listing-only.
         val fromLedger = committedIds.maxOption.map(_ + 1L).getOrElse(0L)
         val fromData = dataPaths.map(nextBatchId(spark, _))
           .maxOption.getOrElse(0L)
@@ -383,9 +366,8 @@ object Commits {
   /** Prune spent attempt markers, keeping only the LARGEST `a<id>` —
     * the allocator takes max(attempted ∪ committed) + 1, so every
     * marker below the max is dead weight, and under an
-    * incremental-only maintenance cadence (which never resets the
-    * ledger the way the full vacuums do) one marker per mutation would
-    * otherwise grow the ledger LISTING — the op on every mutation
+    * maintenance cadence that never resets the ledger one marker per
+    * mutation would otherwise grow the ledger LISTING — the op on every mutation
     * path — without bound. Caller holds the writer lease. A crash
     * mid-prune leaves some stale markers: harmless, next prune gets
     * them.
@@ -474,11 +456,9 @@ object Commits {
 
   /** Is the snapshot layout at `snapshotDir` current w.r.t. the store
     * at `storeDir`? True iff its marker records exactly the store's
-    * committed-batch set. Every append/delete/vacuum changes that set,
-    * so any mutation after the snapshot reads as stale; the one alias
-    * (a vacuum-then-appends sequence recreating a previously-recorded
-    * set) is unobservable when refresh follows vacuum in the same
-    * maintenance pass, the `Streams.fanoutVacuum` order.
+    * committed-batch set. Every append, delete, vacuum and rebuild
+    * commits an id above every id ever attempted, so any mutation after
+    * the snapshot reads as stale.
     */
   def snapshotFresh(spark: SparkSession, snapshotDir: String,
       storeDir: String): Boolean = {

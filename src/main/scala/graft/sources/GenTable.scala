@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, max_by, sum,
   when}
@@ -16,12 +16,13 @@ import org.apache.spark.storage.StorageLevel
   * membership row, the non-key columns of the TOMBSTONE ROW a delete
   * writes, the GATE-HASH column whose equality makes a redelivered row
   * a no-op, its MEMBERSHIP table (one row per key per generation; a
-  * key's current generation is its max committed batch) and its
+  * key's current generation is its max committed batch), its
   * DEPENDENT tables (postings, chunks): rows keyed by (key, batch),
-  * live exactly when their membership row is. Each [[GenTable.Table]]
-  * names its live directory relative to the store (empty when the
-  * table is the store dir itself) and its staged directory under
-  * `_vacuum`, which the swap installs as the table's `b0`.
+  * live exactly when their membership row is, and its CARRIED tables
+  * (the PQ store's coarse centroids): per-generation `b<id>` dirs
+  * outside the key space. Each [[GenTable.Table]] names its directory
+  * relative to the store (empty when the table is the store dir
+  * itself); a carried table is named by its directory alone.
   *
   * The WRITE half, each under the store's writer lease:
   *   - [[currency]]: the per-key currency resolve (key, current batch,
@@ -32,65 +33,74 @@ import org.apache.spark.storage.StorageLevel
   *   - [[delete]]: one tombstone generation for the currently-live
   *     requested keys;
   *   - [[commitGeneration]]: allocate a batch id above every id ever
-  *     attempted, write the generation, commit it when it holds rows.
+  *     attempted, write the generation, commit it when it holds rows
+  *     (or always: a rebuild, a reroute, rules 1 and 4 below).
   *
   * Commit order: the allocation records the id's attempt marker
-  * BEFORE any data write, the store writes its generation (dependent
-  * tables before membership), and the commit marker lands LAST. A
-  * crash before the marker leaves rows under an uncommitted id —
-  * invisible to readers, never reused (the attempt marker burns it),
+  * BEFORE any data write, the store writes its generation (carried and
+  * dependent tables before membership), and the commit marker lands
+  * LAST. A crash before the marker leaves rows under an uncommitted id
+  * — invisible to readers, never reused (the attempt marker burns it),
   * swept by the next maintenance pass. A delete writes only membership
   * rows, so a crash anywhere in it leaves the store reading as it did.
   *
-  * The MAINTENANCE half, also under the lease:
-  *   - [[vacuumIncremental]]: rewrite only the batches whose dead-row
-  *     fraction reaches a threshold (dead = superseded by a later
-  *     generation, or any row of a key whose current row is a
-  *     tombstone); clean batches' files stay untouched, so the cost
-  *     scales with the dead data, not the corpus;
-  *   - [[compactBatches]]: fold the smallest batches so the committed
-  *     batch count comes down to a bound (the micro-batch cadence grows
-  *     it; directory listings and file handles pay for it at scale);
-  *   - [[vacuumFull]]: stage the live state as batch 0 and swap it in
-  *     (offline ledger reset). [[swapIn]] stages a full rewrite the
-  *     store computed itself (the PQ reroute).
+  * The MAINTENANCE half, also under the lease, is one pass — sweep,
+  * select, rewrite, reclaim — with three selections:
+  *   - [[vacuumIncremental]]: the batches whose dead-row fraction
+  *     reaches a threshold (dead = superseded by a later generation, or
+  *     any row of a key whose current row is a tombstone); clean
+  *     batches' files stay untouched, so the cost scales with the dead
+  *     data, not the corpus;
+  *   - [[compactBatches]]: the smallest batches, so the committed batch
+  *     count comes down to a bound (the micro-batch cadence grows it;
+  *     directory listings and file handles pay for it at scale);
+  *   - [[vacuumFull]]: every committed batch, leaving one batch with
+  *     one row per live key and no tombstone.
+  * [[replaceAll]] commits a rewrite the store computed itself (the PQ
+  * reroute) as one generation and reclaims every batch before it.
   *
-  * Both incremental operations rewrite the selected batches' survivors
-  * — live current generations, plus tombstones whose key still has rows
-  * in an UNSELECTED batch (dropping one would resurrect the older
+  * A pass rewrites the selected batches' survivors — live current
+  * generations, plus tombstones whose key still has rows in an
+  * UNSELECTED batch (dropping one would resurrect the older
   * generation) — as one fresh generation through [[commitGeneration]],
-  * then reclaim the selected batches. After the commit the reclaimed
+  * then reclaims the selected batches. After the commit the reclaimed
   * batches are merely superseded (max-batch resolution ignores them;
   * carried tombstones agree). Markers go before directories, so a crash
   * inside the reclaim leaves invisible orphans. Every state is readable
-  * and the next pass converges.
-  *
-  * The staged vacuum writes the stage COMPLETE (tables plus a staged
-  * `_commits/b0`) before touching the live store, then drops the live
-  * ledger FIRST: "staged ledger present, live ledger missing" means
-  * exactly "swap in progress", readers fail loudly instead of reading
-  * half-swapped tables, and [[repairCrashedSwap]] finishes the swap.
-  * Every maintenance entry point repairs BEFORE its orphan sweep — in
-  * that window the committed set reads empty, and an unguarded sweep
-  * would delete the just-renamed `b0` dirs, the only copy. A stage
-  * whose swap never started (live ledger intact) may be stale (appends
-  * can land after the crash) and is discarded, never installed.
+  * and the next pass converges. Its rules:
+  *   1. EMPTY STORES STAY BUILT: a pass whose selection covers every
+  *      committed batch commits its generation even when no row
+  *      survives, so a store with every key deleted reads as empty,
+  *      not as unbuilt.
+  *   2. A carried table lives per generation: the writer that produces
+  *      one (a PQ build or reroute) writes it under its own generation,
+  *      before the commit marker.
+  *   3. ONE READER RULE: the current carried dir is the one at the
+  *      largest committed id that has one ([[carriedDir]]).
+  *   4. CARRY FORWARD: a pass that reclaims the batch holding a current
+  *      carried dir first copies it under its own new generation, and
+  *      commits that generation even with zero rows.
+  *   5. Uncommitted carried dirs go in the same orphan sweep as the
+  *      other tables.
   */
 final class GenTable(private[graft] val key: String,
     private[graft] val isTombstone: Column,
     private[graft] val tombstone: Seq[Column], hash: String,
     membership: GenTable.Table, dependents: Seq[GenTable.Table] = Nil,
-    stagedExtras: Seq[String] = Nil) {
+    carried: Seq[String] = Nil) {
   import GenTable.{CurBatch, CurHash, CurTomb, Table}
 
-  /** Write, sweep, reclaim and swap order: dependents before
-    * membership (the crash contract above). */
+  /** Write, sweep and reclaim order: dependents before membership (the
+    * crash contract above). */
   private[graft] val tables = dependents :+ membership
 
   private def liveDir(dir: String, t: Table): String =
     if (t.live.isEmpty) dir else s"$dir/${t.live}"
 
-  private def stage(dir: String): String = s"$dir/${GenTable.StageDir}"
+  /** Every per-batch directory root of the store: carried, dependent,
+    * then membership tables. */
+  private def batchRoots(dir: String): Seq[String] =
+    carried.map(c => s"$dir/$c") ++ tables.map(liveDir(dir, _))
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -159,16 +169,23 @@ final class GenTable(private[graft] val key: String,
     * ledger with no attempt recorded yet, from every table's live dir),
     * run `write` — which writes the generation's rows under that id and
     * returns their count — and commit the id when the count is
-    * positive. Returns the count.
+    * positive, or `always`. Returns the count.
     */
-  private[graft] def commitGeneration(spark: SparkSession, dir: String)(
-      write: Long => Long): Long = {
+  private[graft] def commitGeneration(spark: SparkSession, dir: String,
+      always: Boolean = false)(write: Long => Long): Long = {
     val batchId = Commits.allocateBatchId(spark, dir,
       tables.map(liveDir(dir, _)))
     val n = write(batchId)
-    if (n > 0) Commits.commit(spark, dir, batchId)
+    if (n > 0 || always) Commits.commit(spark, dir, batchId)
     n
   }
+
+  /** The current dir of carried table `name` and its batch id: the
+    * `b<id>` dir at the largest `committed` id that has one. */
+  private[graft] def carriedDir(spark: SparkSession, dir: String,
+      committed: Seq[Long], name: String): Option[(Long, String)] =
+    Commits.batchDirs(fsOf(spark, dir), new Path(s"$dir/$name")).keys
+      .filter(committed.contains).maxOption.map(b => b -> s"$dir/$name/b$b")
 
   /** `rows` (no `batch` column) written as batch `batchId` of the
     * membership table. */
@@ -223,14 +240,18 @@ final class GenTable(private[graft] val key: String,
       .fold(Seq.empty[Long])(
         Commits.compactionSelection(_, committed, maxBatches)))
 
-  /** One incremental pass: repair, sweep, select, rewrite, reclaim. */
+  /** FULL vacuum: every committed batch rewritten as one generation —
+    * one row per live key, no tombstone. */
+  def vacuumFull(spark: SparkSession, dir: String): Unit =
+    maintain(spark, dir)(identity): Unit
+
+  /** One maintenance pass: sweep, select, rewrite, reclaim. */
   private def maintain(spark: SparkSession, dir: String)(
       select: Seq[Long] => Seq[Long]): Int =
    Commits.withWriterLock(spark, dir) {
-    repairCrashedSwap(spark, dir): Unit
     val committed = Commits.committed(spark, dir)
-    tables.foreach(t =>
-      Commits.sweepOrphanBatchDirs(spark, liveDir(dir, t), committed))
+    batchRoots(dir).foreach(
+      Commits.sweepOrphanBatchDirs(spark, _, committed))
     Commits.pruneAttemptMarkers(spark, dir)
     if (committed.isEmpty) return 0
     val selected = select(committed).sorted
@@ -270,8 +291,10 @@ final class GenTable(private[graft] val key: String,
   }
 
   /** Rewrite the `selected` batches' survivors as one fresh batch and
-    * COMMIT it. Package-private so specs can simulate a crash exactly
-    * here: new batch committed, reclaimed markers still present.
+    * COMMIT it — also with no survivor when the selection covers every
+    * committed batch (rule 1) or a carried dir moves into it (rule 4).
+    * Package-private so specs can simulate a crash exactly here: new
+    * batch committed, reclaimed markers still present.
     */
   private[graft] def rewriteAndCommit(spark: SparkSession, dir: String,
       committed: Seq[Long], selected: Seq[Long]): Unit = {
@@ -279,35 +302,42 @@ final class GenTable(private[graft] val key: String,
     val inSelected = col("batch").isin(selected: _*)
     val current = withCurrency(rows)
       .filter(inSelected && col("batch") === col(CurBatch))
-    val live = current.filter(!col(CurTomb))
     val tomb = current.filter(col(CurTomb))
       .join(rows.filter(!inSelected).select(col(key)), Seq(key),
         "left_semi")
-    val survivors = live.unionByName(tomb)
-      .select(rows.columns.filter(_ != "batch").map(col).toSeq: _*)
+    // Persisted with their batch: the live rows' (key, batch) pairs
+    // select the dependent rows from the same cached frame.
+    val survivors = current.filter(!col(CurTomb)).unionByName(tomb)
+      .select(rows.columns.map(col).toSeq: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val carry = carried.flatMap(c => carriedDir(spark, dir, committed, c)
+      .filter(d => selected.contains(d._1)).map(d => c -> d._2))
+    val keepBuilt = carry.nonEmpty || committed.forall(selected.contains)
     try {
-      val n = survivors.count()
-      if (n > 0) commitGeneration(spark, dir) { b =>
-        rewriteDependents(spark, dir, selected,
-          live.select(col(key), col("batch")), b,
-          t => s"${liveDir(dir, t)}/b$b")
-        writeMembership(survivors, dir, b)
-        n
-      }
+      if (keepBuilt || survivors.count() > 0)
+        commitGeneration(spark, dir, always = true) { b =>
+          val fs = fsOf(spark, dir)
+          carry.foreach { case (c, src) =>
+            FileUtil.copy(fs, new Path(src), fs, new Path(s"$dir/$c/b$b"),
+              false, spark.sparkContext.hadoopConfiguration)
+          }
+          rewriteDependents(spark, dir, selected,
+            survivors.filter(!isTombstone).select(col(key), col("batch")), b)
+          writeMembership(survivors.drop("batch"), dir, b)
+          0L
+        }: Unit
     } finally { survivors.unpersist(); () }
   }
 
   /** Each dependent table's rows in `batches` whose (key, batch) pair
-    * is in `keys`, rewritten as batch `batchId` to `out(table)`. */
+    * is in `keys`, rewritten as batch `batchId`. */
   private def rewriteDependents(spark: SparkSession, dir: String,
-      batches: Seq[Long], keys: DataFrame, batchId: Long,
-      out: Table => String): Unit =
+      batches: Seq[Long], keys: DataFrame, batchId: Long): Unit =
     dependents.foreach(t =>
       Commits.readCommittedBatches(spark, liveDir(dir, t), batches)
         .foreach(d => t.write(d.join(keys, Seq(key, "batch"))
           .withColumn("batch", lit(batchId)))
-          .write.parquet(out(t))))
+          .write.parquet(s"${liveDir(dir, t)}/b$batchId")))
 
   /** Remove the reclaimed batches' commit markers, then their
     * directories (marker first: a dir without a marker is an invisible
@@ -317,110 +347,33 @@ final class GenTable(private[graft] val key: String,
       selected: Seq[Long]): Unit = {
     selected.foreach(Commits.uncommit(spark, dir, _))
     val fs = fsOf(spark, dir)
-    for (t <- tables; b <- selected)
-      fs.delete(new Path(s"${liveDir(dir, t)}/b$b"), true): Unit
+    for (root <- batchRoots(dir); b <- selected)
+      fs.delete(new Path(s"$root/b$b"), true): Unit
   }
 
-  /** FULL vacuum: the store's live state rewritten as batch 0 through
-    * the staged swap. `live` is the store's current non-tombstone
-    * membership rows (with their `batch`, which keys the dependent
-    * rejoin); None when nothing is committed. A crashed swap found on
-    * entry is completed instead, and the call returns.
+  /** Replace the whole store: one generation that `write` produces —
+    * every live key, and every carried table it keeps — committed even
+    * with zero rows, then every batch committed before it reclaimed.
+    * In the window between the two, max-batch currency already answers
+    * from the new generation. Caller holds the writer lease.
     */
-  def vacuumFull(spark: SparkSession, dir: String)(
-      live: => Option[DataFrame]): Unit =
-    Commits.withWriterLock(spark, dir) {
-      if (!repairCrashedSwap(spark, dir)) live.foreach(swapIn(spark, dir, _))
-    }
-
-  /** Stage `live` as batch 0 — dependent rows rejoined on the live
-    * (key, batch) pairs, then the membership rows — plus the `extras`
-    * (each named in `stagedExtras`), commit the staged ledger, and swap.
-    * Caller holds the writer lease and has run [[repairCrashedSwap]].
-    */
-  private[graft] def swapIn(spark: SparkSession, dir: String,
-      live: DataFrame, extras: Seq[(String, DataFrame)] = Nil): Unit = {
-    require(extras.forall(e => stagedExtras.contains(e._1)),
-      s"unstaged extras ${extras.map(_._1)}; the swap moves $stagedExtras")
-    val fs = fsOf(spark, dir)
-    val st = stage(dir)
-    // A leftover stage is incomplete (crash mid-stage-write) or was
-    // never swapped in (live ledger intact): discard it.
-    fs.delete(new Path(st), true)
-    if (dependents.nonEmpty)
-      rewriteDependents(spark, dir, Commits.committed(spark, dir),
-        live.select(col(key), col("batch")), 0L, t => s"$st/${t.staged}")
-    live.withColumn("batch", lit(0L))
-      .write.parquet(s"$st/${membership.staged}")
-    extras.foreach { case (name, df) => df.write.parquet(s"$st/$name") }
-    Commits.commit(spark, st, 0L)
-    Commits.clear(spark, dir)
-    swapFromStage(fs, dir)
-  }
-
-  /** Detect-and-repair the staged swap's crash window (staged ledger
-    * present, live ledger missing): finish the swap. Returns true when
-    * a repair ran.
-    */
-  private[graft] def repairCrashedSwap(spark: SparkSession,
-      dir: String): Boolean = {
-    val fs = fsOf(spark, dir)
-    if (fs.exists(new Path(s"${stage(dir)}/_commits/b0")) &&
-        !fs.exists(new Path(s"$dir/_commits"))) {
-      swapFromStage(fs, dir)
-      true
-    } else false
-  }
-
-  /** Install the stage: each table's staged dir replaces every
-    * non-hidden entry of the live table as its `b0`, then the
-    * staged extras and the staged ledger move in. Safe to re-run after
-    * a crash at any step, with no manifest: a staged piece still
-    * present means the live copy is stale and is replaced; a staged
-    * piece already gone was moved by the crashed predecessor, so the
-    * live `b0` holds the only copy and stays.
-    */
-  private def swapFromStage(fs: FileSystem, dir: String): Unit = {
-    val st = stage(dir)
-    tables.foreach { t =>
-      val staged = new Path(s"$st/${t.staged}")
-      val live = new Path(liveDir(dir, t))
-      val stagedPresent = fs.exists(staged)
-      if (fs.exists(live))
-        fs.listStatus(live).filter { s =>
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".") &&
-            (stagedPresent || n != "b0")
-        }.foreach(s => fs.delete(s.getPath, true))
-      if (stagedPresent) {
-        fs.mkdirs(live)
-        fs.rename(staged, new Path(live, "b0")): Unit
-      }
-    }
-    (stagedExtras :+ "_commits").foreach { name =>
-      val src = new Path(s"$st/$name")
-      if (fs.exists(src)) {
-        fs.delete(new Path(s"$dir/$name"), true)
-        fs.rename(src, new Path(s"$dir/$name")): Unit
-      }
-    }
-    fs.delete(new Path(st), true): Unit
+  private[graft] def replaceAll(spark: SparkSession, dir: String)(
+      write: Long => Unit): Unit = {
+    val committed = Commits.committed(spark, dir)
+    commitGeneration(spark, dir, always = true) { b => write(b); 0L }: Unit
+    reclaim(spark, dir, committed)
   }
 }
 
 object GenTable {
 
   /** One table of a generational store: `live` is its directory under
-    * the store (empty: the store dir itself), `staged` its batch-0
-    * directory under the `_vacuum` stage, and `write` the layout
+    * the store (empty: the store dir itself), and `write` the layout
     * transform applied to every rewrite of it (the postings keep their
     * term clustering).
     */
-  final case class Table(live: String, staged: String,
+  final case class Table(live: String,
       write: DataFrame => DataFrame = identity)
-
-  /** The full vacuum's stage directory under a store. */
-  val StageDir = "_vacuum"
 
   /** Column names of [[GenTable.currency]]'s per-key row: the key's
     * current batch, its gate hash there, and whether it is a tombstone.

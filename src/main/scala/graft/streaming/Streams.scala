@@ -469,8 +469,7 @@ object Streams {
   private[graft] val ChunkStore = new GenTable("doc_id",
     col("content_hash") === Tombstone,
     Seq(lit(Tombstone).as("content_hash")), "content_hash",
-    GenTable.Table("docs", "docs/b0"),
-    Seq(GenTable.Table("chunks", "chunks/b0")))
+    GenTable.Table("docs"), Seq(GenTable.Table("chunks")))
 
   /** INCREMENTAL chunk-store vacuum ([[GenTable.vacuumIncremental]]):
     * batches whose dead-row fraction (superseded generations + rows of
@@ -1905,8 +1904,8 @@ object Streams {
     // incremental=true is the ROUTINE cadence at scale: reclaim only
     // the batches the interval's mutations dirtied
     // (Search.indexVacuumIncremental) instead of rewriting the full
-    // live state — keep the full compaction for occasional offline
-    // ledger resets. `minDeadFraction` guards the cadence's whole
+    // live state — keep the full vacuum for occasional compaction to
+    // one batch. `minDeadFraction` guards the cadence's whole
     // point: at threshold 0 a single dead row inside the store's big
     // compacted batch would select it for a full rewrite every
     // interval — the default 0.25 leaves lightly-dirty bulk batches

@@ -74,7 +74,8 @@ class PqTrainerParitySpec extends SparkSpec {
       .toMap
 
   private def readCoarse(dir: String): Map[Long, Seq[Double]] =
-    spark.read.parquet(s"$dir/coarse")
+    // The build's generation holds the store's one coarse dir.
+    spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/coarse")
       .select(col("cid"), col("centroid"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq)

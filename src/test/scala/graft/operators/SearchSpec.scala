@@ -383,107 +383,6 @@ class SearchSpec extends SparkSpec {
       s2.getAs[Long]("postings_rows_total"))
   }
 
-  test("a vacuum crashed mid-swap is repaired by the next vacuum call") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25-vac")
-      .toString + "/index"
-    Search.buildIndex(docs, "doc_id", "text", dir)
-    Search.indexAppend(
-      Seq((4L, "vector vector index updated")).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    val terms = Seq("spark", "vector")
-    val want = Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq
-    // Simulate the crash window the staged ledger exists for: the
-    // stage is complete (tables + _commits/b0) but the swap died after
-    // deleting the LIVE ledger — the store is visibly dead (readers
-    // require committed state)...
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    val cur = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/docs")
-      .filter(col("content_hash") =!= "__tombstone__")
-      .groupBy("doc_id")
-      .agg(max_by(col("dl"), col("batch")).as("dl"),
-        max_by(col("content_hash"), col("batch")).as("content_hash"),
-        max(col("batch")).as("batch"))
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/postings")
-      .join(cur.select("doc_id", "batch"), Seq("doc_id", "batch"))
-      .withColumn("batch", lit(0L)).write.parquet(s"$stage/postings/b0")
-    cur.withColumn("batch", lit(0L)).write.parquet(s"$stage/docs/b0")
-    graft.sources.Commits.commit(spark, stage, 0L)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_commits"), true)
-    intercept[IllegalArgumentException] {
-      Search.bm25FromIndexTopK(spark, dir, terms, 10)
-    }
-    // ...until the next vacuum detects the finished stage and completes
-    // the outstanding renames: answers return, compacted to batch 0.
-    Search.indexVacuum(spark, dir)
-    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq == want)
-    assert(graft.sources.Commits.committed(spark, dir) == Seq(0L))
-    val docRows = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/docs")
-    assert(docRows.count() == docRows.select("doc_id").distinct().count())
-  }
-
-  test("vacuum repair covers mid-rename crashes; a never-swapped stage " +
-      "is discarded as stale") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25-vac2")
-      .toString + "/index"
-    Search.buildIndex(docs, "doc_id", "text", dir)
-    Search.indexAppend(
-      Seq((4L, "vector vector index updated")).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    val terms = Seq("spark", "vector")
-    val want = Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    def stageLiveCopy(): Unit = {
-      val cur = spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$dir/docs")
-        .filter(col("content_hash") =!= "__tombstone__")
-        .groupBy("doc_id")
-        .agg(max_by(col("dl"), col("batch")).as("dl"),
-          max_by(col("content_hash"), col("batch")).as("content_hash"),
-          max(col("batch")).as("batch"))
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$dir/postings")
-        .join(cur.select("doc_id", "batch"), Seq("doc_id", "batch"))
-        .withColumn("batch", lit(0L)).write.parquet(s"$stage/postings/b0")
-      cur.withColumn("batch", lit(0L)).write.parquet(s"$stage/docs/b0")
-      graft.sources.Commits.commit(spark, stage, 0L)
-    }
-    // Window 1 — the swap died BETWEEN deleting the live postings dir
-    // and renaming the staged one in: live ledger gone (dropped first),
-    // live postings gone, stage holds their only copy. A repair keyed
-    // on anything but the missing live ledger would discard that copy.
-    stageLiveCopy()
-    graft.sources.Commits.clear(spark, dir)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings"), true)
-    Search.indexVacuum(spark, dir)
-    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq == want)
-    assert(graft.sources.Commits.committed(spark, dir) == Seq(0L))
-    // Window 2 — a complete stage whose swap never started (live ledger
-    // intact), then an append landed. The stage is STALE: vacuum must
-    // discard it and re-compact, never install it over the newer data.
-    stageLiveCopy()
-    Search.indexAppend(
-      Seq((6L, "spark spark spark freshly appended")).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    val wantWithNew = Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq
-    assert(wantWithNew.exists(_.getLong(0) == 6L))
-    Search.indexVacuum(spark, dir)
-    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq == wantWithNew)
-    assert(graft.sources.Commits.committed(spark, dir) == Seq(0L))
-  }
-
   test("bucketed postings probe is bit-identical to the sorted layout") {
     val dir = java.nio.file.Files.createTempDirectory("bm25-bk")
       .toString + "/index"
@@ -527,6 +426,20 @@ class SearchSpec extends SparkSpec {
     Search.bucketPostings(spark, dir, "graft_postings_bucketed_spec",
       numBuckets = 4)
     assert(graft.sources.Commits.snapshotFresh(spark, snap, dir))
+  }
+
+  test("a rebuild never recommits a set a bucketed snapshot recorded") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25-rebuild-alias")
+      .toString + "/index"
+    val snap = s"$dir/postings_bucketed"
+    Search.buildIndex(docs, "doc_id", "text", dir)
+    Search.bucketPostings(spark, dir, "graft_postings_rebuild_alias_spec",
+      numBuckets = 2)
+    assert(graft.sources.Commits.snapshotFresh(spark, snap, dir))
+    Search.buildIndex(docs.filter(col("doc_id") =!= 1L), "doc_id", "text",
+      dir)
+    assert(!graft.sources.Commits.snapshotFresh(spark, snap, dir),
+      "the rebuild recommitted the set the snapshot recorded")
   }
 
   test("moreLikeThisTopK works on non-numeric doc ids") {
@@ -739,57 +652,6 @@ class SearchSpec extends SparkSpec {
     assert(Search.indexAppend(
       Seq((200L, "spark post compact")).toDF("doc_id", "text"),
       "doc_id", "text", dir) == 1L)
-  }
-
-  test("incremental maintenance inside a crashed full-vacuum swap " +
-      "repairs it — never sweeps the only copy") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25-ivac5")
-      .toString + "/index"
-    Search.buildIndex(docs, "doc_id", "text", dir)
-    Search.indexAppend(
-      Seq((4L, "vector vector index updated")).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    val terms = Seq("spark", "vector")
-    val want = Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq
-    // Construct the WORST mid-swap window: stage complete (live copy +
-    // staged ledger), live ledger dropped, live tables deleted, and the
-    // postings piece ALREADY renamed in. committed reads EMPTY here —
-    // an unguarded orphan sweep would delete postings/b0, the only
-    // copy of the corpus.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    val cur = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/docs")
-      .groupBy("doc_id")
-      .agg(max_by(col("dl"), col("batch")).as("dl"),
-        max_by(col("content_hash"), col("batch")).as("content_hash"),
-        max(col("batch")).as("batch"))
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/postings")
-      .join(cur.select("doc_id", "batch"), Seq("doc_id", "batch"))
-      .withColumn("batch", lit(0L)).write.parquet(s"$stage/postings/b0")
-    cur.withColumn("batch", lit(0L)).write.parquet(s"$stage/docs/b0")
-    graft.sources.Commits.commit(spark, stage, 0L)
-    graft.sources.Commits.clear(spark, dir)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/docs"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$stage/postings"),
-      new org.apache.hadoop.fs.Path(s"$dir/postings"))
-    // The incremental vacuum must detect the window, complete the
-    // swap, and find nothing dirty — not sweep postings/b0.
-    assert(Search.indexVacuumIncremental(spark, dir) == 0)
-    assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
-      .collect().toSeq == want,
-      "crashed-swap repair lost data on the incremental path")
-    assert(graft.sources.Commits.committed(spark, dir) == Seq(0L))
-    // Same guard on the compaction entry point: a second crash window
-    // is repaired there too.
-    Search.indexAppend(
-      Seq((9L, "vector spark extra")).toDF("doc_id", "text"),
-      "doc_id", "text", dir)
-    assert(Search.indexCompactBatches(spark, dir, maxBatches = 8) == 0)
   }
 
   test("incremental vacuum sweeps orphan batch dirs from crashed appends") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -324,10 +325,8 @@ class SimilaritySpec extends SparkSpec {
       Seq((9L, Seq(1.0f, 1.0f, 1.0f, 1.0f))).toDF("id", "vec"), dir) == 1)
   }
 
-  test("a PQ vacuum crashed mid-swap is repaired by the next " +
-      "maintenance call; fresh store plans no currency aggregate") {
-    import org.apache.hadoop.fs.Path
-    import graft.sources.Commits
+  test("a freshly-vacuumed PQ store's probe plans no currency " +
+      "aggregate; tombstones are physically gone") {
     val dir = java.nio.file.Files
       .createTempDirectory("pq-vac").toString + "/store"
     Similarity.pqStoreBuild(pqPts, dir, m = 2, subDims = 2, codes = 2,
@@ -340,37 +339,10 @@ class SimilaritySpec extends SparkSpec {
     def rows() = probe().select("cid", "approx_d2", "rnk")
       .as[(Long, Double, Int)].collect().toSeq.sorted
     val want = rows()
-    // Multi-batch probe resolves currency; the codebook/coarse
-    // metadata must survive the swap untouched.
     assert(probe().queryExecution.executedPlan.toString()
       .contains("max_by"), "multi-batch probe lost its currency resolve")
-    // Simulate a vacuum that died MID-SWAP in the worst window: stage
-    // complete, live ledger dropped, old rows dirs deleted, staged b0
-    // already moved in — repair must keep the moved dir.
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    val committed = Commits.committed(spark, dir)
-    val all = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/rows").filter(col("batch").isin(committed: _*))
-    val perId = all.groupBy(col("id")).agg(max(col("batch")).as("batch"))
-    all.join(perId, Seq("id", "batch")).filter(size(col("codes")) > 0)
-      .withColumn("batch", lit(0L)).write.parquet(s"$stage/b0")
-    Commits.commit(spark, stage, 0L)
-    Commits.clear(spark, dir)
-    fs.listStatus(new Path(s"$dir/rows"))
-      .filter { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.foreach(s => fs.delete(s.getPath, true))
-    fs.rename(new Path(s"$stage/b0"), new Path(s"$dir/rows/b0"))
-    // Store visibly dead (readers require committed state)...
-    intercept[IllegalArgumentException] { rows() }
-    // ...until the next vacuum completes the swap.
     Similarity.pqStoreVacuum(spark, dir)
     assert(rows() == want)
-    assert(Commits.committed(spark, dir) == Seq(0L))
-    // Single-batch store: currency aggregate gone from the plan.
     assert(!probe().queryExecution.executedPlan.toString()
       .contains("max_by"),
       "freshly-vacuumed PQ probe still plans the currency aggregate")
@@ -504,64 +476,87 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Double, Int)].collect().toSeq.sorted
     val want = rows(0)
     intercept[RuntimeException] { rows(1) }  // unrouted: no coarse yet
+    val built = Commits.committed(spark, dir)
     Similarity.pqStoreReroute(spark, dir, cells = 2)
     // Routing only prunes, never perturbs: the unrouted scan is
     // IDENTICAL post-reroute, and probing every cell reduces to it.
     assert(rows(0) == want, "reroute changed ADC answers")
     assert(rows(2) == want, "nprobe=cells must reduce to the full scan")
-    assert(Commits.committed(spark, dir) == Seq(0L),
-      "reroute must land as the single compacted batch")
+    val rerouted = Commits.committed(spark, dir)
+    assert(rerouted.size == 1 && rerouted.head > built.max,
+      "reroute must land as one batch above every id committed before")
     assert(!spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$dir/rows").select("id")
       .as[Long].collect().contains(3L), "reroute carried a tombstone")
-    // Crashed-swap window of a SECOND reroute: stage complete (rows
-    // re-stamped to cell 7 + a one-centroid coarse + staged ledger),
-    // live ledger dropped, nothing moved. The next maintenance call
-    // must move ROWS AND COARSE together.
+    // Two crash points of a SECOND reroute, to one cell (every query
+    // then routes to it, so nprobe = 1 equals the full scan). Its
+    // generation is taken from a real reroute of a copy of the store.
+    val routed = rows(1)
+    assert(routed != want, "two cells must prune the nprobe = 1 probe")
     val fs = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/rows")
-      .drop("batch").withColumn("cell", lit(7L))
-      .withColumn("batch", lit(0L))
-      .write.parquet(s"$stage/b0")
-    Seq((7L, Seq(0.05, 0.05, 0.05, 0.05))).toDF("cid", "centroid")
-      .coalesce(1).write.parquet(s"$stage/coarse")
-    Commits.commit(spark, stage, 0L)
-    Commits.clear(spark, dir)
-    intercept[IllegalArgumentException] { rows(0) }  // visibly dead
-    Similarity.pqStoreVacuumIncremental(spark, dir): Unit  // repairs
-    assert(rows(0) == want)
-    // The staged coarse moved with the rows: one cell, every query
-    // routes to it, so nprobe=1 now equals the full scan.
-    assert(spark.read.parquet(s"$dir/coarse").count() == 1)
-    assert(rows(1) == want,
-      "staged coarse did not move with the re-stamped rows")
-    assert(!fs.exists(new Path(stage)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val copy = java.nio.file.Files
+      .createTempDirectory("pq-reroute-copy").toString + "/store"
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(dir), fs,
+      new Path(copy), false, conf)
+    Similarity.pqStoreReroute(spark, copy, cells = 1)
+    val next = Commits.committed(spark, copy).max
+    val written = Seq(s"rows/b$next", s"coarse/b$next")
+    // Crash after the rows and the coarse are written, before the
+    // commit: probes answer as before the reroute...
+    Commits.recordAttempt(spark, dir, next)
+    written.foreach(d => org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(s"$copy/$d"), fs, new Path(s"$dir/$d"), false, conf))
+    assert(rows(0) == want && rows(1) == routed,
+      "an uncommitted reroute changed answers")
+    // ...and the next pass sweeps both orphans.
+    assert(Similarity.pqStoreVacuumIncremental(spark, dir) == 0)
+    assert(written.forall(d => !fs.exists(new Path(s"$dir/$d"))),
+      "the crashed reroute's rows or coarse survived the sweep")
+    assert(rows(0) == want && rows(1) == routed)
+    // Crash after the commit, before the reclaim: probes answer as
+    // after the reroute.
+    written.foreach(d => org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(s"$copy/$d"), fs, new Path(s"$dir/$d"), false, conf))
+    Commits.commit(spark, dir, next)
+    assert(Commits.committed(spark, dir).sorted == rerouted :+ next)
+    assert(rows(0) == want, "reroute changed ADC answers")
+    assert(rows(1) == want, "committed reroute did not route to one cell")
   }
 
-  test("pqStoreReroute repairs a crashed swap before its sweep") {
+  test("a pass that reclaims the rerouted batch carries its coarse " +
+      "forward; routed answers unchanged") {
     import graft.sources.Commits
     val dir = java.nio.file.Files
-      .createTempDirectory("pq-reroute-rep").toString + "/store"
+      .createTempDirectory("pq-carry").toString + "/store"
     Similarity.pqStoreBuild(pqPts, dir, m = 2, subDims = 2, codes = 2,
       iters = 2)
-    // Crashed-vacuum window: stage complete (rows copy + staged
-    // ledger), live ledger dropped, nothing moved. Every maintenance
-    // entry point must complete this swap FIRST — a reroute that read
-    // before repairing would die on a misleading "no committed build".
-    val stage = s"$dir/_vacuum"
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/rows").write.parquet(s"$stage/b0")
-    Commits.commit(spark, stage, 0L)
-    Commits.clear(spark, dir)
     Similarity.pqStoreReroute(spark, dir, cells = 2)
-    val q = Seq((2L, Seq(0.1f, 0.0f, 0.0f, 0.1f))).toDF("id", "vec")
-    val got = Similarity.pqStoreTopK(spark, dir, q, k = 5, nprobe = 2)
-      .select("cid").as[Long].collect().toSet
-    assert(got == Set(0L, 1L, 3L, 4L),
-      s"repaired+rerouted store must answer the full corpus: $got")
+    val rerouted = Commits.committed(spark, dir)
+    // Re-embed EVERY id: the reroute's batch holds no live row, so the
+    // incremental pass rewrites zero rows and must still commit.
+    Similarity.pqStoreAppend(pqPts.withColumn("vec",
+      transform(col("vec"), x => x * lit(1.01f))), dir)
+    val q = Seq((2L, Seq(0.1f, 0.0f, 0.0f, 0.1f)),
+      (3L, Seq(10.0f, 10.1f, 9.9f, 10.0f))).toDF("id", "vec")
+    def rows(nprobe: Int) =
+      Similarity.pqStoreTopK(spark, dir, q, k = 4, nprobe = nprobe)
+        .collect().map(_.toString).toSeq.sorted
+    val want = Seq(1, 2).map(rows)
+    def coarseAtNewest(): Unit = {
+      val committed = Commits.committed(spark, dir)
+      assert(Similarity.PqStore.carriedDir(spark, dir, committed, "coarse")
+        .map(_._1).contains(committed.max),
+        "the coarse did not move into the pass's generation")
+    }
+    assert(Similarity.pqStoreVacuumIncremental(spark, dir) == 1)
+    assert(Commits.committed(spark, dir).forall(!rerouted.contains(_)))
+    coarseAtNewest()
+    assert(Seq(1, 2).map(rows) == want, "incremental pass lost the coarse")
+    assert(Similarity.pqStoreCompactBatches(spark, dir, maxBatches = 1) == 2)
+    coarseAtNewest()
+    assert(Seq(1, 2).map(rows) == want, "compaction lost the coarse")
   }
 
   test("pqStoreStats reports live/superseded/tombstone shape") {
@@ -934,54 +929,31 @@ class SimilaritySpec extends SparkSpec {
     assert(v.getAs[Long]("superseded_rows") == 0L)
   }
 
-  test("an ANN vacuum crashed mid-swap is repaired by the next vacuum") {
-    import org.apache.hadoop.fs.Path
+  test("a full ANN vacuum never revives a set a partitioned snapshot " +
+      "recorded; the auto probe answers as the store") {
     import graft.sources.Commits
-    val dir = java.nio.file.Files.createTempDirectory("ann-vac")
-      .toString + "/idx"
-    val vecs = (0 until 20).map { i =>
+    val root = java.nio.file.Files.createTempDirectory("ann-alias").toString
+    val (dir, part) = (s"$root/idx", s"$root/part")
+    val vecs = (0 until 8).map { i =>
       (i.toLong, Seq(math.cos(i * 0.7).toFloat, math.sin(i * 1.3).toFloat))
-    }.toDF("id", "vec")
-    Similarity.annStoreAppend(vecs, dir, planes = 4, dims = 2)
-    Similarity.annStoreDelete(spark, dir, Seq(7L).toDF("id"))
-    val queries = vecs.filter(col("id") < 3)
-    def rows() = Similarity.annStoreTopK(spark, dir, queries,
-      planes = 4, dims = 2, k = 3)
-      .select("qid", "cid", "score", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
-    val want = rows()
-    // Simulate a vacuum that died MID-SWAP in the WORST window: stage
-    // complete (live rows + staged ledger), live ledger dropped, old
-    // batch dirs deleted, and the staged b0 ALREADY MOVED IN — the
-    // repair must recognize the moved dir as the only live copy and
-    // keep it, not delete it as stale junk.
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    val committed = Commits.committed(spark, dir)
-    val all = spark.read.option("recursiveFileLookup", "true").parquet(dir)
-      .filter(col("batch").isin(committed: _*))
-    val perId = all.groupBy(col("id")).agg(max(col("batch")).as("batch"))
-    all.join(perId, Seq("id", "batch")).filter(size(col("qvec")) > 0)
-      .withColumn("batch", lit(0L)).write.parquet(s"$stage/b0")
-    Commits.commit(spark, stage, 0L)
-    Commits.clear(spark, dir)
-    fs.listStatus(new Path(dir))
-      .filter { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.foreach(s => fs.delete(s.getPath, true))
-    fs.rename(new Path(s"$stage/b0"), new Path(s"$dir/b0"))
-    // The store is visibly dead (readers require committed state)...
-    intercept[IllegalArgumentException] { rows() }
-    // ...until the next vacuum completes the swap: answers return,
-    // compacted to one committed batch with one row per live id.
+    }
+    Similarity.annStoreAppend(vecs.toDF("id", "vec"), dir, 4, 2)
+    Similarity.annStorePartition(spark, dir, part)
+    assert(Commits.snapshotFresh(spark, part, dir))
+    // Id 50 is a scaled copy of id 4: same bucket, same cosine.
+    val v4 = vecs(4)._2
+    Similarity.annStoreAppend(Seq((50L, v4.map(_ * 1.5f))).toDF("id", "vec"),
+      dir, 4, 2)
     Similarity.annStoreVacuum(spark, dir)
-    assert(rows() == want)
-    assert(Commits.committed(spark, dir) == Seq(0L))
-    val store = spark.read.option("recursiveFileLookup", "true").parquet(dir)
-    assert(store.count() == store.select("id").distinct().count())
-    assert(!store.select("id").as[Long].collect().contains(7L))
+    assert(!Commits.snapshotFresh(spark, part, dir),
+      "the vacuum revived the committed set the snapshot recorded")
+    val q = Seq((999L, v4.map(_ * 2.0f))).toDF("id", "vec")
+    def got(df: DataFrame) = df.select("cid", "score", "rnk")
+      .as[(Long, Double, Int)].collect().toSeq.sorted
+    val store = got(Similarity.annStoreTopK(spark, dir, q, 4, 2, k = 3))
+    assert(store.map(_._1).contains(50L))
+    assert(got(Similarity.annStoreTopKAuto(spark, dir, q, 4, 2, k = 3,
+      partDir = Some(part))) == store)
   }
 
   test("incremental ANN vacuum reclaims dirty batches, carries " +
@@ -1101,43 +1073,6 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSeq.sorted
     assert(rows(dir) == rows(fresh),
       "backfilled store probes differently from a fresh build")
-  }
-
-  test("incremental ANN maintenance repairs a crashed full-vacuum swap " +
-      "instead of sweeping the only copy") {
-    import org.apache.hadoop.fs.Path
-    import graft.sources.Commits
-    val dir = java.nio.file.Files.createTempDirectory("ann-ivac-swap")
-      .toString + "/idx"
-    val vecs = (0 until 20).map { i =>
-      (i.toLong, Seq(math.cos(i * 0.7).toFloat, math.sin(i * 1.3).toFloat))
-    }.toDF("id", "vec")
-    Similarity.annStoreAppend(vecs, dir, planes = 4, dims = 2)
-    val queries = vecs.filter(col("id") < 3)
-    def rows() = Similarity.annStoreTopK(spark, dir, queries,
-      planes = 4, dims = 2, k = 3)
-      .select("qid", "cid", "score", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
-    val want = rows()
-    // Mid-swap window: stage complete, live ledger dropped, live batch
-    // dirs deleted, staged b0 already renamed in (uncommitted).
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/_vacuum"
-    spark.read.option("recursiveFileLookup", "true").parquet(dir)
-      .withColumn("batch", lit(0L)).write.parquet(s"$stage/b0")
-    Commits.commit(spark, stage, 0L)
-    Commits.clear(spark, dir)
-    fs.listStatus(new Path(dir)).filter { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }.foreach(s => fs.delete(s.getPath, true))
-    fs.rename(new Path(s"$stage/b0"), new Path(s"$dir/b0"))
-    // Must repair, not sweep b0 as an orphan.
-    assert(Similarity.annStoreVacuumIncremental(spark, dir) == 0)
-    assert(rows() == want,
-      "ANN crashed-swap repair lost data on the incremental path")
-    assert(Commits.committed(spark, dir) == Seq(0L))
   }
 
   test("annStoreCompactBatches folds micro-batches without changing " +

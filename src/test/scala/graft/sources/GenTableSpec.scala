@@ -125,6 +125,21 @@ class GenTableSpec extends SparkSpec {
   private def batchDirs(dir: String, t: GenTable.Table): Set[Long] =
     Commits.batchDirs(fs(dir), new Path(tableDir(dir, t))).keySet
 
+  /** A copy of the store at `dir`, for a pass that must not touch it. */
+  private def copyOf(s: StoreCase, dir: String, tag: String): String = {
+    val copy = freshDir(s, tag)
+    FileUtil.copy(fs(dir), new Path(dir), fs(copy), new Path(copy), false,
+      spark.sparkContext.hadoopConfiguration)
+    copy
+  }
+
+  /** Every row on disk, committed or not, of each of the store's
+    * tables, without its batch id: what a pass left physically live. */
+  private def onDisk(s: StoreCase, dir: String): Seq[Seq[String]] =
+    s.table.tables.map(t => sorted(spark.read
+      .option("recursiveFileLookup", "true").parquet(tableDir(dir, t))
+      .drop("batch")))
+
   /** Every committed key appears exactly once: the store converged. */
   private def assertConverged(s: StoreCase, dir: String): Unit = {
     val rows = Commits.readCommittedBatches(spark,
@@ -174,55 +189,45 @@ class GenTableSpec extends SparkSpec {
       assert(s.read(dir) == want)
     }
 
-    test(s"${s.name}: incremental and compaction passes complete a " +
-        "crashed full-vacuum swap before sweeping") {
-      val dir = freshDir(s, "swap")
+    test(s"${s.name}: deleting every key leaves an empty but built " +
+        "store after an incremental pass, a full vacuum or a compaction") {
+      val dir = freshDir(s, "empty")
+      s.build(dir)
+      val all = s.liveIds(dir)
+      // The core delete the stores' public deletes delegate to.
+      assert(s.table.delete(spark, dir, all.toSeq.toDF("k"), Set.empty) ==
+        all.size)
+      val passes = Seq[(String, String => Any)](
+        "vacuumIncremental" -> (d => s.table.vacuumIncremental(spark, d, 0.0)),
+        "vacuumFull" -> (d => s.table.vacuumFull(spark, d)),
+        "compactBatches" -> (d => s.table.compactBatches(spark, d, 1)))
+      for ((pass, run) <- passes) {
+        val d = copyOf(s, dir, s"empty-$pass")
+        run(d)
+        assert(Commits.committed(spark, d).size == 1,
+          s"${s.name}/$pass: the pass left no single committed batch")
+        assert(s.read(d).isEmpty && s.liveIds(d).isEmpty,
+          s"${s.name}/$pass: an all-deleted store read non-empty")
+        assert(s.append(d, 1L) == 1L)
+        assert(s.liveIds(d) == Set(1L), s"${s.name}/$pass: append lost")
+      }
+    }
+
+    test(s"${s.name}: vacuumFull leaves the answers and the on-disk rows " +
+        "of an incremental pass followed by a compaction to one") {
+      val dir = freshDir(s, "full")
       s.build(dir)
       val want = s.read(dir)
-      // A complete stage, built by a real full vacuum of a copy: each
-      // table's b0 and the ledger move under the stage of `dir`.
-      val copy = freshDir(s, "swapcopy")
-      FileUtil.copy(fs(dir), new Path(dir), fs(dir), new Path(copy), false,
-        spark.sparkContext.hadoopConfiguration)
-      val rows = Commits.readCommittedBatches(spark,
-        tableDir(copy, s.table.tables.last), Commits.committed(spark, copy))
-        .get
-      s.table.vacuumFull(spark, copy)(Some(rows
-        .join(rows.groupBy(s.table.key).agg(max("batch").as("batch")),
-          Seq(s.table.key, "batch")).filter(!s.table.isTombstone)))
-      val stage = s"$dir/${GenTable.StageDir}"
-      def crash(): Unit = {
-        for (t <- s.table.tables)
-          FileUtil.copy(fs(dir), new Path(s"${tableDir(copy, t)}/b0"),
-            fs(dir), new Path(s"$stage/${t.staged}"), false,
-            spark.sparkContext.hadoopConfiguration)
-        FileUtil.copy(fs(dir), new Path(s"$copy/_commits"), fs(dir),
-          new Path(s"$stage/_commits"), false,
-          spark.sparkContext.hadoopConfiguration)
-        // Worst window: live ledger dropped, the first table's staged
-        // b0 already moved in. The committed set reads empty, so an
-        // unguarded orphan sweep would delete that b0, the only copy.
-        Commits.clear(spark, dir)
-        val first = s.table.tables.head
-        val live = new Path(tableDir(dir, first))
-        fs(dir).listStatus(live).filter { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }.foreach(st => fs(dir).delete(st.getPath, true))
-        fs(dir).rename(new Path(s"$stage/${first.staged}"),
-          new Path(live, "b0"))
-      }
-      crash()
-      intercept[Exception](s.read(dir))  // visibly dead mid-swap
-      assert(s.table.vacuumIncremental(spark, dir, 0.0) == 0)
-      assert(s.read(dir) == want, s"${s.name}: repair lost data")
-      assert(Commits.committed(spark, dir) == Seq(0L))
-      assert(!fs(dir).exists(new Path(stage)))
-      // The compaction entry point repairs the same window.
-      crash()
-      assert(s.table.compactBatches(spark, dir, 1) == 0)
-      assert(s.read(dir) == want)
-      assert(Commits.committed(spark, dir) == Seq(0L))
+      val passes = copyOf(s, dir, "passes")
+      s.table.vacuumFull(spark, dir)
+      s.table.vacuumIncremental(spark, passes, 0.0): Unit
+      s.table.compactBatches(spark, passes, 1): Unit
+      assert(s.read(dir) == want && s.read(passes) == want)
+      assert(s.liveIds(dir) == s.liveIds(passes))
+      assert(Commits.committed(spark, dir).size == 1 &&
+        Commits.committed(spark, passes).size == 1)
+      assert(onDisk(s, dir) == onDisk(s, passes),
+        s"${s.name}: the full vacuum left other rows on disk")
     }
 
     test(s"${s.name}: a data file at the table root is not store data; " +

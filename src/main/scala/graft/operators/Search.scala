@@ -410,6 +410,8 @@ object Search {
     *     second writer fails loudly instead of double-allocating a
     *     batch id. Superseded/orphan generations are dead weight until
     *     [[indexVacuum]] rewrites the live state.
+    * A rebuild uncommits the old generations oldest first: a crash there
+    * leaves a readable subset of the old corpus, no deleted doc revived.
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {
@@ -423,7 +425,8 @@ object Search {
       // above every id ever attempted — never one a snapshot of the old
       // store recorded — and commits it even when empty, so an empty
       // corpus is still a readable store.
-      Commits.committed(spark, dir).foreach(Commits.uncommit(spark, dir, _))
+      Commits.committed(spark, dir).sorted
+        .foreach(Commits.uncommit(spark, dir, _))
       Seq("postings", "docs").foreach(p =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true))
       IndexStore.commitGeneration(spark, dir, always = true) { b =>

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, max_by, sum,
-  when}
+import org.apache.spark.sql.functions.{col, count, lit, max, max_by,
+  struct, sum, when}
 import org.apache.spark.storage.StorageLevel
 
 /** The generational-store lifecycle, written once for every store
@@ -65,9 +65,10 @@ import org.apache.spark.storage.StorageLevel
   * generation) — as one fresh generation through [[commitGeneration]],
   * then reclaims the selected batches. After the commit the reclaimed
   * batches are merely superseded (max-batch resolution ignores them;
-  * carried tombstones agree). Markers go before directories, so a crash
-  * inside the reclaim leaves invisible orphans. Every state is readable
-  * and the next pass converges. Its rules:
+  * carried tombstones agree). Markers go in ascending id order (an
+  * uncarried tombstone outlives its key's older rows), then directories:
+  * a crash inside the reclaim leaves invisible orphans and revives no
+  * row. Every state is readable and the next pass converges. Its rules:
   *   1. EMPTY STORES STAY BUILT: a pass whose selection covers every
   *      committed batch commits its generation even when no row
   *      survives, so a store with every key deleted reads as empty,
@@ -299,20 +300,24 @@ final class GenTable(private[graft] val key: String,
   private[graft] def rewriteAndCommit(spark: SparkSession, dir: String,
       committed: Seq[Long], selected: Seq[Long]): Unit = {
     val rows = readMembership(spark, dir, committed).get
+    val all = rows.columns.map(col).toSeq
     val inSelected = col("batch").isin(selected: _*)
-    val current = withCurrency(rows)
-      .filter(inSelected && col("batch") === col(CurBatch))
-    val tomb = current.filter(col(CurTomb))
-      .join(rows.filter(!inSelected).select(col(key)), Seq(key),
-        "left_semi")
-    // Persisted with their batch: the live rows' (key, batch) pairs
-    // select the dependent rows from the same cached frame.
-    val survivors = current.filter(!col(CurTomb)).unionByName(tomb)
-      .select(rows.columns.map(col).toSeq: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val whole = committed.forall(selected.contains)
+    // Persisted with their batch (the dependents join on it). A whole
+    // pass keeps no tombstone: each key's newest row, one aggregate.
+    val survivors = (if (whole) rows.groupBy(col(key))
+        .agg(max_by(struct(all: _*), col("batch")).as("__r"))
+        .select(col("__r.*")).filter(!isTombstone)
+      else {
+        val current = withCurrency(rows)
+          .filter(inSelected && col("batch") === col(CurBatch))
+        current.filter(!col(CurTomb)).unionByName(current
+          .filter(col(CurTomb)).join(rows.filter(!inSelected)
+            .select(col(key)), Seq(key), "left_semi"))
+      }).select(all: _*).persist(StorageLevel.MEMORY_AND_DISK)
     val carry = carried.flatMap(c => carriedDir(spark, dir, committed, c)
       .filter(d => selected.contains(d._1)).map(d => c -> d._2))
-    val keepBuilt = carry.nonEmpty || committed.forall(selected.contains)
+    val keepBuilt = carry.nonEmpty || whole
     try {
       if (keepBuilt || survivors.count() > 0)
         commitGeneration(spark, dir, always = true) { b =>
@@ -339,13 +344,13 @@ final class GenTable(private[graft] val key: String,
           .withColumn("batch", lit(batchId)))
           .write.parquet(s"${liveDir(dir, t)}/b$batchId")))
 
-  /** Remove the reclaimed batches' commit markers, then their
-    * directories (marker first: a dir without a marker is an invisible
-    * orphan; a marker without a dir would be a readable missing batch).
+  /** Remove the reclaimed batches' commit markers, oldest first, then
+    * their directories (marker first: a dir without a marker is an
+    * invisible orphan; a marker without a dir, a readable missing batch).
     */
   private def reclaim(spark: SparkSession, dir: String,
       selected: Seq[Long]): Unit = {
-    selected.foreach(Commits.uncommit(spark, dir, _))
+    selected.sorted.foreach(Commits.uncommit(spark, dir, _))
     val fs = fsOf(spark, dir)
     for (root <- batchRoots(dir); b <- selected)
       fs.delete(new Path(s"$root/b$b"), true): Unit

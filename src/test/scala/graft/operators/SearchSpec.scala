@@ -442,6 +442,31 @@ class SearchSpec extends SparkSpec {
       "the rebuild recommitted the set the snapshot recorded")
   }
 
+  test("a rebuild crashed inside its uncommits revives no deleted doc") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("bm25-rebuild-crash")
+      .toString + "/index"
+    Search.buildIndex(docs, "doc_id", "text", dir)
+    Seq(1L, 3L, 4L).foreach(i =>
+      Search.indexDelete(spark, dir, Seq(i).toDF("doc_id")): Unit)
+    def live() = Search.indexLiveDocs(spark, dir).get.select("doc_id")
+      .as[Long].collect().toSet
+    val want = live()
+    // The build's marker made a non-empty directory: its uncommit fails.
+    // Oldest first, that is the rebuild's first step, so every tombstone
+    // stays committed above its doc's live row.
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val built = new Path(s"$dir/_commits/b${
+      graft.sources.Commits.committed(spark, dir).min}")
+    fs.delete(built, false)
+    fs.mkdirs(new Path(built, "x"))
+    val e = intercept[java.io.IOException] {
+      Search.buildIndex(docs, "doc_id", "text", dir)
+    }
+    assert(e.getMessage.contains("not empty"), e.getMessage)
+    assert(live() == want, "a crashed rebuild revived a deleted doc")
+  }
+
   test("moreLikeThisTopK works on non-numeric doc ids") {
     val sdocs = Seq(("alpha", "spark engine spark"),
       ("beta", "spark engine"), ("gamma", "row scan"))

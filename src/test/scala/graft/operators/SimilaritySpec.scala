@@ -525,6 +525,47 @@ class SimilaritySpec extends SparkSpec {
     assert(rows(1) == want, "committed reroute did not route to one cell")
   }
 
+  test("a reroute crashed inside its reclaim revives no deleted id") {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.Commits
+    val dir = java.nio.file.Files
+      .createTempDirectory("pq-reroute-reclaim").toString + "/store"
+    // The build holds every id's live row; each delete then commits its
+    // own tombstone generation above it.
+    Similarity.pqStoreBuild(pqPts, dir, m = 2, subDims = 2, codes = 2,
+      iters = 2)
+    Seq(1L, 3L, 4L).foreach(i =>
+      Similarity.pqStoreDelete(spark, dir, Seq(i).toDF("id")): Unit)
+    val q = Seq((9L, Seq(0.1f, 0.0f, 0.0f, 0.1f))).toDF("id", "vec")
+    def rows() = Similarity.pqStoreTopK(spark, dir, q, k = 5, nprobe = 0)
+      .select("cid", "approx_d2").as[(Long, Double)].collect().toSeq.sorted
+    val want = rows()
+    assert(want.map(_._1) == Seq(0L, 2L))
+    // Crash the reclaim at the build's marker, made a non-empty
+    // directory so its uncommit fails. Oldest first, that is the
+    // reclaim's first step: every tombstone stays committed above its
+    // id's live row, and the rerouted generation answers the rest.
+    val fs = new Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = Commits.committed(spark, dir)
+    val built = new Path(s"$dir/_commits/b${old.min}")
+    fs.delete(built, false)
+    fs.mkdirs(new Path(built, "x"))
+    val e = intercept[java.io.IOException] {
+      Similarity.pqStoreReroute(spark, dir, cells = 2)
+    }
+    assert(e.getMessage.contains("not empty"), e.getMessage)
+    assert(rows() == want, "a crashed reclaim revived a deleted id")
+    val next = Commits.committed(spark, dir)
+    assert(next.max > old.max && next.size == old.size + 1)
+    // Once the marker is removable, the next pass folds the leftovers.
+    fs.delete(built, true)
+    fs.create(built).close()
+    assert(Similarity.pqStoreVacuumIncremental(spark, dir) == old.size)
+    assert(Commits.committed(spark, dir) == Seq(next.max))
+    assert(rows() == want)
+  }
+
   test("a pass that reclaims the rerouted batch carries its coarse " +
       "forward; routed answers unchanged") {
     import graft.sources.Commits

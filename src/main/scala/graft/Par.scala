@@ -4,8 +4,9 @@ package graft
   * "Overlap independent jobs" — Spark's scheduler happily runs several
   * jobs at once inside one application; actions are only sequential
   * because driver code calls them sequentially). The composed fan-out
-  * sinks advance 5-7 standing stores per micro-batch, each mutation a
-  * short chain of small actions against ITS OWN directory; running
+  * sinks advance 5-7 standing stores per micro-batch, and the composed
+  * maintenance pass (Streams.fanoutVacuum) vacuums and compacts them,
+  * each a short chain of small actions against ITS OWN directory; running
   * them from a thread each lets the next surface's tasks back-fill the
   * cores the previous surface's tail leaves idle, instead of paying
   * ~40 fixed per-action overheads end to end. Semantics are unchanged:

@@ -1875,15 +1875,20 @@ object Streams {
   /** Composed MAINTENANCE pass — the offline twin of the ingest and
     * takedown fan-outs, one call a platform cron can own: vacuum (and,
     * on the incremental cadence, compact) every generational store the
-    * fan-out writes — the inverted index, the ANN store, and when
-    * given the chunk store, the PQ store and the chunk-vector store —
-    * through their shared [[graft.sources.GenTable]] maintenance
-    * (crash-repairing, writer-lease held), and bound the merge store's
-    * snapshot history to `keepStates`. When the read side
-    * serves from the compacted snapshot layouts, pass `postingsTable`
-    * / `annPartDir` and the pass REFRESHES them right after the
-    * vacuums — snapshot staleness becomes "at most one maintenance
-    * interval", owned by the same cron instead of a second one.
+    * fan-out writes — the inverted index, the ANN store and, when
+    * given, the PQ, chunk-vector and chunk stores — through their
+    * shared [[graft.sources.GenTable]] maintenance (orphan-sweeping,
+    * under each store's own writer lease), and bound the merge store's
+    * snapshot history to `keepStates`. Pass `postingsTable` /
+    * `annPartDir` and the pass REFRESHES those snapshot layouts right
+    * after their store's vacuum — snapshot staleness becomes "at most
+    * one maintenance interval", owned by the same cron.
+    *
+    * Like the fan-outs, each store is one [[graft.Par]] track running
+    * its steps in sequence; track order is index, ANN, PQ,
+    * chunk-vector, chunks, merge store. Maintenance changes no answer,
+    * so a lease refused on one store stops only its track: every track
+    * finishes, then the first failure in track order is rethrown.
     * Returns the merge-store state ids deleted.
     */
   def fanoutVacuum(spark: org.apache.spark.sql.SparkSession,
@@ -1896,11 +1901,7 @@ object Streams {
       minDeadFraction: Double = 0.25,
       pqDir: Option[String] = None,
       chunkVecDir: Option[String] = None): Seq[Long] = {
-    // The chunk-vector surface is a PQ-family store: it takes exactly
-    // the doc-PQ store's maintenance (vacuum/compaction), on the same
-    // cadence.
-    val pqFamily = (pqDir.toSeq ++ chunkVecDir.toSeq)
-      .filter(d => graft.sources.Commits.committed(spark, d).nonEmpty)
+    import graft.operators.{Search, Similarity}
     // incremental=true is the ROUTINE cadence at scale: reclaim only
     // the batches the interval's mutations dirtied
     // (Search.indexVacuumIncremental) instead of rewriting the full
@@ -1910,41 +1911,37 @@ object Streams {
     // compacted batch would select it for a full rewrite every
     // interval — the default 0.25 leaves lightly-dirty bulk batches
     // alone (their dead tail is bounded by the SAME threshold) and
-    // reclaims the mutation waves, which go mostly-dead quickly.
-    if (incremental) {
-      graft.operators.Search
-        .indexVacuumIncremental(spark, indexDir, minDeadFraction): Unit
-      graft.operators.Similarity
-        .annStoreVacuumIncremental(spark, annDir, minDeadFraction): Unit
-      pqFamily.foreach(d => graft.operators.Similarity
-        .pqStoreVacuumIncremental(spark, d, minDeadFraction): Unit)
-    } else {
-      graft.operators.Search.indexVacuum(spark, indexDir)
-      graft.operators.Similarity.annStoreVacuum(spark, annDir)
-      pqFamily.foreach(d =>
-        graft.operators.Similarity.pqStoreVacuum(spark, d))
+    // reclaims the mutation waves, which go mostly-dead quickly. The
+    // batch-count bound (`maxBatches`) applies to that path only: a
+    // full vacuum leaves one batch anyway.
+    val compactTo = maxBatches.filter(_ => incremental)
+    def track(steps: => Unit): () => Seq[Long] = () => { steps; Nil }
+    // One GenTable store's steps: its vacuum, then the batch bound.
+    def pass(t: graft.sources.GenTable, dir: String)(full: => Unit) = {
+      if (incremental) t.vacuumIncremental(spark, dir, minDeadFraction): Unit
+      else full
+      compactTo.foreach(t.compactBatches(spark, dir, _): Unit)
     }
+    val idxT = track {
+      pass(Search.IndexStore, indexDir)(Search.indexVacuum(spark, indexDir))
+      postingsTable.foreach(Search.bucketPostings(spark, indexDir, _))
+    }
+    val annT = track {
+      pass(Similarity.AnnStore, annDir)(
+        Similarity.annStoreVacuum(spark, annDir))
+      annPartDir.foreach(Similarity.annStorePartition(spark, annDir, _))
+    }
+    // The chunk-vector surface is a PQ-family store: it takes exactly
+    // the doc-PQ store's maintenance, once either has a committed build.
+    val pqTs = (pqDir.toSeq ++ chunkVecDir.toSeq).map(d => track(
+      if (graft.sources.Commits.committed(spark, d).nonEmpty)
+        pass(Similarity.PqStore, d)(Similarity.pqStoreVacuum(spark, d))))
     // The chunk store's only vacuum is the incremental form; on the
     // non-incremental pass run it at threshold 0 (its full reclaim).
-    chunkDir.foreach(d => chunkStoreVacuum(spark, d,
-      if (incremental) minDeadFraction else 0.0): Unit)
-    // Bound the committed-batch count the micro-batch cadence grows —
-    // only meaningful on the incremental path (the full vacuums reset
-    // to one batch anyway).
-    maxBatches.filter(_ => incremental).foreach { m =>
-      graft.operators.Search.indexCompactBatches(spark, indexDir, m): Unit
-      graft.operators.Similarity
-        .annStoreCompactBatches(spark, annDir, m): Unit
-      chunkDir.foreach(d =>
-        chunkStoreCompactBatches(spark, d, m): Unit)
-      pqFamily.foreach(d => graft.operators.Similarity
-        .pqStoreCompactBatches(spark, d, m): Unit)
-    }
-    postingsTable.foreach(t =>
-      graft.operators.Search.bucketPostings(spark, indexDir, t))
-    annPartDir.foreach(d =>
-      graft.operators.Similarity.annStorePartition(spark, annDir, d))
-    vacuum(storeDir, keepStates)
+    val chunkTs = chunkDir.toSeq.map(d => track(
+      pass(ChunkStore, d)(chunkStoreVacuum(spark, d, 0.0): Unit)))
+    graft.Par.run(Seq(idxT, annT) ++ pqTs ++ chunkTs :+
+      (() => vacuum(storeDir, keepStates))).last
   }
 
   /** Streaming face of [[fanoutDeleteBatch]] — the takedown queue as a

@@ -720,4 +720,157 @@ class FanoutIngestSpec extends SparkSpec {
     assert(Streams.readState(spark, f.store).get.count() == rows)
     assert(marker.exists(), "the full path records the delivery again")
   }
+
+  // ---- composed maintenance ----------------------------------------------
+
+  /** Wave 2 rewrites docs 1-3: new text, new vectors. */
+  private def rewave = (1L to 3L).map { i =>
+    (i, (0 until 10).map(j => s"r${i}w$j").mkString(" "),
+      Seq(i.toFloat, (i % 3 + 2).toFloat, 3.0f))
+  }.toDF("doc_id", "text", "vec")
+
+  /** Two waves, a takedown of doc 4 and a redelivery of wave 2. */
+  private def churn(f: Family): Unit = {
+    f.deliver(wave, 1L)
+    f.deliver(rewave, 2L)
+    f.takedown(Seq(4L), 3L)
+    f.deliver(rewave, 2L): Unit
+  }
+
+  /** Each GenTable store of a family with its descriptor. */
+  private def genTables(f: Family) = Seq(f.index -> Search.IndexStore,
+    f.ann -> Similarity.AnnStore, f.pq -> Similarity.PqStore,
+    f.chunks -> Streams.ChunkStore, f.ckvec -> Similarity.PqStore)
+
+  /** The BM25, ANN, PQ-rerank and passage answers of a family. */
+  private def answers(f: Family): Seq[Seq[org.apache.spark.sql.Row]] = {
+    val q = Seq((101L, Seq(1.0f, 2.0f, 3.0f)), (102L, Seq(5.0f, 2.0f, 1.0f)))
+      .toDF("id", "vec")
+    val vecs = wave.filter($"doc_id" > 4L).union(rewave)
+      .select($"doc_id".as("id"), $"vec")
+    Seq(Search.bm25FromIndexTopK(spark, f.index,
+        Seq("d1w0", "r2w3", "d4w1", "d5w5", "d6w2"), 10),
+      Similarity.annStoreTopK(spark, f.ann, q, planes = 4, dims = 3, k = 3),
+      Similarity.pqStoreRerankTopK(spark, f.pq, q, vecs, kCand = 4, k = 3),
+      Streams.passageTopK(spark, f.ckvec, "r1w0 r1w1 r1w2 d5w3",
+        dims = 16, kPassages = 10, kDocs = 5))
+      .map(_.collect().toSeq.sortBy(_.toString))
+  }
+
+  /** The passes of `fanoutVacuum` one store at a time, in the order the
+    * composed pass ran them before its stores became concurrent tracks.
+    */
+  private def sequentialVacuum(f: Family, incremental: Boolean,
+      maxBatches: Option[Int], postingsTable: Option[String],
+      annPartDir: Option[String]): Seq[Long] = {
+    val pqFamily = Seq(f.pq, f.ckvec)
+    if (incremental) {
+      Search.indexVacuumIncremental(spark, f.index, 0.25)
+      Similarity.annStoreVacuumIncremental(spark, f.ann, 0.25)
+      pqFamily.foreach(Similarity.pqStoreVacuumIncremental(spark, _, 0.25))
+    } else {
+      Search.indexVacuum(spark, f.index)
+      Similarity.annStoreVacuum(spark, f.ann)
+      pqFamily.foreach(Similarity.pqStoreVacuum(spark, _))
+    }
+    Streams.chunkStoreVacuum(spark, f.chunks, if (incremental) 0.25 else 0.0)
+    maxBatches.filter(_ => incremental).foreach { m =>
+      Search.indexCompactBatches(spark, f.index, m)
+      Similarity.annStoreCompactBatches(spark, f.ann, m)
+      Streams.chunkStoreCompactBatches(spark, f.chunks, m)
+      pqFamily.foreach(Similarity.pqStoreCompactBatches(spark, _, m))
+    }
+    postingsTable.foreach(Search.bucketPostings(spark, f.index, _))
+    annPartDir.foreach(Similarity.annStorePartition(spark, f.ann, _))
+    Streams.vacuum(f.store, 3)
+  }
+
+  private def concurrentVacuum(f: Family, incremental: Boolean,
+      maxBatches: Option[Int], postingsTable: Option[String],
+      annPartDir: Option[String]): Seq[Long] =
+    Streams.fanoutVacuum(spark, f.store, f.index, f.ann, keepStates = 3,
+      postingsTable = postingsTable, annPartDir = annPartDir,
+      incremental = incremental, chunkDir = Some(f.chunks),
+      maxBatches = maxBatches, pqDir = Some(f.pq),
+      chunkVecDir = Some(f.ckvec))
+
+  /** Churn two identical families, maintain one through `fanoutVacuum`
+    * and the other store by store: they must end in the same state.
+    */
+  private def assertSameAsSequential(name: String, incremental: Boolean,
+      maxBatches: Option[Int], snapshots: Boolean): (Family, Family) = {
+    val (conc, seq) = (family(s"$name-conc"), family(s"$name-seq"))
+    Seq(conc, seq).foreach(churn)
+    genTables(conc).foreach { case (dir, t) =>
+      val committed = Commits.committed(spark, dir)
+      assert(committed.size > 2, s"$dir: ${committed.sorted}")
+      assert(t.dirtyBatches(spark, dir, committed, 0.25).nonEmpty,
+        s"$dir has no dirty batch")
+    }
+    val rel = (f: Family) => f.generations.map { case (d, ids) =>
+      d.stripPrefix(f.root) -> ids }
+    val (before, churned) = (answers(conc), rel(conc))
+    assert(answers(seq) == before)
+    def snap(f: Family, tag: String) = if (snapshots)
+      (Some(s"graft_${name.replace('-', '_')}_$tag"),
+        Some(s"${f.root}/ann-part")) else (None, None)
+    val (concPost, concPart) = snap(conc, "conc")
+    val (seqPost, seqPart) = snap(seq, "seq")
+    assert(concurrentVacuum(conc, incremental, maxBatches, concPost,
+      concPart) == sequentialVacuum(seq, incremental, maxBatches, seqPost,
+      seqPart))
+    assert(rel(conc) == rel(seq))
+    assert(rel(conc) != churned, "the pass committed nothing")
+    assert(conc.live == seq.live)
+    assert(conc.live("index") == Set(1L, 2L, 3L, 5L, 6L))
+    assert(answers(conc) == answers(seq))
+    assert(answers(conc) == before, "maintenance changed an answer")
+    (conc, seq)
+  }
+
+  test("fanoutVacuum's concurrent tracks end where the store-by-store " +
+      "incremental pass ends") {
+    val (conc, _) = assertSameAsSequential("maint-incr", incremental = true,
+      maxBatches = Some(2), snapshots = false)
+    genTables(conc).foreach { case (dir, _) =>
+      assert(Commits.committed(spark, dir).size <= 2, dir)
+    }
+  }
+
+  test("fanoutVacuum's full pass refreshes each snapshot after its own " +
+      "store's vacuum") {
+    val (conc, seq) = assertSameAsSequential("maint-full",
+      incremental = false, maxBatches = None, snapshots = true)
+    Seq(conc, seq).foreach { f =>
+      assert(Commits.snapshotFresh(spark, s"${f.index}/postings_bucketed",
+        f.index), s"${f.root}: postings snapshot is stale")
+      assert(Commits.snapshotFresh(spark, s"${f.root}/ann-part", f.ann),
+        s"${f.root}: ANN partition snapshot is stale")
+    }
+  }
+
+  test("a lease refused on one store leaves the other tracks' " +
+      "maintenance done") {
+    val f = family("maint-lease")
+    churn(f)
+    def states = new java.io.File(f.store).listFiles()
+      .count(d => d.isDirectory && d.getName.startsWith("state_"))
+    assert(states > 1)
+    def vacuum() = Streams.fanoutVacuum(spark, f.store, f.index, f.ann,
+      keepStates = 1, incremental = true, chunkDir = Some(f.chunks),
+      maxBatches = Some(2), pqDir = Some(f.pq), chunkVecDir = Some(f.ckvec))
+    val annBefore = Commits.committed(spark, f.ann).sorted
+    assert(annBefore.size > 2)
+    Commits.acquireWriterLock(spark, f.ann)
+    val refused = try intercept[IllegalStateException](vacuum())
+    finally Commits.releaseWriterLock(spark, f.ann)
+    assert(refused.getMessage.contains("ann/_lock"), refused.getMessage)
+    assert(Commits.committed(spark, f.ann).sorted == annBefore)
+    Seq(f.index, f.chunks, f.pq, f.ckvec).foreach { d =>
+      assert(Commits.committed(spark, d).size <= 2, s"$d was not compacted")
+    }
+    assert(states == 1, "the merge history was not bounded")
+    vacuum(): Unit
+    assert(Commits.committed(spark, f.ann).size <= 2)
+  }
 }

@@ -785,15 +785,6 @@ class FanoutIngestSpec extends SparkSpec {
     Streams.vacuum(f.store, 3)
   }
 
-  private def concurrentVacuum(f: Family, incremental: Boolean,
-      maxBatches: Option[Int], postingsTable: Option[String],
-      annPartDir: Option[String]): Seq[Long] =
-    Streams.fanoutVacuum(spark, f.store, f.index, f.ann, keepStates = 3,
-      postingsTable = postingsTable, annPartDir = annPartDir,
-      incremental = incremental, chunkDir = Some(f.chunks),
-      maxBatches = maxBatches, pqDir = Some(f.pq),
-      chunkVecDir = Some(f.ckvec))
-
   /** Churn two identical families, maintain one through `fanoutVacuum`
     * and the other store by store: they must end in the same state.
     */
@@ -816,9 +807,13 @@ class FanoutIngestSpec extends SparkSpec {
         Some(s"${f.root}/ann-part")) else (None, None)
     val (concPost, concPart) = snap(conc, "conc")
     val (seqPost, seqPart) = snap(seq, "seq")
-    assert(concurrentVacuum(conc, incremental, maxBatches, concPost,
-      concPart) == sequentialVacuum(seq, incremental, maxBatches, seqPost,
-      seqPart))
+    val deleted = Streams.fanoutVacuum(spark, conc.store, conc.index,
+      conc.ann, keepStates = 3, postingsTable = concPost,
+      annPartDir = concPart, incremental = incremental,
+      chunkDir = Some(conc.chunks), maxBatches = maxBatches,
+      pqDir = Some(conc.pq), chunkVecDir = Some(conc.ckvec))
+    assert(deleted ==
+      sequentialVacuum(seq, incremental, maxBatches, seqPost, seqPart))
     assert(rel(conc) == rel(seq))
     assert(rel(conc) != churned, "the pass committed nothing")
     assert(conc.live == seq.live)

@@ -594,8 +594,7 @@ object ScaleRehearsal {
       val (sDocs, sGrams) = (s"$sStore/docs", s"$sStore/grams")
       fs.delete(new org.apache.hadoop.fs.Path(sStore), true)
       def substrGen(gen: DataFrame): Unit = {
-        val id = graft.sources.Commits.allocateBatchId(spark, sStore,
-          Seq(sDocs, sGrams))
+        val id = graft.sources.Commits.allocateBatchId(spark, sStore)
         graft.operators.Upsert.withContentHash(gen, "text")
           .select(col("doc_id"), col("content_hash"),
             col("text").as("clean_text"))
@@ -684,10 +683,10 @@ object ScaleRehearsal {
           chunkVecDir = Some(fcv))._2
       }
       timed(r, "fanout_vacuum_incr") {
-        Streams.fanoutVacuum(spark, fst, fix, fan, keepStates = 3,
-          incremental = true, chunkDir = Some(fck),
-          maxBatches = Some(8), pqDir = Some(fpq),
-          chunkVecDir = Some(fcv)).size.toLong
+        Streams.fanoutVacuum(spark, fst, fix, fan, incremental = true,
+          chunkDir = Some(fck), maxBatches = Some(8), pqDir = Some(fpq),
+          chunkVecDir = Some(fcv))
+        graft.sources.Commits.committed(spark, fst).size.toLong
       }
       probe(r, "probe_passage_routed") {
         Streams.passageTopK(spark, fcv,

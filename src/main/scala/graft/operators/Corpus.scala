@@ -970,7 +970,7 @@ object Corpus {
     if (selected.isEmpty) return 0
     val folded = rows.filter(col("batch").isin(selected: _*))
       .groupBy(col("gh")).agg(sum(col("df")).as("df"))
-    val id = graft.sources.Commits.allocateBatchId(spark, dir, Seq(dir))
+    val id = graft.sources.Commits.allocateBatchId(spark, dir)
     folded.withColumn("batch", lit(id))
       .write.mode("errorifexists").parquet(s"$dir/b$id")
     graft.sources.Commits.writeFoldMarker(spark, dir, id, selected)
@@ -1000,7 +1000,7 @@ object Corpus {
     val n = counts.count()
     if (n > 0) {
       val batchId = graft.sources.Commits
-        .allocateBatchId(spark, dir, Seq(dir))
+        .allocateBatchId(spark, dir)
       counts.withColumn("batch", lit(batchId))
         .write.mode("errorifexists").parquet(s"$dir/b$batchId")
       graft.sources.Commits.commit(spark, dir, batchId)

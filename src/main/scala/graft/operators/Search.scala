@@ -401,10 +401,9 @@ object Search {
     *     linearization point of an append. A crash between the two
     *     parquet writes leaves slices whose batch id has no marker;
     *     readers never see them, and the next attempt allocates a
-    *     FRESH id — max batch present in EITHER parquet table, plus
-    *     one, so an orphan on the postings side (written first) is
-    *     counted just like a docs-side one and partial appends can
-    *     never double a doc's tf/df under a committed id.
+    *     FRESH id above every id ever attempted (the ledger's attempt
+    *     markers), so an orphan on either side can never double a
+    *     doc's tf/df under a committed id.
     *   - `dir/_lock`: writer lease ([[graft.sources.Commits
     *     .withWriterLock]]) held across every mutation — a concurrent
     *     second writer fails loudly instead of double-allocating a

@@ -75,11 +75,17 @@ object Upsert {
     require(!df.columns.contains("content_hash"),
       "onePerKeyByContentHashed computes content_hash itself; drop or " +
         "rename the incoming column")
-    val hashed = withContentHash(df, textCol)
-    val rest = hashed.columns.filter(_ != key)
-    hashed.groupBy(col(key))
-      // Tie-break over the ORIGINAL columns only (not the derived
-      // content_hash) so both forms resolve a tie to the same row.
+    onePerKeyByHash(withContentHash(df, textCol), key)
+  }
+
+  /** The same one-row-per-key resolution for rows that already carry
+    * their `content_hash` (the merge store's caller-hashed deliveries):
+    * lowest hash wins, ties broken over the other columns. Both forms
+    * resolve a tie to the same row.
+    */
+  def onePerKeyByHash(df: DataFrame, key: String): DataFrame = {
+    val rest = df.columns.filter(_ != key)
+    df.groupBy(col(key))
       .agg(min_by(struct(rest.map(col).toSeq: _*),
         totalOrder(rest.toSeq.filterNot(_ == "content_hash"),
           col("content_hash"))).as("__row"))

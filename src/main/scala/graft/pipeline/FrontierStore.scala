@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   *
   * Layout: each update writes a full new `state_v<N>` snapshot and
   * flips the `_current` pointer file — the same crash-safe pattern as
-  * `Streams.mergeBatch`, through the same shared Hadoop-FS plumbing
+  * the `Streams` CMS sink, through the same shared Hadoop-FS plumbing
   * (`sources.StatePointer`, rename-committed pointer), so the frontier
   * runs on HDFS/object storage like every other store (readers always
   * see a complete snapshot; a crash mid-write leaves the pointer on

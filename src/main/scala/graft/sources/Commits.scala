@@ -1,27 +1,25 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.functions.col
 
 /** Commit-marker ledger shared by the GENERATIONAL parquet stores (the
-  * inverted index, the chunk store, the ANN store and the PQ stores;
-  * their maintenance is [[GenTable]]): an append writes its parquet slices
-  * tagged with a fresh batch id and then creates the empty marker file
-  * `<dir>/_commits/b<batch>` as its LAST step — the linearization
-  * point. Readers only ever see committed batches, so a crash between
+  * merge store, the inverted index, the chunk store, the ANN store and
+  * the PQ stores; their lifecycle is [[GenTable]]): an append writes
+  * its parquet slices tagged with a fresh batch id and then creates the
+  * empty marker file `<dir>/_commits/b<batch>` as its LAST step — the
+  * linearization point. Readers only ever see committed batches, so a crash between
   * the slice writes and the marker leaves orphan rows that are
   * invisible forever; the next delivery allocates a fresh id above
   * every id ever ATTEMPTED (recorded as an `a<batch>` marker before
   * the batch's first data write — see [[allocateBatchId]]), so
   * at-least-once redelivery can never double a row under an id a
-  * reader will trust. [[nextBatchId]]'s max(batch) scan over the raw
-  * parquet is the one-time fallback for a ledger with no attempt
-  * marker yet (a store's first allocation).
+  * reader will trust.
   *
   * SINGLE WRITER ENFORCED by [[withWriterLock]]: the ledger's id
   * allocation is read-then-write, so two concurrent appends could
   * allocate the same batch id and double rows under one committed
-  * marker. The pointer-swap state stores (`Streams` merge/CMS, the
+  * marker. The pointer-swap state stores (the `Streams` CMS sink, the
   * url frontier) hold the same lease around their read-merge-swap:
   * their pointer write is atomic, but uncoordinated writers merging
   * onto the same base state would silently lose the losing writer's
@@ -51,8 +49,7 @@ object Commits {
 
   /** Create the marker — the append's atomic commit point. Also
     * records the batch's attempt marker (idempotent), so a committed id
-    * always counts as attempted and the allocator's listing-only fast
-    * path stays armed.
+    * still counts as attempted after a reclaim removes its commit marker.
     */
   def commit(spark: SparkSession, dir: String, batch: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_commits/b$batch")
@@ -277,33 +274,6 @@ object Commits {
     ()
   }
 
-  /** Next unused batch id: max `batch` present in the parquet data at
-    * `dataPath` — orphans from crashed appends included, that is the
-    * point — plus one; 0 for a store that does not exist yet or holds
-    * zero rows (a build from an empty frame still writes the table).
-    */
-  def nextBatchId(spark: SparkSession, dataPath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // "Does not exist yet" includes a directory holding only metadata
-    // (`_lock`/`_commits`) — acquiring the writer lease creates the
-    // store dir before the first parquet write lands in it.
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!hasData) 0L
-    else {
-      // recursiveFileLookup: tables that keep each batch in its own
-      // `b<id>` subdirectory (the generational stores) scan the same as
-      // the near-dup store's append-mode tables, orphans included —
-      // which is the point of this fallback.
-      val row = ParquetRead(spark, Seq(dataPath), recursiveFileLookup = true)
-        .agg(max(col("batch"))).head()
-      (if (row.isNullAt(0)) -1L else row.getLong(0)) + 1L
-    }
-  }
-
   /** Batch ids ever ATTEMPTED: the `a<batch>` markers recorded at
     * allocation time, committed or not.
     */
@@ -327,50 +297,25 @@ object Commits {
     fs.create(p, true).close()
   }
 
-  /** Allocate and durably record the next batch id for the store whose
-    * ledger lives at `storeDir` and whose data tables live under
-    * `dataPaths` — from one LISTING of the ledger dir (committed `b<N>`
-    * ∪ attempted `a<N>`), no data scan. [[nextBatchId]]'s max(batch)
-    * over the raw parquet launches a Spark job reading the batch column
-    * of the whole store per mutation — linear in store size, a full
-    * column scan at 100 TB — where the listing is one metadata op
-    * regardless of scale. Crash safety is unchanged from the data-scan
-    * allocator: the attempt marker lands BEFORE any data write, so a
-    * crash at any later point burns the id (orphan rows stay invisible
-    * to readers, the maintenance sweep drops them, and
-    * [[pruneAttemptMarkers]] keeps the ledger listing small) — the
-    * postings-only-orphan window stays closed without reading the
-    * postings. A store with NO attempt markers yet also consults the
-    * data scan for that first allocation and takes the max of both; it
-    * then records a marker, making every later call listing-only.
+  /** Allocate and durably record the next batch id of the store whose
+    * ledger lives at `storeDir`: max(committed `b<N>` ∪ attempted
+    * `a<N>`) + 1, from one listing of the ledger dir, whatever the
+    * store's size. Every writer allocates before its first data write,
+    * so a crash at any later point burns the id: its orphan rows stay
+    * invisible and the maintenance sweep drops them.
     */
-  def allocateBatchId(spark: SparkSession, storeDir: String,
-      dataPaths: Seq[String]): Long = {
-    val attempts = attempted(spark, storeDir)
-    val committedIds = committed(spark, storeDir)
-    val id =
-      if (attempts.nonEmpty) (attempts ++ committedIds).max + 1L
-      else {
-        // No allocation is RECORDED here yet: take the max over the
-        // ledger AND a one-time data scan. This allocation records a
-        // marker, so every later call is listing-only.
-        val fromLedger = committedIds.maxOption.map(_ + 1L).getOrElse(0L)
-        val fromData = dataPaths.map(nextBatchId(spark, _))
-          .maxOption.getOrElse(0L)
-        math.max(fromLedger, fromData)
-      }
+  def allocateBatchId(spark: SparkSession, storeDir: String): Long = {
+    val id = (attempted(spark, storeDir) ++ committed(spark, storeDir))
+      .maxOption.fold(0L)(_ + 1L)
     recordAttempt(spark, storeDir, id)
     id
   }
 
-  /** Prune spent attempt markers, keeping only the LARGEST `a<id>` —
-    * the allocator takes max(attempted ∪ committed) + 1, so every
-    * marker below the max is dead weight, and under an
-    * maintenance cadence that never resets the ledger one marker per
-    * mutation would otherwise grow the ledger LISTING — the op on every mutation
-    * path — without bound. Caller holds the writer lease. A crash
-    * mid-prune leaves some stale markers: harmless, next prune gets
-    * them.
+  /** Prune spent attempt markers, keeping only the LARGEST `a<id>`:
+    * the allocator takes max(attempted ∪ committed) + 1, so the others
+    * would only grow the ledger LISTING every mutation pays. Caller
+    * holds the writer lease; a crash mid-prune leaves stale markers
+    * that the next prune gets.
     */
   def pruneAttemptMarkers(spark: SparkSession, dir: String): Unit = {
     val ids = attempted(spark, dir)

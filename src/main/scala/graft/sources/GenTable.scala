@@ -2,15 +2,15 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, max_by,
-  struct, sum, when}
+import org.apache.spark.sql.functions.{col, collect_list, count, explode,
+  lit, max, max_by, struct, sum, when}
 import org.apache.spark.storage.StorageLevel
 
 /** The generational-store lifecycle, written once for every store
   * that keeps its rows in per-batch `b<id>` directories under a
-  * [[Commits]] ledger: the inverted index (`Search`), the chunk store
-  * (`Streams`), and the ANN and PQ stores (`Similarity`; the
-  * chunk-vector store is a PQ store).
+  * [[Commits]] ledger: the inverted index (`Search`), the merge and
+  * chunk stores (`Streams`), and the ANN and PQ stores (`Similarity`;
+  * the chunk-vector store is a PQ store).
   *
   * A store is described by its KEY column, a TOMBSTONE predicate over a
   * membership row, the non-key columns of the TOMBSTONE ROW a delete
@@ -34,7 +34,10 @@ import org.apache.spark.storage.StorageLevel
   *     requested keys;
   *   - [[commitGeneration]]: allocate a batch id above every id ever
   *     attempted, write the generation, commit it when it holds rows
-  *     (or always: a rebuild, a reroute, rules 1 and 4 below).
+  *     (or always: a rebuild, a reroute, rules 1 and 4 below);
+  *   - [[rollbackTo]]: one compensating generation back to how the
+  *     store read at a [[markDelivery]] marker (its ledger id). A
+  *     reclaim first drops the markers at or above its oldest batch.
   *
   * Commit order: the allocation records the id's attempt marker
   * BEFORE any data write, the store writes its generation (carried and
@@ -89,7 +92,7 @@ final class GenTable(private[graft] val key: String,
     private[graft] val tombstone: Seq[Column], hash: String,
     membership: GenTable.Table, dependents: Seq[GenTable.Table] = Nil,
     carried: Seq[String] = Nil) {
-  import GenTable.{CurBatch, CurHash, CurTomb, Table}
+  import GenTable.{AsOf, CurBatch, CurHash, CurTomb, Table}
 
   /** Write, sweep and reclaim order: dependents before membership (the
     * crash contract above). */
@@ -119,6 +122,20 @@ final class GenTable(private[graft] val key: String,
     rows.groupBy(col(key)).agg(max(col("batch")).as(CurBatch),
       max_by(col(hash), col("batch")).as(CurHash),
       max_by(isTombstone, col("batch")).as(CurTomb))
+
+  /** Each key's newest row among membership `rows` (batch included):
+    * one aggregate, no join back. */
+  private def newest(rows: DataFrame): DataFrame =
+    rows.groupBy(col(key))
+      .agg(max_by(struct(rows.columns.map(col).toSeq: _*), col("batch"))
+        .as("__r"))
+      .select(col("__r.*"))
+
+  /** Each live key's current committed row, with every column its
+    * writer wrote and no `batch`. None when nothing is committed. */
+  private[graft] def live(spark: SparkSession, dir: String): Option[DataFrame] =
+    readMembership(spark, dir, Commits.committed(spark, dir))
+      .map(newest(_).filter(!isTombstone).drop("batch"))
 
   /** The current committed generation of each key in `ids` (one
     * column, the key under any name), as [[currencyOf]]'s row; keys
@@ -166,16 +183,14 @@ final class GenTable(private[graft] val key: String,
         .drop(CurHash)
     }
 
-  /** One generation: allocate its batch id from the ledger (and, on a
-    * ledger with no attempt recorded yet, from every table's live dir),
-    * run `write` — which writes the generation's rows under that id and
+  /** One generation: allocate its batch id from the ledger, run
+    * `write` — which writes the generation's rows under that id and
     * returns their count — and commit the id when the count is
     * positive, or `always`. Returns the count.
     */
   private[graft] def commitGeneration(spark: SparkSession, dir: String,
       always: Boolean = false)(write: Long => Long): Long = {
-    val batchId = Commits.allocateBatchId(spark, dir,
-      tables.map(liveDir(dir, _)))
+    val batchId = Commits.allocateBatchId(spark, dir)
     val n = write(batchId)
     if (n > 0 || always) Commits.commit(spark, dir, batchId)
     n
@@ -194,6 +209,15 @@ final class GenTable(private[graft] val key: String,
       batchId: Long): Unit =
     rows.withColumn("batch", lit(batchId))
       .write.parquet(s"${liveDir(dir, membership)}/b$batchId")
+
+  /** [[writeMembership]] returning the rows written, counted by the
+    * write itself (an Observation: no extra job). */
+  private[graft] def writeMembershipCounted(rows: DataFrame, dir: String,
+      batchId: Long): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    writeMembership(rows.observe(obs, count(lit(1)).as("n")), dir, batchId)
+    obs.get("n").asInstanceOf[Long]
+  }
 
   /** DELETE keys: one tombstone generation — a membership row of
     * [[tombstone]] values, no dependent rows — for each requested key
@@ -262,12 +286,6 @@ final class GenTable(private[graft] val key: String,
     selected.size
    }
 
-  /** `rows` joined with its key's currency: [[GenTable.CurBatch]] and
-    * [[GenTable.CurTomb]]. */
-  private def withCurrency(rows: DataFrame): DataFrame =
-    rows.join(currencyOf(rows).select(col(key), col(CurBatch),
-      col(CurTomb)), Seq(key))
-
   /** The committed batches whose dead-row fraction reaches the
     * threshold. Driver-side result bounded by the batch COUNT, never by
     * rows. Package-private so specs can replay a pass step by step.
@@ -276,9 +294,13 @@ final class GenTable(private[graft] val key: String,
       committed: Seq[Long], minDeadFraction: Double): Seq[Long] = {
     val rows = readMembership(spark, dir, committed)
       .getOrElse(return Seq.empty)
-    withCurrency(rows)
-      .withColumn("__dead",
-        col("batch") < col(CurBatch) || col(CurTomb))
+    // One aggregate per key carries its batches along: no join back.
+    rows.groupBy(col(key)).agg(collect_list(col("batch")).as("__batches"),
+        max(col("batch")).as(CurBatch),
+        max_by(isTombstone, col("batch")).as(CurTomb))
+      .select(explode(col("__batches")).as("batch"), col(CurBatch),
+        col(CurTomb))
+      .withColumn("__dead", col("batch") < col(CurBatch) || col(CurTomb))
       .groupBy(col("batch"))
       .agg(count(lit(1)).as("__total"),
         sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
@@ -292,8 +314,10 @@ final class GenTable(private[graft] val key: String,
   }
 
   /** Rewrite the `selected` batches' survivors as one fresh batch and
-    * COMMIT it — also with no survivor when the selection covers every
-    * committed batch (rule 1) or a carried dir moves into it (rule 4).
+    * COMMIT it when the write counted a row — or always when the
+    * selection covers every committed batch (rule 1) or a carried dir
+    * moves into it (rule 4); an empty uncommitted rewrite is an orphan
+    * the next sweep drops.
     * Package-private so specs can simulate a crash exactly here: new
     * batch committed, reclaimed markers still present.
     */
@@ -305,11 +329,10 @@ final class GenTable(private[graft] val key: String,
     val whole = committed.forall(selected.contains)
     // Persisted with their batch (the dependents join on it). A whole
     // pass keeps no tombstone: each key's newest row, one aggregate.
-    val survivors = (if (whole) rows.groupBy(col(key))
-        .agg(max_by(struct(all: _*), col("batch")).as("__r"))
-        .select(col("__r.*")).filter(!isTombstone)
+    val survivors = (if (whole) newest(rows).filter(!isTombstone)
       else {
-        val current = withCurrency(rows)
+        val current = rows.join(currencyOf(rows).select(col(key),
+            col(CurBatch), col(CurTomb)), Seq(key))
           .filter(inSelected && col("batch") === col(CurBatch))
         current.filter(!col(CurTomb)).unionByName(current
           .filter(col(CurTomb)).join(rows.filter(!inSelected)
@@ -319,18 +342,16 @@ final class GenTable(private[graft] val key: String,
       .filter(d => selected.contains(d._1)).map(d => c -> d._2))
     val keepBuilt = carry.nonEmpty || whole
     try {
-      if (keepBuilt || survivors.count() > 0)
-        commitGeneration(spark, dir, always = true) { b =>
-          val fs = fsOf(spark, dir)
-          carry.foreach { case (c, src) =>
-            FileUtil.copy(fs, new Path(src), fs, new Path(s"$dir/$c/b$b"),
-              false, spark.sparkContext.hadoopConfiguration)
-          }
-          rewriteDependents(spark, dir, selected,
-            survivors.filter(!isTombstone).select(col(key), col("batch")), b)
-          writeMembership(survivors.drop("batch"), dir, b)
-          0L
-        }: Unit
+      commitGeneration(spark, dir, always = keepBuilt) { b =>
+        val fs = fsOf(spark, dir)
+        carry.foreach { case (c, src) =>
+          FileUtil.copy(fs, new Path(src), fs, new Path(s"$dir/$c/b$b"),
+            false, spark.sparkContext.hadoopConfiguration)
+        }
+        rewriteDependents(spark, dir, selected,
+          survivors.filter(!isTombstone).select(col(key), col("batch")), b)
+        writeMembershipCounted(survivors.drop("batch"), dir, b)
+      }: Unit
     } finally { survivors.unpersist(); () }
   }
 
@@ -350,10 +371,61 @@ final class GenTable(private[graft] val key: String,
     */
   private def reclaim(spark: SparkSession, dir: String,
       selected: Seq[Long]): Unit = {
+    selected.minOption.foreach(dropDeliveries(spark, dir, _))
     selected.sorted.foreach(Commits.uncommit(spark, dir, _))
     val fs = fsOf(spark, dir)
     for (root <- batchRoots(dir); b <- selected)
       fs.delete(new Path(s"$root/b$b"), true): Unit
+  }
+
+  /** Record that the store, as it reads now, is delivery `name`'s
+    * result: `_asof/<name>` holds the largest committed id. Caller holds
+    * the writer lease. */
+  private[graft] def markDelivery(spark: SparkSession, dir: String,
+      name: String): Unit =
+    StatePointer.writeFile(s"$dir/$AsOf", name,
+      Commits.committed(spark, dir).maxOption.getOrElse(-1L).toString,
+      s"$name.tmp")
+
+  /** Drop every delivery marker at or above ledger id `from` (or
+    * unreadable): a reclaim from `from` up removes rows their as-of
+    * views read. Runs before the reclaim's first uncommit, so a crash
+    * leaves no marker over a partial view. */
+  private def dropDeliveries(spark: SparkSession, dir: String,
+      from: Long): Unit = {
+    val fs = fsOf(spark, dir)
+    val root = new Path(s"$dir/$AsOf")
+    if (fs.exists(root)) fs.listStatus(root).foreach { m =>
+      if (StatePointer.readFile(root.toString, m.getPath.getName)
+          .flatMap(_.toLongOption).forall(_ >= from))
+        fs.delete(m.getPath, false): Unit
+    }
+  }
+
+  /** ROLL BACK to delivery `name` ([[markDelivery]]): one compensating
+    * generation that restores, for every key whose current hash differs
+    * from its hash as of the marked ledger id, that row — or a tombstone
+    * when the key was absent then. Later markers stay valid, so the
+    * store may roll forward again. Throws IllegalArgumentException when
+    * no marker `name` exists.
+    */
+  private[graft] def rollbackTo(spark: SparkSession, dir: String,
+      name: String): Unit = Commits.withWriterLock(spark, dir) {
+    val asOf = StatePointer.readFile(s"$dir/$AsOf", name)
+      .flatMap(_.toLongOption)
+      .getOrElse(throw new IllegalArgumentException(s"no $name under $dir"))
+    readMembership(spark, dir, Commits.committed(spark, dir)).foreach { rows =>
+      val past = newest(rows.filter(col("batch") <= asOf)).drop("batch")
+      val now = currencyOf(rows).select(col(key), col(CurHash), col(CurTomb))
+      val restore = past.join(now, Seq(key), "left")
+        .filter(col(CurHash).isNull || col(CurHash) =!= col(hash))
+        .select(past.columns.map(col).toSeq: _*)
+      val bury = now.filter(!col(CurTomb)).join(past, Seq(key), "left_anti")
+        .select(col(key) +: tombstone: _*)
+      commitGeneration(spark, dir) { b =>
+        writeMembershipCounted(restore.unionByName(bury), dir, b)
+      }: Unit
+    }
   }
 
   /** Replace the whole store: one generation that `write` produces —
@@ -392,4 +464,8 @@ object GenTable {
     * sha256, so no collision is possible.
     */
   val Tombstone = "__tombstone__"
+
+  /** The store-relative dir of the delivery markers
+    * ([[GenTable.markDelivery]]). */
+  private val AsOf = "_asof"
 }

@@ -1,7 +1,8 @@
 package graft.sources
 
 /** Pointer-swapped state-dir plumbing shared by the versioned parquet
-  * state stores (the `Streams` merge/CMS stores, the url frontier):
+  * state stores whose state is fixed in size or small (the `Streams`
+  * CMS sink, the url frontier):
   * every path goes through the Hadoop `FileSystem` API so the stores
   * run against whatever filesystem the cluster mounts — HDFS, object
   * storage, or local disk — and the `_current` pointer is COMMITTED by

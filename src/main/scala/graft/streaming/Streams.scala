@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Upsert
-import graft.sources.{GenTable, ParquetRead}
+import graft.sources.{GenTable, ParquetRead, StatePointer}
 import graft.sources.GenTable.Tombstone
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -19,13 +19,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - ST5 stale-entity timeout (`/root/reference/db/postgres_store.py:58-68`,
   *     10-min default of `worker_daemon.py:18`): event-time state
   *     timeout via `flatMapGroupsWithState`
-  *   - ST6/ST8 late/duplicate handling: `foreachBatch` + `Upsert.merge`
-  *     into a parquet target — re-delivery of the same batch is a no-op
+  *   - ST6/ST8 late/duplicate handling: `foreachBatch` + a hash-gated
+  *     merge store — re-delivery of the same batch is a no-op
   *
   * Scale: windowed aggs and dropDuplicates shuffle once on their state
   * key and keep bounded state under the watermark; the merge sink
-  * rewrites only the target (at 100 TB: partition-overwrite of changed
-  * site partitions, per SURVEY T1).
+  * writes only a batch's changed rows.
   */
 object Streams {
 
@@ -203,18 +202,12 @@ object Streams {
 
   // ---- ST6/ST8: merge sink -------------------------------------------------
 
-  /** foreachBatch sink MERGE-ing every micro-batch into a parquet target
-    * (rows carry `key` + `content_hash`). The merge is idempotent, so
-    * at-least-once delivery (late/duplicate batches) converges — the
-    * reference's hash-compare upsert
-    * (`/root/reference/storage/filesystem_store.py:95-128`).
-    *
-    * Plain parquet can't be read and overwritten in one job, so each
-    * batch writes a fresh state dir and swaps a `_current` pointer —
-    * the stand-in for a transactional format's atomic commit. All
-    * pointer/state plumbing goes through the Hadoop `FileSystem` API
-    * (like `Store`/`Search`/`Similarity`), so the store runs against
-    * HDFS/object storage on a real cluster, not just the local disk.
+  /** foreachBatch sink MERGE-ing every micro-batch into the merge store
+    * (rows carry `key` + `content_hash`): the reference's per-key
+    * change-detect upsert on the stored hash
+    * (the reference's `db/postgres_store.py:126-182`). Each batch writes
+    * only its new and changed rows, so at-least-once delivery
+    * (late/duplicate batches) converges and costs what it delivers.
     */
   def mergeSink(stream: DataFrame, targetDir: String, key: String,
       checkpointDir: String): StreamingQuery =
@@ -227,30 +220,48 @@ object Streams {
       .start()
 
   /** One micro-batch of the merge sink (also the batch/ST8 restart
-    * path). Holds the store's writer lease for the read-merge-swap —
-    * the pointer swap itself is atomic, but two uncoordinated writers
-    * would each merge onto the same base state and the last pointer
-    * win would silently drop the other's rows (same reasoning as the
-    * generational stores' lease, `sources.Commits`).
+    * path), under the store's writer lease: one row per key (lowest
+    * hash wins, as the other ingest paths resolve), the hash gate
+    * against each key's current row ([[GenTable.changed]]), and ONE
+    * generation of the rows that passed — none when nothing changed.
+    * A key whose current row is a tombstone passes and resurrects.
+    * Marks the store as delivery `state_<batchId>` for [[rollbackTo]].
     */
   def mergeBatch(batch: DataFrame, targetDir: String, key: String,
       batchId: Long, heldLocks: Set[String] = Set.empty): Unit =
    graft.sources.Commits.withWriterLockUnless(batch.sparkSession, targetDir,
        heldLocks) {
     val spark = batch.sparkSession
-    val state = s"state_$batchId"
-    // Redelivery after a COMPLETED commit: `_current` already points at
-    // this batch's state, so re-merging would read and overwrite the
-    // same files (Spark rejects that plan). The state is final — the
-    // replayed batch carries the same rows — so keep it as-is.
-    if (currentStateName(targetDir).contains(state)) return
-    val merged = readState(spark, targetDir) match {
-      case Some(target) => Upsert.merge(target, batch, key)
-      case None => batch
-    }
-    merged.write.mode("overwrite").parquet(stateDirPath(targetDir, state))
-    writePointer(targetDir, state)
+    val rows = Upsert.onePerKeyByHash(batch, key)
+    val store = mergeStore(rows.schema)
+    val fresh = store.changed(spark, targetDir,
+      graft.sources.Commits.committed(spark, targetDir), rows, key,
+      "content_hash")
+    store.commitGeneration(spark, targetDir)(
+      store.writeMembershipCounted(fresh, targetDir, _)): Unit
+    store.markDelivery(spark, targetDir, s"state_$batchId")
    }
+
+  /** The merge store's lifecycle descriptor ([[GenTable]]) over its
+    * columns `schema`, key first: the store dir is the membership
+    * table, gated on `content_hash`; a tombstone nulls every other
+    * column and carries the marker hash.
+    */
+  private def mergeStore(schema: org.apache.spark.sql.types.StructType) =
+    new GenTable(schema.head.name, col("content_hash") === Tombstone,
+      schema.tail.map(f => (if (f.name == "content_hash") lit(Tombstone)
+        else lit(null)).cast(f.dataType).as(f.name)),
+      "content_hash", GenTable.Table(""))
+
+  /** The descriptor of the merge store at `dir`, read from its committed
+    * columns; None when nothing is committed. Package-private for the
+    * specs.
+    */
+  private[graft] def mergeStoreAt(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[GenTable] =
+    graft.sources.Commits.readCommittedBatches(spark, dir,
+        graft.sources.Commits.committed(spark, dir))
+      .map(df => mergeStore(df.drop("batch").schema))
 
   // ---- near-dup-suppressing ingest sink -----------------------------------
 
@@ -1041,8 +1052,7 @@ object Streams {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = screened.count()
     if (n > 0) {
-      val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir,
-        Seq(docsDir, gramsDir))
+      val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir)
       // Docs keep EVERY delivered column (provenance/metadata ride
       // along); the text column is replaced by its cleaned value.
       // Two INDEPENDENT per-batch-dir writes off the persisted frames
@@ -1147,8 +1157,7 @@ object Streams {
     val selected = graft.sources.Commits.compactionSelection(
       docs.withColumn("batch", col("__dir")), committed, maxBatches)
     if (selected.isEmpty) return 0
-    val id = graft.sources.Commits.allocateBatchId(spark, storeDir,
-      Seq(docsDir, gramsDir))
+    val id = graft.sources.Commits.allocateBatchId(spark, storeDir)
     // Docs keep their ORIGINAL batch values through the fold: the
     // column is the per-id recency order the read-back's max_by
     // resolves generations with, and rewriting it to the fold's id
@@ -1239,13 +1248,13 @@ object Streams {
       val fp = graft.Prof("fanout.ledger")(
         deliveryFingerprint(shared, batchId, surfaces))
       if (fp.isDefined &&
-          graft.sources.StatePointer.readFile(ledgerDir, DeliveredMarker) == fp)
+          StatePointer.readFile(ledgerDir, DeliveredMarker) == fp)
         noop
       else {
         val r = apply(shared)
         // A unique temp name: two writers finishing at once each rename
         // their own file, and the marker ends as one of them.
-        fp.foreach(graft.sources.StatePointer.writeFile(ledgerDir,
+        fp.foreach(StatePointer.writeFile(ledgerDir,
           DeliveredMarker, _,
           s"$DeliveredMarker.${java.util.UUID.randomUUID()}.tmp"))
         r
@@ -1285,7 +1294,8 @@ object Streams {
     * the three read surfaces a training-data platform serves:
     *
     *   1. content-hash MERGE store ([[mergeBatch]]) — the document of
-    *      record (id, text, content_hash);
+    *      record (id, text, content_hash), one generation of the
+    *      wave's new and changed docs;
     *   2. standing INVERTED INDEX
     *      ([[graft.operators.Search.indexAppend]]) — BM25 retrieval,
     *      changed-content upsert;
@@ -1586,10 +1596,9 @@ object Streams {
           .agg(max_by(col("clean_text"), col("batch")).as(textCol))
         // An ALL-DUPLICATE delivery (the common case a dedup gate
         // exists for) must not touch the sinks: without this check
-        // the empty feed would still merge into the doc store, which
-        // rewrites the full state per mergeBatch's contract. The
-        // emptiness probe is a limit-1 job against the id-pruned
-        // store read — O(small) either way.
+        // the empty feed would still run every sink's gate and burn
+        // a batch id per store. The emptiness probe is a limit-1 job
+        // against the id-pruned store read — O(small) either way.
         if (nGate == 0 &&
             graft.Prof("fanout.emptyProbe")(cleaned.isEmpty))
           (0L, 0L, 0L, 0L, 0L, 0L)
@@ -1775,10 +1784,9 @@ object Streams {
       .start()
 
   /** TAKEDOWN fan-out — the delete twin of [[fanoutIngestBatch]]: one
-    * id batch leaves ALL the standing stores together — the merge
-    * store's state is rewritten minus the victims (same
-    * pointer-swapped state dir as [[mergeBatch]], so the removal
-    * commits atomically), and the inverted index and ANN store get
+    * id batch leaves ALL the standing stores together: the merge
+    * store ([[GenTable.delete]], marked as delivery `state_del_<b>` for
+    * [[rollbackToState]]), the inverted index and the ANN store get
     * tombstone generations ([[graft.operators.Search.indexDelete]],
     * [[graft.operators.Similarity.annStoreDelete]], and — when the
     * pipeline runs a PQ store — [[graft.operators.Similarity
@@ -1816,22 +1824,10 @@ object Streams {
           Seq(storeDir, indexDir, annDir) ++ chunkDir ++ pqDir ++
             chunkVecDir) { hl =>
         val storeT = () => graft.Prof("fanout.delete.merge") {
-          readState(spark, storeDir) match {
-            case Some(st) =>
-              val n = st.join(victims, Seq(idCol), "left_semi").count()
-              if (n > 0) {
-                // `state_del_<b>` keeps the takedown's provenance
-                // visible in the layout; [[vacuum]] reclaims these like
-                // any other state (recency is creation order, not a name
-                // parse) and [[rollbackToState]] can target them by name.
-                val state = s"state_del_$batchId"
-                st.join(victims, Seq(idCol), "left_anti")
-                  .write.mode("overwrite")
-                  .parquet(stateDirPath(storeDir, state))
-                writePointer(storeDir, state)
-              }
-              n
-            case None => 0L
+          mergeStoreAt(spark, storeDir).fold(0L) { t =>
+            val n = t.delete(spark, storeDir, victims, hl)
+            t.markDelivery(spark, storeDir, s"state_del_$batchId")
+            n
           }
         }
         val idxT = () => graft.Prof("fanout.delete.index")(
@@ -1875,73 +1871,61 @@ object Streams {
   /** Composed MAINTENANCE pass — the offline twin of the ingest and
     * takedown fan-outs, one call a platform cron can own: vacuum (and,
     * on the incremental cadence, compact) every generational store the
-    * fan-out writes — the inverted index, the ANN store and, when
-    * given, the PQ, chunk-vector and chunk stores — through their
-    * shared [[graft.sources.GenTable]] maintenance (orphan-sweeping,
-    * under each store's own writer lease), and bound the merge store's
-    * snapshot history to `keepStates`. Pass `postingsTable` /
-    * `annPartDir` and the pass REFRESHES those snapshot layouts right
-    * after their store's vacuum — snapshot staleness becomes "at most
-    * one maintenance interval", owned by the same cron.
+    * fan-out writes — the merge store, the inverted index, the ANN
+    * store and, when given, the PQ, chunk-vector and chunk stores —
+    * through their shared [[graft.sources.GenTable]] maintenance
+    * (orphan-sweeping, under each store's own writer lease). Pass
+    * `postingsTable` / `annPartDir` and the pass REFRESHES those
+    * snapshot layouts right after their store's vacuum — snapshot
+    * staleness becomes "at most one maintenance interval", owned by the
+    * same cron.
     *
     * Like the fan-outs, each store is one [[graft.Par]] track running
     * its steps in sequence; track order is index, ANN, PQ,
     * chunk-vector, chunks, merge store. Maintenance changes no answer,
     * so a lease refused on one store stops only its track: every track
     * finishes, then the first failure in track order is rethrown.
-    * Returns the merge-store state ids deleted.
     */
   def fanoutVacuum(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, indexDir: String, annDir: String,
-      keepStates: Int = 3, postingsTable: Option[String] = None,
+      postingsTable: Option[String] = None,
       annPartDir: Option[String] = None,
       incremental: Boolean = false,
       chunkDir: Option[String] = None,
       maxBatches: Option[Int] = None,
       minDeadFraction: Double = 0.25,
       pqDir: Option[String] = None,
-      chunkVecDir: Option[String] = None): Seq[Long] = {
+      chunkVecDir: Option[String] = None): Unit = {
     import graft.operators.{Search, Similarity}
     // incremental=true is the ROUTINE cadence at scale: reclaim only
-    // the batches the interval's mutations dirtied
-    // (Search.indexVacuumIncremental) instead of rewriting the full
-    // live state — keep the full vacuum for occasional compaction to
-    // one batch. `minDeadFraction` guards the cadence's whole
-    // point: at threshold 0 a single dead row inside the store's big
-    // compacted batch would select it for a full rewrite every
-    // interval — the default 0.25 leaves lightly-dirty bulk batches
-    // alone (their dead tail is bounded by the SAME threshold) and
-    // reclaims the mutation waves, which go mostly-dead quickly. The
-    // batch-count bound (`maxBatches`) applies to that path only: a
-    // full vacuum leaves one batch anyway.
+    // the batches the interval's mutations dirtied, at a dead fraction
+    // of at least `minDeadFraction` (at 0, one dead row in a store's big
+    // compacted batch would rewrite it every interval), and bound the
+    // batch count (`maxBatches`); the full pass leaves one batch.
     val compactTo = maxBatches.filter(_ => incremental)
-    def track(steps: => Unit): () => Seq[Long] = () => { steps; Nil }
     // One GenTable store's steps: its vacuum, then the batch bound.
-    def pass(t: graft.sources.GenTable, dir: String)(full: => Unit) = {
+    def pass(t: graft.sources.GenTable, dir: String): Unit = {
       if (incremental) t.vacuumIncremental(spark, dir, minDeadFraction): Unit
-      else full
+      else t.vacuumFull(spark, dir)
       compactTo.foreach(t.compactBatches(spark, dir, _): Unit)
     }
-    val idxT = track {
-      pass(Search.IndexStore, indexDir)(Search.indexVacuum(spark, indexDir))
+    val idxT = () => {
+      pass(Search.IndexStore, indexDir)
       postingsTable.foreach(Search.bucketPostings(spark, indexDir, _))
     }
-    val annT = track {
-      pass(Similarity.AnnStore, annDir)(
-        Similarity.annStoreVacuum(spark, annDir))
+    val annT = () => {
+      pass(Similarity.AnnStore, annDir)
       annPartDir.foreach(Similarity.annStorePartition(spark, annDir, _))
     }
     // The chunk-vector surface is a PQ-family store: it takes exactly
     // the doc-PQ store's maintenance, once either has a committed build.
-    val pqTs = (pqDir.toSeq ++ chunkVecDir.toSeq).map(d => track(
+    val pqTs = (pqDir.toSeq ++ chunkVecDir.toSeq).map(d => () =>
       if (graft.sources.Commits.committed(spark, d).nonEmpty)
-        pass(Similarity.PqStore, d)(Similarity.pqStoreVacuum(spark, d))))
-    // The chunk store's only vacuum is the incremental form; on the
-    // non-incremental pass run it at threshold 0 (its full reclaim).
-    val chunkTs = chunkDir.toSeq.map(d => track(
-      pass(ChunkStore, d)(chunkStoreVacuum(spark, d, 0.0): Unit)))
-    graft.Par.run(Seq(idxT, annT) ++ pqTs ++ chunkTs :+
-      (() => vacuum(storeDir, keepStates))).last
+        pass(Similarity.PqStore, d))
+    val chunkTs = chunkDir.toSeq.map(d => () => pass(ChunkStore, d))
+    val mergeT = () =>
+      mergeStoreAt(spark, storeDir).foreach(pass(_, storeDir))
+    graft.Par.run(Seq(idxT, annT) ++ pqTs ++ chunkTs :+ mergeT): Unit
   }
 
   /** Streaming face of [[fanoutDeleteBatch]] — the takedown queue as a
@@ -2007,8 +1991,7 @@ object Streams {
     * without their signatures were a permanent LSH blind spot, and
     * orphan signatures could drop a redelivered batch against its own
     * crashed remains. The id allocator burns every attempted id via
-    * the ledger's attempt markers (on a ledger with none yet, also
-    * max(batch) across all three tables); the writer lease serializes
+    * the ledger's attempt markers; the writer lease serializes
     * concurrent writers.
     */
   def neardupIngestBatch(batch: DataFrame, storeDir: String, idCol: String,
@@ -2084,8 +2067,7 @@ object Streams {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = survivors.count()
     if (n > 0) {
-      val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir,
-        Seq(docsDir, hsDir, bandsDir))
+      val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir)
       // Three INDEPENDENT appends (own directory each, all reading the
       // persisted survivor/shingle/key frames) — overlapped (guide
       // §2.6). Any partial subset a crash leaves is uncommitted and
@@ -2158,71 +2140,60 @@ object Streams {
 
   // ---- pointer-swap state-store plumbing (Hadoop FileSystem) ---------------
   //
-  // All pointer/state plumbing is the shared `sources.StatePointer`
-  // (also used by the url frontier), so the merge store, its
-  // rollback/vacuum, and the takedown fan-out run against whatever
-  // filesystem the cluster mounts, not just local disk.
+  // The CMS sink keeps its state behind the shared `sources.StatePointer`
+  // (also used by the url frontier): a fixed-size bucket table, rewritten
+  // whole per batch. The merge store is a `GenTable` store; the readers
+  // and rollback below serve both layouts, told apart by `_current`.
 
-  private def fsFor(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    graft.sources.StatePointer.fsFor(p)
-
-  private def stateDirPath(targetDir: String, state: String): String =
-    graft.sources.StatePointer.stateDirPath(targetDir, state)
-
-  /** Name of the state dir `_current` points at, if the pointer exists. */
-  def currentStateName(targetDir: String): Option[String] =
-    graft.sources.StatePointer.currentStateName(targetDir)
-
-  private def writePointer(targetDir: String, state: String): Unit =
-    graft.sources.StatePointer.writePointer(targetDir, state)
-
-  /** The current merged state under a mergeSink target, if any. */
+  /** The current state under a CMS target, or the merge store's live
+    * rows (each key's current row, the caller's columns, no `batch`),
+    * if any.
+    */
   def readState(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): Option[DataFrame] =
-    currentStateName(targetDir)
-      .map(name => ParquetRead(spark, stateDirPath(targetDir, name)))
+    StatePointer.currentStateName(targetDir) match {
+      case Some(name) =>
+        Some(ParquetRead(spark, StatePointer.stateDirPath(targetDir, name)))
+      case None =>
+        mergeStoreAt(spark, targetDir).flatMap(_.live(spark, targetDir))
+    }
 
-  /** Roll a versioned state store (merge sink / CMS sink) back to
-    * `batchId`: repoint `_current` at `state_<batchId>`. Later states
-    * stay on disk for audit; a stream resumed from an earlier
-    * checkpoint simply overwrites them batch by batch. This is the
-    * bad-batch recovery lever the versioned layout exists for —
-    * rollback is a one-line pointer move, not a data rewrite.
+  /** Roll a versioned store (merge sink / CMS sink) back to how it read
+    * right after batch `batchId`. Later states stay reachable, so it
+    * may roll forward again. This is the bad-batch recovery lever.
     */
   def rollbackTo(targetDir: String, batchId: Long): Unit =
     rollbackToState(targetDir, s"state_$batchId")
 
-  /** General form of [[rollbackTo]] addressing a state dir by NAME —
-    * the takedown fan-out's `state_del_<b>` states have no numeric
-    * `state_<k>` alias, so this is how a store is pinned back to (or
-    * audited at) the post-takedown snapshot.
+  /** General form of [[rollbackTo]] addressing a delivery by NAME — the
+    * takedown fan-out's `state_del_<b>` has no numeric alias. A CMS
+    * store repoints `_current` at the state dir; the merge store commits
+    * one compensating generation ([[GenTable.rollbackTo]]). Throws
+    * IllegalArgumentException when the target no longer exists.
     */
-  def rollbackToState(targetDir: String, state: String): Unit =
-   graft.sources.Commits.withWriterLock(
-       org.apache.spark.sql.SparkSession.active, targetDir) {
-    val p = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(targetDir), state)
-    val fs = fsFor(p)
-    require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
-      s"no $state under $targetDir")
-    writePointer(targetDir, state)
-   }
+  def rollbackToState(targetDir: String, state: String): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    if (StatePointer.currentStateName(targetDir).isEmpty)
+      mergeStoreAt(spark, targetDir).getOrElse(throw
+        new IllegalArgumentException(s"no $state under $targetDir"))
+        .rollbackTo(spark, targetDir, state)
+    else graft.sources.Commits.withWriterLock(spark, targetDir) {
+      require(StatePointer.exists(StatePointer.stateDirPath(targetDir,
+        state)), s"no $state under $targetDir")
+      StatePointer.writePointer(targetDir, state)
+    }
+  }
 
-  /** VACUUM a versioned state store: delete every state dir except the
-    * `keep` most recent AND the one `_current` points at (audit /
-    * rollback headroom stays bounded instead of growing one full state
-    * copy per batch forever). Recency is CREATION order (modification
-    * time, name tie-break), so takedown states (`state_del_<b>`) age
-    * out exactly like merge states instead of accumulating forever.
-    * Never touches `_current` or newer states a rollback might
-    * re-advance to; returns the deleted states' batch ids.
+  /** VACUUM a CMS state store: delete every state dir except the `keep`
+    * most recent AND the one `_current` points at, so rollback headroom
+    * stays bounded. Returns the deleted states' batch ids. The merge
+    * store's history is bounded by [[fanoutVacuum]] instead.
     */
   def vacuum(targetDir: String, keep: Int): Seq[Long] =
    graft.sources.Commits.withWriterLock(
        org.apache.spark.sql.SparkSession.active, targetDir) {
-    graft.sources.StatePointer.vacuum(targetDir, keep)
-      .map(_.stripPrefix("state_").stripPrefix("del_").stripPrefix("v")
-        .toLongOption.getOrElse(-1L))
+    StatePointer.vacuum(targetDir, keep)
+      .map(_.stripPrefix("state_").toLongOption.getOrElse(-1L))
    }
 
   // ---- standing count-min sketch ingest -----------------------------------
@@ -2264,24 +2235,24 @@ object Streams {
     val delta = graft.operators.Sketch.cmsBuckets(batch, itemCol, depth,
       width)
     val root = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = fsFor(root)
+    val fs = StatePointer.fsFor(root)
     fs.mkdirs(root)
-    // Predecessor = largest NUMERIC state below this batch id (the
-    // bucket-add replay contract); takedown-style named states never
-    // appear in a CMS store and would not parse anyway.
+    // Predecessor = largest state below this batch id (the bucket-add
+    // replay contract).
     val prev = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("state_"))
       .flatMap(_.getPath.getName.stripPrefix("state_").toLongOption)
       .filter(_ < batchId)
       .sorted.lastOption
-      .map(k => ParquetRead(spark, stateDirPath(targetDir, s"state_$k")))
+      .map(k => ParquetRead(spark,
+        StatePointer.stateDirPath(targetDir, s"state_$k")))
     val merged = prev match {
       case Some(cur) => cur.unionByName(delta)
         .groupBy(col("d"), col("b")).agg(sum(col("s")).as("s"))
       case None => delta
     }
     merged.write.mode("overwrite")
-      .parquet(stateDirPath(targetDir, s"state_$batchId"))
-    writePointer(targetDir, s"state_$batchId")
+      .parquet(StatePointer.stateDirPath(targetDir, s"state_$batchId"))
+    StatePointer.writePointer(targetDir, s"state_$batchId")
    }
 }

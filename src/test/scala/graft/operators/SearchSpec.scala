@@ -300,12 +300,14 @@ class SearchSpec extends SparkSpec {
       "orphan; the next append allocates above it") {
     val dir = java.nio.file.Files.createTempDirectory("bm25-rebuild-crash")
       .toString + "/index"
-    // Simulated crash inside buildIndex: `_commits` is gone and
-    // postings/b0 is written, but docs/b0 and the commit marker (with
-    // its a0 attempt marker) are not. Only the data scan sees b0.
+    // Simulated crash inside buildIndex: its allocation recorded the a0
+    // attempt marker and postings/b0 is written, but docs/b0 and the
+    // commit marker are not. The attempt marker alone burns id 0.
+    graft.sources.Commits.recordAttempt(spark, dir, 0L)
     Search.writePostingsSlice(docs.filter(col("doc_id") <= 3),
       "doc_id", "text", dir, 0L)
-    assert(graft.sources.Commits.attempted(spark, dir).isEmpty)
+    assert(graft.sources.Commits.attempted(spark, dir) == Seq(0L))
+    assert(graft.sources.Commits.committed(spark, dir).isEmpty)
     val appended = docs.filter(col("doc_id") > 3)
     assert(Search.indexAppend(appended, "doc_id", "text", dir) == 2L)
     assert(graft.sources.Commits.committed(spark, dir) == Seq(1L),

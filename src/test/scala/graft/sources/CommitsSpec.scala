@@ -29,61 +29,26 @@ class CommitsSpec extends SparkSpec {
   test("allocation is listing-only: ids burn without any data write") {
     val dir = tmp()
     // Fresh store: first id is 0, recorded as an attempt marker.
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 0L)
+    assert(Commits.allocateBatchId(spark, dir) == 0L)
     assert(Commits.attempted(spark, dir) == Seq(0L))
     // Nothing committed, NO data ever written — the next allocation
     // must still skip id 0 (a crash between allocation and data write
     // burns the id; reuse would double rows under a later commit).
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 1L)
+    assert(Commits.allocateBatchId(spark, dir) == 1L)
     // Committing advances the floor the same way.
     Commits.commit(spark, dir, 1L)
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 2L)
+    assert(Commits.allocateBatchId(spark, dir) == 2L)
     assert(Commits.committed(spark, dir) == Seq(1L))
     assert(Commits.attempted(spark, dir).sorted == Seq(0L, 1L, 2L))
   }
 
-  test("pre-marker store with committed ids AND a marker-less orphan " +
-      "allocates above the orphan") {
-    import spark.implicits._
-    val dir = tmp()
-    // An old-code store: committed b0 written directly (old commit()
-    // recorded no attempt marker), plus a postings-style orphan at
-    // batch 1 from a crashed old-code append. The ledger alone says
-    // "next is 1" — allocating 1 would double the orphan's rows under
-    // a committed marker, so the marker-less first allocation must
-    // consult the data too.
-    Seq((1L, 0L), (2L, 1L)).toDF("id", "batch").write.parquet(dir)
-    val b0 = new org.apache.hadoop.fs.Path(s"$dir/_commits/b0")
-    val fs = b0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(b0.getParent)
-    fs.create(b0, true).close()
-    assert(Commits.attempted(spark, dir).isEmpty)
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 2L)
-  }
-
   test("commit records the attempt marker too, re-arming the fast path") {
     val dir = tmp()
-    // Build/vacuum paths commit fixed ids without allocateBatchId; the
-    // committed id must count as attempted or the next allocation
-    // falls back to a data scan of the whole store.
+    // A commit records its id as attempted too, so the ledger listing
+    // alone keeps every committed id from being reallocated.
     Commits.commit(spark, dir, 0L)
     assert(Commits.attempted(spark, dir) == Seq(0L))
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 1L)
-  }
-
-  test("ledger-less legacy store falls back to a data scan exactly once") {
-    import spark.implicits._
-    val dir = tmp()
-    // Data at batches 0-2 with no ledger dir at all (a store whose
-    // _commits was lost, or pre-marker data): the one-time data-scan
-    // fallback allocates above the orphans.
-    Seq((1L, 0L), (2L, 1L), (3L, 2L)).toDF("id", "batch")
-      .write.parquet(dir)
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 3L)
-    // That allocation recorded a marker, so the next one is pure
-    // listing.
-    assert(Commits.attempted(spark, dir) == Seq(3L))
-    assert(Commits.allocateBatchId(spark, dir, Seq(dir)) == 4L)
+    assert(Commits.allocateBatchId(spark, dir) == 1L)
   }
 
   test("a committed b<id> dir holding only hidden files reads as empty, " +

@@ -112,7 +112,7 @@ class CrossJvmLockSpec extends SparkSpec {
       .map(_.drop(6).trim.toLong)
       .getOrElse(fail(s"no ALLOC line:\n${out.all.mkString("\n")}"))
     val mine = Commits.withWriterLock(spark, dir) {
-      Commits.allocateBatchId(spark, dir, Seq(dir))
+      Commits.allocateBatchId(spark, dir)
     }
     assert(mine == childId + 1,
       s"expected ${childId + 1} after the child's $childId, got $mine")

@@ -173,7 +173,7 @@ class GenTableSpec extends SparkSpec {
       s.build(dir)
       val want = s.read(dir)
       // Crashed append: id allocated, slices written, never committed.
-      val orphan = Commits.allocateBatchId(spark, dir, Seq.empty)
+      val orphan = Commits.allocateBatchId(spark, dir)
       for (t <- s.table.tables) {
         val src = new Path(s"${tableDir(dir, t)}/b0")
         if (fs(dir).exists(src))

@@ -24,7 +24,7 @@ object LockRaceChild {
         Commits.withWriterLock(spark, dir, ttl.toLong) {
           println("HELD")
           Console.flush()
-          val id = Commits.allocateBatchId(spark, dir, Seq(dir))
+          val id = Commits.allocateBatchId(spark, dir)
           println(s"ALLOC $id")
           Console.flush()
           Thread.sleep(hold.toLong)

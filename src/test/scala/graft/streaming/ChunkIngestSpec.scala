@@ -85,8 +85,7 @@ class ChunkIngestSpec extends SparkSpec {
     Streams.chunkIngestBatch(docs, dir, "doc_id", "text", 4, 1)
     // Simulate the crash window: chunks of a NEW batch id written,
     // docs row + commit marker never landed.
-    val orphanId = graft.sources.Commits.allocateBatchId(spark, dir,
-      Seq(s"$dir/docs", s"$dir/chunks"))
+    val orphanId = graft.sources.Commits.allocateBatchId(spark, dir)
     Seq((9L, 0L, 2L, "zz zz", orphanId))
       .toDF("doc_id", "chunk_seq", "n_tokens", "chunk_text", "batch")
       .write.parquet(s"$dir/chunks/b$orphanId")

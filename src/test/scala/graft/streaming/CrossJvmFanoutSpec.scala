@@ -231,7 +231,7 @@ class CrossJvmFanoutSpec extends SparkSpec {
     def takedown() = Streams.fanoutDeleteBatch(Seq(1L).toDF("doc_id"), 1L,
       s"$root/store", s"$root/index", s"$root/ann",
       pqDir = Some(s"$root/pq"))
-    val state = Streams.currentStateName(s"$root/store")
+    val stored = Commits.committed(spark, s"$root/store")
     val indexed = Commits.committed(spark, s"$root/index")
 
     // A real second JVM holds the ANN store, the third of the
@@ -245,7 +245,7 @@ class CrossJvmFanoutSpec extends SparkSpec {
     // The leases are taken before any surface mutates: the merge store
     // and the index, whose leases came first, are unchanged, and no
     // lease of ours is left behind.
-    assert(Streams.currentStateName(s"$root/store") == state)
+    assert(Commits.committed(spark, s"$root/store") == stored)
     assert(Streams.readState(spark, s"$root/store").get
       .select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
     assert(Commits.committed(spark, s"$root/index") == indexed)

@@ -200,15 +200,15 @@ class FanoutIngestSpec extends SparkSpec {
 
     // An ALL-DUPLICATE delivery under fresh ids (the common case a
     // dedup gate exists for) must not touch the sinks at all — in
-    // particular it must not pay the merge store's full state rewrite.
-    val before = Streams.currentStateName(storeDir)
+    // particular it must not commit a merge-store generation.
+    val before = Commits.committed(spark, storeDir)
     val allDup = Seq(
       (40L, "alpha beta gamma delta epsilon", Seq(0.2f, 0.2f, 0.2f)),
       (41L, "unique words only here nothing shared", Seq(0.3f, 0.3f, 0.3f)))
       .toDF("doc_id", "text", "vec")
     assert(gated(allDup, 7L) == ((0L, 0L, 0L, 0L, 0L, 0L)))
-    assert(Streams.currentStateName(storeDir) == before,
-      "all-duplicate batch rewrote the merge state")
+    assert(Commits.committed(spark, storeDir) == before,
+      "all-duplicate batch committed a merge-store generation")
     assert(Streams.readState(spark, storeDir).get.count() == 5)
     // PQ store membership tracks the other surfaces exactly.
     assert(Similarity.pqStoreLiveIds(spark, pqDir)
@@ -317,16 +317,16 @@ class FanoutIngestSpec extends SparkSpec {
     assert(gated(wave2, 1L) == ((0L, 0L, 0L, 0L, 0L, 0L, 0L)))
 
     // An all-duplicate delivery under fresh ids must not touch the
-    // downstream stores at all — no merge-state rewrite, no new
+    // downstream stores at all — no merge-store generation, no new
     // near-dup generation beyond the gate's own screen reads.
-    val before = Streams.currentStateName(storeDir)
+    val before = Commits.committed(spark, storeDir)
     val allDup = Seq(
       (40L, t80, Seq(0.2f, 0.2f, 0.2f)),
       (41L, nearOf(10, "swapped"), Seq(0.3f, 0.3f, 0.3f)))
       .toDF("doc_id", "text", "vec")
     assert(gated(allDup, 7L) == ((0L, 0L, 0L, 0L, 0L, 0L, 0L)))
-    assert(Streams.currentStateName(storeDir) == before,
-      "all-duplicate batch rewrote the merge state")
+    assert(Commits.committed(spark, storeDir) == before,
+      "all-duplicate batch committed a merge-store generation")
     assert(Streams.neardupStoreRead(spark, ndDir).get
       .select("doc_id").as[Long].collect().toSet
       == Set(1L, 2L, 3L, 13L, 14L, 21L))
@@ -448,7 +448,7 @@ class FanoutIngestSpec extends SparkSpec {
     // vacuums plus batch-count compaction across all three stores, one
     // call. Answers must be unchanged on every surface.
     Streams.fanoutVacuum(spark, storeDir, indexDir, annDir,
-      keepStates = 3, incremental = true, chunkDir = Some(chunkDir),
+      incremental = true, chunkDir = Some(chunkDir),
       maxBatches = Some(2))
     assert(Search.bm25FromIndexTopK(spark, indexDir,
       Seq("spark", "vector", "stream"), 10)
@@ -464,11 +464,11 @@ class FanoutIngestSpec extends SparkSpec {
     assert(graft.sources.Commits.committed(spark, chunkDir).size <= 2)
     // Composed maintenance: both standing stores compact to one
     // committed batch with zero reclaimable rows, the snapshot probe
-    // layouts are refreshed in the same pass, and the merge-store
-    // history is bounded (nothing to delete here: only 3 states).
+    // layouts are refreshed in the same pass, and the merge store
+    // folds to one generation like the others.
     val annPart = s"$root/ann-part"
     Streams.fanoutVacuum(spark, storeDir, indexDir, annDir,
-      keepStates = 3, postingsTable = Some("graft_fanout_vac_postings"),
+      postingsTable = Some("graft_fanout_vac_postings"),
       annPartDir = Some(annPart), chunkDir = Some(chunkDir))
     // Refreshed snapshots answer identically to the live stores.
     assert(Search.bm25FromBucketedIndexTopK(spark, indexDir,
@@ -630,7 +630,7 @@ class FanoutIngestSpec extends SparkSpec {
     }
     /** Committed generations of every generational surface. */
     def generations: Map[String, Seq[Long]] =
-      Seq(index, ann, gram, nd, pq, chunks, ckvec)
+      Seq(store, index, ann, gram, nd, pq, chunks, ckvec)
         .map(d => d -> Commits.committed(spark, d).sorted).toMap
     /** Every file under the root, with its size and modification time. */
     def files: Map[String, (Long, Long)] = {
@@ -740,7 +740,8 @@ class FanoutIngestSpec extends SparkSpec {
   /** Each GenTable store of a family with its descriptor. */
   private def genTables(f: Family) = Seq(f.index -> Search.IndexStore,
     f.ann -> Similarity.AnnStore, f.pq -> Similarity.PqStore,
-    f.chunks -> Streams.ChunkStore, f.ckvec -> Similarity.PqStore)
+    f.chunks -> Streams.ChunkStore, f.ckvec -> Similarity.PqStore,
+    f.store -> Streams.mergeStoreAt(spark, f.store).get)
 
   /** The BM25, ANN, PQ-rerank and passage answers of a family. */
   private def answers(f: Family): Seq[Seq[org.apache.spark.sql.Row]] = {
@@ -762,27 +763,31 @@ class FanoutIngestSpec extends SparkSpec {
     */
   private def sequentialVacuum(f: Family, incremental: Boolean,
       maxBatches: Option[Int], postingsTable: Option[String],
-      annPartDir: Option[String]): Seq[Long] = {
+      annPartDir: Option[String]): Unit = {
     val pqFamily = Seq(f.pq, f.ckvec)
+    val merge = Streams.mergeStoreAt(spark, f.store).get
     if (incremental) {
       Search.indexVacuumIncremental(spark, f.index, 0.25)
       Similarity.annStoreVacuumIncremental(spark, f.ann, 0.25)
       pqFamily.foreach(Similarity.pqStoreVacuumIncremental(spark, _, 0.25))
+      Streams.chunkStoreVacuum(spark, f.chunks, 0.25)
+      merge.vacuumIncremental(spark, f.store, 0.25)
     } else {
       Search.indexVacuum(spark, f.index)
       Similarity.annStoreVacuum(spark, f.ann)
       pqFamily.foreach(Similarity.pqStoreVacuum(spark, _))
+      Streams.ChunkStore.vacuumFull(spark, f.chunks)
+      merge.vacuumFull(spark, f.store)
     }
-    Streams.chunkStoreVacuum(spark, f.chunks, if (incremental) 0.25 else 0.0)
     maxBatches.filter(_ => incremental).foreach { m =>
       Search.indexCompactBatches(spark, f.index, m)
       Similarity.annStoreCompactBatches(spark, f.ann, m)
       Streams.chunkStoreCompactBatches(spark, f.chunks, m)
       pqFamily.foreach(Similarity.pqStoreCompactBatches(spark, _, m))
+      merge.compactBatches(spark, f.store, m)
     }
     postingsTable.foreach(Search.bucketPostings(spark, f.index, _))
     annPartDir.foreach(Similarity.annStorePartition(spark, f.ann, _))
-    Streams.vacuum(f.store, 3)
   }
 
   /** Churn two identical families, maintain one through `fanoutVacuum`
@@ -807,13 +812,12 @@ class FanoutIngestSpec extends SparkSpec {
         Some(s"${f.root}/ann-part")) else (None, None)
     val (concPost, concPart) = snap(conc, "conc")
     val (seqPost, seqPart) = snap(seq, "seq")
-    val deleted = Streams.fanoutVacuum(spark, conc.store, conc.index,
-      conc.ann, keepStates = 3, postingsTable = concPost,
+    Streams.fanoutVacuum(spark, conc.store, conc.index,
+      conc.ann, postingsTable = concPost,
       annPartDir = concPart, incremental = incremental,
       chunkDir = Some(conc.chunks), maxBatches = maxBatches,
       pqDir = Some(conc.pq), chunkVecDir = Some(conc.ckvec))
-    assert(deleted ==
-      sequentialVacuum(seq, incremental, maxBatches, seqPost, seqPart))
+    sequentialVacuum(seq, incremental, maxBatches, seqPost, seqPart)
     assert(rel(conc) == rel(seq))
     assert(rel(conc) != churned, "the pass committed nothing")
     assert(conc.live == seq.live)
@@ -836,6 +840,10 @@ class FanoutIngestSpec extends SparkSpec {
       "store's vacuum") {
     val (conc, seq) = assertSameAsSequential("maint-full",
       incremental = false, maxBatches = None, snapshots = true)
+    // A full pass folds every batch, clean ones included.
+    genTables(conc).foreach { case (dir, _) =>
+      assert(Commits.committed(spark, dir).size == 1, dir)
+    }
     Seq(conc, seq).foreach { f =>
       assert(Commits.snapshotFresh(spark, s"${f.index}/postings_bucketed",
         f.index), s"${f.root}: postings snapshot is stale")
@@ -848,23 +856,20 @@ class FanoutIngestSpec extends SparkSpec {
       "maintenance done") {
     val f = family("maint-lease")
     churn(f)
-    def states = new java.io.File(f.store).listFiles()
-      .count(d => d.isDirectory && d.getName.startsWith("state_"))
-    assert(states > 1)
     def vacuum() = Streams.fanoutVacuum(spark, f.store, f.index, f.ann,
-      keepStates = 1, incremental = true, chunkDir = Some(f.chunks),
+      incremental = true, chunkDir = Some(f.chunks),
       maxBatches = Some(2), pqDir = Some(f.pq), chunkVecDir = Some(f.ckvec))
     val annBefore = Commits.committed(spark, f.ann).sorted
     assert(annBefore.size > 2)
+    assert(Commits.committed(spark, f.store).size > 2)
     Commits.acquireWriterLock(spark, f.ann)
     val refused = try intercept[IllegalStateException](vacuum())
     finally Commits.releaseWriterLock(spark, f.ann)
     assert(refused.getMessage.contains("ann/_lock"), refused.getMessage)
     assert(Commits.committed(spark, f.ann).sorted == annBefore)
-    Seq(f.index, f.chunks, f.pq, f.ckvec).foreach { d =>
+    Seq(f.index, f.chunks, f.pq, f.ckvec, f.store).foreach { d =>
       assert(Commits.committed(spark, d).size <= 2, s"$d was not compacted")
     }
-    assert(states == 1, "the merge history was not bounded")
     vacuum(): Unit
     assert(Commits.committed(spark, f.ann).size <= 2)
   }

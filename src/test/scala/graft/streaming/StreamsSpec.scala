@@ -277,18 +277,19 @@ class StreamsSpec extends SparkSpec {
         .select("doc_id", "text").as[(Long, String)].collect().toMap
       assert(got == Map(1L -> "one", 2L -> "two v2", 3L -> "three"))
       // ST8 restart path: merging the same batch once more changes nothing.
+      val committed = graft.sources.Commits.committed(spark, dir)
       Streams.mergeBatch(hashed(Seq(2L -> "two v2", 3L -> "three")),
         dir, "doc_id", batchId = 99L)
       val again = Streams.readState(spark, dir).get
         .select("doc_id", "text").as[(Long, String)].collect().toMap
       assert(again == got)
-      // Redelivery of the LAST committed batch (crash after pointer
-      // swap, before the checkpoint advanced): _current already points
-      // at state_99 — the replay must keep it rather than read-and-
-      // overwrite the same files.
-      assert(Streams.currentStateName(dir).contains("state_99"))
+      // Redelivery of the LAST batch (crash after its commit, before the
+      // checkpoint advanced): every row is already current, so neither
+      // delivery of batch 99 commits a generation.
+      assert(graft.sources.Commits.committed(spark, dir) == committed)
       Streams.mergeBatch(hashed(Seq(2L -> "two v2", 3L -> "three")),
         dir, "doc_id", batchId = 99L)
+      assert(graft.sources.Commits.committed(spark, dir) == committed)
       assert(Streams.readState(spark, dir).get
         .select("doc_id", "text").as[(Long, String)].collect().toMap == got)
     } finally q.stop()
@@ -313,9 +314,11 @@ class StreamsSpec extends SparkSpec {
     assert(Streams.readState(spark, dir).get
       .select("text").as[String].collect().toSet == Set("one", "two"))
     Streams.rollbackTo(dir, 1L)
-    // Vacuum over the URI store: state_0 is older than the keep set.
+    // Maintenance over the URI store: the full pass folds every
+    // generation, rollbacks included, into one.
     Streams.mergeBatch(hashed(Seq(3L -> "three")), dir, "doc_id", 2L)
-    assert(Streams.vacuum(dir, keep = 2) == Seq(0L))
+    Streams.mergeStoreAt(spark, dir).get.vacuumFull(spark, dir)
+    assert(graft.sources.Commits.committed(spark, dir).size == 1)
     assert(Streams.readState(spark, dir).get.count() == 3)
   }
 
@@ -330,17 +333,28 @@ class StreamsSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-del-a").toString + "/a")
     Streams.mergeBatch(hashed(Seq(1L -> "one", 2L -> "two")), dir,
       "doc_id", 0L)
-    // Takedown writes state_del_7 and repoints _current at it.
+    // The takedown commits one tombstone generation, marked as delivery
+    // state_del_7.
     val (nStore, _, _, _, _, _) = Streams.fanoutDeleteBatch(Seq(2L).toDF("doc_id"),
       7L, dir, idx, ann)
     assert(nStore == 1L)
-    assert(Streams.currentStateName(dir).contains("state_del_7"))
-    // A later merge advances past the takedown state...
+    assert(graft.sources.Commits.committed(spark, dir).size == 2)
+    def ids() = Streams.readState(spark, dir).get
+      .select("doc_id").as[Long].collect().toSet
+    Streams.rollbackTo(dir, 0L)
+    assert(ids() == Set(1L, 2L))
+    Streams.rollbackToState(dir, "state_del_7")
+    assert(ids() == Set(1L))
+    // A maintenance pass reclaims the dirty generations and drops the
+    // markers whose as-of view they held.
+    Streams.mergeStoreAt(spark, dir).get.vacuumIncremental(spark, dir, 0.25)
+    assert(graft.sources.Commits.committed(spark, dir).size == 1)
+    intercept[IllegalArgumentException] {
+      Streams.rollbackToState(dir, "state_del_7")
+    }
+    // Later merges advance past the takedown...
     Streams.mergeBatch(hashed(Seq(3L -> "three")), dir, "doc_id", 1L)
     Streams.mergeBatch(hashed(Seq(4L -> "four")), dir, "doc_id", 2L)
-    // ...and vacuum ages it out by recency like any numeric state
-    // (state_0 and state_del_7 are the two oldest of four).
-    assert(Streams.vacuum(dir, keep = 2).toSet == Set(0L, 7L))
     assert(Streams.readState(spark, dir).get
       .select("doc_id").as[Long].collect().toSet == Set(1L, 3L, 4L))
     // rollbackToState can pin the store to a surviving named state.
@@ -360,7 +374,7 @@ class StreamsSpec extends SparkSpec {
       rows.toDF("doc_id", "text")
         .withColumn("content_hash", HashFunctions.contentHash(col("text")))
     Streams.mergeBatch(hashed(Seq(1L -> "one")), dir, "doc_id", 0L)
-    // A held lock rejects every mutator — merge, rollback, vacuum —
+    // A held lock rejects every mutator — merge, rollback, maintenance —
     // instead of letting a second writer merge onto the same base
     // state and win the pointer race.
     graft.sources.Commits.acquireWriterLock(spark, dir)
@@ -369,7 +383,9 @@ class StreamsSpec extends SparkSpec {
         Streams.mergeBatch(hashed(Seq(2L -> "two")), dir, "doc_id", 1L)
       }
       intercept[IllegalStateException] { Streams.rollbackTo(dir, 0L) }
-      intercept[IllegalStateException] { Streams.vacuum(dir, 1) }
+      intercept[IllegalStateException] {
+        Streams.mergeStoreAt(spark, dir).get.vacuumFull(spark, dir)
+      }
     } finally graft.sources.Commits.releaseWriterLock(spark, dir)
     // Released: the same merge lands and reads ignore the lease file.
     Streams.mergeBatch(hashed(Seq(2L -> "two")), dir, "doc_id", 1L)

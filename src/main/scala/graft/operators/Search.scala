@@ -565,28 +565,22 @@ object Search {
               org.apache.spark.sql.types.LongType))))
       }
 
-  /** CURRENT committed generation of every indexed doc:
-    * (doc_id, dl, content_hash, batch). None when nothing committed.
-    */
-  private def currentDocs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val committed = Commits.committed(spark, dir)
-    if (committed.isEmpty) None
-    // Freshly-maintained shortcut: one committed batch holds one row
-    // per doc (every write path dedups within its batch), so the
-    // per-doc currency aggregate is the identity — after a full
-    // vacuum/compaction-to-one the probe's membership read is a pure
-    // scan (same shortcut as Similarity.annCurrentRows).
-    else if (committed.sizeIs == 1)
-      Commits.readCommittedBatches(spark, s"$dir/docs", committed)
-        .map(_.select(col("doc_id"), col("dl"), col("content_hash"),
-          col("batch")))
-    else Commits.readCommittedBatches(spark, s"$dir/docs", committed)
-      .map(_.groupBy(col("doc_id"))
-        .agg(max_by(col("dl"), col("batch")).as("dl"),
-          max_by(col("content_hash"), col("batch")).as("content_hash"),
-          max(col("batch")).as("batch")))
-  }
+  /** The live docs' (doc_id, batch) from the index's
+    * [[GenTable.current]] view. The caller checked something is
+    * committed. */
+  private def liveDocs(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    IndexStore.current(spark, dir).get.filter(!col(GenTable.CurTomb))
+      .select(col("doc_id"), col("batch"))
+
+  /** BM25's (n_docs, sum_dl), once per committed set. */
+  private def corpusStats(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (Long, Long) =
+    IndexStore.memo(spark, dir, "bm25.corpusStats") {
+      val r = IndexStore.live(spark, dir).get
+        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
 
   /** LIVE membership surface of the standing index — the audit read a
     * platform's cross-store consistency checks need: (doc_id,
@@ -596,9 +590,7 @@ object Search {
     */
   def indexLiveDocs(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[DataFrame] =
-    currentDocs(spark, dir).map(_
-      .filter(col("content_hash") =!= Tombstone)
-      .select(col("doc_id"), col("content_hash")))
+    IndexStore.live(spark, dir).map(_.select("doc_id", "content_hash"))
 
   private def writeSlice(docs: DataFrame, idCol: String, textCol: String,
       dir: String, batch: Long): Unit = {
@@ -660,11 +652,10 @@ object Search {
       dir: String): DataFrame = {
     val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
+    val cur = IndexStore.current(spark, dir).get
     val docsAgg = cur.agg(
-      sum(when(col("content_hash") =!= Tombstone, 1L).otherwise(0L))
-        .as("live_docs"),
-      sum(when(col("content_hash") === Tombstone, 1L).otherwise(0L))
+      sum(when(!col(GenTable.CurTomb), 1L).otherwise(0L)).as("live_docs"),
+      sum(when(col(GenTable.CurTomb), 1L).otherwise(0L))
         .as("tombstoned_docs"))
     // Totals COUNT orphan rows (uncommitted batch dirs from crashed
     // appends) — that reclaimable tail is what the stats exist to
@@ -674,7 +665,7 @@ object Search {
       recursiveFileLookup = true)
       .agg(count(lit(1)).as("doc_rows_total"))
     val livePost = readCommittedPostings(spark, dir, committed)
-      .join(cur.filter(col("content_hash") =!= Tombstone)
+      .join(cur.filter(!col(GenTable.CurTomb))
         .select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
       .agg(count(lit(1)).as("postings_rows_live"))
     val totalPost = ParquetRead(spark, Seq(s"$dir/postings"),
@@ -694,12 +685,13 @@ object Search {
   /** BM25 top-k answered FROM the standing index: filter postings to
     * the query terms (pushed predicate — at scale this reads only the
     * matching row groups / buckets, never the corpus), drop superseded
-    * generations by joining the hits against each doc's max committed
-    * batch (the hit set is already tiny), per-term df as one tiny
-    * aggregate broadcast back on term, then one hash-shuffle on doc_id
-    * to sum the per-(doc, term) micro-unit contributions. Bit-identical
-    * to [[bm25TopK]] over the index's CURRENT corpus state (same
-    * contribution expression, same exact integer sum).
+    * generations by joining the hits against the live docs' (doc_id,
+    * batch) (a view resolved once per committed set, like the corpus
+    * stats), per-term df as one tiny aggregate broadcast back on term,
+    * then one hash-shuffle on doc_id to sum the per-(doc, term)
+    * micro-unit contributions. Bit-identical to [[bm25TopK]] over the
+    * index's CURRENT corpus state (same contribution expression, same
+    * exact integer sum).
     */
   def bm25FromIndexTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryTerms: Seq[String], k: Int,
@@ -707,27 +699,22 @@ object Search {
     require(queryTerms.nonEmpty, "empty query")
     val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
     val hits = readCommittedPostings(spark, dir, committed)
       .filter(col("term").isin(queryTerms: _*))
-      .join(cur.select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    scoreHits(hits, stats, k, k1, b)
+      .join(liveDocs(spark, dir), Seq("doc_id", "batch"))
+    scoreHits(hits, corpusStats(spark, dir), k, k1, b)
   }
 
   /** Shared BM25 scoring tail over a resolved hit set (doc_id, tf, dl):
     * per-term df as one tiny aggregate broadcast back on term, the
-    * one-row corpus stats broadcast, per-(doc, term) contributions in
-    * exact micro-units, ONE doc_id hash-shuffle to sum them.
+    * corpus stats as literals, per-(doc, term) contributions in exact
+    * micro-units, ONE doc_id hash-shuffle to sum them.
     */
-  private def scoreHits(hits: DataFrame, stats: DataFrame, k: Int,
+  private def scoreHits(hits: DataFrame, stats: (Long, Long), k: Int,
       k1: Double, b: Double): DataFrame = {
     val dfs = hits.groupBy(col("term"))
       .agg(count(lit(1)).as("__df"))
-    val n = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
+    val (n, avgdl) = statLits(stats)
     val tf = col("tf").cast("double")
     val idf = log(lit(1.0) +
       (n - col("__df").cast("double") + lit(0.5)) /
@@ -736,7 +723,6 @@ object Search {
       lit(b) * col("dl").cast("double") / avgdl)
     hits
       .join(broadcast(dfs), Seq("term"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"),
         round(idf * tf * lit(k1 + 1.0) / norm * lit(1e6)).cast("long")
           .as("__contrib"))
@@ -747,12 +733,17 @@ object Search {
       .limit(k)
   }
 
+  /** BM25's `n` and `avgdl` as double literals (an empty corpus has no
+    * hits, so its NaN is never read). */
+  private def statLits(stats: (Long, Long)): (Column, Column) =
+    (lit(stats._1.toDouble), lit(stats._2.toDouble / stats._1.toDouble))
+
   /** Materialize the index's CURRENT live postings as a TERM-BUCKETED
     * catalog table at `dir/postings_bucketed` — the zero-exchange probe
     * layout [[buildIndex]]'s scaladoc points at for 100 TB (same lever
     * as `Store.writeBucketed`). Generation resolution happens ONCE here
     * (committed batches only, each doc's max batch, tombstones
-    * dropped), so probes skip both the currentDocs join and the batch
+    * dropped), so probes skip both the live-docs join and the batch
     * filter; a term predicate prunes whole BUCKETS (hash(term) picks
     * the files) instead of row groups, and the probe-side df aggregate
     * reads pre-hashed buckets with no exchange. The table is a
@@ -769,8 +760,8 @@ object Search {
    Commits.withWriterLock(spark, dir) {
     val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
+    val cur = IndexStore.current(spark, dir, cached = false).get
+      .filter(!col(GenTable.CurTomb))
       .select(col("doc_id"), col("batch"))
     readCommittedPostings(spark, dir, committed)
       .join(cur, Seq("doc_id", "batch"))
@@ -800,12 +791,8 @@ object Search {
       dir: String, table: String, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
     val hits = spark.table(table).filter(col("term").isin(queryTerms: _*))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    scoreHits(hits, stats, k, k1, b)
+    scoreHits(hits, corpusStats(spark, dir), k, k1, b)
   }
 
   /** MORE-LIKE-THIS top-k — BM25 where the query is a whole DOCUMENT's
@@ -843,19 +830,15 @@ object Search {
           .orderBy(col("__qtf").desc, col("term"))))
       .filter(col("__rn") <= maxTerms)
       .select(col("__qid"), col("term"), col("__qtf"))
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
     // df counts the query doc too (it is part of the corpus) — only
     // the SCORED set excludes it.
     val hits0 = readCommittedPostings(spark, dir, committed)
       .join(broadcast(qterms.withColumn("__qw",
         col("__qtf").cast("double")).drop("__qtf")), Seq("term"))
-      .join(cur.select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
+      .join(liveDocs(spark, dir), Seq("doc_id", "batch"))
     val hits = hits0.filter(col("doc_id").cast("string") =!= col("__qid"))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val dfs = hits0.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    scoreWeightedHits(hits, dfs, stats, k, k1, b)
+    scoreWeightedHits(hits, dfs, corpusStats(spark, dir), k, k1, b)
   }
 
   /** Shared WEIGHTED BM25 scoring tail of the query-by-terms-with-
@@ -869,9 +852,8 @@ object Search {
     * contribution formula (same guard as [[rrfFuseWithBm25]]).
     */
   private def scoreWeightedHits(hits: DataFrame, dfs: DataFrame,
-      stats: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
-    val n = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
+      stats: (Long, Long), k: Int, k1: Double, b: Double): DataFrame = {
+    val (n, avgdl) = statLits(stats)
     val tf = col("tf").cast("double")
     val idf = log(lit(1.0) +
       (n - col("__df").cast("double") + lit(0.5)) /
@@ -880,7 +862,6 @@ object Search {
       lit(b) * col("dl").cast("double") / avgdl)
     hits
       .join(broadcast(dfs), Seq("term"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"),
         round(col("__qw") * idf * tf * lit(k1 + 1.0) / norm
           * lit(1e6)).cast("long").as("__contrib"))
@@ -920,13 +901,12 @@ object Search {
     require(queryTerms.nonEmpty, "empty query")
     val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
+    val cur = liveDocs(spark, dir)
     val fb = bm25FromIndexTopK(spark, dir, queryTerms, fbDocs, k1, b)
       .select(col("doc_id"))
     // Resolve the feedback docs to their current generation, then read
     // their term vectors from the postings (no text is re-tokenized).
-    val curFb = cur.select(col("doc_id"), col("batch"))
+    val curFb = cur
       .join(broadcast(fb), Seq("doc_id"))
     val expTerms = readCommittedPostings(spark, dir, committed)
       .join(broadcast(curFb), Seq("doc_id", "batch"))
@@ -942,11 +922,9 @@ object Search {
     val qterms = origTerms.unionByName(expTerms)
     val hits = readCommittedPostings(spark, dir, committed)
       .join(broadcast(qterms), Seq("term"))
-      .join(cur.select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+      .join(cur, Seq("doc_id", "batch"))
     val dfs = hits.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    scoreWeightedHits(hits, dfs, stats, k, k1, b)
+    scoreWeightedHits(hits, dfs, corpusStats(spark, dir), k, k1, b)
   }
 
   /** HYBRID retrieval — Reciprocal-Rank Fusion of the BM25 index
@@ -1086,12 +1064,9 @@ object Search {
     require(phrase.size >= 2, s"phrase needs >= 2 terms, got ${phrase.size}")
     val committed = Commits.committed(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
-      .select(col("doc_id"), col("batch"))
     val hits = readCommittedPostings(spark, dir, committed)
       .filter(col("term").isin(phrase.distinct: _*))
-      .join(cur, Seq("doc_id", "batch"))
+      .join(liveDocs(spark, dir), Seq("doc_id", "batch"))
     phrasePositionFold(hits, phrase, k)
   }
 

@@ -594,6 +594,12 @@ object Similarity {
     }
   }
 
+  /** [[pqReadCodebook]] once per committed set, for probes. */
+  private def pqProbeCodebook(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String): Seq[Seq[(Long, Seq[Double])]] =
+    PqStore.memo(spark, storeDir, "pq.codebook")(
+      pqReadCodebook(spark, storeDir))
+
   /** Read the store's COARSE (IVF) centroids: the `coarse/b<id>` dir
     * of the largest `committed` id that has one ([[GenTable
     * .carriedDir]]). None for unrouted stores. */
@@ -765,36 +771,15 @@ object Similarity {
     } finally { hashed.unpersist(); () }
    }
 
-  /** Committed generations of the PQ store's code rows. */
-  private def readCommittedPq(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, committed: Seq[Long]): DataFrame =
-    graft.sources.Commits
-      .readCommittedBatches(spark, s"$storeDir/rows", committed)
-      .getOrElse(sys.error(s"committed PQ store at $storeDir has no " +
-        "readable rows"))
-
-  /** The PQ store's LIVE rows (id, codes, cell, vec_hash): committed
-    * batches only, one row per id (its max committed generation),
-    * tombstones dropped. With ONE committed batch (a freshly vacuumed
-    * or just-built store) every id has at most one row, so the per-id
-    * currency aggregate is skipped entirely and the probe is a pure
-    * pruned scan — the same maintenance dividend as the ANN twin's
-    * single-batch shortcut.
-    */
+  /** The PQ store's LIVE rows (id, codes, cell, vec_hash, batch): each
+    * id's max committed generation, tombstones dropped
+    * ([[GenTable.current]]; the reroute reads uncached). */
   private def pqCurrentRows(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    require(committed.nonEmpty,
-      s"$storeDir has no committed build - run pqStoreBuild first")
-    val all = readCommittedPq(spark, storeDir, committed)
-    if (committed.sizeIs == 1) all.filter(size(col("codes")) > 0)
-    else all
-      .groupBy(col("id"))
-      .agg(max_by(col("codes"), col("batch")).as("codes"),
-        max_by(col("cell"), col("batch")).as("cell"),
-        max_by(col("vec_hash"), col("batch")).as("vec_hash"))
-      .filter(size(col("codes")) > 0)
-  }
+      storeDir: String, cached: Boolean = true): DataFrame =
+    PqStore.current(spark, storeDir, cached).getOrElse(
+        sys.error(s"$storeDir has no committed build - run pqStoreBuild " +
+          "first"))
+      .filter(!col(GenTable.CurTomb))
 
   /** LIVE membership surface of the standing PQ store — the audit read
     * cross-store consistency checks need: every currently-live id
@@ -854,7 +839,8 @@ object Similarity {
       .withColumn("v", VectorFunctions.toDoubleArray(col("vec"))),
       books.size * subDims, "pqStoreSync")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cur = readCommittedPq(spark, storeDir, committed)
+    val cur = graft.sources.Commits
+      .readCommittedBatches(spark, s"$storeDir/rows", committed).get
       .join(scope, keyOf(col("id")) === col("__k"), "left_semi")
       .groupBy(col("id"))
       .agg(max_by(col("vec_hash"), col("batch")).as("__prev"),
@@ -919,21 +905,13 @@ object Similarity {
     */
   def pqStoreTopK(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, queries: DataFrame, k: Int,
-      nprobe: Int = 0): DataFrame =
-    pqProbe(spark, storeDir, queries, k, nprobe,
-      pqReadCodebook(spark, storeDir))
-
-  /** [[pqStoreTopK]]'s body; `codebook` is read after the argument
-    * checks, or passed in by a caller that already holds it. */
-  private def pqProbe(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, queries: DataFrame, k: Int, nprobe: Int,
-      codebook: => Seq[Seq[(Long, Seq[Double])]]): DataFrame = {
+      nprobe: Int = 0): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nprobe >= 0, s"nprobe must be >= 0, got $nprobe")
     val committed = graft.sources.Commits.committed(spark, storeDir)
     require(committed.nonEmpty,
       s"$storeDir has no committed build - run pqStoreBuild first")
-    val books = codebook
+    val books = pqProbeCodebook(spark, storeDir)
     val subDims = books.head.head._2.size
     val cur = pqCurrentRows(spark, storeDir)
       .select(col("id").as("cid") +: col("cell") +:
@@ -953,7 +931,8 @@ object Similarity {
           books.indices.map(j => pqTabCol(books(j), j, subDims)): _*)
         cur.crossJoin(broadcast(qtab))
       } else {
-        val coarse = pqReadCoarse(spark, storeDir, committed).getOrElse(
+        val coarse = PqStore.memo(spark, storeDir, "pq.coarse")(
+            pqReadCoarse(spark, storeDir, committed)).getOrElse(
           sys.error(s"$storeDir has no coarse centroids - routed probes " +
             "need a store built with cells > 0 (pqStoreBuild's cells " +
             "parameter)"))
@@ -994,9 +973,9 @@ object Similarity {
       k: Int, nprobe: Int = 0): DataFrame = {
     require(kCand >= k && k > 0,
       s"need kCand >= k > 0, got kCand=$kCand k=$k")
-    val books = pqReadCodebook(spark, storeDir)
+    val books = pqProbeCodebook(spark, storeDir)
     val dims = books.size * books.head.head._2.size
-    val cand = pqProbe(spark, storeDir, queries, kCand, nprobe, books)
+    val cand = pqStoreTopK(spark, storeDir, queries, kCand, nprobe)
       .select(col("qid"), col("cid"))
     val q = queries.dropDuplicates("id")
       .select(col("id").as("qid"),
@@ -1091,7 +1070,7 @@ object Similarity {
           struct(c("_1"), c("_2")))),
         element_at(col("codes"), j + 1))
     }: _*))
-    val live = pqCurrentRows(spark, storeDir)
+    val live = pqCurrentRows(spark, storeDir, cached = false)
       .select(col("id"), col("codes"), col("vec_hash"),
         recon.as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1149,16 +1128,8 @@ object Similarity {
       s"hysteresis must be in (0, 1], got $hysteresis")
     val committed = graft.sources.Commits.committed(spark, storeDir)
     require(committed.nonEmpty, s"no committed PQ state under $storeDir")
-    val rows = readCommittedPq(spark, storeDir, committed)
-    val curKeys = rows.groupBy(col("id"))
-      .agg(max(col("batch")).as("batch"))
-    val cur = rows.join(curKeys, Seq("id", "batch"))
-    val curAgg = cur.agg(
-      sum(when(size(col("codes")) > 0, 1L).otherwise(0L)).as("live_ids"),
-      sum(when(size(col("codes")) === 0, 1L).otherwise(0L))
-        .as("tombstoned_ids"),
-      count_distinct(when(size(col("codes")) > 0, col("cell")))
-        .as("occupied_cells"))
+    val curAgg = liveCensus(PqStore.current(spark, storeDir).get, "cell",
+      "occupied_cells")
     val total = ParquetRead(spark, Seq(s"$storeDir/rows"),
       recursiveFileLookup = true)
       .agg(count(lit(1)).as("rows_total"))
@@ -1294,42 +1265,15 @@ object Similarity {
     } finally { rows.unpersist(); hashed.unpersist(); () }
    }
 
-  /** Read the COMMITTED generations of the store —
-    * [[graft.sources.Commits.readCommittedBatches]] over the shared
-    * per-batch-directory layout.
-    */
-  private def readCommittedAnn(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, committed: Seq[Long]): DataFrame =
-    graft.sources.Commits.readCommittedBatches(spark, storeDir, committed)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed ANN data under $storeDir for batches $committed"))
-
-  /** The store's LIVE rows: committed batches only, one row per id
-    * (its max committed generation), tombstones dropped — a deleted
-    * id's current row is the empty-qvec tombstone, which no probe may
-    * see.
-    */
+  /** The store's LIVE rows: each id's max committed generation,
+    * tombstones dropped ([[GenTable.current]]; the partitioned layout's
+    * rebuild, a maintenance op, reads uncached). */
   private def annCurrentRows(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    require(committed.nonEmpty, s"no committed ANN state under $storeDir")
-    val all = readCommittedAnn(spark, storeDir, committed)
-    // Freshly-maintained shortcut: with ONE committed batch every id
-    // has at most one row (every write path dedups within its batch —
-    // append dropDuplicates, delete/vacuum/compaction aggregate per
-    // id), so the per-id currency aggregate is the identity and the
-    // probe becomes a pure pruned scan. This is what a full vacuum or
-    // a compaction-to-one buys the DEFAULT probe path: the store-wide
-    // aggregate was its fastest-growing term across store decades
-    // (SCALE.md), and regular maintenance now removes it entirely.
-    if (committed.sizeIs == 1) all.filter(size(col("qvec")) > 0)
-    // Otherwise one skinny (id, batch) aggregate: a hash-shuffle on id,
-    // independent of vector width.
-    else all
-      .join(all.groupBy(col("id")).agg(max(col("batch")).as("batch")),
-        Seq("id", "batch"))
-      .filter(size(col("qvec")) > 0)
-  }
+      storeDir: String, cached: Boolean = true): DataFrame =
+    AnnStore.current(spark, storeDir, cached).getOrElse(
+        throw new IllegalArgumentException(
+          s"no committed ANN state under $storeDir"))
+      .filter(!col(GenTable.CurTomb))
 
   /** LIVE membership surface of the standing ANN store — the audit
     * read a platform's cross-store consistency checks need: the id of
@@ -1393,17 +1337,8 @@ object Similarity {
       storeDir: String): DataFrame = {
     val committed = graft.sources.Commits.committed(spark, storeDir)
     require(committed.nonEmpty, s"no committed ANN state under $storeDir")
-    val curKeys = readCommittedAnn(spark, storeDir, committed)
-      .groupBy(col("id"))
-      .agg(max(col("batch")).as("batch"))
-    val cur = readCommittedAnn(spark, storeDir, committed)
-      .join(curKeys, Seq("id", "batch"))
-    val curAgg = cur.agg(
-      sum(when(size(col("qvec")) > 0, 1L).otherwise(0L)).as("live_ids"),
-      sum(when(size(col("qvec")) === 0, 1L).otherwise(0L))
-        .as("tombstoned_ids"),
-      count_distinct(when(size(col("qvec")) > 0, col("bucket")))
-        .as("occupied_buckets"))
+    val curAgg = liveCensus(AnnStore.current(spark, storeDir).get, "bucket",
+      "occupied_buckets")
     // Total COUNTS orphan rows (crashed appends' uncommitted dirs) —
     // the reclaimable tail the stats exist to surface.
     val total = ParquetRead(spark, Seq(storeDir),
@@ -1415,6 +1350,15 @@ object Similarity {
         (col("rows_total") - col("live_ids") - col("tombstoned_ids"))
           .as("superseded_rows"),
         col("occupied_buckets"))
+  }
+
+  /** Live and tombstoned ids, and distinct live `occupied` values. */
+  private def liveCensus(cur: DataFrame, occupied: String,
+      name: String): DataFrame = {
+    val tomb = col(GenTable.CurTomb)
+    cur.agg(sum(when(!tomb, 1L).otherwise(0L)).as("live_ids"),
+      sum(when(tomb, 1L).otherwise(0L)).as("tombstoned_ids"),
+      count_distinct(when(!tomb, col(occupied))).as(name))
   }
 
   /** Compact the ANN store's LIVE rows into a bucket-PARTITIONED
@@ -1437,7 +1381,7 @@ object Similarity {
       storeDir: String, outDir: String): Unit =
    graft.sources.Commits.withWriterLock(spark, storeDir) {
     val committed = graft.sources.Commits.committed(spark, storeDir)
-    annCurrentRows(spark, storeDir)
+    annCurrentRows(spark, storeDir, cached = false).drop(GenTable.CurTomb)
       .withColumn("batch", lit(0L))
       // Align the shuffle with the layout: without this every upstream
       // task writes one file into every bucket dir it sees (tasks x
@@ -1487,8 +1431,9 @@ object Similarity {
     * the SAME hyperplanes the store was signed with, broadcast them
     * against their store bucket only, score exact cosine on the
     * dequantized vectors, return per-query top-k. Never all-pairs; the
-    * candidate read is bucket-pruned, and generation currency costs one
-    * skinny (id, batch) aggregate over the store (see
+    * candidate read is bucket-pruned, and generation currency is the
+    * committed-set view: one aggregate over the store by the first
+    * probe after a commit, none by the probes after it (see
     * [[annCurrentRows]]).
     */
   def annStoreTopK(spark: org.apache.spark.sql.SparkSession,
@@ -1622,8 +1567,8 @@ object Similarity {
             "committed) through the generational layout because " +
             partDir.fold("no partitioned layout was given")(p =>
               s"the snapshot at $p is stale") +
-            "; at this size the probe pays generation resolution " +
-            "over the full store every call - run annStorePartition " +
+            "; at this size the first probe after each commit resolves " +
+            "generations over the full store - run annStorePartition " +
             "in the maintenance pass (Streams.fanoutVacuum annPartDir)")
       annStoreTopK(spark, storeDir, queries, planes, dims, k, decimals)
     }

@@ -110,13 +110,11 @@ object LlmQueries {
     val redo = Similarity.pqStoreDelete(s, dir, victims)
     require(n > 0 && redo == 0,
       s"PQ takedown semantics broken: deleted=$n redelivery=$redo")
-    // Routine maintenance reclaims the all-dead tombstone wave; the
-    // tombstones are CARRIED (the victims' build-generation rows live
-    // in the unselected bulk batch), so the probe must keep excluding
-    // them from the carried copy.
+    // Routine maintenance leaves the tombstone wave in place: the
+    // victims' build-generation rows live in the unselected bulk batch,
+    // so the tombstones are live and the probe must keep excluding them.
     require(Similarity.pqStoreVacuumIncremental(s, dir,
-      minDeadFraction = 0.5) >= 1,
-      "expected the tombstone wave reclaimed")
+      minDeadFraction = 0.5) == 0, "the live tombstone wave was rewritten")
   }
 
   private def pqTakedownProbe(s: SparkSession, d: String): DataFrame = {
@@ -236,18 +234,13 @@ object LlmQueries {
     Search.indexAppend(base, "doc_id", "text", dir): Unit
     Search.indexDelete(s, dir,
       base.filter(col("doc_id") % 11 === 0).select(col("doc_id"))): Unit
-    // Threshold 0.5 reclaims the all-dead tombstone batch but KEEPS
-    // the big batches whose dead fraction is ~0.23 — so the oracle
-    // hash-checks the carried-tombstone path (deleted docs' older
-    // generations survive in unselected batches and must stay
-    // suppressed), the subtle half of the vacuum contract.
-    val reclaimed = Search.indexVacuumIncremental(s, dir,
-      minDeadFraction = 0.5)
-    require(reclaimed > 0,
-      s"incremental vacuum found nothing dirty after upsert+delete")
-    // Fold the surviving batches down too — the probe after vacuum +
-    // compaction still hashes against the same oracle, so the whole
-    // incremental maintenance cadence is oracle-covered.
+    // Threshold 0.5 keeps the big batches whose dead fraction is ~0.23,
+    // so the tombstones stay live in place; the compaction then folds
+    // the tombstone batch with the small upsert batch and CARRIES them
+    // (deleted docs' older generations survive in the unselected build
+    // batch and must stay suppressed) — the oracle hash-checks that
+    // subtle half of the vacuum contract after the whole cadence.
+    Search.indexVacuumIncremental(s, dir, minDeadFraction = 0.5): Unit
     Search.indexCompactBatches(s, dir, maxBatches = 2): Unit
   }
 
@@ -483,13 +476,13 @@ object LlmQueries {
       base.filter(col("doc_id") % 11 === 0).select(col("doc_id")))
     require(deleted > 0 && again == 0,
       s"chunk takedown semantics broken: deleted=$deleted again=$again")
-    // Threshold 0.5: reclaim the all-dead takedown batch, keep the
-    // ~23%-dead bulk batches — oracle-checks the carried-tombstone
-    // suppression path (see bm25VacuumBuild).
-    val reclaimed = graft.streaming.Streams.chunkStoreVacuum(s, dir,
-      minDeadFraction = 0.5)
-    require(reclaimed > 0,
-      "chunk vacuum found nothing dirty after upsert+takedown")
+    // Threshold 0.5 keeps the ~23%-dead bulk batches, and the folding
+    // compaction carries the takedown's tombstones — oracle-checks the
+    // carried-tombstone suppression path (see bm25VacuumBuild).
+    graft.streaming.Streams.chunkStoreVacuum(s, dir,
+      minDeadFraction = 0.5): Unit
+    graft.streaming.Streams.chunkStoreCompactBatches(s, dir,
+      maxBatches = 2): Unit
   }
 
   private def chunkTakedownProbe(s: SparkSession, d: String): DataFrame =

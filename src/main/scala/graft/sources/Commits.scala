@@ -37,14 +37,20 @@ import org.apache.spark.sql.functions.col
   */
 object Commits {
 
-  /** Batch ids whose commit marker exists (the readable generations). */
-  def committed(spark: SparkSession, dir: String): Seq[Long] = {
+  /** Batch ids whose commit marker exists, ascending. */
+  def committed(spark: SparkSession, dir: String): Seq[Long] =
+    committedStamped(spark, dir).map(_._1)
+
+  /** [[committed]], each id with its marker's modification time: the
+    * name of a committed set ([[GenTable.current]]). */
+  def committedStamped(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_commits")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("b"))
-      .map(_.drop(1).toLong)
+      .filter(_.getPath.getName.startsWith("b"))
+      .map(s => s.getPath.getName.drop(1).toLong -> s.getModificationTime)
+      .sorted
   }
 
   /** Create the marker — the append's atomic commit point. Also
@@ -58,6 +64,7 @@ object Commits {
     fs.create(new org.apache.hadoop.fs.Path(s"$dir/_commits/a$batch"), true)
       .close()
     fs.create(p, true).close()
+    GenTable.forget(dir)
   }
 
   /** The `b<id>` batch subdirectories present under a generational
@@ -271,7 +278,7 @@ object Commits {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_commits/b$batch")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, false)
-    ()
+    GenTable.forget(dir)
   }
 
   /** Batch ids ever ATTEMPTED: the `a<batch>` markers recorded at
@@ -416,7 +423,7 @@ object Commits {
         org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
         new String(buf.toByteArray, "UTF-8")
       } finally in.close()
-      recorded == committed(spark, storeDir).sorted.mkString(",")
+      recorded == committed(spark, storeDir).mkString(",")
     }
   }
 

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, collect_list, count, explode,
-  lit, max, max_by, struct, sum, when}
+import org.apache.spark.sql.functions.{array_remove, col, collect_list,
+  count, explode, lit, max, max_by, sort_array, struct, sum, when}
 import org.apache.spark.storage.StorageLevel
 
 /** The generational-store lifecycle, written once for every store
@@ -61,6 +61,9 @@ import org.apache.spark.storage.StorageLevel
   *     one row per live key and no tombstone.
   * [[replaceAll]] commits a rewrite the store computed itself (the PQ
   * reroute) as one generation and reclaims every batch before it.
+  *
+  * The READ half, [[current]] and [[memo]], resolves once per
+  * committed set what every probe of that set would recompute.
   *
   * A pass rewrites the selected batches' survivors — live current
   * generations, plus tombstones whose key still has rows in an
@@ -123,19 +126,45 @@ final class GenTable(private[graft] val key: String,
       max_by(col(hash), col("batch")).as(CurHash),
       max_by(isTombstone, col("batch")).as(CurTomb))
 
-  /** Each key's newest row among membership `rows` (batch included):
-    * one aggregate, no join back. */
-  private def newest(rows: DataFrame): DataFrame =
+  /** Each key's newest row among membership `rows` (batch included),
+    * followed by the `extra` columns computed on it: one aggregate, no
+    * join back. */
+  private def newest(rows: DataFrame, extra: Column*): DataFrame =
     rows.groupBy(col(key))
-      .agg(max_by(struct(rows.columns.map(col).toSeq: _*), col("batch"))
-        .as("__r"))
+      .agg(max_by(struct(rows.columns.map(col).toSeq ++ extra: _*),
+        col("batch")).as("__r"))
       .select(col("__r.*"))
+
+  /** Each key's newest committed membership row: every column its
+    * writer wrote, `batch`, and [[GenTable.CurTomb]]. None when nothing
+    * is committed. CACHED (probes): one view per committed set,
+    * persisted `MEMORY_AND_DISK` on first use and reused until the
+    * `_commits` listing (ids with their markers' modification times)
+    * changes, so a commit from any process, or a store rebuilt at the
+    * same path, reads as a new set. UNCACHED (maintenance, a mutation's
+    * reads: they must not hold a view of the set they replace): the
+    * same rows by a plan no view matches.
+    */
+  private[graft] def current(spark: SparkSession, dir: String,
+      cached: Boolean = true): Option[DataFrame] =
+    if (cached) view(spark, dir).flatMap(_.rows)
+    else readMembership(spark, dir, Commits.committed(spark, dir))
+      .map(newest(_).withColumn(CurTomb, isTombstone))
+
+  /** `f` evaluated once per committed set of `dir`, like [[current]]. */
+  private[graft] def memo[T](spark: SparkSession, dir: String,
+      name: String)(f: => T): T =
+    view(spark, dir).fold(f)(_.memo(name, f))
+
+  private def view(spark: SparkSession, dir: String): Option[GenTable.View] =
+    GenTable.view(spark, dir)(readMembership(spark, dir, _).map(rows =>
+      newest(rows, isTombstone.as(CurTomb))
+        .persist(StorageLevel.MEMORY_AND_DISK)))
 
   /** Each live key's current committed row, with every column its
     * writer wrote and no `batch`. None when nothing is committed. */
   private[graft] def live(spark: SparkSession, dir: String): Option[DataFrame] =
-    readMembership(spark, dir, Commits.committed(spark, dir))
-      .map(newest(_).filter(!isTombstone).drop("batch"))
+    current(spark, dir).map(_.filter(!col(CurTomb)).drop("batch", CurTomb))
 
   /** The current committed generation of each key in `ids` (one
     * column, the key under any name), as [[currencyOf]]'s row; keys
@@ -287,30 +316,44 @@ final class GenTable(private[graft] val key: String,
    }
 
   /** The committed batches whose dead-row fraction reaches the
-    * threshold. Driver-side result bounded by the batch COUNT, never by
-    * rows. Package-private so specs can replay a pass step by step.
+    * threshold. Dead: a superseded row, or any row of a key whose
+    * current row is a tombstone, except that tombstone while its key
+    * keeps a row in an unselected batch (the rewrite would only carry
+    * it). Driver-side result bounded by the batch COUNT, never by rows.
+    * Package-private so specs can replay a pass step by step.
     */
   private[graft] def dirtyBatches(spark: SparkSession, dir: String,
       committed: Seq[Long], minDeadFraction: Double): Seq[Long] = {
     val rows = readMembership(spark, dir, committed)
       .getOrElse(return Seq.empty)
-    // One aggregate per key carries its batches along: no join back.
-    rows.groupBy(col(key)).agg(collect_list(col("batch")).as("__batches"),
+    // One aggregate per key carries its batches along: no join back; a
+    // current tombstone row is grouped by the key's other batches.
+    val tomb = col("batch") === col(CurBatch) && col(CurTomb)
+    val counts = rows.groupBy(col(key))
+      .agg(collect_list(col("batch")).as("__batches"),
         max(col("batch")).as(CurBatch),
         max_by(isTombstone, col("batch")).as(CurTomb))
-      .select(explode(col("__batches")).as("batch"), col(CurBatch),
-        col(CurTomb))
-      .withColumn("__dead", col("batch") < col(CurBatch) || col(CurTomb))
-      .groupBy(col("batch"))
-      .agg(count(lit(1)).as("__total"),
+      .select(explode(col("__batches")).as("batch"), col("__batches"),
+        col(CurBatch), col(CurTomb))
+      .select(col("batch"), when(tomb, sort_array(array_remove(
+          col("__batches"), col(CurBatch)))).as("__others"),
+        (col("batch") < col(CurBatch) || col(CurTomb)).as("__dead"))
+      .groupBy(col("batch"), col("__others"))
+      .agg(count(lit(1)).as("__n"),
         sum(when(col("__dead"), 1L).otherwise(0L)).as("__dead_rows"))
       .collect()
-      .filter { r =>
-        val dead = r.getAs[Long]("__dead_rows")
-        dead > 0 &&
-          dead.toDouble / r.getAs[Long]("__total") >= minDeadFraction
-      }
-      .map(_.getAs[Long]("batch")).toSeq.sorted
+      .map(r => (r.getLong(0), Option(r.getSeq[Long](1)).map(_.toSet),
+        r.getLong(2), r.getLong(3)))
+    val total = counts.groupMapReduce(_._1)(_._3)(_ + _)
+    def select(s: Set[Long]): Set[Long] = counts
+      .filter { case (_, others, _, _) => others.forall(_.subsetOf(s)) }
+      .groupMapReduce(_._1)(_._4)(_ + _)
+      .collect { case (b, dead) if dead > 0 &&
+        dead.toDouble / total(b) >= minDeadFraction => b }.toSet
+    // Monotone: iterate down from every batch to the largest fixpoint.
+    Iterator.iterate(committed.toSet)(select)
+      .sliding(2).collectFirst { case Seq(a, b) if a == b => a }.get
+      .toSeq.sorted
   }
 
   /** Rewrite the `selected` batches' survivors as one fresh batch and
@@ -458,6 +501,52 @@ object GenTable {
   val CurBatch = "__cur_batch"
   val CurHash = "__cur_hash"
   val CurTomb = "__cur_tomb"
+
+  /** Store dirs whose [[GenTable.current]] view stays persisted. */
+  val MaxViews = 16
+
+  /** A committed set (its `ledger`), its view and its memoized values. */
+  private final class View(val spark: SparkSession,
+      val ledger: Seq[(Long, Long)], val rows: Option[DataFrame]) {
+    private val memos = scala.collection.concurrent.TrieMap.empty[String, Any]
+    def memo[T](name: String, f: => T): T =
+      memos.getOrElseUpdate(name, f).asInstanceOf[T]
+    def release(): Unit = rows.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The views by store dir (normalized), least recently used first. */
+  private val views = new java.util.LinkedHashMap[String, View](MaxViews,
+      0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, View]): Boolean =
+      size > MaxViews && { e.getValue.release(); true }
+  }
+
+  /** The view of `dir`'s committed set: the held one while the ledger
+    * listing is unchanged, else one `build` makes from the committed
+    * ids. None when nothing is committed. */
+  private def view(spark: SparkSession, dir: String)(
+      build: Seq[Long] => Option[DataFrame]): Option[View] = {
+    val ledger = Commits.committedStamped(spark, dir)
+    views.synchronized {
+      Option(views.get(new Path(dir).toString))
+        .filter(v => (v.spark eq spark) && v.ledger == ledger)
+        .orElse {
+          forget(dir)
+          Option.when(ledger.nonEmpty) {
+            val v = new View(spark, ledger, build(ledger.map(_._1)))
+            views.put(new Path(dir).toString, v)
+            v
+          }
+        }
+    }
+  }
+
+  /** Drop `dir`'s view: its committed set changed ([[Commits.commit]],
+    * [[Commits.uncommit]]). */
+  private[sources] def forget(dir: String): Unit =
+    views.synchronized(
+      Option(views.remove(new Path(dir).toString)).foreach(_.release()))
 
   /** Tombstone marker in a membership table's `content_hash` column
     * (the inverted index, the chunk store) — real hashes are 64-hex

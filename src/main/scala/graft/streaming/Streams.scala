@@ -516,31 +516,22 @@ object Streams {
   /** CURRENT committed chunks of a chunk store: every doc resolved to
     * its max committed generation — superseded generations' chunks
     * stay invisible. None when nothing is committed. One hash join on
-    * (doc_id, batch) against the per-doc version table; the chunks
-    * scan only reads committed batches.
+    * (doc_id, batch) against the docs table's
+    * [[graft.sources.GenTable.current]] view (the chunk-vector ingest,
+    * a mutation, reads it uncached).
     */
   def chunkStoreRead(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Option[DataFrame] = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    if (committed.isEmpty) None
-    else for {
-      docs <- graft.sources.Commits
-        .readCommittedBatches(spark, s"$storeDir/docs", committed)
-      chunks <- graft.sources.Commits
-        .readCommittedBatches(spark, s"$storeDir/chunks", committed)
-    } yield {
-      // Tombstoned docs (chunkStoreDelete) resolve to the marker and
-      // drop out here — their superseded chunks never surface.
-      val cur = docs.groupBy(col("doc_id"))
-        .agg(max(col("batch")).as("batch"),
-          max_by(col("content_hash"), col("batch")).as("__cur_hash"))
-        .filter(col("__cur_hash") =!= Tombstone)
-        .select(col("doc_id"), col("batch"))
-      chunks.join(cur, Seq("doc_id", "batch"), "left_semi")
+      storeDir: String, cached: Boolean = true): Option[DataFrame] =
+    for {
+      docs <- ChunkStore.current(spark, storeDir, cached)
+      chunks <- graft.sources.Commits.readCommittedBatches(spark,
+        s"$storeDir/chunks", graft.sources.Commits.committed(spark, storeDir))
+    } yield
+      chunks.join(docs.filter(!col(graft.sources.GenTable.CurTomb))
+          .select(col("doc_id"), col("batch")), Seq("doc_id", "batch"),
+          "left_semi")
         .select(col("doc_id"), col("chunk_seq"), col("n_tokens"),
           col("chunk_text"))
-    }
-  }
 
   /** Chunk-vector ids pack (doc_id, chunk_seq) into one long:
     * `doc_id * ChunkVecSeqLimit + chunk_seq`. 100k chunks per doc is
@@ -609,7 +600,7 @@ object Streams {
     val idCol = deliveredIds.columns.head
     val ids = deliveredIds.select(col(idCol).as("doc_id"))
       .dropDuplicates("doc_id")
-    chunkStoreRead(spark, chunkDir) match {
+    chunkStoreRead(spark, chunkDir, cached = false) match {
       case None => 0L
       case Some(chunks) =>
         // Featurize ONCE and persist the narrow (id, 16 doubles) frame:

@@ -98,7 +98,7 @@ class SearchSpec extends SparkSpec {
       "backfilled index probes differently from a fresh build")
   }
 
-  test("a freshly-vacuumed index's probe plans no membership aggregate") {
+  test("a warm index probe reads the persisted view across a vacuum") {
     val dir = java.nio.file.Files.createTempDirectory("bm25-fresh")
       .toString + "/index"
     Search.buildIndex(docs, "doc_id", "text", dir)
@@ -106,14 +106,16 @@ class SearchSpec extends SparkSpec {
       .toDF("doc_id", "text"), "doc_id", "text", dir)
     def probe() = Search.bm25FromIndexTopK(spark, dir,
       Seq("spark", "vector"), k = 10)
+    // After the first probe of a committed set the membership resolve
+    // is persisted: a probe scans it instead of aggregating again.
     def plan() = probe().queryExecution.executedPlan.toString()
-    assert(plan().contains("max_by"),
-      "multi-batch probe lost its membership resolve")
     val want = probe().collect().toSeq
+    assert(plan().contains("InMemoryTableScan"),
+      "warm probe re-resolved the membership table")
     Search.indexVacuum(spark, dir)
-    assert(!plan().contains("max_by"),
-      "freshly-vacuumed probe still plans the membership aggregate")
     assert(probe().collect().toSeq == want)
+    assert(plan().contains("InMemoryTableScan"),
+      "warm probe after the vacuum re-resolved the membership table")
   }
 
   test("index answer is bit-identical to the scan answer") {
@@ -595,11 +597,12 @@ class SearchSpec extends SparkSpec {
     val want = Search.bm25FromIndexTopK(spark, dir, terms, 10)
       .collect().toSeq
     assert(!want.exists(_.getLong(0) == 1L))
-    // b0 is 1/5 dead (doc 1's old row), b1 is 1/1 dead: the threshold
-    // selects ONLY the tombstone batch. Dropping its tombstone would
-    // resurrect doc 1 out of b0 — it must be carried forward instead.
+    // b0 is 1/5 dead (doc 1's old row), under the threshold. Dropping
+    // b1's tombstone would resurrect doc 1 out of b0, so it is live
+    // while b0 stays: the pass selects nothing and rewrites nothing
+    // (selecting b1 would only copy the tombstone under a new id).
     assert(Search.indexVacuumIncremental(spark, dir,
-      minDeadFraction = 0.5) == 1)
+      minDeadFraction = 0.5) == 0)
     assert(Search.bm25FromIndexTopK(spark, dir, terms, 10)
       .collect().toSeq == want, "carried tombstone stopped suppressing")
     // A full-threshold pass then reclaims b0 AND the carried tombstone

@@ -42,6 +42,26 @@ class CommitsSpec extends SparkSpec {
     assert(Commits.attempted(spark, dir).sorted == Seq(0L, 1L, 2L))
   }
 
+  test("committed lists ids in ascending order, whatever the listing " +
+      "order, each stamped with its marker's modification time") {
+    val dir = tmp()
+    // Listed by name these come back b1, b10, b2, b33 (or in any order
+    // the filesystem likes); the ledger is ordered by id.
+    Seq(10L, 2L, 33L, 1L).foreach(Commits.commit(spark, dir, _))
+    assert(Commits.committed(spark, dir) == Seq(1L, 2L, 10L, 33L))
+    val stamped = Commits.committedStamped(spark, dir)
+    assert(stamped.map(_._1) == Seq(1L, 2L, 10L, 33L))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    stamped.foreach { case (b, t) =>
+      assert(t == fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(s"$dir/_commits/b$b"))
+        .getModificationTime)
+    }
+    Commits.uncommit(spark, dir, 2L)
+    assert(Commits.committed(spark, dir) == Seq(1L, 10L, 33L))
+  }
+
   test("commit records the attempt marker too, re-arming the fast path") {
     val dir = tmp()
     // A commit records its id as attempted too, so the ledger listing

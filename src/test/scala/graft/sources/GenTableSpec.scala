@@ -167,6 +167,37 @@ class GenTableSpec extends SparkSpec {
       assertConverged(s, dir)
     }
 
+    test(s"${s.name}: a takedown's tombstone batch is not rewritten " +
+        "while its key's older row sits in a batch the pass leaves alone") {
+      val dir = freshDir(s, "tombonly")
+      s.build(dir)
+      // A tombstone-only generation for id 1, whose live row is in the
+      // bulk batch b0.
+      assert(s.delete(dir, 1L) == 1L)
+      val want = s.read(dir)
+      val live = s.liveIds(dir)
+      val committed = Commits.committed(spark, dir)
+      val attempted = Commits.attempted(spark, dir).max
+      // b0 is under the threshold, so both takedowns' tombstones are
+      // live: nothing is dirty, nothing is written or reclaimed.
+      assert(s.table.dirtyBatches(spark, dir, committed, 0.9).isEmpty)
+      assert(s.table.vacuumIncremental(spark, dir, 0.9) == 0)
+      assert(Commits.committed(spark, dir) == committed)
+      assert(Commits.attempted(spark, dir).max == attempted,
+        s"${s.name}: the pass wrote a generation")
+      assert(s.read(dir) == want && s.liveIds(dir) == live)
+      // With b0 selected the tombstones go with it, in one pass.
+      assert(s.table.dirtyBatches(spark, dir, committed, 0.0)
+        .contains(committed.min))
+      s.table.vacuumIncremental(spark, dir, 0.0): Unit
+      assert(s.read(dir) == want && s.liveIds(dir) == live)
+      assertConverged(s, dir)
+      val rows = Commits.readCommittedBatches(spark,
+        tableDir(dir, s.table.tables.last), Commits.committed(spark, dir)).get
+      assert(rows.filter(s.table.isTombstone).isEmpty,
+        s"${s.name}: a tombstone outlived its key's older rows")
+    }
+
     test(s"${s.name}: the incremental pass sweeps an orphan batch dir " +
         "from a crashed append") {
       val dir = freshDir(s, "orphan")

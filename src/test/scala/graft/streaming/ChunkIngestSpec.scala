@@ -193,10 +193,11 @@ class ChunkIngestSpec extends SparkSpec {
     val want = Streams.chunkStoreRead(spark, dir).get
       .select("doc_id").distinct().as[Long].collect().toSeq.sorted
     assert(want == Seq(2L, 3L, 4L, 5L))
-    // b0 is 1/5 dead, b1 is 1/1 dead: threshold selects only b1 — the
-    // tombstone must be carried or doc 1 resurrects out of b0.
+    // b0 is 1/5 dead, under the threshold: b1's tombstone is live while
+    // b0 stays (dropping it would resurrect doc 1 out of b0), so the
+    // pass selects nothing and rewrites nothing.
     assert(Streams.chunkStoreVacuum(spark, dir,
-      minDeadFraction = 0.5) == 1)
+      minDeadFraction = 0.5) == 0)
     assert(Streams.chunkStoreRead(spark, dir).get
       .select("doc_id").distinct().as[Long].collect().toSeq.sorted
       == want, "carried chunk tombstone stopped suppressing")

@@ -195,6 +195,37 @@ class CrossJvmFanoutSpec extends SparkSpec {
       == ((0L, 0L, 0L, 0L, 0L, 0L, 0L)))
   }
 
+  test("a commit from a second JVM is seen by the next probe of a warm " +
+    "store") {
+    val root = java.nio.file.Files
+      .createTempDirectory("xjvm-fanout-view").toString
+    assert(gated(root, waveA, 0L) == ((2L, 2L, 2L, 2L, 2L, 0L, 0L)))
+    val terms = Seq("alpha", "fox", "river", "peaks")
+    def live() = (
+      Search.indexLiveDocs(spark, s"$root/index").get.select("doc_id")
+        .as[Long].collect().toSet,
+      Similarity.annStoreLiveIds(spark, s"$root/ann").as[Long].collect()
+        .toSet,
+      Similarity.pqStoreLiveIds(spark, s"$root/pq").as[Long].collect().toSet)
+    def bm25() = Search.bm25FromIndexTopK(spark, s"$root/index", terms, 10)
+      .collect().toSeq
+    // Probe twice: the views of this committed set are warm.
+    assert(live() == ((Set(1L, 2L), Set(1L, 2L), Set(1L, 2L))))
+    assert(live() == ((Set(1L, 2L), Set(1L, 2L), Set(1L, 2L))))
+    bm25(): Unit
+    val p = fork("graft.streaming.FanoutRaceChild", Seq(root, "1"))
+    val out = new Output(p)
+    assert(waitBounded(p, out) == 0,
+      s"child fan-out should land; output:\n${out.all.mkString("\n")}")
+    val all = Set(1L, 2L, 5L, 6L, 7L)
+    assert(live() == ((all, all, all)), "a probe missed the child's commit")
+    val corpus = Streams.readState(spark, s"$root/store").get
+      .select("doc_id", "text")
+    assert(corpus.count() == 5)
+    assert(bm25() == Search.bm25TopK(corpus, "doc_id", "text", terms, 10)
+      .collect().toSeq)
+  }
+
   test("a composed fan-out refuses cleanly when another JVM holds the " +
     "FIRST surface, advancing nothing") {
     val root = java.nio.file.Files

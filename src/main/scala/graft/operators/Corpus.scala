@@ -914,75 +914,29 @@ object Corpus {
     kgramPositions(kgramTokens(docs, idCol, textCol, k), idCol)
       .groupBy(col("gh")).agg(count(lit(1)).as("df"))
 
-  /** The gram store's committed counts — committed generations MINUS
-    * any generation superseded by a committed FOLD (see
-    * [[gramIndexCompact]]): counts are ADDITIVE across generations, so
-    * unlike the max-batch-resolved stores a fold's sources must be
-    * excluded the instant the fold commits, or the crash window
-    * between its commit and their uncommit would double every folded
-    * count. The `_folds` marker inside a fold's batch dir carries its
-    * source ids; readers subtract them, making every crash state
-    * answer-correct: fold uncommitted -> invisible orphan; fold
-    * committed, sources still committed -> sources excluded by the
-    * marker; sources uncommitted/deleted -> marker inert.
-    */
-  def readGramStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val committed = graft.sources.Commits.committed(spark, dir)
-    val superseded = graft.sources.Commits.foldedSources(spark, dir,
-      committed)
-    graft.sources.Commits.readCommittedBatches(spark, dir,
-      committed.filterNot(superseded.contains))
-  }
+  /** The gram store: one additive table of (gh, df, batch) counts at
+    * the store dir ([[graft.sources.AdditiveStore]]). */
+  private[graft] val GramStore =
+    new graft.sources.AdditiveStore(Seq(gramTable("")))
 
-  /** COMPACT the gram store's generation count down to `maxBatches`:
-    * the smallest generations' counts (ties on id) fold — sum-merged
-    * per gram — into one fresh committed generation whose `_folds`
-    * marker names its sources, then the sources uncommit and their
-    * directories delete. Fold cost follows the folded generations'
-    * rows, never the store; answers are invariant at every step (the
-    * [[readGramStore]] marker contract). Returns generations folded.
+  /** A gram-count table of an additive store at `dir`: a fold sums
+    * `df` per gram under the fold's id. */
+  private[graft] def gramTable(dir: String) =
+    graft.sources.AdditiveStore.Table(dir, (rows, id) =>
+      rows.groupBy(col("gh")).agg(sum(col("df")).as("df"))
+        .withColumn("batch", lit(id)))
+
+  /** The gram store's live counts (repeated gh rows across generations
+    * sum); None while nothing is committed. */
+  def readGramStore(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[DataFrame] = GramStore.read(spark, dir)
+
+  /** FOLD the gram store's generation count down to `maxBatches`
+    * ([[graft.sources.AdditiveStore.fold]]). Returns generations folded.
     */
   def gramIndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int = 16): Int =
-   graft.sources.Commits.withWriterLock(spark, dir) {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committedAll = graft.sources.Commits.committed(spark, dir)
-    // Finish a crashed predecessor first: committed folds whose
-    // sources are still committed -> complete their cleanup.
-    val staleSources = graft.sources.Commits
-      .foldedSources(spark, dir, committedAll)
-      .intersect(committedAll.toSet)
-    staleSources.foreach { b =>
-      graft.sources.Commits.uncommit(spark, dir, b)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/b$b"), true): Unit
-    }
-    graft.sources.Commits.sweepOrphanBatchDirs(spark, dir,
-      graft.sources.Commits.committed(spark, dir))
-    graft.sources.Commits.pruneAttemptMarkers(spark, dir)
-    val live = graft.sources.Commits.committed(spark, dir)
-    if (live.size <= maxBatches) return 0
-    val rows = graft.sources.Commits.readCommittedBatches(spark, dir, live)
-      .getOrElse(return 0)
-    val selected = graft.sources.Commits
-      .compactionSelection(rows, live, maxBatches)
-    if (selected.isEmpty) return 0
-    val folded = rows.filter(col("batch").isin(selected: _*))
-      .groupBy(col("gh")).agg(sum(col("df")).as("df"))
-    val id = graft.sources.Commits.allocateBatchId(spark, dir)
-    folded.withColumn("batch", lit(id))
-      .write.mode("errorifexists").parquet(s"$dir/b$id")
-    graft.sources.Commits.writeFoldMarker(spark, dir, id, selected)
-    // Commit point: from here the fold is live and its sources are
-    // dead to readers regardless of how far the cleanup below gets.
-    graft.sources.Commits.commit(spark, dir, id)
-    selected.foreach { b =>
-      graft.sources.Commits.uncommit(spark, dir, b)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/b$b"), true): Unit
-    }
-    selected.size
-   }
+    GramStore.fold(spark, dir, maxBatches)
 
   /** Append `docs`' per-gram occurrence counts to the standing
     * gram-frequency store at `dir` as one committed generation —

@@ -451,19 +451,15 @@ object Search {
    Commits.withWriterLockUnless(batch.sparkSession, dir,
        heldLocks) {
     val spark = batch.sparkSession
-    val hashed = Upsert.onePerKeyByContentHashed(batch, idCol, textCol)
-      .withColumnRenamed("content_hash", "__ch")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Cache.using(Upsert.gateRows(batch, idCol, textCol)) { hashed =>
       // Hash gate through the shared currency resolve ([[GenTable
       // .currency]]: scoped to the batch's ids for micro-batches — an
       // unscoped resolve aggregates the whole docs table per mutation,
       // measured at 7 s for a 500-doc append against a 5M-doc store,
-      // SCALE.md — store-wide for backfill-sized batches).
-      val fresh = IndexStore.changed(spark, dir,
-          Commits.committed(spark, dir), hashed, idCol, "__ch")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      // SCALE.md — store-wide for backfill-sized batches). An empty
+      // store's gate passes `hashed` itself, already persisted.
+      graft.Cache.using(IndexStore.changed(spark, dir,
+          Commits.committed(spark, dir), hashed, idCol, "__ch")) { fresh =>
         val n = graft.Prof("indexAppend.resolve")(fresh.count())
         if (n > 0) IndexStore.commitGeneration(spark, dir) { b =>
           graft.Prof("indexAppend.writeSlice")(
@@ -471,8 +467,8 @@ object Search {
           n
         }
         n
-      } finally { fresh.unpersist(); () }
-    } finally { hashed.unpersist(); () }
+      }
+    }
    }
 
   /** DELETE docs from the standing index — the tombstone generation

@@ -78,6 +78,14 @@ object Upsert {
     onePerKeyByHash(withContentHash(df, textCol), key)
   }
 
+  /** The rows an upsert's hash gate compares ([[graft.sources.GenTable
+    * .changed]]): one per key of `df`, its content hash as `__ch`. The
+    * index and chunk stores build it alike, so a fan-out persists one
+    * copy for both. */
+  def gateRows(df: DataFrame, key: String, textCol: String): DataFrame =
+    onePerKeyByContentHashed(df, key, textCol)
+      .withColumnRenamed("content_hash", "__ch")
+
   /** The same one-row-per-key resolution for rows that already carry
     * their `content_hash` (the merge store's caller-hashed deliveries):
     * lowest hash wins, ties broken over the other columns. Both forms

@@ -838,6 +838,21 @@ object LlmQueries {
       docs.select((col("doc_id") + 1000000).as("doc_id"),
         regexp_replace(col("text"), "^\\S+", "zzz").as("text")))
 
+  /** `corpus`'s hashed 3-shingle arrays, persisted: signatures and the
+    * Jaccard verification both read them, and they are an order of
+    * magnitude smaller than the text. The near-dup queries build the
+    * same plan and share one cache entry ([[graft.Cache]]). */
+  private def nearDupShingles(corpus: DataFrame): DataFrame =
+    graft.Cache.persist(
+      Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3))
+
+  /** The shingles' compact LSH band keys (128 MinHashes, 16 bands),
+    * persisted likewise: four readers (two explode sides, two witness
+    * joins), 16 longs per doc — see lshCandidatePairsFromKeys. */
+  private def nearDupKeys(hsArr: DataFrame): DataFrame =
+    graft.Cache.persist(
+      Dedup.lshBandKeys(Dedup.minhashSignatures(hsArr, 128), 128, 16))
+
   /** Near-dup corpus with hashed shingle sets: `hset` = (doc_id, bh)
     * where bh is the 60-bit md5-derived shingle hash — the same hashed
     * shingling the Spark side runs.
@@ -2506,17 +2521,8 @@ object LlmQueries {
     QueryDef(
       "dd_minhash_lsh_pairs",
       MinhashCandPrefix + JaccardTail) { (s, d) =>
-      val corpus = nearDupCorpus(Tables.documents(s, d))
-      // Persisted: signatures AND Jaccard verification read it, and the
-      // hashed arrays are an order of magnitude smaller than the text.
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // Compact keys persisted: four readers (two explode sides, two
-      // witness joins), 16 longs/doc — see lshCandidatePairsFromKeys.
-      val keys = Dedup.lshBandKeys(
-        Dedup.minhashSignatures(hsArr, 128), 128, 16)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = Dedup.lshCandidatePairsFromKeys(keys)
+      val hsArr = nearDupShingles(nearDupCorpus(Tables.documents(s, d)))
+      val cand = Dedup.lshCandidatePairsFromKeys(nearDupKeys(hsArr))
       Dedup.jaccard(cand, hsArr)
         .filter(col("jaccard") >= 0.5)
         .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
@@ -2562,12 +2568,8 @@ object LlmQueries {
         ClusterCompChain +
         """SELECT component AS canonical_id, count(*) AS n_members
           |FROM comp GROUP BY component ORDER BY canonical_id""".stripMargin) { (s, d) =>
-      val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = Dedup.lshCandidatePairsFromKeys(
-        Dedup.lshBandKeys(Dedup.minhashSignatures(hsArr, 128), 128, 16)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val hsArr = nearDupShingles(nearDupCorpus(Tables.documents(s, d)))
+      val cand = Dedup.lshCandidatePairsFromKeys(nearDupKeys(hsArr))
       val pairs = Dedup.jaccard(cand, hsArr)
         .filter(col("jaccard") >= 0.5)
         .select(col("a"), col("b"))
@@ -2612,11 +2614,8 @@ object LlmQueries {
           |ORDER BY doc_id""".stripMargin) { (s, d) =>
       import graft.functions.TextFunctions
       val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = Dedup.lshCandidatePairsFromKeys(
-        Dedup.lshBandKeys(Dedup.minhashSignatures(hsArr, 128), 128, 16)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val hsArr = nearDupShingles(corpus)
+      val cand = Dedup.lshCandidatePairsFromKeys(nearDupKeys(hsArr))
       val pairs = Dedup.jaccard(cand, hsArr)
         .filter(col("jaccard") >= 0.5)
         .select(col("a"), col("b"))
@@ -2690,11 +2689,8 @@ object LlmQueries {
           |GROUP BY f.split ORDER BY f.split""".stripMargin) { (s, d) =>
       import graft.operators.Corpus
       val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = Dedup.lshCandidatePairsFromKeys(
-        Dedup.lshBandKeys(Dedup.minhashSignatures(hsArr, 128), 128, 16)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val hsArr = nearDupShingles(corpus)
+      val cand = Dedup.lshCandidatePairsFromKeys(nearDupKeys(hsArr))
       val pairs = Dedup.jaccard(cand, hsArr)
         .filter(col("jaccard") >= 0.5)
         .select(col("a"), col("b"))
@@ -2734,9 +2730,7 @@ object LlmQueries {
           |  SELECT DISTINCT xa.doc_id AS a, xb.doc_id AS b
           |  FROM bl xa JOIN bl xb ON xa.bh = xb.bh AND xa.doc_id < xb.doc_id),
           |""".stripMargin + JaccardTail) { (s, d) =>
-      val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hsArr = nearDupShingles(nearDupCorpus(Tables.documents(s, d)))
       // Fused witness-dedup pipeline: no candidate-pair distinct()
       // exchange, no driver state (see Dedup.blockedJaccard scaladoc).
       // Deterministic output order comes from repartition(1) + local
@@ -2871,9 +2865,7 @@ object LlmQueries {
           |WHERE greatest((n_inter * 1000) // za.n_sh,
           |               (n_inter * 1000) // zb.n_sh) >= 700
           |ORDER BY a, b""".stripMargin) { (s, d) =>
-      val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hsArr = nearDupShingles(nearDupCorpus(Tables.documents(s, d)))
       Dedup.blockedJaccard(hsArr, 20)
         .select(col("a"), col("b"), col("n_inter"),
           expr("n_inter * 1000 div n_a").as("cont_a_milli"),
@@ -2925,9 +2917,7 @@ object LlmQueries {
           |  CASE WHEN n_truth = 0 THEN 0
           |    ELSE n_common * 1000 // n_truth END AS recall_milli
           |FROM tc, lc, cc""".stripMargin) { (s, d) =>
-      val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hsArr = nearDupShingles(nearDupCorpus(Tables.documents(s, d)))
       val lshPairs = Dedup.jaccard(
         Dedup.lshCandidatePairsFromKeys(
           Dedup.lshBandKeys(Dedup.minhashSignatures(hsArr, 128), 128, 16)),
@@ -2969,12 +2959,8 @@ object LlmQueries {
     QueryDef(
       "dd_contrastive_pairs",
       ContrastivePairsSql) { (s, d) =>
-      val corpus = nearDupCorpus(Tables.documents(s, d))
-      val hsArr = Dedup.hashedShingleArrays(corpus, "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val keys = Dedup.lshBandKeys(
-        Dedup.minhashSignatures(hsArr, 128), 128, 16)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hsArr = nearDupShingles(nearDupCorpus(Tables.documents(s, d)))
+      val keys = nearDupKeys(hsArr)
       val pos = Dedup.jaccard(Dedup.lshCandidatePairsFromKeys(keys), hsArr)
         .filter(col("jaccard") >= 0.5)
         .select(col("a"), col("b"), col("jaccard"))

@@ -3,9 +3,12 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-/** Commit-marker ledger shared by the GENERATIONAL parquet stores (the
-  * merge store, the inverted index, the chunk store, the ANN store and
-  * the PQ stores; their lifecycle is [[GenTable]]): an append writes
+/** Commit-marker ledger shared by every parquet store that keeps one
+  * `b<id>` dir per generation: the GENERATIONAL stores (the merge store,
+  * the inverted index, the chunk store, the ANN store and the PQ
+  * stores; their lifecycle is [[GenTable]]), the ADDITIVE gram stores
+  * (the gram index and the substring store; [[AdditiveStore]]) and the
+  * near-dup gate's docs, signatures and bands: an append writes
   * its parquet slices tagged with a fresh batch id and then creates the
   * empty marker file `<dir>/_commits/b<batch>` as its LAST step — the
   * linearization point. Readers only ever see committed batches, so a crash between
@@ -85,6 +88,19 @@ object Commits {
       .map(s => s.getPath.getName.drop(1).toLong -> s.getPath)
       .toMap
 
+  /** A data file of a batch dir: hidden files ("."-prefixed checksums,
+    * "_"-prefixed markers) are not, so a dir holding only those is
+    * skipped like an empty one instead of failing schema inference. */
+  private def isData(s: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** Does batch dir `d` exist and hold a data file? */
+  private[sources] def holdsData(fs: org.apache.hadoop.fs.FileSystem,
+      d: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(d) && fs.listStatus(d).exists(isData)
+
   /** Read the COMMITTED generations of the per-batch-directory table
     * at `tableDir`: the committed ids' subdirectories that hold data
     * files (a rewrite whose join produced zero rows leaves a file-less
@@ -98,13 +114,6 @@ object Commits {
       org.apache.spark.sql.DataFrame] = {
     val base = new org.apache.hadoop.fs.Path(tableDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // A batch dir holding only hidden files ("."-prefixed checksums,
-    // "_"-prefixed markers) must be skipped like an empty one, not
-    // passed to the parquet reader to fail schema inference.
-    def isData(s: org.apache.hadoop.fs.FileStatus): Boolean = {
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
     val present = batchDirs(fs, base)
     val listed = committed.flatMap(b => present.get(b).map(d =>
         s"$tableDir/b$b" -> fs.listStatus(d).toSeq))
@@ -135,10 +144,6 @@ object Commits {
     val base = new org.apache.hadoop.fs.Path(tableDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return 0L
-    def isData(s: org.apache.hadoop.fs.FileStatus): Boolean = {
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
     // Unlocked listing racing a concurrent vacuum/compact: a dir
     // present a moment ago may be gone by listStatus time. Treat a
     // vanished dir as 0 bytes.
@@ -226,47 +231,6 @@ object Commits {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     for ((id, path) <- batchDirs(fs, base) if !committed.contains(id))
       fs.delete(path, true): Unit
-  }
-
-  /** Record inside fold-batch `batch`'s directory the generation ids
-    * it SUPERSEDES (`<tableDir>/b<batch>/_folds`) — the additive-store
-    * compaction contract: stores whose generations SUM on read (gram
-    * frequencies; unlike the max-batch-resolved stores) cannot commit
-    * a fold while its sources are visible, or the crash window between
-    * the fold's commit and the sources' uncommit doubles every folded
-    * value. Readers subtract [[foldedSources]] from the committed set,
-    * making every crash state answer-correct. MUST be written before
-    * the fold's commit marker.
-    */
-  def writeFoldMarker(spark: SparkSession, tableDir: String, batch: Long,
-      sources: Seq[Long]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$tableDir/b$batch/_folds")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(sources.sorted.mkString(",").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Generation ids superseded by the COMMITTED folds among
-    * `committed` — one listing + one tiny marker read per fold.
-    */
-  def foldedSources(spark: SparkSession, tableDir: String,
-      committed: Seq[Long]): Set[Long] = {
-    val base = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committed.flatMap { b =>
-      val m = new org.apache.hadoop.fs.Path(s"$tableDir/b$b/_folds")
-      if (!fs.exists(m)) Seq.empty
-      else {
-        val in = fs.open(m)
-        val txt = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-        txt.split(",").toSeq.filter(_.nonEmpty).map(_.toLong)
-      }
-    }.toSet
   }
 
   /** Remove ONE batch's commit marker — the incremental vacuum's

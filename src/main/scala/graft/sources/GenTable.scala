@@ -10,7 +10,10 @@ import org.apache.spark.storage.StorageLevel
   * that keeps its rows in per-batch `b<id>` directories under a
   * [[Commits]] ledger: the inverted index (`Search`), the merge and
   * chunk stores (`Streams`), and the ANN and PQ stores (`Similarity`;
-  * the chunk-vector store is a PQ store).
+  * the chunk-vector store is a PQ store). The gram stores, whose
+  * generations sum on read, share [[AdditiveStore]] instead; the
+  * near-dup gate's store keeps the same `b<id>` layout and ledger and
+  * has no maintenance.
   *
   * A store is described by its KEY column, a TOMBSTONE predicate over a
   * membership row, the non-key columns of the TOMBSTONE ROW a delete

@@ -418,43 +418,40 @@ object Streams {
     val spark = batch.sparkSession
     val chunksDir = s"$storeDir/chunks"
     val docsDir = s"$storeDir/docs"
-    val hashed = Upsert.onePerKeyByContentHashed(batch, idCol, textCol)
-      .withColumnRenamed("content_hash", "__ch")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Hash gate through the shared currency resolve, like
     // Search.indexAppend ([[GenTable.currency]]).
-    val fresh = ChunkStore.changed(spark, storeDir,
-        graft.sources.Commits.committed(spark, storeDir), hashed, idCol,
-        "__ch")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // THREE actions folded into two CONCURRENT ones (guide §1.2 +
-      // §2.6): the gating fresh-doc count used to run as its own job
-      // before two sequential writes of the same persisted frame; now
-      // it rides the docs write as an Observation while the chunks
-      // write (independent subdir, same generation commit) overlaps
-      // it. n == 0 leaves two empty UNCOMMITTED dirs and a burned
-      // batch id — invisible to readers (committed-marker filtered),
-      // swept like any crash orphan — while the commit marker still
-      // only appears for n > 0, exactly as before.
-      ChunkStore.commitGeneration(spark, storeDir) { batchId =>
-        val obs = org.apache.spark.sql.Observation()
-        graft.Par.run(Seq[() => Unit](
-          () => graft.Prof("chunkIngest.chunksWrite")(
-            graft.operators.Corpus.chunkSlidingWindows(fresh, idCol,
-              textCol, window, overlap)
-              .withColumnRenamed(idCol, "doc_id")
-              .withColumn("batch", lit(batchId))
-              .write.parquet(s"$chunksDir/b$batchId")),
-          () => graft.Prof("chunkIngest.docsWrite")(
-            fresh.select(col(idCol).as("doc_id"),
-                col("__ch").as("content_hash"))
-              .withColumn("batch", lit(batchId))
-              .observe(obs, count(lit(1)).as("n"))
-              .write.parquet(s"$docsDir/b$batchId")))): Unit
-        obs.get("n").asInstanceOf[Long]
+    graft.Cache.using(Upsert.gateRows(batch, idCol, textCol)) { hashed =>
+      graft.Cache.using(ChunkStore.changed(spark, storeDir,
+          graft.sources.Commits.committed(spark, storeDir), hashed, idCol,
+          "__ch")) { fresh =>
+        // THREE actions folded into two CONCURRENT ones (guide §1.2 +
+        // §2.6): the gating fresh-doc count used to run as its own job
+        // before two sequential writes of the same persisted frame; now
+        // it rides the docs write as an Observation while the chunks
+        // write (independent subdir, same generation commit) overlaps
+        // it. n == 0 leaves two empty UNCOMMITTED dirs and a burned
+        // batch id — invisible to readers (committed-marker filtered),
+        // swept like any crash orphan — while the commit marker still
+        // only appears for n > 0, exactly as before.
+        ChunkStore.commitGeneration(spark, storeDir) { batchId =>
+          val obs = org.apache.spark.sql.Observation()
+          graft.Par.run(Seq[() => Unit](
+            () => graft.Prof("chunkIngest.chunksWrite")(
+              graft.operators.Corpus.chunkSlidingWindows(fresh, idCol,
+                textCol, window, overlap)
+                .withColumnRenamed(idCol, "doc_id")
+                .withColumn("batch", lit(batchId))
+                .write.parquet(s"$chunksDir/b$batchId")),
+            () => graft.Prof("chunkIngest.docsWrite")(
+              fresh.select(col(idCol).as("doc_id"),
+                  col("__ch").as("content_hash"))
+                .withColumn("batch", lit(batchId))
+                .observe(obs, count(lit(1)).as("n"))
+                .write.parquet(s"$docsDir/b$batchId")))): Unit
+          obs.get("n").asInstanceOf[Long]
+        }
       }
-    } finally { fresh.unpersist(); hashed.unpersist(); () }
+    }
    }
 
   /** DELETE docs from the standing chunk store — the takedown side the
@@ -1005,7 +1002,7 @@ object Streams {
     Corpus.requireGramK(spark, storeDir, k, pin = true)
     val docsDir = s"$storeDir/docs"
     val gramsDir = s"$storeDir/grams"
-    val live = substringLiveBatches(spark, storeDir)
+    val live = SubstringStore.live(spark, storeDir)
     val storeDocs = graft.sources.Commits
       .readCommittedBatches(spark, docsDir, live)
     val storeGrams = graft.sources.Commits
@@ -1079,131 +1076,28 @@ object Streams {
       }
       .start()
 
-  /** The substring store's LIVE generations: committed minus the
-    * sources of committed folds (the docs table's `_folds` markers are
-    * authoritative for both tables — counts are additive, so folded
-    * sources must die to readers the instant the fold commits; see
-    * `Commits.writeFoldMarker`).
-    */
-  private def substringLiveBatches(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String): Seq[Long] = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    val superseded = graft.sources.Commits
-      .foldedSources(spark, s"$storeDir/docs", committed)
-    committed.filterNot(superseded.contains)
-  }
+  /** The substring store: the cleaned docs, moved verbatim by a fold
+    * (their `batch` values are the read-back's recency order), and the
+    * gram counts, summed per gram ([[graft.sources.AdditiveStore]]; the
+    * docs table holds the `_folds` markers). */
+  private[graft] val SubstringStore = new graft.sources.AdditiveStore(Seq(
+    graft.sources.AdditiveStore.Table("docs", (rows, _) => rows),
+    graft.operators.Corpus.gramTable("grams")))
 
-  /** The substring store's committed cleaned documents (all delivered
+  /** The substring store's live cleaned documents (all delivered
     * columns, text replaced by clean_text, plus the dedup stats).
     */
   def substringStoreRead(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Option[DataFrame] =
-    graft.sources.Commits.readCommittedBatches(spark, s"$storeDir/docs",
-      substringLiveBatches(spark, storeDir))
+    SubstringStore.read(spark, storeDir)
 
-  /** COMPACT the substring store's generation count down to
-    * `maxBatches`: the smallest generations (by docs rows, ties on id)
-    * fold — docs rows moved verbatim, gram counts sum-merged — into
-    * one fresh committed generation whose docs-table `_folds` marker
-    * names its sources, then the sources uncommit and both tables'
-    * directories delete. Also the store's hygiene pass: completes a
-    * crashed predecessor's cleanup, sweeps orphan batch dirs in both
-    * tables, and prunes spent attempt markers. Fold cost follows the
-    * folded generations, never the store. Returns generations folded.
+  /** FOLD the substring store's generation count down to `maxBatches`
+    * ([[graft.sources.AdditiveStore.fold]]; generations are sized by
+    * docs rows). Returns generations folded.
     */
   def substringStoreCompact(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, maxBatches: Int = 16): Int =
-   graft.sources.Commits.withWriterLock(spark, storeDir) {
-    val docsDir = s"$storeDir/docs"
-    val gramsDir = s"$storeDir/grams"
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committedAll = graft.sources.Commits.committed(spark, storeDir)
-    // Crashed-predecessor repair: committed folds whose sources are
-    // still committed -> finish uncommitting and deleting them.
-    val stale = graft.sources.Commits
-      .foldedSources(spark, docsDir, committedAll)
-      .intersect(committedAll.toSet)
-    stale.foreach { b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b)
-      Seq(docsDir, gramsDir).foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$t/b$b"), true): Unit)
-    }
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    Seq(docsDir, gramsDir).foreach(t => graft.sources.Commits
-      .sweepOrphanBatchDirs(spark, t, committed))
-    graft.sources.Commits.pruneAttemptMarkers(spark, storeDir)
-    if (committed.size <= maxBatches) return 0
-    // A prior fold's directory holds rows that KEEP their original
-    // batch values (recency — see below), so both the size accounting
-    // and the row movement must key on the DIRECTORY a row lives in,
-    // never the batch column: column-keyed selection would see a fold
-    // dir as empty, pick it first, move none of its rows, and delete
-    // it — silent data loss on the second fold.
-    val byDir = committed.flatMap(b =>
-      graft.sources.Commits.readCommittedBatches(spark, docsDir, Seq(b))
-        .map(_.withColumn("__dir", lit(b))))
-    if (byDir.isEmpty) return 0
-    val docs = byDir.reduce(_.unionByName(_))
-    val selected = graft.sources.Commits.compactionSelection(
-      docs.withColumn("batch", col("__dir")), committed, maxBatches)
-    if (selected.isEmpty) return 0
-    val id = graft.sources.Commits.allocateBatchId(spark, storeDir)
-    // Docs keep their ORIGINAL batch values through the fold: the
-    // column is the per-id recency order the read-back's max_by
-    // resolves generations with, and rewriting it to the fold's id
-    // would promote an old generation past a newer one sitting in an
-    // unselected batch. The fold's identity lives in the DIRECTORY
-    // (b<id> + the ledger), not the rows.
-    docs.filter(col("__dir").isin(selected: _*)).drop("__dir")
-      .write.mode("errorifexists").parquet(s"$docsDir/b$id")
-    graft.sources.Commits
-      .readCommittedBatches(spark, gramsDir, selected) match {
-      case Some(g) => g.groupBy(col("gh"))
-        .agg(org.apache.spark.sql.functions.sum(col("df")).as("df"))
-        .withColumn("batch", lit(id))
-        .write.mode("errorifexists").parquet(s"$gramsDir/b$id")
-      case None =>
-        // The grams-side fold found NO data for the selected
-        // generations. Legitimate only when every selected gram dir is
-        // truly empty/absent (all-short-doc generations append no
-        // grams); anything else — a dir that lists data files the
-        // reader didn't surface — means an unreadable/corrupt grams
-        // table, and folding on would silently zero accumulated counts
-        // and weaken every future screen. Verify per-dir and abort the
-        // fold (pre-marker, pre-commit: the orphan fold dir is swept by
-        // the next pass) rather than destroy state.
-        val withData = selected.filter { b =>
-          val p = new org.apache.hadoop.fs.Path(s"$gramsDir/b$b")
-          fs.exists(p) && fs.listStatus(p).exists { s =>
-            val n = s.getPath.getName
-            s.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-        }
-        if (withData.nonEmpty)
-          throw new IllegalStateException(
-            s"substringStoreCompact: gram generations $withData under " +
-              s"$gramsDir hold data files the committed-batch reader " +
-              "could not surface; refusing to fold (would drop " +
-              "accumulated gram counts)")
-    }
-    graft.sources.Commits.writeFoldMarker(spark, docsDir, id, selected)
-    // Commit point: the fold is live, its sources dead to readers,
-    // however far the cleanup below gets.
-    graft.sources.Commits.commit(spark, storeDir, id)
-    selected.foreach { b =>
-      graft.sources.Commits.uncommit(spark, storeDir, b)
-      Seq(docsDir, gramsDir).foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$t/b$b"), true): Unit)
-    }
-    selected.size
-   }
-
-  /** `f` over `df` persisted for the call's duration. */
-  private def withPersisted[T](df: DataFrame)(f: DataFrame => T): T = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try f(p) finally { p.unpersist(); () }
-  }
+    SubstringStore.fold(spark, storeDir, maxBatches)
 
   /** The delivery ledger's marker file, kept in the first store dir of a
     * composed ingest's chain.
@@ -1235,7 +1129,7 @@ object Streams {
   private def deliverOnce[T](batch: DataFrame, batchId: Long,
       ledgerDir: String, surfaces: Seq[Any], noop: T)(
       apply: DataFrame => T): T =
-    withPersisted(batch) { shared =>
+    graft.Cache.using(batch) { shared =>
       val fp = graft.Prof("fanout.ledger")(
         deliveryFingerprint(shared, batchId, surfaces))
       if (fp.isDefined &&
@@ -1429,9 +1323,9 @@ object Streams {
           storeDir, idCol, batchId, hl))
         0L
       }
+      val docs = shared.select(col(idCol), col(textCol))
       val idxT = () => graft.Prof("fanout.index")(
-        graft.operators.Search.indexAppend(
-          shared.select(col(idCol), col(textCol)), idCol, textCol,
+        graft.operators.Search.indexAppend(docs, idCol, textCol,
           indexDir, hl))
       val annT = () => vecCol.fold(0L)(v =>
         graft.Prof("fanout.ann")(
@@ -1470,8 +1364,8 @@ object Streams {
       }
       val chunkTrackT = () => chunkDir.fold((0L, 0L)) { d =>
         val nChunk = graft.Prof("fanout.chunks")(
-          chunkIngestBatch(shared.select(col(idCol), col(textCol)), d,
-            idCol, textCol, chunkWindow, chunkOverlap, hl))
+          chunkIngestBatch(docs, d, idCol, textCol, chunkWindow,
+            chunkOverlap, hl))
         val nCkVec = chunkVecDir.fold(0L)(vd =>
           graft.Prof("fanout.ckvec")(
             chunkVectorIngestBatch(spark, d, vd,
@@ -1479,8 +1373,10 @@ object Streams {
               chunkVecCodes, chunkVecCells, chunkVecTrainPerMille, hl)))
         (nChunk, nCkVec)
       }
-      val rs = graft.Par.run(Seq[() => Any](mergeT, idxT, annT, pqT,
-        chunkTrackT))
+      // The index and chunk gates hash the same rows: one copy,
+      // persisted before the tracks start, serves both.
+      val rs = graft.Cache.using(Upsert.gateRows(docs, idCol, textCol))(_ =>
+        graft.Par.run(Seq[() => Any](mergeT, idxT, annT, pqT, chunkTrackT)))
       val (nIdx, nAnn, nPq) = (rs(1).asInstanceOf[Long],
         rs(2).asInstanceOf[Long], rs(3).asInstanceOf[Long])
       val (nChunk, nCkVec) = rs(4).asInstanceOf[(Long, Long)]
@@ -1603,7 +1499,7 @@ object Streams {
               shared.select(col(idCol), col(textCol), col(v)),
               idCol, textCol).select(col(idCol), col(v)),
             Seq(idCol), "left"))
-          val (nIdx, nAnn, nPq, nChunk, nCkVec) = withPersisted(feed)(
+          val (nIdx, nAnn, nPq, nChunk, nCkVec) = graft.Cache.using(feed)(
             fanoutApply(_, batchId, storeDir, indexDir, annDir, idCol,
               textCol, vecCol, planes, dims, pqDir, pqM, pqCodes, chunkDir,
               chunkWindow, chunkOverlap, chunkVecDir, chunkVecDims,
@@ -1642,15 +1538,9 @@ object Streams {
     * fan-out's read-back uses. None while nothing is committed.
     */
   def neardupStoreRead(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Option[DataFrame] = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    val p = new org.apache.hadoop.fs.Path(s"$storeDir/docs")
-    val there = p
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (committed.isEmpty || !there) None
-    else Some(ParquetRead(spark, s"$storeDir/docs")
-      .filter(col("batch").isin(committed: _*)))
-  }
+      storeDir: String): Option[DataFrame] =
+    graft.sources.Commits.readCommittedBatches(spark, s"$storeDir/docs",
+      graft.sources.Commits.committed(spark, storeDir))
 
   /** FULLY-GATED composed fan-out — the NEAR-DUP screen composed in
     * front of [[fanoutIngestBatchGated]], so one delivered batch
@@ -1741,7 +1631,7 @@ object Streams {
             // takes fanoutIngestBatchGated's defaults (m 4, 8 codes,
             // 16 cells).
             val (nGate, nIdx, nAnn, nPq, nChunk, nCkVec) =
-              withPersisted(feed)(gatedApply(_, batchId, storeDir,
+              graft.Cache.using(feed)(gatedApply(_, batchId, storeDir,
                 indexDir, annDir, gramStoreDir, idCol, textCol, vecCol,
                 planes, dims, k, pqDir, pqM, pqCodes, chunkDir,
                 chunkWindow, chunkOverlap, chunkVecDir, chunkVecDims,
@@ -1793,6 +1683,15 @@ object Streams {
     * since each store's delete is idempotent the redelivery converges.
     * A takedown is not undone by replaying the last fully-applied
     * ingest delivery (see [[fanoutIngestBatch]]'s delivery contract).
+    *
+    * The two GATE stores are left as they are, by design: the near-dup
+    * store and the substring store are screening state no probe reads.
+    * Their signatures and gram counts stay so that a re-offer is still
+    * screened, and their `docs` keep the doc's text, because the gated
+    * fan-out reads its downstream feed back from that text: a re-offer
+    * under a new batch id is dropped by the exact-hash gate and
+    * resurrected on the read surfaces from the stored text. A taken-down
+    * doc's text therefore stays on disk in both gate stores.
     * Returns (store, index, ann, chunk, pq, chunk-vector) deletion
     * counts.
     */
@@ -1804,7 +1703,7 @@ object Streams {
       chunkVecDir: Option[String] = None):
       (Long, Long, Long, Long, Long, Long) = {
     val spark = ids.sparkSession
-    withPersisted(ids.select(col(ids.columns.head).as(idCol))
+    graft.Cache.using(ids.select(col(ids.columns.head).as(idCol))
         .dropDuplicates(idCol)) { victims =>
       val asIds = victims.select(col(idCol).as("id"))
       // Same shape as the ingest fan-out: every lease upfront in the
@@ -1974,11 +1873,11 @@ object Streams {
     * the hot ingest path, and it is stable under batch re-delivery
     * (the surviving set never depends on iteration order).
     *
-    * Crash atomicity matches the generational stores: a batch appends
-    * docs, signatures, and band-index rows tagged with one batch id
-    * and creates the `Commits` marker LAST. All three gate reads see
-    * COMMITTED batches only, so a crash anywhere between the appends
-    * leaves orphans no screen trusts — without this, docs that landed
+    * Crash atomicity matches the generational stores: a batch writes
+    * its docs, signatures and band-index rows as `b<id>` dirs of the
+    * `docs`, `hs` and `bands` tables and creates the `Commits` marker
+    * LAST. All three gate reads list COMMITTED dirs only, so a crash
+    * anywhere between the writes leaves orphans no screen reads — without this, docs that landed
     * without their signatures were a permanent LSH blind spot, and
     * orphan signatures could drop a redelivered batch against its own
     * crashed remains. The id allocator burns every attempted id via
@@ -1994,14 +1893,8 @@ object Streams {
     val hsDir = s"$storeDir/hs"
     val bandsDir = s"$storeDir/bands"
     val committed = graft.sources.Commits.committed(spark, storeDir)
-    def readCommitted(p: String): Option[DataFrame] = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      val there = path
-        .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-      if (committed.isEmpty || !there) None
-      else Some(ParquetRead(spark, p)
-        .filter(col("batch").isin(committed: _*)))
-    }
+    def readCommitted(p: String): Option[DataFrame] =
+      graft.sources.Commits.readCommittedBatches(spark, p, committed)
     val hashed = Upsert.onePerKeyByContentHashed(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batchHs = Dedup.hashedShingleArrays(hashed, idCol, textCol, 3)
@@ -2059,22 +1952,21 @@ object Streams {
     val n = survivors.count()
     if (n > 0) {
       val batchId = graft.sources.Commits.allocateBatchId(spark, storeDir)
-      // Three INDEPENDENT appends (own directory each, all reading the
-      // persisted survivor/shingle/key frames) — overlapped (guide
-      // §2.6). Any partial subset a crash leaves is uncommitted and
-      // invisible (every reader filters rows by the committed batch
-      // list), exactly as under the old sequential order.
+      // Three INDEPENDENT `b<id>` dir writes, all reading the persisted
+      // survivor/shingle/key frames — overlapped (guide §2.6). Any
+      // partial subset a crash leaves is an uncommitted dir no reader
+      // lists.
       graft.Par.run(Seq[() => Unit](
         () => survivors.withColumn("batch", lit(batchId))
-          .write.mode("append").parquet(docsDir),
+          .write.parquet(s"$docsDir/b$batchId"),
         () => batchHs.join(survivors.select(col(idCol).as("doc_id")),
             Seq("doc_id"), "left_semi")
           .withColumn("batch", lit(batchId))
-          .write.mode("append").parquet(hsDir),
+          .write.parquet(s"$hsDir/b$batchId"),
         () => batchKeys
           .join(survivors.select(col(idCol).as("doc_id")),
             Seq("doc_id"), "left_semi").withColumn("batch", lit(batchId))
-          .write.mode("append").parquet(bandsDir))): Unit
+          .write.parquet(s"$bandsDir/b$batchId"))): Unit
       graft.sources.Commits.commit(spark, storeDir, batchId)
     }
     survivors.unpersist()

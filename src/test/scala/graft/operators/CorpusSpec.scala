@@ -279,66 +279,6 @@ class CorpusSpec extends SparkSpec {
     assert(s4(32L) == ((8L, "other words")))
   }
 
-  test("gram store compaction folds generations with answers invariant; " +
-      "the fold-marker keeps the crash window correct") {
-    import graft.sources.Commits
-    val dir = java.nio.file.Files
-      .createTempDirectory("gram-compact").toString + "/st"
-    val span = "ga gb gc gd ge gf gg gh"
-    // Six one-doc waves; the span recurs in waves 1 and 4.
-    val waves = Seq(
-      s"$span opening words",
-      "some entirely different second wave text goes right here now",
-      "third wave unique content stretches to eight plus tokens easily",
-      s"later repeat $span indeed",
-      "fifth wave fresh words again with padding to reach eight",
-      "sixth wave also novel stuff padded out to enough tokens")
-    waves.zipWithIndex.foreach { case (t, i) =>
-      assert(Corpus.gramIndexAppend(
-        Seq((i.toLong, t)).toDF("doc_id", "text"), "doc_id", "text", 8,
-        dir) > 0)
-    }
-    def totalDf(): Long = Corpus.readGramStore(spark, dir).get
-      .agg(org.apache.spark.sql.functions.sum("df")).head().getLong(0)
-    def screenRemoved(): Long =
-      Corpus.exactSubstringDedupIncremental(
-        Seq((100L, s"$span probe tail")).toDF("doc_id", "text"),
-        "doc_id", "text", 8, dir)
-        .select("n_removed").as[Long].head()
-    val (df0, rm0) = (totalDf(), screenRemoved())
-    assert(rm0 == 8L, "probe span must screen against the stored copies")
-    val folded = Corpus.gramIndexCompact(spark, dir, maxBatches = 2)
-    assert(folded == 5, s"6 generations at maxBatches=2 must fold 5: $folded")
-    assert(Commits.committed(spark, dir).size == 2)
-    assert(totalDf() == df0 && screenRemoved() == rm0,
-      "compaction changed the store's answers")
-    // CRASH WINDOW: a fold committed while its sources are still
-    // committed must not double their counts — the _folds marker
-    // excludes them from reads; the next compact completes the cleanup.
-    val live = Commits.committed(spark, dir).sorted
-    val victim = live.head
-    val vrows = Commits.readCommittedBatches(spark, dir, Seq(victim)).get
-      .groupBy(col("gh")).agg(org.apache.spark.sql.functions.sum("df")
-        .as("df"))
-    val foldId = victim + 1000
-    vrows.withColumn("batch", lit(foldId))
-      .write.parquet(s"$dir/b$foldId")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/b$foldId/_folds"), true)
-    m.write(victim.toString.getBytes("UTF-8")); m.close()
-    Commits.commit(spark, dir, foldId)
-    // Both the fold and its source are committed — reads must still
-    // count every gram exactly once.
-    assert(totalDf() == df0 && screenRemoved() == rm0,
-      "fold crash window double-counted its sources")
-    // Repair path: the next compact uncommits the stale source.
-    Corpus.gramIndexCompact(spark, dir, maxBatches = 16): Unit
-    assert(!Commits.committed(spark, dir).contains(victim))
-    assert(totalDf() == df0 && screenRemoved() == rm0)
-  }
-
   test("repetitionSignals: hand-computed fractions") {
     // doc 1: units aa, aa, bbbb -> n=3, distinct=2, chars 2+2+4=8,
     // dup chars 4, top unit chars max(4, 4)=4.

@@ -15,7 +15,7 @@ class NeardupIngestSpec extends SparkSpec {
     "while seven wizards brew strong potions at midnight"
 
   private def storeIds(dir: String): Set[Long] =
-    spark.read.parquet(s"$dir/docs").select("doc_id")
+    Streams.neardupStoreRead(spark, dir).get.select("doc_id")
       .as[Long].collect().toSet
 
   test("neardupIngestBatch suppresses near-dups, exact dups, and re-delivery") {
@@ -58,13 +58,13 @@ class NeardupIngestSpec extends SparkSpec {
         "and columnar storage formats for analytical workloads at scale"))
       .toDF("doc_id", "text")
     val hashed = Upsert.withContentHash(b1, "text")
-    hashed.withColumn("batch", lit(0L)).write.parquet(s"$dir/docs")
+    hashed.withColumn("batch", lit(0L)).write.parquet(s"$dir/docs/b0")
     Dedup.hashedShingleArrays(hashed, "doc_id", "text", 3)
-      .withColumn("batch", lit(0L)).write.parquet(s"$dir/hs")
+      .withColumn("batch", lit(0L)).write.parquet(s"$dir/hs/b0")
     Seq((1L, 0, "9e107d9d372bb6826bd81d3542a419d6", 0L),
       (2L, 0, "e4d909c290d0fb1ca068ffaddf22cbd0", 0L))
       .toDF("doc_id", "band", "band_key", "batch")
-      .write.parquet(s"$dir/bands")
+      .write.parquet(s"$dir/bands/b0")
     graft.sources.Commits.commit(spark, dir, 0L)
 
     // Ingest against it must fail loudly, not silently miss every store
@@ -168,7 +168,7 @@ class NeardupIngestSpec extends SparkSpec {
     graft.sources.Commits.recordAttempt(spark, dir, 1L)
     graft.operators.Upsert.withContentHash(b2, "text")
       .withColumn("batch", lit(1L))
-      .write.mode("append").parquet(s"$dir/docs")
+      .write.parquet(s"$dir/docs/b1")
     // Redelivery must re-screen from scratch (the orphan is invisible),
     // insert under a FRESH id, and commit docs + signatures together.
     assert(Streams.neardupIngestBatch(b2, dir, "doc_id", "text", 0.8) == 1)
@@ -181,6 +181,28 @@ class NeardupIngestSpec extends SparkSpec {
       "watermarks checkpoint rotation and stateful aggregation semantics")
       .replaceFirst("\\S+", "zzz"))).toDF("doc_id", "text")
     assert(Streams.neardupIngestBatch(nd, dir, "doc_id", "text", 0.8) == 0)
+  }
+
+  test("an uncommitted docs dir holding a non-parquet file breaks " +
+      "neither the gate nor the read") {
+    val dir = java.nio.file.Files.createTempDirectory("nd-junk").toString
+    assert(Streams.neardupIngestBatch(Seq((1L, base)).toDF("doc_id", "text"),
+      dir, "doc_id", "text", 0.8) == 1)
+    // A crashed writer's dir: its id attempted, never committed, and a
+    // file in it that no parquet reader could open.
+    val rows = Streams.neardupStoreRead(spark, dir).get.count()
+    graft.sources.Commits.recordAttempt(spark, dir, 1L)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir,
+      "docs", "b1"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "docs", "b1",
+      "part-00000.parquet"), "not parquet".getBytes("UTF-8"))
+    assert(Streams.neardupStoreRead(spark, dir).get.count() == rows)
+    val near = base.replaceFirst("\\S+", "zzz")
+    assert(Streams.neardupIngestBatch(Seq((2L, near), (3L, "fresh text " +
+      "about parquet footers listing only committed dirs for readers"))
+      .toDF("doc_id", "text"), dir, "doc_id", "text", 0.8) == 1)
+    assert(storeIds(dir) == Set(1L, 3L))
+    assert(graft.sources.Commits.committed(spark, dir) == Seq(0L, 2L))
   }
 
   test("batch banding plans the transform-wrapped explode (no bare posexplode)") {

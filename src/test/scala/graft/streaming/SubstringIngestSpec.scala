@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.max_by
 
 /** The substring-dedup-gated ingest: duplicated >= k-token spans are
   * removed against the store's accumulated gram counts plus the
@@ -207,52 +206,6 @@ class SubstringIngestSpec extends SparkSpec {
         .toDF("doc_id", "text", "source"),
       dir, "doc_id", "text") == 1)
     assert(snapshot()(100L) == (("srcX", 8L, "post compact tail")))
-  }
-
-  test("compaction cannot fold an old generation past a newer one " +
-      "(recency survives the fold)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("ss-recency").toString + "/st"
-    // b0: doc 1's OLD text alone (the smallest generation). b1: doc 1
-    // re-ingested with CHANGED text (passes the content screen) among
-    // two fillers — the largest generation, never selected. b2: two
-    // fillers. maxBatches=2 folds {b0, b2}: doc 1's old generation
-    // rides the fold while its newer generation stays in b1 — recency
-    // must still resolve to the NEW text.
-    assert(Streams.substringIngestBatch(
-      Seq((1L, "first version with eight distinct tokens padding"))
-        .toDF("doc_id", "text"), dir, "doc_id", "text") == 1)
-    assert(Streams.substringIngestBatch(
-      Seq((1L, "completely changed second version still unique here"),
-        (2L, "filler beta carries its own novel running words"),
-        (3L, "filler gamma also unique sufficiently long body"))
-        .toDF("doc_id", "text"), dir, "doc_id", "text") == 3)
-    assert(Streams.substringIngestBatch(
-      Seq((4L, "filler delta with wholly distinct token stream"),
-        (5L, "filler epsilon again different from everything else"))
-        .toDF("doc_id", "text"), dir, "doc_id", "text") == 2)
-    def latest(): Map[Long, String] =
-      Streams.substringStoreRead(spark, dir).get
-        .groupBy($"doc_id")
-        .agg(max_by($"clean_text", $"batch").as("t"))
-        .as[(Long, String)].collect().toMap
-    val before = latest()
-    assert(before(1L) ==
-      "completely changed second version still unique here")
-    assert(Streams.substringStoreCompact(spark, dir, maxBatches = 2) == 2)
-    assert(latest() == before,
-      "the fold flipped a doc's latest generation")
-    // SECOND fold over a store that already contains a fold directory
-    // (whose rows keep their original batch values): the fold must key
-    // on directories, or it would see the prior fold as empty, select
-    // it, move none of its rows, and delete it.
-    assert(Streams.substringIngestBatch(
-      Seq((6L, "late wave zeta brings further fresh running words"))
-        .toDF("doc_id", "text"), dir, "doc_id", "text") == 1)
-    assert(Streams.substringStoreCompact(spark, dir, maxBatches = 1) == 3)
-    assert(latest() == before +
-      (6L -> "late wave zeta brings further fresh running words"),
-      "the second fold lost rows or flipped recency")
   }
 
   test("substringIngestSink drives batches through foreachBatch") {
